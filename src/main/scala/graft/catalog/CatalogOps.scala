@@ -18,6 +18,10 @@ object CatalogOps {
 
   val partitionSuffix = "-partition-\\d+$"
 
+  /** A topic's owning tenant (group 1) and namespace (group 2), for
+    * topics of the `persistent://tenant/ns/name` shape. */
+  val topicOwner: scala.util.matching.Regex = "persistent://([^/]+)/([^/]+)/.+".r
+
   /** P5 default priority patterns — the fixtures' namespace analog of
     * the reference's ['org-1', 'global', 'dlq'] priority list
     * (pulsar_remote_inspector.py:477). One shared constant so the

@@ -3,7 +3,6 @@ package graft.replay
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.catalog.CatalogOps
 import graft.functions.codec
 import graft.sources.SnapshotIO
 
@@ -11,31 +10,25 @@ import graft.sources.SnapshotIO
   * engine's operators (SURVEY §3.1 capture, §3.2 replay).
   *
   * The reference walks topics sequentially and trusts file iteration
-  * order (pulsar_backup_restore.py:102,202); here capture fans out one
-  * task per topic and replay makes the per-topic order contract
-  * explicit: an exported `seq` column, a repartition on topic, and a
-  * sortWithinPartitions — the only ordering that survives a shuffle
-  * on a real cluster.
+  * order (pulsar_backup_restore.py:102,202); here each verb touches
+  * its data once. Capture scans its input in one stage, shuffles it
+  * once on the output file name and derives the catalog from the
+  * topics written; replay reads each snapshot file whole, so `seq` is
+  * the message's array position, and makes the per-topic order
+  * contract explicit: a repartition on topic and a
+  * sortWithinPartitions on `seq` — the only ordering that survives a
+  * shuffle on a real cluster.
   */
 object Replay {
 
-  /** §3.1: capture — derive the catalog from the envelope frame and
-    * write the reference's snapshot layout (catalog text files +
-    * per-topic message files). */
-  def capture(env: DataFrame, dir: String, compatLossy: Boolean = false): Unit = {
-    val re = "persistent://([^/]+)/([^/]+)/.+"
-    val topics = env.select(col("topic")).distinct()
-    val parsed = topics
-      .withColumn("tenant", regexp_extract(col("topic"), re, 1))
-      .withColumn("namespace", concat(
-        regexp_extract(col("topic"), re, 1), lit("/"),
-        regexp_extract(col("topic"), re, 2)))
-    SnapshotIO.writeCatalog(
-      parsed.select("tenant").distinct(),
-      parsed.select("namespace").distinct(),
-      CatalogOps.dropPartitionShards(topics),
-      topics, dir)
-    SnapshotIO.writeCompat(env, dir, compatLossy)
+  /** §3.1: capture — write the reference's snapshot layout
+    * (per-topic message files, then the catalog text files derived
+    * from the topics written). Returns the number of messages
+    * captured. */
+  def capture(env: DataFrame, dir: String, compatLossy: Boolean = false): Long = {
+    val written = SnapshotIO.writeCompat(env, dir, compatLossy)
+    SnapshotIO.writeCatalog(written.keys, dir)
+    written.values.sum
   }
 
   /** Payload reconstruction before send: base64-decode binary content

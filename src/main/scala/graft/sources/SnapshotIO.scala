@@ -1,9 +1,10 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.ArrayType
 
+import graft.catalog.CatalogOps
 import graft.functions.codec
 import graft.model.Schemas
 
@@ -20,16 +21,30 @@ import graft.model.Schemas
   *
   * The engine's native at-rest format is Parquet partitioned by
   * topic; this module is the interchange boundary with the reference
-  * tooling. Reads fan out one task per topic file; the per-topic
-  * message order of the reference (array position) is preserved in an
-  * explicit `seq` column, which is what replay sorts on — relying on
-  * physical row order would not survive a shuffle on a cluster.
+  * tooling. Each direction touches the messages once: a write is one
+  * exchange on the output file name, streamed into the files by the
+  * executors, with the catalog derived from the topics written; a
+  * read takes every file whole and explodes its array, so the
+  * per-topic message order of the reference (array position) becomes
+  * an explicit `seq` column without a shuffle. `seq` is what replay
+  * sorts on — relying on physical row order would not survive a
+  * shuffle on a cluster.
   */
 object SnapshotIO {
 
   /** Read all per-topic message files into the envelope frame.
     * Topic name is recovered from the file name (reversible escaping
     * by default, the reference's lossy "_"→"/" under `compatLossy`).
+    *
+    * One pass, no shuffle: each file is read whole as one row
+    * (`wholetext`), parsed as the JSON array it is, and exploded with
+    * its positions — `seq` IS the array position, the reference's own
+    * definition of per-topic arrival order, whatever partition the
+    * file lands in and however many files share it. One file must
+    * fit in one row, which the reference's per-topic cap (10k
+    * messages) guarantees. Parsing is FAILFAST: a
+    * truncated or otherwise malformed file fails the read instead of
+    * turning into null rows or silently losing its topic.
     */
   def readMessages(spark: SparkSession, dir: String,
       compatLossy: Boolean = false): DataFrame = {
@@ -40,11 +55,12 @@ object SnapshotIO {
     // fails loudly instead of reading as an empty success. The benign
     // FileStreamSink metadata-probe WARN this path triggers is
     // silenced at the logger level by Logs.quietBenignWarns.
-    val raw = spark.read
-      .schema(Schemas.snapshotMessage)
-      .option("multiLine", true)   // reference writes a JSON ARRAY per file
-      .json(s"$dir/messages/*.json")
-      .withColumn("_file", input_file_name())
+    val files = spark.read
+      .option("wholetext", true)   // reference writes a JSON ARRAY per file
+      .text(s"$dir/messages/*.json")
+      .select(input_file_name().as("_file"),
+        from_json(col("value"), ArrayType(Schemas.snapshotMessage),
+          Map("mode" -> "FAILFAST")).as("msgs"))
     // input_file_name() returns a URI: fully url-decode the stem (so
     // non-ASCII and literal-% topics round-trip, not just spaces) —
     // protecting literal '+' first, which URL decoding would
@@ -54,17 +70,20 @@ object SnapshotIO {
     val topic =
       if (compatLossy) codec.desanitizeTopicLossy(stem)
       else codec.desanitizeTopic(stem)
-    // per-topic arrival order := position in the file. For the local
-    // multiLine array source row order within one file is the array
-    // order within one partition; stamp it while it is still true.
-    val w = Window.partitionBy(col("_file")).orderBy(monotonically_increasing_id())
-    raw
-      .withColumn("topic", topic)
-      .withColumn("seq", row_number().over(w).cast("long") - 1L)
-      .withColumn("publish_ts", timestamp_millis(col("publish_timestamp")))
-      .withColumn("event_ts", codec.eventTsOrNull(col("event_timestamp")))
-      .select("topic", "content", "binary_encoded", "properties",
-        "publish_ts", "event_ts", "partition_key", "seq")
+    // FAILFAST rejects malformed JSON; a file whose JSON is no array
+    // at all (a bare `null`) must not read as an empty topic either
+    val msgs = when(col("msgs").isNull, raise_error(
+      concat(lit("malformed snapshot file: "), col("_file"))))
+      .otherwise(col("msgs"))
+    files
+      .select(topic.as("topic"), posexplode(msgs).as(Seq("pos", "m")))
+      .select(col("topic"), col("m.content").as("content"),
+        col("m.binary_encoded").as("binary_encoded"),
+        col("m.properties").as("properties"),
+        timestamp_millis(col("m.publish_timestamp")).as("publish_ts"),
+        codec.eventTsOrNull(col("m.event_timestamp")).as("event_ts"),
+        col("m.partition_key").as("partition_key"),
+        col("pos").cast("long").as("seq"))
   }
 
   /** Driver-side interchange shim: copy a snapshot written by the
@@ -133,26 +152,29 @@ object SnapshotIO {
       .parquet(s"$dir/messages_parquet")
 
   /** Write messages in the reference's interchange format: one JSON
-    * ARRAY per topic, wire-format fields. collect_list is bounded by
-    * the reference's own per-topic cap semantics (10k msgs/topic) —
-    * this writer exists for compatibility, not for 100 TB paths. */
+    * ARRAY per topic, wire-format fields, in `seq` order. One
+    * exchange, on the output file name: each partition is sorted by
+    * (file, topic, seq) and streamed straight into its files by the
+    * executors — no per-topic array is built in memory. Returns the
+    * message count of every topic written (catalog-sized: one entry
+    * per topic), from which [[writeCatalog]] derives the catalog
+    * without another pass over the messages. */
   def writeCompat(env: DataFrame, dir: String,
-      compatLossy: Boolean = false): Unit = {
-    val wire = struct(
+      compatLossy: Boolean = false): Map[String, Long] = {
+    val wire = to_json(struct(
       col("content"), col("binary_encoded"), col("properties"),
       coalesce(unix_millis(col("publish_ts")), lit(0L))
         .as("publish_timestamp"),
       codec.eventTsToWire(col("event_ts")).as("event_timestamp"),
-      col("partition_key"))
+      col("partition_key")))
     val fileName =
       if (compatLossy) codec.sanitizeTopicLossy(col("topic"))
       else codec.sanitizeTopic(col("topic"))
-    val perTopic = env
-      .repartition(col("topic"))
-      .sortWithinPartitions(col("topic"), col("seq"))
-      .select(fileName.as("file"), wire.as("msg"))
-      .groupBy(col("file"))
-      .agg(to_json(collect_list(col("msg"))).as("body"))
+    val sorted = env
+      .withColumn("file", fileName)
+      .repartition(col("file"))
+      .sortWithinPartitions(col("file"), col("topic"), col("seq"))
+      .select(col("file"), col("topic"), wire.as("msg"))
     // a SNAPSHOT is a replacement, not a merge: clear the destination
     // first, or per-topic files from a previous capture of different
     // data survive and resurrect dead topics on restore
@@ -160,37 +182,60 @@ object SnapshotIO {
     destBase.getFileSystem(new org.apache.hadoop.conf.Configuration())
       .delete(destBase, true)
     // one file per topic, written from the executors (scales with the
-    // number of topics; no driver collect). Hadoop FileSystem API so
-    // the files land in `dir` on whatever filesystem backs it —
-    // java.nio would scatter them across executor-local disks on a
-    // real cluster.
-    perTopic.foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-      if (rows.nonEmpty) {
+    // number of topics; only the per-topic counts are collected).
+    // Hadoop FileSystem API so the files land in `dir` on whatever
+    // filesystem backs it — java.nio would scatter them across
+    // executor-local disks on a real cluster.
+    sorted.mapPartitions { rows: Iterator[org.apache.spark.sql.Row] =>
+      val counts = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
+      if (rows.hasNext) {
         val base = new org.apache.hadoop.fs.Path(dir, "messages")
         val fs = base.getFileSystem(new org.apache.hadoop.conf.Configuration())
         fs.mkdirs(base)
-        rows.foreach { r =>
-          val p = new org.apache.hadoop.fs.Path(base, r.getString(0) + ".json")
-          val out = fs.create(p, true)
-          try out.write(r.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          finally out.close()
-        }
+        var file, topic: String = null
+        var n = 0L
+        var out: org.apache.hadoop.fs.FSDataOutputStream = null
+        try {
+          rows.foreach { r =>
+            if (r.getString(0) != file) {
+              if (out != null) { out.write(']'); out.close() }
+              file = r.getString(0)
+              out = fs.create(new org.apache.hadoop.fs.Path(base, file + ".json"), true)
+              out.write('[')
+            } else out.write(',')
+            out.write(r.getString(2).getBytes(java.nio.charset.StandardCharsets.UTF_8))
+            // a file holds one topic, or several colliding ones under
+            // the lossy names — sorted by topic, so each is one run
+            if (r.getString(1) != topic) {
+              if (topic != null) counts += topic -> n
+              topic = r.getString(1)
+              n = 0L
+            }
+            n += 1
+          }
+          out.write(']')
+          counts += topic -> n
+        } finally if (out != null) out.close()
       }
-    }
+      counts.iterator
+    }(Encoders.tuple(Encoders.STRING, Encoders.scalaLong))
+      .collect().toMap
   }
 
-  /** Catalog text files (K2): newline-joined PLAIN single files —
-    * the reference's tooling opens `<dir>/tenants.txt` directly, so a
-    * Spark output DIRECTORY of part-files would break the interchange
-    * contract. The catalog is control-plane-tiny by definition (the
-    * reference keeps it in text files), so collecting it to write one
-    * real file is the correct move, same as DdlSink. Lines are sorted
-    * for determinism. */
-  def writeCatalog(tenants: DataFrame, namespaces: DataFrame,
-      topics: DataFrame, allTopics: DataFrame, dir: String): Unit = {
-    def writeLines(df: DataFrame, colName: String, file: String): Unit = {
-      val lines = df.select(col(colName)).collect()
-        .map(_.getString(0)).sorted
+  /** Catalog text files (K2), derived from the topics a capture
+    * wrote: tenants and namespaces of every topic matching
+    * `persistent://tenant/ns/name` (a topic outside that shape has no
+    * owner to restore, and must not add an empty one), topics.txt
+    * without partition shards, all_topics.txt unfiltered. Newline-
+    * joined PLAIN single files — the reference's tooling opens
+    * `<dir>/tenants.txt` directly, so a Spark output DIRECTORY of
+    * part-files would break the interchange contract. The catalog is
+    * control-plane-tiny by definition (the reference keeps it in text
+    * files), so it is written from the driver, same as DdlSink. Lines
+    * are sorted for determinism. */
+  def writeCatalog(topics: Iterable[String], dir: String): Unit = {
+    def writeLines(entries: Iterable[String], file: String): Unit = {
+      val lines = entries.toSeq.distinct.sorted
       val p = new org.apache.hadoop.fs.Path(dir, file)
       val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
       val out = fs.create(p, true)
@@ -201,9 +246,12 @@ object SnapshotIO {
       try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       finally out.close()
     }
-    writeLines(tenants, "tenant", "tenants.txt")
-    writeLines(namespaces, "namespace", "namespaces.txt")
-    writeLines(topics, "topic", "topics.txt")
-    writeLines(allTopics, "topic", "all_topics.txt")
+    val owners = topics.flatMap(t =>
+      CatalogOps.topicOwner.findFirstMatchIn(t).map(m => (m.group(1), m.group(2))))
+    val shard = CatalogOps.partitionSuffix.r
+    writeLines(owners.map(_._1), "tenants.txt")
+    writeLines(owners.map { case (tn, ns) => s"$tn/$ns" }, "namespaces.txt")
+    writeLines(topics.filter(t => shard.findFirstIn(t).isEmpty), "topics.txt")
+    writeLines(topics, "all_topics.txt")
   }
 }

@@ -58,14 +58,8 @@ class SnapshotSpec extends AnyFunSuite with SparkSpec with Matchers {
   }
 
   test("an EMPTY catalog writes empty files, not one phantom empty-string entry") {
-    import spark.implicits._
     val tmp = Files.createTempDirectory("graft_snap_empty").toString
-    val none = Seq.empty[String].toDF("tenant")
-    SnapshotIO.writeCatalog(
-      none,
-      Seq.empty[String].toDF("namespace"),
-      Seq.empty[String].toDF("topic"),
-      Seq.empty[String].toDF("topic"), tmp)
+    SnapshotIO.writeCatalog(Seq.empty[String], tmp)
     // a lone "\n" would read back as one empty-string tenant, and a
     // restore would then emit `CREATE tenant ` with an empty name
     SnapshotIO.readTenants(spark, tmp).count() shouldBe 0
@@ -153,6 +147,150 @@ class SnapshotSpec extends AnyFunSuite with SparkSpec with Matchers {
     val got = SnapshotSpec.payloads.toArray(Array.empty[List[Byte]]).toSet
     got should contain(List[Byte](-1))            // "/w==" → 0xFF
     got should contain("order one".getBytes("UTF-8").toList)
+  }
+
+  /** A small envelope of `perTopic(i)` messages on topic `topics(i)`,
+    * content "<topic>#<seq>". */
+  private def envelopeOf(topics: Seq[String], perTopic: Seq[Int]) = {
+    import spark.implicits._
+    topics.zip(perTopic).flatMap { case (t, n) =>
+      (0 until n).map(s => (t, s"$t#$s", false, Map.empty[String, String],
+        new Timestamp(1704067200000L + s), Option.empty[Timestamp],
+        Option.empty[String], s.toLong))
+    }.toDF("topic", "content", "binary_encoded", "properties",
+      "publish_ts", "event_ts", "partition_key", "seq")
+  }
+
+  private def lines(dir: String, file: String): List[String] = {
+    import scala.jdk.CollectionConverters._
+    Files.readAllLines(java.nio.file.Paths.get(dir, file)).asScala.toList
+  }
+
+  test("a truncated snapshot file fails readMessages and Main replay loudly") {
+    // cut mid-message, and a file holding no array at all
+    for (cut <- Seq((b: Array[Byte]) => b.take(b.length - 7),
+        (_: Array[Byte]) => "null".getBytes("UTF-8"))) {
+      val tmp = Files.createTempDirectory("graft_snap_trunc").toString
+      Replay.capture(envelopeOf(Seq("persistent://t/ns/a", "persistent://t/ns/b"),
+        Seq(3, 2)), tmp)
+      val f = java.nio.file.Paths.get(tmp, "messages",
+        graft.functions.codec.sanitizeTopicStr("persistent://t/ns/b") + ".json")
+      Files.write(f, cut(Files.readAllBytes(f)))
+      // the Hadoop checksum beside the file would otherwise catch the
+      // edit first; a snapshot written by other tooling has none
+      Files.deleteIfExists(f.resolveSibling("." + f.getFileName + ".crc"))
+      val err = intercept[Exception](SnapshotIO.readMessages(spark, tmp).collect())
+      (err.getMessage + Option(err.getCause).map(_.getMessage).getOrElse("")) should
+        (include("Malformed") or include("malformed"))
+      val out = Files.createTempDirectory("graft_snap_trunc_out").toString
+      intercept[Exception](Main.run(spark, Seq("replay", tmp, out)))
+      // nothing reaches the sink: the read fails before the send stage
+      Option(new java.io.File(out).list()).map(_.toSeq).getOrElse(Nil) shouldBe empty
+    }
+  }
+
+  test("capture derives tenants and namespaces only from persistent://tenant/ns/name topics") {
+    val tmp = Files.createTempDirectory("graft_snap_shapes").toString
+    val topics = Seq("persistent://t/ns/a", "persistent://t/ns/a-partition-0",
+      "plain-topic", "persistent://u/only-two")
+    Replay.capture(envelopeOf(topics, Seq(1, 1, 1, 1)), tmp)
+    lines(tmp, "tenants.txt") shouldBe List("t")
+    lines(tmp, "namespaces.txt") shouldBe List("t/ns")
+    lines(tmp, "topics.txt") shouldBe
+      List("persistent://t/ns/a", "persistent://u/only-two", "plain-topic")
+    lines(tmp, "all_topics.txt") shouldBe topics.sorted
+    // no phantom `CREATE tenant ` / `CREATE namespace /` on restore
+    Main.run(spark, Seq("restore", tmp)).filterNot(_.startsWith("CREATE topic")) shouldBe
+      Seq("CREATE tenant t", "CREATE namespace t/ns")
+  }
+
+  test("seq is the array position in every file, also when files share a partition") {
+    val tmp = Files.createTempDirectory("graft_snap_seq").toString
+    Files.createDirectories(java.nio.file.Paths.get(tmp, "messages"))
+    // 40 small files and one of 5000 messages, content = array index
+    val sizes = (0 until 40).map(i => 1 + i % 7) :+ 5000
+    sizes.zipWithIndex.foreach { case (n, i) =>
+      Files.writeString(java.nio.file.Paths.get(tmp, "messages", s"topic$i.json"),
+        (0 until n).map(j => s"""{"content":"$j","binary_encoded":false}""")
+          .mkString("[", ",", "]"))
+    }
+    val conf = spark.conf
+    val saved = conf.get("spark.sql.files.openCostInBytes")
+    conf.set("spark.sql.files.openCostInBytes", "1024")
+    try {
+      val msgs = SnapshotIO.readMessages(spark, tmp)
+      msgs.rdd.getNumPartitions should be < sizes.size
+      val rows = msgs.select("topic", "seq", "content").collect()
+      rows.length shouldBe sizes.sum
+      rows.foreach(r => r.getString(2) shouldBe r.getLong(1).toString)
+      rows.groupBy(_.getString(0)).values.map(_.length).toSeq.sorted shouldBe sizes.sorted
+    } finally conf.set("spark.sql.files.openCostInBytes", saved)
+  }
+
+  test("each verb touches its data once: one source stage, no read shuffle, one replay query") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerStageSubmitted, StageInfo}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import org.apache.spark.sql.graft.Bridge
+    import graft.sources.connector.BrokerRegistry
+    /** Query executions and stages started while `body` runs. */
+    def recorded(body: => Unit): (Int, Seq[StageInfo]) = {
+      val queries = new java.util.concurrent.atomic.AtomicInteger()
+      val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]()
+      val l = new SparkListener {
+        override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+          case _: SparkListenerSQLExecutionStart => queries.incrementAndGet()
+          case _ => ()
+        }
+        override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+          stages.add(e.stageInfo)
+      }
+      Bridge.drainListenerBus(spark)
+      spark.sparkContext.addSparkListener(l)
+      try { body; Bridge.drainListenerBus(spark) }
+      finally spark.sparkContext.removeSparkListener(l)
+      (queries.get, stages.toArray(Array.empty[StageInfo]).toSeq)
+    }
+    def scanning(stages: Seq[StageInfo], rdd: String) =
+      stages.filter(_.rddInfos.exists(_.name == rdd))
+    val n = 12
+    BrokerRegistry.clear()
+    try {
+      for (t <- 0 until n; i <- 0 to t)
+        BrokerRegistry.publish(s"persistent://t/ns$t/x$t", s"$t#$i".getBytes("UTF-8"))
+      val raw = spark.read.format("graft.sources.connector.BrokerSource").load()
+      val env = raw.select(col("topic"), col("seq"),
+          graft.functions.codec.encodeContent(col("payload")).as("c"))
+        .select(col("topic"), col("c.content").as("content"),
+          col("c.binary_encoded").as("binary_encoded"),
+          lit(null).cast("map<string,string>").as("properties"),
+          timestamp_millis(lit(1704067200000L) + col("seq")).as("publish_ts"),
+          lit(null).cast("timestamp").as("event_ts"),
+          lit(null).cast("string").as("partition_key"), col("seq"))
+      val tmp = Files.createTempDirectory("graft_snap_passes").toString
+      // capture: one query, scanning the source in one stage of a
+      // task per topic
+      val (captures, capture) = recorded(Replay.capture(env, tmp))
+      captures shouldBe 1
+      scanning(capture, "DataSourceRDD").map(_.numTasks) shouldBe Seq(n)
+
+      // the helper looks inside adaptive plans, which a plain
+      // collect would treat as a leaf
+      val read = SnapshotIO.readMessages(spark, tmp)
+      new AdaptiveSparkPlanHelper {}.collect(read.queryExecution.executedPlan) {
+        case e: ShuffleExchangeLike => e
+      } shouldBe empty
+      read.count() shouldBe (1 to n).sum
+
+      val out = Files.createTempDirectory("graft_snap_passes_out").toString
+      // replay: one query (its jobs are the repartition's map stage
+      // and the send), reading the snapshot in one stage
+      val (replays, replay) = recorded(
+        Main.run(spark, Seq("replay", tmp, out)) shouldBe Seq(s"replayed $n topics to $out"))
+      replays shouldBe 1
+      scanning(replay, "FileScanRDD") should have size 1
+    } finally BrokerRegistry.clear()
   }
 }
 
