@@ -1,22 +1,34 @@
 package graft
 
-/** Shared fused-fan-out runner (the Streams.inParallel semantics,
-  * hoisted so store machinery below the streaming layer can overlap
-  * independent legs too — r19: taggedSegmentAppend's staging writes,
-  * manifestDeltaRows' per-modality branch evaluation). The per-batch
-  * fixed bill of the at-ingest capstones is Spark JOB COUNT, and the
-  * scheduler is multi-thread-safe by design; legs that touch
-  * DISJOINT state overlap instead of queueing.
+/** FUSED FAN-OUT — run independent legs of one unit of work
+  * concurrently: a crawl batch's store legs (the text seal vs each
+  * modality's mark+label+seal chain vs the prep flags scoring leg),
+  * a multi-table seal's staging writes (Dedup.taggedSegmentAppend),
+  * a delta derivation's per-modality branches. The per-batch cost
+  * of the at-ingest capstones is dominated by Spark JOB COUNT, not
+  * data — ~30 small sequential jobs per 3-modality batch, each
+  * paying scheduler + plan-compilation latency while the cores
+  * idle. Spark's scheduler is multi-thread-safe by design (one
+  * SparkContext, many job-submitting threads), so legs that touch
+  * DISJOINT state overlap instead of queueing and the fixed bill
+  * drops toward the slowest leg (ProbeScale mmbatch/prepbatch).
   *
-  * Failure semantics (the inParallel contract): every leg runs to
-  * completion, then the FIRST failure rethrows. `GRAFT_FUSE=off`
-  * keeps the sequential form as an attribution knob. Legs inherit
-  * the caller's thread-locals (pool created in the calling thread;
-  * Spark's localProperties are InheritableThreadLocal). */
+  * What callers deliberately do NOT fuse: the COMMIT PROTOCOL.
+  * Every store still seals under its own tag, marker and lease, so
+  * a batch that crashed between legs re-runs only the legs whose
+  * markers are missing — the piecewise resume StreamingSpec pins.
+  *
+  * Failure semantics: every leg runs to completion (no mid-write
+  * cancellation — a killed half-write would just be retry-cleaned,
+  * but letting legs finish keeps the store states simple), then the
+  * FIRST failure rethrows. An interrupt of the calling thread is
+  * rethrown after the walk, carrying that failure as suppressed.
+  * Legs inherit the caller's thread-locals (pool created in the
+  * calling thread; Spark's localProperties are
+  * InheritableThreadLocal). */
 object Par {
   def run[T](legs: Seq[() => T]): Seq[T] =
-    if (legs.sizeIs <= 1 || sys.env.get("GRAFT_FUSE").contains("off"))
-      legs.map(_())
+    if (legs.sizeIs <= 1) legs.map(_())
     else {
       val pool =
         java.util.concurrent.Executors.newFixedThreadPool(legs.size)
@@ -56,6 +68,7 @@ object Par {
           }
         }
         if (interrupted != null) {
+          if (firstFailure != null) interrupted.addSuppressed(firstFailure)
           Thread.currentThread().interrupt()
           throw interrupted
         }

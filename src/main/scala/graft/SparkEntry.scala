@@ -4684,7 +4684,7 @@ object SparkEntry {
       // fixture collection on the PARENT session (full width); only
       // the stream and its batch-scale appends run in the drain
       // session — and each append itself plans at full width (the
-      // nearDupIngest width-scope convention inside postingsIngest)
+      // width scope of Streams.microBatches)
       val all = t(s, dir, "documents").select(col("doc_id"), col("text"))
         .as[(Long, String)].collect().toSeq
       val batches = (0 until 3).map(i => all.filter(_._1 % 3 == i))

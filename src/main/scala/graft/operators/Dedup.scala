@@ -682,14 +682,19 @@ object Dedup {
   /** Edge-count gate below which [[starComponents]] runs its
     * driver-side union-find fast path instead of the distributed
     * star rounds — the [[graft.operators.LabelStore.DefaultUfEdgeCap]]
-    * convention applied to the shared CC core: canonical edges are
-    * 16-byte tuples, so millions fit the driver comfortably and a
-    * sorted-array union-find over them is sub-second, vs ~2 shuffle
+    * convention applied to the shared CC core: a sorted-array
+    * union-find over millions of edges is sub-second, vs ~2 shuffle
     * jobs + 2 driver materializations PER star round (the fixed cost
     * that dominated the fixture-scale CC consumers: q178/q208's
-    * keeper chains measured 6-11 s of mostly round overhead). Past
-    * the cap — the 100 TB edge set — the distributed rounds run
-    * unchanged. */
+    * keeper chains measured 6-11 s of mostly round overhead). Driver
+    * memory near the cap: the bounded collect materializes each
+    * canonical edge as a boxed `Row` (~100 bytes with its two boxed
+    * longs) and the labels go back out as a second `Row` array of up
+    * to twice as many nodes, so a collect near the default cap holds
+    * on the order of 1 GB of transient driver heap — the primitive
+    * arrays the union-find itself runs on (16 bytes per edge) are the
+    * small part. Past the cap — the 100 TB edge set — the distributed
+    * rounds run unchanged. */
   val DefaultDriverCcEdgeCap: Int = 5000000
 
   /** [[connectedComponentsStar]] plus the round count (spec asserts
@@ -3151,15 +3156,6 @@ object Dedup {
     out
   }
 
-  /** EXACTLY-ONCE store append under retry, shared by the minhash and
-    * phash ingest paths: stage → move-in with tag-named files →
-    * marker. A crash anywhere before the marker leaves either
-    * untouched tables or some `seg-<tag>-*` files with no marker; the
-    * retry deletes exactly those files and redoes the append — the
-    * staged content is a pure function of (batch, as-of store), so
-    * the redo reproduces what the crash interrupted. A crash AFTER
-    * the marker is the caller's isBatchCommitted skip. Caller holds
-    * the store lease. */
   /** Delete any half-landed `seg-<tag>-*` files of an UNCOMMITTED tag
     * under `root`'s tables — the retry-hygiene half of
     * [[taggedSegmentAppend]], also called BEFORE a tagged path reads
@@ -3180,9 +3176,16 @@ object Dedup {
     }
   }
 
-  // private[graft]: the growing embedding store (Streams
-  // .marginIngestGrowing) appends through the SAME seal protocol —
-  // one implementation of stage-then-rename-then-mark, not a copy
+  /** EXACTLY-ONCE store append under retry, the one implementation
+    * of the seal protocol every tagged store shares: stage → move-in
+    * with tag-named files → marker. A crash anywhere before the
+    * marker leaves either untouched tables or some `seg-<tag>-*`
+    * files with no marker; the retry deletes exactly those files and
+    * redoes the append — the staged content is a pure function of
+    * (batch, as-of store), so the redo reproduces what the crash
+    * interrupted. A crash AFTER the marker is the caller's
+    * isBatchCommitted skip ([[sealOnce]] packages both). Caller
+    * holds the store lease. */
   private[graft] def taggedSegmentAppend(
       spark: org.apache.spark.sql.SparkSession, indexDir: String,
       tag: String, tables: Seq[(String, DataFrame)]): Unit = {
@@ -3223,4 +3226,20 @@ object Dedup {
     fs.create(marker, true).close()
     fs.delete(staging, true)
   }
+
+  /** Seal `tables` into `root` as tag `tag` exactly once: skip if the
+    * tag is committed, else take the store lease as `owner` and run
+    * [[taggedSegmentAppend]]. `tables` is evaluated only for an
+    * uncommitted tag, inside the lease — so any per-seal work
+    * (deriving the rows, guards on the store) is skipped on a
+    * committed retry. Returns whether this call landed the seal. */
+  private[graft] def sealOnce(spark: org.apache.spark.sql.SparkSession,
+      root: String, tag: String, owner: String)(
+      tables: => Seq[(String, DataFrame)]): Boolean =
+    !isBatchCommitted(spark, root, tag) && {
+      graft.sources.StoreLease.withLease(spark, root, owner) {
+        taggedSegmentAppend(spark, root, tag, tables)
+      }
+      true
+    }
 }

@@ -224,13 +224,10 @@ object LabelStore {
     (segIdsOf("labels") ++ segIdsOf("anchors")).distinct.sorted
       .foreach { k =>
         val segTag = s"$tag-p$k"
-        if (!Dedup.isBatchCommitted(spark, root, segTag))
-          graft.sources.StoreLease.withLease(spark, root,
-              s"labels-$segTag") {
-            Dedup.taggedSegmentAppend(spark, root, segTag,
-              Seq("labels" -> segRead("labels", k, LabelsSchema),
-                "anchors" -> segRead("anchors", k, AnchorsSchema)))
-          }
+        Dedup.sealOnce(spark, root, segTag, s"labels-$segTag") {
+          Seq("labels" -> segRead("labels", k, LabelsSchema),
+            "anchors" -> segRead("anchors", k, AnchorsSchema))
+        }
       }
     fs.delete(scratch, true)
     graft.sources.StoreLease.withLease(spark, root,

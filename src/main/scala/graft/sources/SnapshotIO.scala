@@ -48,6 +48,14 @@ object SnapshotIO {
     */
   def readMessages(spark: SparkSession, dir: String,
       compatLossy: Boolean = false): DataFrame = {
+    // a zero-byte file holds no JSON array at all, but Spark drops
+    // empty files before the read, so the null guard below never sees
+    // it: reject it here by name instead of reading it as no messages.
+    val glob = new org.apache.hadoop.fs.Path(s"$dir/messages/*.json")
+    Option(glob.getFileSystem(spark.sessionState.newHadoopConf())
+        .globStatus(glob)).toSeq.flatten.find(_.getLen == 0L)
+      .foreach(st => throw new IllegalArgumentException(
+        s"malformed snapshot file: ${st.getPath} is empty"))
     // the single glob is deliberate: Spark expands it itself, so
     // sanitized file names containing glob metacharacters (e.g. a
     // topic named "data[1]") are never re-globbed the way concrete

@@ -2,11 +2,15 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, StreamingQuery, StreamingQueryListener, Trigger}
 
+import graft.Phases
 import graft.gen.Generator
+import graft.operators.Dedup
+import graft.sources.StoreLease
 
 /** Structured Streaming surface of the engine (SURVEY §2.10 T1-T8,
   * §3.3). The reference's asyncio rate loop, sleep-based throttling
@@ -66,6 +70,50 @@ object Streams {
     df.withWatermark(tsCol, delay)
       .dropDuplicatesWithinWatermark(idCols.head, idCols.tail: _*)
 
+  /** THE micro-batch sink of every exactly-once store ingest below:
+    * `writeStream` + checkpoint + `foreachBatch`, with `body` run on
+    * the batch's own session, the batch and its id, and timed as the
+    * `<phase>[b<batchId>]` Phases reading.
+    *
+    * Width scope: the body is a BATCH job (no streaming state
+    * anywhere in it), so when the stream runs inside a scoped narrow
+    * session (an 8-partition drain sized for memory-sink streaming
+    * aggregates, say) its stages must not inherit that throttle —
+    * the session's shuffle-partition count is set to the context's
+    * `defaultParallelism` for the body and restored on every exit
+    * path. The restore matters because the stream's cloned session
+    * also plans the STREAMING side of later micro-batches: a leaked
+    * override would silently resize state-store partitioning if a
+    * stateful operator were ever added upstream of a sink (today
+    * every ingest's streaming plan is stateless, so the restore is
+    * insurance). StreamingSpec pins both halves. */
+  private[graft] def microBatches(df: DataFrame, checkpointDir: String,
+      phase: String)(body: (SparkSession, DataFrame, Long) => Unit)
+      : StreamingQuery =
+    df.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        val s = batch.sparkSession
+        val widthKey = "spark.sql.shuffle.partitions"
+        val oldWidth = s.conf.get(widthKey)
+        s.conf.set(widthKey, s.sparkContext.defaultParallelism)
+        try Phases.time(s"$phase[b$batchId]")(body(s, batch, batchId))
+        finally s.conf.set(widthKey, oldWidth)
+      }
+      .start()
+
+  /** The output half of the exactly-once contract: `df` lands in the
+    * `batch_id=<batchId>` partition of `dir` with DYNAMIC overwrite,
+    * so a retried batch replaces its own partition and never appends
+    * a second copy. */
+  private def sinkPartition(df: DataFrame, batchId: Long,
+      dir: String): Unit =
+    df.withColumn("batch_id", lit(batchId))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("batch_id")
+      .parquet(dir)
+
   /** T7+NS: CONTINUOUS near-dup ingest — the at-rest signature index
     * (Dedup.writeNearDupIndex) driven by a stream. Per micro-batch:
     * (1) mark the batch against the index AS OF the batch start
@@ -107,63 +155,24 @@ object Streams {
     // store); once a store crosses the point-fetch threshold it never
     // shrinks below it mid-stream (appends only), so the decision is
     // re-probed only while still small
-    val bigThreshold =
-      graft.operators.Dedup.DefaultPointFetchMinStoreBytes
     @volatile var knownBig = false
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val s = batch.sparkSession
-        // the mark is a BATCH job (foreachBatch — no streaming state
-        // anywhere in it): when the stream runs inside a scoped
-        // 8-partition drain session (sized for memory-sink streaming
-        // aggs), the minhash + candidate + re-score stages must not
-        // inherit that throttle — plan them at the context's full
-        // width. Restored in the finally below: the cloned session
-        // also plans the STREAMING side of later micro-batches, and
-        // a width override leaking into that would silently resize
-        // state-store partitioning if a stateful operator were ever
-        // added upstream of this sink (today the streaming plan is
-        // stateless — zero state operators, spec-asserted — so the
-        // restore is insurance, not a live bug fix).
-        val widthKey = "spark.sql.shuffle.partitions"
-        val oldWidth = s.conf.get(widthKey)
-        s.conf.set(widthKey, s.sparkContext.defaultParallelism)
-        try {
-        if (!knownBig) {
-          val p = new org.apache.hadoop.fs.Path(s"$indexDir/shingles")
-          val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-          knownBig = fs.exists(p) &&
-            fs.getContentSummary(p).getLength >= bigThreshold
-        }
-        // mark + append fused: the fresh docs' signatures are sliced
-        // from the mark pass's cached tables, not recomputed from
-        // text (Dedup.ingestBatchAgainst scaladoc); the marked result
-        // is eagerly materialized inside, so the parquet write below
-        // doesn't recompute the candidate join against the store the
-        // append just mutated
-        val marked = graft.Phases.time(s"mark_append[b$batchId]") {
-          graft.operators.Dedup.ingestBatchAgainst(
-            s, batch.toDF(), idCol, textCol, indexDir,
-            shingleN, k, bands, threshold,
-            pointFetchMinStoreBytes =
-              if (knownBig) 0L else Long.MaxValue,
-            commitTag = Some(s"b$batchId"))
-        }
-        // batchId-keyed partition + dynamic overwrite = the output
-        // half of the exactly-once contract: a retried batch
-        // replaces its own partition, never appends a second copy
-        graft.Phases.time(s"sink[b$batchId]") {
-          marked
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(outDir)
-        }
-        } finally s.conf.set(widthKey, oldWidth)
+    microBatches(docs, checkpointDir, "neardup_ingest") { (s, b, batchId) =>
+      if (!knownBig) knownBig = Dedup.storeAtLeastBytes(s,
+        s"$indexDir/shingles", Dedup.DefaultPointFetchMinStoreBytes)
+      // mark + append fused: the fresh docs' signatures are sliced
+      // from the mark pass's cached tables, not recomputed from
+      // text (Dedup.ingestBatchAgainst scaladoc); the marked result
+      // is eagerly materialized inside, so the parquet write below
+      // doesn't recompute the candidate join against the store the
+      // append just mutated
+      val marked = Phases.time(s"mark_append[b$batchId]") {
+        Dedup.ingestBatchAgainst(s, b, idCol, textCol, indexDir,
+          shingleN, k, bands, threshold,
+          pointFetchMinStoreBytes = if (knownBig) 0L else Long.MaxValue,
+          commitTag = Some(s"b$batchId"))
       }
-      .start()
+      Phases.time(s"sink[b$batchId]")(sinkPartition(marked, batchId, outDir))
+    }
   }
 
   /** CONTINUOUS POSTINGS-INDEX INGEST: keep the at-rest BM25 store
@@ -175,29 +184,16 @@ object Streams {
     * remaining caller contract is the indexing one: a doc must arrive
     * in only one batch — dedup of re-crawls belongs to nearDupIngest,
     * UPSTREAM of this sink). Zero streaming state: the batch job is a
-    * tokenize + aggregate + clustered write, planned at full width
-    * (the nearDupIngest width-scope convention, restored in finally).
-    * Readers see every sealed segment immediately; stats merge
-    * additively at query time, so no reader-side refresh step
-    * exists to forget. */
+    * tokenize + aggregate + clustered write. Readers see every sealed
+    * segment immediately; stats merge additively at query time, so
+    * no reader-side refresh step exists to forget. */
   def postingsIngest(docs: DataFrame, idCol: String, textCol: String,
       indexDir: String, checkpointDir: String,
       nBuckets: Int = 64, numFiles: Int = 8): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val s = batch.sparkSession
-        val widthKey = "spark.sql.shuffle.partitions"
-        val oldWidth = s.conf.get(widthKey)
-        s.conf.set(widthKey, s.sparkContext.defaultParallelism)
-        try graft.Phases.time(s"index_append[b$batchId]") {
-          graft.operators.Retrieval.appendPostingsSegmentIdempotent(
-            batch.toDF(), idCol, textCol, indexDir, s"batch$batchId",
-            nBuckets, numFiles)
-          ()
-        } finally s.conf.set(widthKey, oldWidth)
-      }
-      .start()
+    microBatches(docs, checkpointDir, "index_append") { (_, b, batchId) =>
+      graft.operators.Retrieval.appendPostingsSegmentIdempotent(
+        b, idCol, textCol, indexDir, s"batch$batchId", nBuckets, numFiles)
+    }
 
   /** Streaming DECONTAMINATION GATE — the crawl-side monitor of the
     * q135 threshold sweep: each micro-batch of crawl docs is scored
@@ -256,11 +252,9 @@ object Streams {
 
   /** ONE definition of the sealed-partials micro-batch sink shared
     * by the partial-landing ingests (contamination q139, excision
-    * q169, moments q148, classifier q158, resampling q160): full-width
-    * override with restore, per-batch writer lease, batchId-named
-    * segment under `storeRoot/partials`, EXACTLY-ONCE via the
-    * parquet `_SUCCESS` seal — a sealed segment is skipped verbatim
-    * on re-delivery, a half-landed one is cleaned and redone. Each
+    * q169, moments q148, classifier q158, resampling q160): per-batch
+    * writer lease and a batchId-named segment under
+    * `storeRoot/partials`, EXACTLY-ONCE via [[sealedPartial]]. Each
     * ingest supplies only its per-batch partial computation. (The
     * store-GROWTH sinks — near-dup, postings index, novelty — have
     * multi-directory commit protocols of their own and deliberately
@@ -268,28 +262,26 @@ object Streams {
   private def sealedPartialsIngest(docs: DataFrame, storeRoot: String,
       checkpointDir: String, tag: String)(
       partialOf: DataFrame => DataFrame): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val s = batch.sparkSession
-        val widthKey = "spark.sql.shuffle.partitions"
-        val oldWidth = s.conf.get(widthKey)
-        s.conf.set(widthKey, s.sparkContext.defaultParallelism)
-        try graft.Phases.time(s"${tag}_append[b$batchId]") {
-         graft.sources.StoreLease.withLease(s, storeRoot,
-            s"$tag-b$batchId") {
-          val seg = new org.apache.hadoop.fs.Path(
-            s"$storeRoot/partials/batch_id=$batchId")
-          val fs = seg.getFileSystem(s.sparkContext.hadoopConfiguration)
-          val marker = new org.apache.hadoop.fs.Path(seg, "_SUCCESS")
-          if (!fs.exists(marker)) {
-            if (fs.exists(seg)) fs.delete(seg, true) // half-landed retry
-            partialOf(batch.toDF()).write.parquet(seg.toString)
-          }
-         }
-        } finally s.conf.set(widthKey, oldWidth)
+    microBatches(docs, checkpointDir, s"${tag}_append") { (s, b, batchId) =>
+      StoreLease.withLease(s, storeRoot, s"$tag-b$batchId") {
+        sealedPartial(s, storeRoot, batchId)(partialOf(b))
       }
-      .start()
+    }
+
+  /** Land `df` as the `_SUCCESS`-sealed parquet segment
+    * `storeRoot/partials/batch_id=<batchId>`, exactly once: a sealed
+    * segment is skipped verbatim on re-delivery, a half-landed one
+    * (files but no seal — a crashed attempt) is deleted and redone.
+    * Caller holds the store lease. */
+  private def sealedPartial(s: SparkSession, storeRoot: String,
+      batchId: Long)(df: => DataFrame): Unit = {
+    val seg = new Path(s"$storeRoot/partials/batch_id=$batchId")
+    val fs = seg.getFileSystem(s.sparkContext.hadoopConfiguration)
+    if (!fs.exists(new Path(seg, "_SUCCESS"))) {
+      if (fs.exists(seg)) fs.delete(seg, true) // half-landed retry
+      df.write.parquet(seg.toString)
+    }
+  }
 
   /** Streaming IMPORTANCE-RESAMPLING RESERVOIR — q159's Gumbel-top-k
     * selection kept live over a document stream. The mathematical
@@ -327,50 +319,23 @@ object Streams {
     * memory and streaming state is zero. Marked rows land in
     * batchId-keyed partitions with dynamic overwrite; the tagged
     * store append skips committed batches and cleans half-landed
-    * ones — exactly-once on both the output and the index. Width
-    * scope per the nearDupIngest convention (restored in finally). */
+    * ones — exactly-once on both the output and the index. */
   def phashIngest(fps: DataFrame, indexDir: String, outDir: String,
       checkpointDir: String, radius: Int, width: Int,
       blocks: Option[Int] = None, keyBlocks: Int = 1): StreamingQuery = {
-    // probe the key-store size ONCE per stream, not per micro-batch
-    // (the nearDupIngest convention: the probe is an O(files)
-    // recursive LIST on an object store; a store never shrinks below
-    // the threshold mid-stream, so re-probe only while still small)
-    val bigThreshold =
-      graft.operators.Dedup.DefaultPointFetchMinStoreBytes
+    // probe the key-store size ONCE per stream (the nearDupIngest
+    // store-size latch)
     @volatile var knownBig = false
-    fps.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val s = batch.sparkSession
-        val widthKey = "spark.sql.shuffle.partitions"
-        val oldWidth = s.conf.get(widthKey)
-        s.conf.set(widthKey, s.sparkContext.defaultParallelism)
-        try {
-          if (!knownBig) {
-            val p = new org.apache.hadoop.fs.Path(s"$indexDir/keys")
-            val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-            knownBig = fs.exists(p) &&
-              fs.getContentSummary(p).getLength >= bigThreshold
-          }
-          val marked = graft.Phases.time(s"phash_mark_append[b$batchId]") {
-            graft.operators.Dedup.ingestPhashBatchAgainst(
-              s, batch.toDF(), indexDir, radius, width, blocks,
-              keyBlocks, commitTag = Some(s"b$batchId"),
-              pruneMinStoreBytes =
-                if (knownBig) 0L else Long.MaxValue)
-          }
-          graft.Phases.time(s"sink[b$batchId]") {
-            marked
-              .withColumn("batch_id", lit(batchId))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("batch_id")
-              .parquet(outDir)
-          }
-        } finally s.conf.set(widthKey, oldWidth)
+    microBatches(fps, checkpointDir, "phash_ingest") { (s, b, batchId) =>
+      if (!knownBig) knownBig = Dedup.storeAtLeastBytes(s,
+        s"$indexDir/keys", Dedup.DefaultPointFetchMinStoreBytes)
+      val marked = Phases.time(s"phash_mark_append[b$batchId]") {
+        Dedup.ingestPhashBatchAgainst(s, b, indexDir, radius, width,
+          blocks, keyBlocks, commitTag = Some(s"b$batchId"),
+          pruneMinStoreBytes = if (knownBig) 0L else Long.MaxValue)
       }
-      .start()
+      Phases.time(s"sink[b$batchId]")(sinkPartition(marked, batchId, outDir))
+    }
   }
 
   /** Streaming TEMPERATURE MIX — the q124 recipe applied at ingest
@@ -446,41 +411,28 @@ object Streams {
       storeTable: String, planes: Seq[Array[Double]], radius: Int,
       k: Int, threshold: Double, storeRoot: String,
       checkpointDir: String): StreamingQuery =
-    batch.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val s = b.sparkSession
-        val widthKey = "spark.sql.shuffle.partitions"
-        val oldWidth = s.conf.get(widthKey)
-        s.conf.set(widthKey, s.sparkContext.defaultParallelism)
-        try graft.Phases.time(s"margin_grow[b$batchId]") {
-          graft.sources.StoreLease.withLease(s, storeParent,
-              s"margin-grow-b$batchId") {
-            val storeDir = s"$storeParent/$storeTable"
-            val bd = b.toDF()
-            val seg = new org.apache.hadoop.fs.Path(
-              s"$storeRoot/partials/batch_id=$batchId")
-            val fs = seg.getFileSystem(
-              s.sparkContext.hadoopConfiguration)
-            val marker = new org.apache.hadoop.fs.Path(seg, "_SUCCESS")
-            if (!fs.exists(marker)) {
-              if (fs.exists(seg)) fs.delete(seg, true) // half-landed
-              graft.operators.Similarity.marginProbeStore(
-                s, storeDir, bd, planes, radius, k, threshold)
-                .write.parquet(seg.toString)
-            }
-            if (!graft.operators.Dedup.isBatchCommitted(s, storeParent,
-                s"b$batchId"))
-              graft.operators.Dedup.taggedSegmentAppend(s, storeParent,
-                s"b$batchId", Seq(storeTable -> bd
-                  .withColumn("bucket", graft.functions.vectors
-                    .hyperplaneBucketFast(col("embedding"), planes))
-                  .repartitionByRange(1, col("bucket"))
-                  .sortWithinPartitions(col("bucket"))))
-          }
-        } finally s.conf.set(widthKey, oldWidth)
+    microBatches(batch, checkpointDir, "margin_grow") { (s, bd, batchId) =>
+      // one lease over BOTH artifacts: the verdict seal and the store
+      // append are one write sequence (the write-order contract above)
+      StoreLease.withLease(s, storeParent, s"margin-grow-b$batchId") {
+        sealedPartial(s, storeRoot, batchId) {
+          graft.operators.Similarity.marginProbeStore(
+            s, s"$storeParent/$storeTable", bd, planes, radius, k, threshold)
+        }
+        if (!Dedup.isBatchCommitted(s, storeParent, s"b$batchId"))
+          Dedup.taggedSegmentAppend(s, storeParent, s"b$batchId",
+            Seq(storeTable -> bucketed(bd, planes)))
       }
-      .start()
+    }
+
+  /** Embedding rows with their hyperplane bucket, as ONE
+    * bucket-sorted file — the growing embedding stores' segment
+    * layout. */
+  private def bucketed(f: DataFrame, planes: Seq[Array[Double]]): DataFrame =
+    f.withColumn("bucket", graft.functions.vectors
+        .hyperplaneBucketFast(col("embedding"), planes))
+      .repartitionByRange(1, col("bucket"))
+      .sortWithinPartitions(col("bucket"))
 
   /** TWO GROWING-STORE MARGIN INGEST — the CCMatrix steady state
     * completing the margin lifecycle family (static two-sided q199,
@@ -506,50 +458,25 @@ object Streams {
       xTable: String, yTable: String, planes: Seq[Array[Double]],
       radius: Int, k: Int, threshold: Double, storeRoot: String,
       checkpointDir: String): StreamingQuery =
-    batch.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val s = b.sparkSession
-        val widthKey = "spark.sql.shuffle.partitions"
-        val oldWidth = s.conf.get(widthKey)
-        s.conf.set(widthKey, s.sparkContext.defaultParallelism)
-        try graft.Phases.time(s"margin_grow2[b$batchId]") {
-          graft.sources.StoreLease.withLease(s, storeParent,
-              s"margin-grow2-b$batchId") {
-            val bd = b.toDF().localCheckpoint()
-            val bx = bd.filter(col("side") === "x").drop("side")
-            val by = bd.filter(col("side") === "y").drop("side")
-            val seg = new org.apache.hadoop.fs.Path(
-              s"$storeRoot/partials/batch_id=$batchId")
-            val fs = seg.getFileSystem(
-              s.sparkContext.hadoopConfiguration)
-            val marker = new org.apache.hadoop.fs.Path(seg, "_SUCCESS")
-            if (!fs.exists(marker)) {
-              if (fs.exists(seg)) fs.delete(seg, true) // half-landed
-              graft.operators.Similarity.marginProbeStore(
-                  s, s"$storeParent/$yTable", bx, planes, radius, k,
-                  threshold)
-                .withColumn("dir", lit("x2y"))
-                .unionByName(graft.operators.Similarity
-                  .marginProbeStore(s, s"$storeParent/$xTable", by,
-                    planes, radius, k, threshold)
-                  .withColumn("dir", lit("y2x")))
-                .write.parquet(seg.toString)
-            }
-            def bucketed(f: DataFrame) = f
-              .withColumn("bucket", graft.functions.vectors
-                .hyperplaneBucketFast(col("embedding"), planes))
-              .repartitionByRange(1, col("bucket"))
-              .sortWithinPartitions(col("bucket"))
-            if (!graft.operators.Dedup.isBatchCommitted(s, storeParent,
-                s"b$batchId"))
-              graft.operators.Dedup.taggedSegmentAppend(s, storeParent,
-                s"b$batchId", Seq(xTable -> bucketed(bx),
-                  yTable -> bucketed(by)))
-          }
-        } finally s.conf.set(widthKey, oldWidth)
+    microBatches(batch, checkpointDir, "margin_grow2") { (s, b, batchId) =>
+      StoreLease.withLease(s, storeParent, s"margin-grow2-b$batchId") {
+        val bd = b.localCheckpoint()
+        val bx = bd.filter(col("side") === "x").drop("side")
+        val by = bd.filter(col("side") === "y").drop("side")
+        sealedPartial(s, storeRoot, batchId) {
+          graft.operators.Similarity.marginProbeStore(
+              s, s"$storeParent/$yTable", bx, planes, radius, k, threshold)
+            .withColumn("dir", lit("x2y"))
+            .unionByName(graft.operators.Similarity
+              .marginProbeStore(s, s"$storeParent/$xTable", by,
+                planes, radius, k, threshold)
+              .withColumn("dir", lit("y2x")))
+        }
+        if (!Dedup.isBatchCommitted(s, storeParent, s"b$batchId"))
+          Dedup.taggedSegmentAppend(s, storeParent, s"b$batchId",
+            Seq(xTable -> bucketed(bx, planes), yTable -> bucketed(by, planes)))
       }
-      .start()
+    }
 
   /** STREAMING COMPONENT-AWARE FOLD ASSIGNMENT — q197's
     * leakage-safe train/val/test folds decided AT INGEST: a batch
@@ -633,7 +560,7 @@ object Streams {
       useLabelStore: Boolean = true): StreamingQuery = {
     // the regime latch: the pair store only GROWS, so the size gate
     // flips at most once per stream — once tripped, later batches
-    // skip the O(files) getContentSummary listing entirely (the
+    // skip the O(files) store-size listing entirely (the
     // storeAtLeastBytes once-per-stream convention, adapted to a
     // store that grows under the probe)
     var boundedLatched = false
@@ -643,311 +570,296 @@ object Streams {
     // volatile: set inside a fused leg thread (graft.Par), read by
     // the next batch's foreachBatch thread
     @volatile var bootstrapped = false
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val s = batch.sparkSession
-        val widthKey = "spark.sql.shuffle.partitions"
-        val oldWidth = s.conf.get(widthKey)
-        s.conf.set(widthKey, s.sparkContext.defaultParallelism)
-        try graft.Phases.time(s"fold_ingest[b$batchId]") {
-          val tag = s"b$batchId"
-          val indexDir = s"$storeRoot/index"
-          val pairStore = s"$storeRoot/pairs"
-          val docsStore = s"$storeRoot/docs"
-          val b = batch.toDF()
-          val batchDocs = b.select(col(idCol), col(keyCol),
-            col(sourceCol)).localCheckpoint()
-          if (!boundedLatched)
-            boundedLatched = graft.operators.Dedup.storeAtLeastBytes(
-              s, s"$pairStore/pairs", boundedCcMinStoreBytes)
-          val labelRoot = s"$storeRoot/labels"
-          // docs append: touches only docsStore — its own fused leg
-          // (graft.Par) alongside the label/fold chain; the
-          // bootstrap/CC-regime reads of docsStore anti-join the
-          // batch ids out, so a concurrently landing batch segment
-          // is invisible to them (the same argument that makes the
-          // reads retry-proof)
-          val docsLeg: () => Unit = () =>
-            if (!graft.operators.Dedup.isBatchCommitted(s, docsStore,
-                tag))
-              graft.sources.StoreLease.withLease(s, docsStore,
-                  s"docs-append-$tag") {
-                graft.operators.Dedup.taggedSegmentAppend(s,
-                  docsStore, tag,
-                  Seq("docs" -> batchDocs.repartition(1)))
-              }
-          // batch labels: (idCol, group) for the batch's docs, plus
-          // a membership source for the drift leg (the touched
-          // components' FULL member sets — evaluated only when the
-          // drift monitor is on, and AFTER the label update landed)
-          def labelGrp(freshPairs: org.apache.spark.sql.DataFrame)
-              : (org.apache.spark.sql.DataFrame,
-                () => org.apache.spark.sql.DataFrame) = {
-              // THE LABEL STORE REGIME (default): labels are a point
-              // lookup + bounded union-find merge against the at-rest
-              // (doc → label) table — per-batch cost tracks the
-              // batch's label-grain edge set, with NO per-batch
-              // component re-walk (LabelStore scaladoc; LabelStoreSpec
-              // pins prefix equality with componentGroups)
-              if (!bootstrapped) {
-                // seed from the PRE-batch at-rest state: a retry
-                // that already appended this batch's pairs/docs is
-                // anti-joined back out, so the bootstrap reads the
-                // same state the first attempt saw
-                val bIds = batchDocs.select(col(idCol))
-                val priorDocs = s.read.parquet(s"$docsStore/docs")
-                  .join(bIds, Seq(idCol), "left_anti")
-                val priorPairs = s.read.parquet(s"$pairStore/pairs")
-                  .join(bIds.select(col(idCol).as("doc_a")),
-                    Seq("doc_a"), "left_anti")
-                  .join(bIds.select(col(idCol).as("doc_b")),
-                    Seq("doc_b"), "left_anti")
-                  .select(col("doc_a"), col("doc_b"))
-                graft.operators.LabelStore.bootstrap(s, labelRoot,
-                  priorDocs, idCol, col(keyCol), priorPairs)
-                // SYNC GUARD (once per stream, two aggregates — the
-                // refold convention): a store bootstrapped earlier
-                // but then grown under useLabelStore=false skips the
-                // re-seed via the committed bootstrap marker and
-                // would merge batches against labels missing the
-                // CC-regime batches' docs — wrong folds written
-                // silently. Compare the PRE-batch state on both
-                // sides (the store may legitimately hold this
-                // batch's labels already: a retry whose label append
-                // committed before the crash).
-                val priorIds = priorDocs
-                  .select(col(idCol).cast("long").as("doc_id"))
-                val lbl = graft.operators.LabelStore
-                  .read(s, labelRoot)
-                  .join(batchDocs.select(col(idCol).cast("long")
-                    .as("doc_id")), Seq("doc_id"), "left_anti")
-                  .localCheckpoint()
-                // CONTAINMENT only, not count equality: the hazard
-                // this guard exists for is DOCS MISSING LABELS
-                // (batches merged under useLabelStore=false after
-                // bootstrap). The label store may legitimately hold
-                // MORE rows than the docs table — LabelStore.update
-                // writes segment rows for absent edge endpoints (ids
-                // in neither store nor batch) so their merged label
-                // is readable at rest, and those rows are healthy,
-                // not a sync failure.
-                val missing = priorIds
-                  .join(lbl, Seq("doc_id"), "left_anti").count()
-                require(missing == 0L,
-                  s"label store $labelRoot is out of sync with " +
-                    s"$docsStore ($missing prior docs have no " +
-                    "label): the store was grown without the label " +
-                    "store (useLabelStore=false) after bootstrap — " +
-                    "delete the label table to re-bootstrap, or " +
-                    "keep running with useLabelStore=false")
-                org.apache.spark.sql.graft.Bridge
-                  .freeLocalCheckpoint(lbl)
-                bootstrapped = true
-              }
-              val seg = graft.operators.LabelStore.update(s,
-                labelRoot, batchDocs.select(col(idCol), col(keyCol)),
-                idCol, keyCol,
-                freshPairs.select(col("doc_a"), col("doc_b")), tag)
-              val bl = batchDocs
-                .select(col(idCol),
-                  col(idCol).cast("long").as("_ls_id"))
-                .join(seg.withColumnRenamed("doc_id", "_ls_id"),
-                  Seq("_ls_id"))
-                .select(col(idCol), col("group"))
-              // touched membership = one group-filtered store read
-              // (exact by merge monotonicity) — never a re-walk
-              (bl, () => graft.operators.LabelStore.membersOf(s,
-                  labelRoot, bl.select(col("group")).distinct())
-                .withColumnRenamed("doc_id", idCol))
+    microBatches(docs, checkpointDir, "fold_ingest") { (s, b, batchId) =>
+      val tag = s"b$batchId"
+      val indexDir = s"$storeRoot/index"
+      val pairStore = s"$storeRoot/pairs"
+      val docsStore = s"$storeRoot/docs"
+      val batchDocs = b.select(col(idCol), col(keyCol),
+        col(sourceCol)).localCheckpoint()
+      if (!boundedLatched)
+        boundedLatched = graft.operators.Dedup.storeAtLeastBytes(
+          s, s"$pairStore/pairs", boundedCcMinStoreBytes)
+      val labelRoot = s"$storeRoot/labels"
+      // docs append: touches only docsStore — its own fused leg
+      // (graft.Par) alongside the label/fold chain; the
+      // bootstrap/CC-regime reads of docsStore anti-join the
+      // batch ids out, so a concurrently landing batch segment
+      // is invisible to them (the same argument that makes the
+      // reads retry-proof)
+      val docsLeg: () => Unit = () =>
+        Dedup.sealOnce(s, docsStore, tag, s"docs-append-$tag") {
+          Seq("docs" -> batchDocs.repartition(1))
+        }
+      // batch labels: (idCol, group) for the batch's docs, plus
+      // a membership source for the drift leg (the touched
+      // components' FULL member sets — evaluated only when the
+      // drift monitor is on, and AFTER the label update landed)
+      def labelGrp(freshPairs: org.apache.spark.sql.DataFrame)
+          : (org.apache.spark.sql.DataFrame,
+            () => org.apache.spark.sql.DataFrame) = {
+          // THE LABEL STORE REGIME (default): labels are a point
+          // lookup + bounded union-find merge against the at-rest
+          // (doc → label) table — per-batch cost tracks the
+          // batch's label-grain edge set, with NO per-batch
+          // component re-walk (LabelStore scaladoc; LabelStoreSpec
+          // pins prefix equality with componentGroups)
+          if (!bootstrapped) {
+            // seed from the PRE-batch at-rest state: a retry
+            // that already appended this batch's pairs/docs is
+            // anti-joined back out, so the bootstrap reads the
+            // same state the first attempt saw
+            val bIds = batchDocs.select(col(idCol))
+            val priorDocs = s.read.parquet(s"$docsStore/docs")
+              .join(bIds, Seq(idCol), "left_anti")
+            val priorPairs = s.read.parquet(s"$pairStore/pairs")
+              .join(bIds.select(col(idCol).as("doc_a")),
+                Seq("doc_a"), "left_anti")
+              .join(bIds.select(col(idCol).as("doc_b")),
+                Seq("doc_b"), "left_anti")
+              .select(col("doc_a"), col("doc_b"))
+            graft.operators.LabelStore.bootstrap(s, labelRoot,
+              priorDocs, idCol, col(keyCol), priorPairs)
+            // SYNC GUARD (once per stream, two aggregates — the
+            // refold convention): a store bootstrapped earlier
+            // but then grown under useLabelStore=false skips the
+            // re-seed via the committed bootstrap marker and
+            // would merge batches against labels missing the
+            // CC-regime batches' docs — wrong folds written
+            // silently. Compare the PRE-batch state on both
+            // sides (the store may legitimately hold this
+            // batch's labels already: a retry whose label append
+            // committed before the crash).
+            val priorIds = priorDocs
+              .select(col(idCol).cast("long").as("doc_id"))
+            val lbl = graft.operators.LabelStore
+              .read(s, labelRoot)
+              .join(batchDocs.select(col(idCol).cast("long")
+                .as("doc_id")), Seq("doc_id"), "left_anti")
+              .localCheckpoint()
+            // CONTAINMENT only, not count equality: the hazard
+            // this guard exists for is DOCS MISSING LABELS
+            // (batches merged under useLabelStore=false after
+            // bootstrap). The label store may legitimately hold
+            // MORE rows than the docs table — LabelStore.update
+            // writes segment rows for absent edge endpoints (ids
+            // in neither store nor batch) so their merged label
+            // is readable at rest, and those rows are healthy,
+            // not a sync failure.
+            val missing = priorIds
+              .join(lbl, Seq("doc_id"), "left_anti").count()
+            require(missing == 0L,
+              s"label store $labelRoot is out of sync with " +
+                s"$docsStore ($missing prior docs have no " +
+                "label): the store was grown without the label " +
+                "store (useLabelStore=false) after bootstrap — " +
+                "delete the label table to re-bootstrap, or " +
+                "keep running with useLabelStore=false")
+            org.apache.spark.sql.graft.Bridge
+              .freeLocalCheckpoint(lbl)
+            bootstrapped = true
           }
-          // the r16 CC regimes, kept as the store-less fallback
-          // (and the spec's parity twin): seen docs as of this
-          // batch = committed manifest minus the batch's own ids
-          // (a crashed attempt's half-landed manifest rows are
-          // exactly batch rows — anti-joined out) ∪ the batch;
-          // past the size gate the batch labels come from the
-          // batch components' reachable subgraph only
-          def ccGrp(): (org.apache.spark.sql.DataFrame,
-              () => org.apache.spark.sql.DataFrame) = {
-              val prior = s.read.parquet(s"$docsStore/docs")
-                .join(batchDocs.select(col(idCol)), Seq(idCol),
-                  "left_anti")
-              val seen = prior.unionByName(batchDocs)
-              val storePairs = s.read.parquet(s"$pairStore/pairs")
-                .select(col("doc_a"), col("doc_b"))
-              val grp =
-                if (boundedLatched)
-                  graft.operators.Dedup.componentGroupsBounded(seen,
-                    idCol, col(keyCol), storePairs,
-                    batchDocs.select(col(idCol)))
-                else
-                  graft.operators.Dedup.componentGroups(seen,
-                    idCol, col(keyCol), storePairs)
-              (batchDocs.select(col(idCol)).join(grp, Seq(idCol)),
-                () => {
-                  val touched = grp.join(batchDocs.select(col(idCol)),
-                    Seq(idCol), "left_semi").select(col("group"))
-                    .distinct()
-                  grp.join(touched, Seq("group"), "left_semi")
-                })
-          }
-          def foldOf(h: Column) = graft.operators.Relational.foldOf(h)
-          def foldAndSink(grpBatch: org.apache.spark.sql.DataFrame,
-              touchedMembers: () => org.apache.spark.sql.DataFrame)
-              : Unit = {
-          val folds = batchDocs
-            .join(grpBatch, Seq(idCol))
-            .withColumn("split", foldOf(graft.functions.hashes
-              .md5Hash60(col("group").cast("string")) % 10))
-            .withColumn("dsplit", foldOf(graft.functions.hashes
-              .md5Hash60(col(idCol).cast("string")) % 10))
-            // inherited = the component representative arrived in an
-            // EARLIER batch: the fold came through the grown store
-            .join(batchDocs.select(col(idCol).as("group"))
-                .withColumn("_cf_own", lit(true)),
-              Seq("group"), "left")
-            .withColumn("inherited", col("_cf_own").isNull)
-            .select(col(idCol), col(sourceCol), col("group"),
-              col("split"), col("dsplit"), col("inherited"))
-          // ONE lease acquisition covers the manifest write AND the
-          // drift leg's prior-manifest read: the refold verb's
-          // delete+rename swap contends on the same sibling lease,
-          // so a live ingest and a refold cannot interleave (one of
-          // them fails loudly instead of the swap silently destroying
-          // a just-landed batch partition), and the drift read can
-          // never observe the swap mid-flight (a transiently absent
-          // path, or old_split from already-refolded manifests)
-          graft.sources.StoreLease.withLease(s, outDir,
-              s"fold-sink-$tag") {
-            graft.Phases.time(s"fold_sink[b$batchId]") {
-              // ONE file per sealed batch partition: the manifest's
-              // steady-state readers (the drift leg's prior scan,
-              // refold, q209-class reports) pay FILE COUNT, not
-              // rows — ProbeScale folddrift measured the
-              // un-coalesced layout (batch-width files per dir) at
-              // 4–5× the compacted walls. A micro-batch manifest is
-              // batch-sized; one file is the right grain (a giant
-              // batch's write parallelism is bounded by this —
-              // production can shard the partition by raising it)
-              folds
-                .withColumn("batch_id", lit(batchId))
-                .repartition(1)
+          val seg = graft.operators.LabelStore.update(s,
+            labelRoot, batchDocs.select(col(idCol), col(keyCol)),
+            idCol, keyCol,
+            freshPairs.select(col("doc_a"), col("doc_b")), tag)
+          val bl = batchDocs
+            .select(col(idCol),
+              col(idCol).cast("long").as("_ls_id"))
+            .join(seg.withColumnRenamed("doc_id", "_ls_id"),
+              Seq("_ls_id"))
+            .select(col(idCol), col("group"))
+          // touched membership = one group-filtered store read
+          // (exact by merge monotonicity) — never a re-walk
+          (bl, () => graft.operators.LabelStore.membersOf(s,
+              labelRoot, bl.select(col("group")).distinct())
+            .withColumnRenamed("doc_id", idCol))
+      }
+      // the r16 CC regimes, kept as the store-less fallback
+      // (and the spec's parity twin): seen docs as of this
+      // batch = committed manifest minus the batch's own ids
+      // (a crashed attempt's half-landed manifest rows are
+      // exactly batch rows — anti-joined out) ∪ the batch;
+      // past the size gate the batch labels come from the
+      // batch components' reachable subgraph only
+      def ccGrp(): (org.apache.spark.sql.DataFrame,
+          () => org.apache.spark.sql.DataFrame) = {
+          val prior = s.read.parquet(s"$docsStore/docs")
+            .join(batchDocs.select(col(idCol)), Seq(idCol),
+              "left_anti")
+          val seen = prior.unionByName(batchDocs)
+          val storePairs = s.read.parquet(s"$pairStore/pairs")
+            .select(col("doc_a"), col("doc_b"))
+          val grp =
+            if (boundedLatched)
+              graft.operators.Dedup.componentGroupsBounded(seen,
+                idCol, col(keyCol), storePairs,
+                batchDocs.select(col(idCol)))
+            else
+              graft.operators.Dedup.componentGroups(seen,
+                idCol, col(keyCol), storePairs)
+          (batchDocs.select(col(idCol)).join(grp, Seq(idCol)),
+            () => {
+              val touched = grp.join(batchDocs.select(col(idCol)),
+                Seq(idCol), "left_semi").select(col("group"))
+                .distinct()
+              grp.join(touched, Seq("group"), "left_semi")
+            })
+      }
+      def foldOf(h: Column) = graft.operators.Relational.foldOf(h)
+      def foldAndSink(grpBatch: org.apache.spark.sql.DataFrame,
+          touchedMembers: () => org.apache.spark.sql.DataFrame)
+          : Unit = {
+      val folds = batchDocs
+        .join(grpBatch, Seq(idCol))
+        .withColumn("split", foldOf(graft.functions.hashes
+          .md5Hash60(col("group").cast("string")) % 10))
+        .withColumn("dsplit", foldOf(graft.functions.hashes
+          .md5Hash60(col(idCol).cast("string")) % 10))
+        // inherited = the component representative arrived in an
+        // EARLIER batch: the fold came through the grown store
+        .join(batchDocs.select(col(idCol).as("group"))
+            .withColumn("_cf_own", lit(true)),
+          Seq("group"), "left")
+        .withColumn("inherited", col("_cf_own").isNull)
+        .select(col(idCol), col(sourceCol), col("group"),
+          col("split"), col("dsplit"), col("inherited"))
+      // ONE lease acquisition covers the manifest write AND the
+      // drift leg's prior-manifest read: the refold verb's
+      // delete+rename swap contends on the same sibling lease,
+      // so a live ingest and a refold cannot interleave (one of
+      // them fails loudly instead of the swap silently destroying
+      // a just-landed batch partition), and the drift read can
+      // never observe the swap mid-flight (a transiently absent
+      // path, or old_split from already-refolded manifests)
+      graft.sources.StoreLease.withLease(s, outDir,
+          s"fold-sink-$tag") {
+        graft.Phases.time(s"fold_sink[b$batchId]") {
+          // ONE file per sealed batch partition: the manifest's
+          // steady-state readers (the drift leg's prior scan,
+          // refold, q209-class reports) pay FILE COUNT, not
+          // rows — ProbeScale folddrift measured the
+          // un-coalesced layout (batch-width files per dir) at
+          // 4–5× the compacted walls. A micro-batch manifest is
+          // batch-sized; one file is the right grain (a giant
+          // batch's write parallelism is bounded by this —
+          // production can shard the partition by raising it)
+          folds
+            .withColumn("batch_id", lit(batchId))
+            .repartition(1)
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id")
+            .parquet(outDir)
+        }
+        driftDir.foreach { dd =>
+          graft.Phases.time(s"fold_drift[b$batchId]") {
+            // only components containing a batch doc can have
+            // drifted THIS batch (no new edge touches any other) —
+            // so the membership restriction makes every labeling
+            // regime (label store, bounded CC, full CC) emit
+            // identical drift rows
+            val grpTouched = touchedMembers()
+              .localCheckpoint() // read twice (id collect + join)
+            // POINT-FETCH (the splitLeakageIndexed convention,
+            // gated on the same latch as the CC regime): past the
+            // store-size gate the touched components' bounded
+            // member-id set pushes as an isin into the
+            // prior-manifest scan, so per-batch drift IO tracks
+            // the batch's neighborhood instead of the
+            // landed-manifest size; over-cap sets (or the
+            // small-store regime, where one full scan is the
+            // cheaper plan) fall back to the manifest scan + join.
+            val memberKeys: Array[Any] =
+              if (!boundedLatched) Array.empty[Any]
+              else grpTouched.select(col(idCol))
+                .limit(graft.operators.Dedup.DefaultMarkPruneCap
+                  + 1).collect().map(_.get(0))
+            val pushMembers = memberKeys.nonEmpty &&
+              memberKeys.length <=
+                graft.operators.Dedup.DefaultMarkPruneCap
+            val priorManAll = s.read.parquet(outDir)
+              .filter(col("batch_id") < batchId)
+            val priorMan = (if (pushMembers)
+                priorManAll.filter(col(idCol)
+                  .isin(memberKeys.toIndexedSeq: _*))
+              else priorManAll)
+              .select(col(idCol), col("split").as("old_split"))
+            // materialized UNDER the lease — the drift frame is
+            // complete before the lease releases, whatever a
+            // later consumer does with it
+            val drift = priorMan.join(grpTouched, Seq(idCol))
+              .withColumn("new_split",
+                graft.operators.Relational.foldOf(
+                  graft.functions.hashes.md5Hash60(
+                    col("group").cast("string")) % 10))
+              .select(col(idCol), col("old_split"),
+                col("new_split"),
+                (col("old_split") =!= col("new_split"))
+                  .as("drifted"))
+              .withColumn("batch_id", lit(batchId))
+              .localCheckpoint(eager = true)
+            // a zero-row dynamic-overwrite write emits only
+            // _SUCCESS (no part files), so a monitoring consumer
+            // reading driftDir before the first real drift row
+            // fails schema inference — seed ONE schema-bearing
+            // empty file under a batch_id=-1 partition instead
+            // (idempotent: overwritten in place on retry; zero
+            // rows, so no consumer ever sees it as data)
+            // Path(parent, child) — a URI parse would throw on
+            // paths holding spaces/URI-special characters
+            val seedPath =
+              new org.apache.hadoop.fs.Path(dd, "batch_id=-1")
+            val fs = seedPath.getFileSystem(
+              s.sparkContext.hadoopConfiguration)
+            if (!fs.exists(seedPath))
+              drift.limit(0).drop("batch_id").repartition(1)
+                .write.mode("overwrite").parquet(seedPath.toString)
+            if (!drift.isEmpty)
+              drift.repartition(1) // one file per batch (ditto)
                 .write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("batch_id")
-                .parquet(outDir)
-            }
-            driftDir.foreach { dd =>
-              graft.Phases.time(s"fold_drift[b$batchId]") {
-                // only components containing a batch doc can have
-                // drifted THIS batch (no new edge touches any other) —
-                // so the membership restriction makes every labeling
-                // regime (label store, bounded CC, full CC) emit
-                // identical drift rows
-                val grpTouched = touchedMembers()
-                  .localCheckpoint() // read twice (id collect + join)
-                // POINT-FETCH (the splitLeakageIndexed convention,
-                // gated on the same latch as the CC regime): past the
-                // store-size gate the touched components' bounded
-                // member-id set pushes as an isin into the
-                // prior-manifest scan, so per-batch drift IO tracks
-                // the batch's neighborhood instead of the
-                // landed-manifest size; over-cap sets (or the
-                // small-store regime, where one full scan is the
-                // cheaper plan) fall back to the manifest scan + join.
-                val memberKeys: Array[Any] =
-                  if (!boundedLatched) Array.empty[Any]
-                  else grpTouched.select(col(idCol))
-                    .limit(graft.operators.Dedup.DefaultMarkPruneCap
-                      + 1).collect().map(_.get(0))
-                val pushMembers = memberKeys.nonEmpty &&
-                  memberKeys.length <=
-                    graft.operators.Dedup.DefaultMarkPruneCap
-                val priorManAll = s.read.parquet(outDir)
-                  .filter(col("batch_id") < batchId)
-                val priorMan = (if (pushMembers)
-                    priorManAll.filter(col(idCol)
-                      .isin(memberKeys.toIndexedSeq: _*))
-                  else priorManAll)
-                  .select(col(idCol), col("split").as("old_split"))
-                // materialized UNDER the lease — the drift frame is
-                // complete before the lease releases, whatever a
-                // later consumer does with it
-                val drift = priorMan.join(grpTouched, Seq(idCol))
-                  .withColumn("new_split",
-                    graft.operators.Relational.foldOf(
-                      graft.functions.hashes.md5Hash60(
-                        col("group").cast("string")) % 10))
-                  .select(col(idCol), col("old_split"),
-                    col("new_split"),
-                    (col("old_split") =!= col("new_split"))
-                      .as("drifted"))
-                  .withColumn("batch_id", lit(batchId))
-                  .localCheckpoint(eager = true)
-                // a zero-row dynamic-overwrite write emits only
-                // _SUCCESS (no part files), so a monitoring consumer
-                // reading driftDir before the first real drift row
-                // fails schema inference — seed ONE schema-bearing
-                // empty file under a batch_id=-1 partition instead
-                // (idempotent: overwritten in place on retry; zero
-                // rows, so no consumer ever sees it as data)
-                // Path(parent, child) — a URI parse would throw on
-                // paths holding spaces/URI-special characters
-                val seedPath =
-                  new org.apache.hadoop.fs.Path(dd, "batch_id=-1")
-                val fs = seedPath.getFileSystem(
-                  s.sparkContext.hadoopConfiguration)
-                if (!fs.exists(seedPath))
-                  drift.limit(0).drop("batch_id").repartition(1)
-                    .write.mode("overwrite").parquet(seedPath.toString)
-                if (!drift.isEmpty)
-                  drift.repartition(1) // one file per batch (ditto)
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("batch_id")
-                    .parquet(dd)
-              }
-            }
+                .parquet(dd)
           }
-          }
-          if (useLabelStore) {
-            // FUSED BATCH FAN-OUT (graft.Par + the appendPairStore
-            // overlap, r19): the label/fold chain reads only the
-            // CHECKPOINTED fresh pairs and OTHER store roots (labels,
-            // manifest, drift), never the pair store or the index —
-            // so it and the docs leg overlap the pair/index write
-            // phase instead of queueing behind it. Every piece keeps
-            // its own tag/marker, so any crash replay redoes only
-            // the missing pieces from the same as-of state
-            // (StreamingSpec convergence pins).
-            graft.operators.Dedup.appendPairStore(b,
-              idCol, textCol, indexDir, pairStore, shingleN, k,
-              bands, threshold, commitTag = Some(tag),
-              overlapWith = Some { fp =>
-                val (grpBatch, touchedMembers) = labelGrp(fp)
-                graft.Par.run(Seq(
-                  () => foldAndSink(grpBatch, touchedMembers),
-                  docsLeg))
-                ()
-              })
-            ()
-          } else {
-            // the CC regimes read the PAIR STORE itself post-append
-            // — no overlap with the writes; the docs leg still
-            // overlaps the fold/sink chain
-            graft.operators.Dedup.appendPairStore(b,
-              idCol, textCol, indexDir, pairStore, shingleN, k,
-              bands, threshold, commitTag = Some(tag))
-            val (grpBatch, touchedMembers) = ccGrp()
+        }
+      }
+      }
+      if (useLabelStore) {
+        // FUSED BATCH FAN-OUT (graft.Par + the appendPairStore
+        // overlap, r19): the label/fold chain reads only the
+        // CHECKPOINTED fresh pairs and OTHER store roots (labels,
+        // manifest, drift), never the pair store or the index —
+        // so it and the docs leg overlap the pair/index write
+        // phase instead of queueing behind it. Every piece keeps
+        // its own tag/marker, so any crash replay redoes only
+        // the missing pieces from the same as-of state
+        // (StreamingSpec convergence pins).
+        graft.operators.Dedup.appendPairStore(b,
+          idCol, textCol, indexDir, pairStore, shingleN, k,
+          bands, threshold, commitTag = Some(tag),
+          overlapWith = Some { fp =>
+            val (grpBatch, touchedMembers) = labelGrp(fp)
             graft.Par.run(Seq(
               () => foldAndSink(grpBatch, touchedMembers),
               docsLeg))
             ()
-          }
-        } finally s.conf.set(widthKey, oldWidth)
+          })
+        ()
+      } else {
+        // the CC regimes read the PAIR STORE itself post-append
+        // — no overlap with the writes; the docs leg still
+        // overlaps the fold/sink chain
+        graft.operators.Dedup.appendPairStore(b,
+          idCol, textCol, indexDir, pairStore, shingleN, k,
+          bands, threshold, commitTag = Some(tag))
+        val (grpBatch, touchedMembers) = ccGrp()
+        graft.Par.run(Seq(
+          () => foldAndSink(grpBatch, touchedMembers),
+          docsLeg))
+        ()
       }
-      .start()
+    }
   }
 
   /** CROSS-MODALITY TRAINING-PREP MANIFEST AT INGEST — the q208
@@ -1032,299 +944,220 @@ object Streams {
     // collects buy pruned scans; the gate flips at most once as the
     // store grows, and once tripped later batches skip the listing
     var pushLatched = false
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val s = batch.sparkSession
-        val widthKey = "spark.sql.shuffle.partitions"
-        val oldWidth = s.conf.get(widthKey)
-        s.conf.set(widthKey, s.sparkContext.defaultParallelism)
-        try graft.Phases.time(s"manifest_ingest[b$batchId]") {
-          val tag = s"b$batchId"
-          val b = batch.toDF().localCheckpoint()
-          val media = mediaOf(s, b)
-          // once per stream: seed each modality's empty pigeonhole
-          // index so batch 0's pair mark has a store to read (the
-          // componentFoldIngest empty-store convention)
-          if (!indexesSeeded) {
-            media.foreach { case (name, fp0, _) =>
-              val mRoot = s"$storeRoot/$name"
-              val idxDir = s"$mRoot/index"
-              // ATTACH GUARD (once per stream, one limit-1 probe per
-              // modality — the trainingPrepIngest convention): an
-              // index holding fingerprint docs the items table has
-              // never seen means the MEDIA CORPUS predates this
-              // store and was not bootstrapped — marking batches
-              // against it would merge and report WITHOUT the
-              // at-rest corpus, silently. Checked BEFORE the seed so
-              // a malformed foreign index can never be overwritten.
-              // The batch's own fp docs are excluded: keys+items
-              // seal atomically per tag, so a crashed first attempt
-              // cannot trip this, but the exclusion keeps the probe
-              // retry-proof regardless.
-              locally {
-                val fs2 = new org.apache.hadoop.fs.Path(mRoot)
-                  .getFileSystem(s.sessionState.newHadoopConf())
-                val itemsP = new org.apache.hadoop.fs.Path(
-                  s"$mRoot/items")
-                val keysP = new org.apache.hadoop.fs.Path(
-                  s"$idxDir/keys")
-                val itemsEmpty = !fs2.exists(itemsP) ||
-                  s.read.schema(MmItemsSchema)
-                    .parquet(itemsP.toString).limit(1).isEmpty
-                val foreign = itemsEmpty && fs2.exists(keysP) && {
-                  !s.read.parquet(keysP.toString).select(col("doc"))
-                    .join(fp0.select(col("doc").cast("long")
-                      .as("doc")).distinct(), Seq("doc"), "left_anti")
-                    .limit(1).isEmpty
-                }
-                require(!foreign,
-                  s"modality store $mRoot: the phash index holds " +
-                    "docs the items table has never seen — the " +
-                    "media corpus predates this store; run " +
-                    "modalityManifestBootstrap before streaming")
-              }
-              val marker = new org.apache.hadoop.fs.Path(
-                s"$idxDir/params/_SUCCESS")
-              val fs = marker.getFileSystem(
-                s.sessionState.newHadoopConf())
-              // the seed rides the SAME store lease the appends take
-              // (media-append-*): two streams racing one storeRoot
-              // now exclude loudly at the seed too, instead of both
-              // writing params — the marker is re-checked inside the
-              // lease so the loser of the race skips cleanly. The
-              // single-writer contract is unchanged; this closes the
-              // seed's consistency-by-convention gap.
-              if (!fs.exists(marker))
-                graft.sources.StoreLease.withLease(s, mRoot,
-                    s"index-seed-$name") {
-                  if (!fs.exists(marker)) {
-                    val emptyFp = s.createDataFrame(
-                      s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                      org.apache.spark.sql.types.StructType(Seq(
-                        org.apache.spark.sql.types.StructField("doc",
-                          org.apache.spark.sql.types.LongType),
-                        org.apache.spark.sql.types.StructField("fp",
-                          org.apache.spark.sql.types.LongType))))
-                    graft.operators.Dedup.writePhashIndex(emptyFp,
-                      idxDir, radius, width, Some(blocks), keyBlocks)
-                  }
-                }
+    microBatches(docs, checkpointDir, "manifest_ingest") { (s, batch, batchId) =>
+      val tag = s"b$batchId"
+      val b = batch.localCheckpoint()
+      val media = mediaOf(s, b)
+      // once per stream: seed each modality's empty pigeonhole
+      // index so batch 0's pair mark has a store to read (the
+      // componentFoldIngest empty-store convention)
+      if (!indexesSeeded) {
+        media.foreach { case (name, fp0, _) =>
+          val mRoot = s"$storeRoot/$name"
+          val idxDir = s"$mRoot/index"
+          // ATTACH GUARD (once per stream, one limit-1 probe per
+          // modality — the trainingPrepIngest convention): an
+          // index holding fingerprint docs the items table has
+          // never seen means the MEDIA CORPUS predates this
+          // store and was not bootstrapped — marking batches
+          // against it would merge and report WITHOUT the
+          // at-rest corpus, silently. Checked BEFORE the seed so
+          // a malformed foreign index can never be overwritten.
+          // The batch's own fp docs are excluded: keys+items
+          // seal atomically per tag, so a crashed first attempt
+          // cannot trip this, but the exclusion keeps the probe
+          // retry-proof regardless.
+          locally {
+            val fs2 = new org.apache.hadoop.fs.Path(mRoot)
+              .getFileSystem(s.sessionState.newHadoopConf())
+            val itemsP = new org.apache.hadoop.fs.Path(
+              s"$mRoot/items")
+            val keysP = new org.apache.hadoop.fs.Path(
+              s"$idxDir/keys")
+            val itemsEmpty = !fs2.exists(itemsP) ||
+              s.read.schema(MmItemsSchema)
+                .parquet(itemsP.toString).limit(1).isEmpty
+            val foreign = itemsEmpty && fs2.exists(keysP) && {
+              !s.read.parquet(keysP.toString).select(col("doc"))
+                .join(fp0.select(col("doc").cast("long")
+                  .as("doc")).distinct(), Seq("doc"), "left_anti")
+                .limit(1).isEmpty
             }
-            indexesSeeded = true
+            require(!foreign,
+              s"modality store $mRoot: the phash index holds " +
+                "docs the items table has never seen — the " +
+                "media corpus predates this store; run " +
+                "modalityManifestBootstrap before streaming")
           }
-          // TEXT leg: batch doc rows + the batch's per-canon
-          // champion candidates, one marker for both tables
-          val textRoot = s"$storeRoot/text"
-          val textLeg: () => Unit = () =>
-            if (!graft.operators.Dedup.isBatchCommitted(s, textRoot,
-                tag)) {
-              // long-pinned at the seal: the delta leg re-reads these
-              // files with an explicit (long, string, string, long)
-              // schema
-              val docRows = b.select(col(idCol).cast("long").as(idCol),
-                col(canonCol).cast("string").as(canonCol),
-                col(sourceCol).cast("string").as(sourceCol),
-                col(toksCol).cast("long").as(toksCol))
-              val champRows = b
-                .groupBy(col(canonCol))
-                .agg(max(struct(col(charsCol).cast("long").as("c"),
-                  (-col(idCol).cast("long")).as("negid")))
-                  .as("_mm_best"))
-                .select(col(canonCol),
-                  (-col("_mm_best").getField("negid")).as(idCol),
-                  col("_mm_best").getField("c").as("n_chars"))
-              graft.sources.StoreLease.withLease(s, textRoot,
-                  s"text-append-$tag") {
-                graft.operators.Dedup.taggedSegmentAppend(s, textRoot,
-                  tag, Seq("docs" -> docRows.repartition(1),
-                    "champs" -> champRows.repartition(1)))
+          val marker = new org.apache.hadoop.fs.Path(
+            s"$idxDir/params/_SUCCESS")
+          val fs = marker.getFileSystem(
+            s.sessionState.newHadoopConf())
+          // the seed rides the SAME store lease the appends take
+          // (media-append-*): two streams racing one storeRoot
+          // now exclude loudly at the seed too, instead of both
+          // writing params — the marker is re-checked inside the
+          // lease so the loser of the race skips cleanly. The
+          // single-writer contract is unchanged; this closes the
+          // seed's consistency-by-convention gap.
+          if (!fs.exists(marker))
+            graft.sources.StoreLease.withLease(s, mRoot,
+                s"index-seed-$name") {
+              if (!fs.exists(marker)) {
+                val emptyFp = s.createDataFrame(
+                  s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+                  org.apache.spark.sql.types.StructType(Seq(
+                    org.apache.spark.sql.types.StructField("doc",
+                      org.apache.spark.sql.types.LongType),
+                    org.apache.spark.sql.types.StructField("fp",
+                      org.apache.spark.sql.types.LongType))))
+                graft.operators.Dedup.writePhashIndex(emptyFp,
+                  idxDir, radius, width, Some(blocks), keyBlocks)
               }
             }
-          // MEDIA legs: per modality — pair-grain mark against the
-          // grown index, label-store merge, then keys + item masses
-          // in one sealed append. Each modality touches ONLY its own
-          // store subtree, so the legs (and the text leg) run
-          // CONCURRENTLY via inParallel — the fused-seal lever: the
-          // per-batch fixed bill was ~1.2-1.5 s × modalities of
-          // SEQUENTIAL small jobs (ProbeScale mmbatch), now
-          // overlapped toward the slowest leg.
-          val mediaLegs = media.map { case (name, fp0, itemOf) =>
-            () => graft.Phases.time(s"mm_$name[b$batchId]") {
-            val mRoot = s"$storeRoot/$name"
-            val idxDir = s"$mRoot/index"
-            val fp = graft.Phases.time(s"mm_${name}_fp[b$batchId]") {
-              fp0.select(col("doc").cast("long").as("doc"),
-                col("fp").cast("long").as("fp"),
-                col("owner").cast("long").as("owner")).localCheckpoint()
-            }
-            // lazy: the label update collects the pairs exactly once,
-            // before the keys append mutates the index
-            val fpPairs = graft.operators.Dedup.phashPairsAgainst(s,
-              fp, idxDir, radius, width, Some(blocks), keyBlocks,
-              materialize = false)
-            // item-grain edges (video: frame pairs → video pairs;
-            // doc-grain modalities: identity). The grain collapse
-            // needs a distinct + self-pair filter ONLY when itemOf
-            // actually maps (video's frame → vid): for identity
-            // modalities fpPairs is already doc_a < doc_b distinct,
-            // so the extra distinct was a pure second shuffle of the
-            // full candidate pair set per (modality, batch) — checked
-            // semantically, not by name, so a future non-identity
-            // mapping cannot silently skip the collapse
-            val itemIdentity = org.apache.spark.sql.graft.Bridge
-              .expression(itemOf(col("doc_a")))
-              .semanticEquals(org.apache.spark.sql.graft.Bridge
-                .expression(col("doc_a")))
-            val itemPairs =
-              if (itemIdentity) fpPairs.select(col("doc_a"), col("doc_b"))
-              else fpPairs
-                .select(itemOf(col("doc_a")).as("doc_a"),
-                  itemOf(col("doc_b")).as("doc_b"))
-                .filter(col("doc_a") =!= col("doc_b"))
-                .distinct()
-            val items = fp
-              .select(itemOf(col("doc")).as("id"),
-                bit_count(col("fp")).cast("long").as("fmass"),
-                col("owner").cast("long").as("owner"))
-              .groupBy(col("id"))
-              .agg(sum(col("fmass")).as("mass"),
-                min(col("owner")).as("owner"))
-            // no checkpoint: a cheap aggregate over the (already
-            // checkpointed) batch fingerprints — recomputed once by
-            // the update's collect and once inside the staged write
-            graft.Phases.time(s"mm_${name}_label[b$batchId]") {
-              graft.operators.LabelStore.update(s, s"$mRoot/labels",
-                items.select(col("id"),
-                  lit(null).cast("string").as("_mm_key")),
-                "id", "_mm_key", itemPairs, tag)
-            }
-            if (!graft.operators.Dedup.isBatchCommitted(s, mRoot,
-                tag)) {
-              // ONE-BATCH-PER-ITEM invariant, asserted (r18 ADVICE):
-              // the delta leg reads an item's items row as its
-              // arrival — a SECOND row for an already-stored item
-              // (fingerprint rows straddling micro-batches) would
-              // recount d_items and silently drop its kept mass from
-              // the delta table while the store-read report counts
-              // every row, breaking the q214 bit-for-bit claim. The
-              // mediaOf contract pins only the OWNER doc's arrival,
-              // so refuse loudly here: the batch's item ids must be
-              // absent from the at-rest items table (this tag's own
-              // files excluded — a crashed attempt's half-landed seg
-              // is not a straddle). Bounded: batch ids pushed as a
-              // parquet-native isin up to the prune cap, semi-join
-              // past it (the DefaultMarkPruneCap convention).
-              graft.Phases.time(s"mm_${name}_straddle[b$batchId]") {
-                val (_, itemsRest) = splitTable(s, s"$mRoot/items",
-                  tag, MmItemsSchema)
-                val bIds = items.select(col("id")).distinct()
-                  .limit(graft.operators.Dedup.DefaultMarkPruneCap + 1)
-                  .collect().map(_.getLong(0))
-                val straddle =
-                  if (bIds.length <=
-                      graft.operators.Dedup.DefaultMarkPruneCap)
-                    itemsRest.filter(col("id")
-                      .isin(bIds.toIndexedSeq: _*))
-                  else itemsRest.join(items.select(col("id")),
-                    Seq("id"), "left_semi")
-                require(straddle.limit(1).isEmpty,
-                  s"modality store $mRoot: batch $tag re-presents " +
-                    "item ids the items table already holds — an " +
-                    "item's fingerprint rows must arrive in ONE " +
-                    "micro-batch (the delta leg's kept accounting " +
-                    "reads the items row as the item's arrival)")
-              }
-              // repartition(1), not repartitionByRange(1, …): a
-              // single-file segment needs no range boundaries, and
-              // RangePartitioner's sampling pass is one more job on
-              // the per-(modality, batch) FIXED bill (ProbeScale
-              // mmbatch); the sort inside the one partition gives
-              // the identical bkey-clustered layout
-              graft.Phases.time(s"mm_${name}_seal[b$batchId]") {
-                val keyRows = graft.operators.Dedup.pigeonholeKeys(fp,
-                    radius, width, Some(blocks), keyBlocks)
-                  .repartition(1)
-                  .sortWithinPartitions(col("bkey"), col("tbl"))
-                graft.sources.StoreLease.withLease(s, mRoot,
-                    s"media-append-$tag") {
-                  graft.operators.Dedup.taggedSegmentAppend(s, mRoot,
-                    tag, Seq("index/keys" -> keyRows,
-                      "items" -> items.repartition(1)))
-                }
-              }
-            }
-            }
-          }
-          inParallel(textLeg +: mediaLegs)
-          // PER-BATCH MANIFEST DELTAS — sealed LAST, derived purely
-          // from at-rest state (post = the stores, pre = the stores
-          // minus this batch's seg files), so a crashed-after-stores
-          // retry recomputes the identical rows. Residual (the
-          // compact-labels class): compacting a store between a
-          // mid-batch crash and its replay destroys the batch's seg
-          // file identity — restart crashed streams before running
-          // compaction verbs.
-          val deltasRoot = s"$storeRoot/deltas"
-          if (!pushLatched)
-            pushLatched = graft.operators.Dedup.storeAtLeastBytes(
-              s, s"$storeRoot/text/docs", pushMinStoreBytes)
-          if (!graft.operators.Dedup.isBatchCommitted(s, deltasRoot,
-              tag))
-            graft.Phases.time(s"mm_deltas[b$batchId]") {
-              val d = manifestDeltaRows(s, storeRoot,
-                media.map(_._1), foldOf10, tag, idCol, canonCol,
-                sourceCol, toksCol, pushLatched)
-              graft.Phases.time(s"mmd_seal[b$batchId]") {
-                graft.sources.StoreLease.withLease(s, deltasRoot,
-                    s"deltas-append-$tag") {
-                  graft.operators.Dedup.taggedSegmentAppend(s,
-                    deltasRoot, tag,
-                    Seq("deltas" -> d.repartition(1)))
-                }
-              }
-            }
-        } finally s.conf.set(widthKey, oldWidth)
+        }
+        indexesSeeded = true
       }
-      .start()
-  }
-
-  /** FUSED BATCH FAN-OUT — run one crawl batch's INDEPENDENT store
-    * legs concurrently (the r18 fused-seal roadmap lever, measured
-    * by ProbeScale mmbatch/prepbatch): the at-ingest capstones' per-
-    * batch cost is dominated by Spark JOB COUNT, not data — ~30
-    * small sequential jobs per 3-modality batch, each paying
-    * scheduler + plan-compilation latency while 31 cores idle.
-    * Spark's scheduler is multi-thread-safe by design (one
-    * SparkContext, many job-submitting threads is the documented
-    * fair-scheduling topology), so legs that touch DISJOINT stores
-    * — the text seal vs each modality's mark+label+seal chain vs
-    * the flags scoring leg — overlap instead of queueing, and the
-    * per-batch fixed bill drops toward the slowest leg.
-    *
-    * What this deliberately does NOT fuse: the COMMIT PROTOCOL.
-    * Every store still seals under its own tag/marker with its own
-    * lease, so crash-retry convergence is exactly the piecewise
-    * story StreamingSpec pins — a batch that crashed between legs
-    * re-runs only the legs whose markers are missing. A single
-    * cross-store marker would buy nothing (markers are FS touches,
-    * not jobs) and cost the piecewise resume.
-    *
-    * Failure semantics: every leg runs to completion (no mid-write
-    * cancellation — a killed half-write would just be retry-cleaned,
-    * but letting legs finish keeps the store states simple), then
-    * the FIRST failure rethrows so the micro-batch fails and
-    * retries. Legs inherit the session's thread-locals (the pool is
-    * created inside the batch thread; Spark's localProperties are
-    * InheritableThreadLocal). */
-  private def inParallel(legs: Seq[() => Unit]): Unit = {
-    // GRAFT_FUSE=off (inside graft.Par): the sequential form, kept
-    // as an attribution knob — a probe window can A/B the fan-out
-    // against the serialized legs in the same session (ProbeScale
-    // prepbatch/mmbatch) and an operator can pin down a
-    // leg-interleaving suspicion without a code change
-    graft.Par.run(legs)
-    ()
+      // TEXT leg: batch doc rows + the batch's per-canon
+      // champion candidates, one marker for both tables
+      val textRoot = s"$storeRoot/text"
+      val textLeg: () => Unit = () =>
+        Dedup.sealOnce(s, textRoot, tag, s"text-append-$tag") {
+          mmTextTables(b, idCol, canonCol, sourceCol, charsCol, toksCol)
+            .map { case (t, df) => t -> df.repartition(1) }
+        }
+      // MEDIA legs: per modality — pair-grain mark against the
+      // grown index, label-store merge, then keys + item masses
+      // in one sealed append. Each modality touches ONLY its own
+      // store subtree, so the legs (and the text leg) run
+      // CONCURRENTLY (graft.Par) — the fused-seal lever: the
+      // per-batch fixed bill was ~1.2-1.5 s × modalities of
+      // SEQUENTIAL small jobs (ProbeScale mmbatch), now
+      // overlapped toward the slowest leg.
+      val mediaLegs = media.map { case (name, fp0, itemOf) =>
+        () => graft.Phases.time(s"mm_$name[b$batchId]") {
+        val mRoot = s"$storeRoot/$name"
+        val idxDir = s"$mRoot/index"
+        val fp = graft.Phases.time(s"mm_${name}_fp[b$batchId]") {
+          fp0.select(col("doc").cast("long").as("doc"),
+            col("fp").cast("long").as("fp"),
+            col("owner").cast("long").as("owner")).localCheckpoint()
+        }
+        // lazy: the label update collects the pairs exactly once,
+        // before the keys append mutates the index
+        val fpPairs = graft.operators.Dedup.phashPairsAgainst(s,
+          fp, idxDir, radius, width, Some(blocks), keyBlocks,
+          materialize = false)
+        // item-grain edges (video: frame pairs → video pairs;
+        // doc-grain modalities: identity). The grain collapse
+        // needs a distinct + self-pair filter ONLY when itemOf
+        // actually maps (video's frame → vid): for identity
+        // modalities fpPairs is already doc_a < doc_b distinct,
+        // so the extra distinct was a pure second shuffle of the
+        // full candidate pair set per (modality, batch) — checked
+        // semantically, not by name, so a future non-identity
+        // mapping cannot silently skip the collapse
+        val itemIdentity = org.apache.spark.sql.graft.Bridge
+          .expression(itemOf(col("doc_a")))
+          .semanticEquals(org.apache.spark.sql.graft.Bridge
+            .expression(col("doc_a")))
+        val itemPairs =
+          if (itemIdentity) fpPairs.select(col("doc_a"), col("doc_b"))
+          else fpPairs
+            .select(itemOf(col("doc_a")).as("doc_a"),
+              itemOf(col("doc_b")).as("doc_b"))
+            .filter(col("doc_a") =!= col("doc_b"))
+            .distinct()
+        val items = fp
+          .select(itemOf(col("doc")).as("id"),
+            bit_count(col("fp")).cast("long").as("fmass"),
+            col("owner").cast("long").as("owner"))
+          .groupBy(col("id"))
+          .agg(sum(col("fmass")).as("mass"),
+            min(col("owner")).as("owner"))
+        // no checkpoint: a cheap aggregate over the (already
+        // checkpointed) batch fingerprints — recomputed once by
+        // the update's collect and once inside the staged write
+        graft.Phases.time(s"mm_${name}_label[b$batchId]") {
+          graft.operators.LabelStore.update(s, s"$mRoot/labels",
+            items.select(col("id"),
+              lit(null).cast("string").as("_mm_key")),
+            "id", "_mm_key", itemPairs, tag)
+        }
+        // the straddle guard runs only for an uncommitted tag, under
+        // the seal's lease
+        graft.Phases.time(s"mm_${name}_seal[b$batchId]") {
+          Dedup.sealOnce(s, mRoot, tag, s"media-append-$tag") {
+            // ONE-BATCH-PER-ITEM invariant, asserted (r18 ADVICE):
+            // the delta leg reads an item's items row as its
+            // arrival — a SECOND row for an already-stored item
+            // (fingerprint rows straddling micro-batches) would
+            // recount d_items and silently drop its kept mass from
+            // the delta table while the store-read report counts
+            // every row, breaking the q214 bit-for-bit claim. The
+            // mediaOf contract pins only the OWNER doc's arrival,
+            // so refuse loudly here: the batch's item ids must be
+            // absent from the at-rest items table (this tag's own
+            // files excluded — a crashed attempt's half-landed seg
+            // is not a straddle). Bounded: batch ids pushed as a
+            // parquet-native isin up to the prune cap, semi-join
+            // past it (the DefaultMarkPruneCap convention).
+            graft.Phases.time(s"mm_${name}_straddle[b$batchId]") {
+              val (_, itemsRest) = splitTable(s, s"$mRoot/items",
+                tag, MmItemsSchema)
+              val bIds = items.select(col("id")).distinct()
+                .limit(graft.operators.Dedup.DefaultMarkPruneCap + 1)
+                .collect().map(_.getLong(0))
+              val straddle =
+                if (bIds.length <=
+                    graft.operators.Dedup.DefaultMarkPruneCap)
+                  itemsRest.filter(col("id")
+                    .isin(bIds.toIndexedSeq: _*))
+                else itemsRest.join(items.select(col("id")),
+                  Seq("id"), "left_semi")
+              require(straddle.limit(1).isEmpty,
+                s"modality store $mRoot: batch $tag re-presents " +
+                  "item ids the items table already holds — an " +
+                  "item's fingerprint rows must arrive in ONE " +
+                  "micro-batch (the delta leg's kept accounting " +
+                  "reads the items row as the item's arrival)")
+            }
+            // repartition(1), not repartitionByRange(1, …): a
+            // single-file segment needs no range boundaries, and
+            // RangePartitioner's sampling pass is one more job on
+            // the per-(modality, batch) FIXED bill (ProbeScale
+            // mmbatch); the sort inside the one partition gives
+            // the identical bkey-clustered layout
+            val keyRows = Dedup.pigeonholeKeys(fp,
+                radius, width, Some(blocks), keyBlocks)
+              .repartition(1)
+              .sortWithinPartitions(col("bkey"), col("tbl"))
+            Seq("index/keys" -> keyRows, "items" -> items.repartition(1))
+          }
+        }
+        }
+      }
+      graft.Par.run(textLeg +: mediaLegs)
+      // PER-BATCH MANIFEST DELTAS — sealed LAST, derived purely
+      // from at-rest state (post = the stores, pre = the stores
+      // minus this batch's seg files), so a crashed-after-stores
+      // retry recomputes the identical rows. Residual (the
+      // compact-labels class): compacting a store between a
+      // mid-batch crash and its replay destroys the batch's seg
+      // file identity — restart crashed streams before running
+      // compaction verbs.
+      val deltasRoot = s"$storeRoot/deltas"
+      if (!pushLatched)
+        pushLatched = graft.operators.Dedup.storeAtLeastBytes(
+          s, s"$storeRoot/text/docs", pushMinStoreBytes)
+      graft.Phases.time(s"mm_deltas[b$batchId]") {
+        Dedup.sealOnce(s, deltasRoot, tag, s"deltas-append-$tag") {
+          Seq("deltas" -> manifestDeltaRows(s, storeRoot,
+            media.map(_._1), foldOf10, tag, idCol, canonCol,
+            sourceCol, toksCol, pushLatched).repartition(1))
+        }
+      }
+    }
   }
 
   /** Bounded candidate set for a pushed store read (the
@@ -1730,25 +1563,9 @@ object Streams {
     val conf = s.sessionState.newHadoopConf()
     // 1. TEXT: doc rows + per-canon champion rows, one tagged seal
     // (the ingest's text leg over the whole corpus)
-    val textRoot = s"$storeRoot/text"
-    if (!graft.operators.Dedup.isBatchCommitted(s, textRoot,
-        "bootstrap")) {
-      val docRows = docs.select(col(idCol).cast("long").as(idCol),
-        col(canonCol).cast("string").as(canonCol),
-        col(sourceCol).cast("string").as(sourceCol),
-        col(toksCol).cast("long").as(toksCol))
-      val champRows = docs
-        .groupBy(col(canonCol))
-        .agg(max(struct(col(charsCol).cast("long").as("c"),
-          (-col(idCol).cast("long")).as("negid"))).as("_mm_best"))
-        .select(col(canonCol),
-          (-col("_mm_best").getField("negid")).as(idCol),
-          col("_mm_best").getField("c").as("n_chars"))
-      graft.sources.StoreLease.withLease(s, textRoot,
-          "text-append-bootstrap") {
-        graft.operators.Dedup.taggedSegmentAppend(s, textRoot,
-          "bootstrap", Seq("docs" -> docRows, "champs" -> champRows))
-      }
+    Dedup.sealOnce(s, s"$storeRoot/text", "bootstrap",
+        "text-append-bootstrap") {
+      mmTextTables(docs, idCol, canonCol, sourceCol, charsCol, toksCol)
     }
     // 2. per modality: index build, label bootstrap, item rows
     media.foreach { case (name, fp0, itemOf) =>
@@ -1787,35 +1604,45 @@ object Streams {
         itemPairs)
       // 2c. the item-mass rows (keys already live in the index —
       // the bootstrap's only tagged table here is items)
-      if (!graft.operators.Dedup.isBatchCommitted(s, mRoot,
-          "bootstrap"))
-        graft.sources.StoreLease.withLease(s, mRoot,
-            "media-append-bootstrap") {
-          graft.operators.Dedup.taggedSegmentAppend(s, mRoot,
-            "bootstrap", Seq("items" -> items))
-        }
+      Dedup.sealOnce(s, mRoot, "bootstrap", "media-append-bootstrap") {
+        Seq("items" -> items)
+      }
       org.apache.spark.sql.graft.Bridge.freeLocalCheckpoint(fp)
     }
     // 3. ONE bootstrap delta row set = the attach-state manifest,
     // derived from the just-built stores through the same read the
     // report uses — sealed LAST so a crashed attach recomputes it
     // from complete stores
-    val deltasRoot = s"$storeRoot/deltas"
-    if (!graft.operators.Dedup.isBatchCommitted(s, deltasRoot,
-        "bootstrap")) {
+    Dedup.sealOnce(s, s"$storeRoot/deltas", "bootstrap",
+        "deltas-append-bootstrap") {
       val d = modalityManifestReport(s, storeRoot, idCol, canonCol,
           sourceCol, toksCol, media.map(_._1), foldOf10)
         .select(col("modality"), col(sourceCol).as("source"),
           col("split"), col("n_items").as("d_items"),
           col("n_kept").as("d_kept"),
           col("kept_mass").as("d_kept_mass"))
-      graft.sources.StoreLease.withLease(s, deltasRoot,
-          "deltas-append-bootstrap") {
-        graft.operators.Dedup.taggedSegmentAppend(s, deltasRoot,
-          "bootstrap", Seq("deltas" -> d.repartition(1)))
-      }
+      Seq("deltas" -> d.repartition(1))
     }
   }
+
+  /** The modality-manifest TEXT store's two tables for a set of doc
+    * rows — `docs` (id, canon, source, tokens; long-pinned, because
+    * the delta leg re-reads these files with an explicit (long,
+    * string, string, long) schema) and `champs`, the rows' per-canon
+    * best (max n_chars, ties min id) champion candidates. */
+  private def mmTextTables(d: DataFrame, idCol: String,
+      canonCol: String, sourceCol: String, charsCol: String,
+      toksCol: String): Seq[(String, DataFrame)] =
+    Seq("docs" -> d.select(col(idCol).cast("long").as(idCol),
+        col(canonCol).cast("string").as(canonCol),
+        col(sourceCol).cast("string").as(sourceCol),
+        col(toksCol).cast("long").as(toksCol)),
+      "champs" -> d.groupBy(col(canonCol))
+        .agg(max(struct(col(charsCol).cast("long").as("c"),
+          (-col(idCol).cast("long")).as("negid"))).as("_mm_best"))
+        .select(col(canonCol),
+          (-col("_mm_best").getField("negid")).as(idCol),
+          col("_mm_best").getField("c").as("n_chars")))
 
   /** TRAINING-PREP MANIFEST AT INGEST — the q153 flagship text
     * composition (exact dedup → near-dup keeper → eval-fold
@@ -1870,143 +1697,137 @@ object Streams {
     // table is the proxy)
     var pushLatched = false
     // static per stream: the eval suite's distinct n-gram shingles
-    val evalSh = evalDocs
-      .select(explode(graft.functions.text.wordShinglesFast(
-        col(textCol), contamN)).as("shingle"))
-      .distinct()
+    val evalSh = evalShingles(evalDocs, textCol, contamN)
       .localCheckpoint(eager = true)
     // once-per-stream attach guard latch (the componentFoldIngest
     // sync-guard convention)
     var attachChecked = false
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val s = batch.sparkSession
-        val widthKey = "spark.sql.shuffle.partitions"
-        val oldWidth = s.conf.get(widthKey)
-        s.conf.set(widthKey, s.sparkContext.defaultParallelism)
-        try graft.Phases.time(s"prep_ingest[b$batchId]") {
-          val tag = s"b$batchId"
-          val b = batch.toDF().localCheckpoint()
-          if (!attachChecked) {
-            // ATTACH GUARD (once per stream, one limit-1 probe): a
-            // signature index holding docs the flags store has never
-            // seen means the corpus predates this prep store and was
-            // not bootstrapped — merging batches against it would
-            // label and report WITHOUT the at-rest corpus, silently.
-            // The batch's own ids are excluded so a crashed first
-            // attempt (pairs appended, flags not yet sealed) still
-            // replays cleanly.
-            val fp = new org.apache.hadoop.fs.Path(
-              s"$storeRoot/flags/flags")
-            val fs = fp.getFileSystem(s.sessionState.newHadoopConf())
-            val flagsEmpty = !fs.exists(fp) ||
-              s.read.parquet(fp.toString).limit(1).isEmpty
-            val foreign = flagsEmpty && {
-              val sh = new org.apache.hadoop.fs.Path(
-                s"$storeRoot/index/shingles")
-              fs.exists(sh) && !s.read.parquet(sh.toString)
-                .select(col("doc"))
-                .join(b.select(col(idCol).cast("long").as("doc")),
-                  Seq("doc"), "left_anti")
-                .limit(1).isEmpty
-            }
-            require(!foreign,
-              s"prep store $storeRoot: the signature index holds " +
-                "docs the flags store has never seen — the corpus " +
-                "predates this store; run trainingPrepBootstrap " +
-                "before streaming")
-            attachChecked = true
-          }
-          // FUSED BATCH FAN-OUT (the inParallel scaladoc): the
-          // index/pairs/labels chain and the flags scoring leg are
-          // independent until the delta derivation — the pair mark
-          // reads the signature index, the scoring leg reads only
-          // the batch and the stream-static eval shingles. Running
-          // them concurrently overlaps the scoring leg's
-          // tokenize+shingle wall with the mark's store probes
-          // (ProbeScale prepbatch priced the sequential form at
-          // ~4.4-6.6 s/batch of fixed cost).
-          val pairLeg: () => Unit = () => {
-            // the label merge reads only the CHECKPOINTED fresh
-            // pairs and the labels root — overlapped with the
-            // pair/index write phase (the componentFoldIngest
-            // convention, r19)
-            graft.Phases.time(s"prep_pairs[b$batchId]") {
-              graft.operators.Dedup.appendPairStore(b,
-                idCol, textCol, s"$storeRoot/index",
-                s"$storeRoot/pairs", shingleN, k, bands, threshold,
-                commitTag = Some(tag),
-                overlapWith = Some { fp =>
-                  graft.Phases.time(s"prep_label[b$batchId]") {
-                    graft.operators.LabelStore.update(s,
-                      s"$storeRoot/labels",
-                      b.select(col(idCol),
-                        lit(null).cast("string").as("_tp_key")),
-                      idCol, "_tp_key",
-                      fp.select(col("doc_a"), col("doc_b")), tag)
-                  }
-                  ()
-                })
-            }
-            ()
-          }
-          val flagsRoot = s"$storeRoot/flags"
-          val flagsLeg: () => Unit = () =>
-            if (!graft.operators.Dedup.isBatchCommitted(s, flagsRoot,
-                tag)) graft.Phases.time(s"prep_flags[b$batchId]") {
-              val toks = graft.functions.text.tokens(col(textCol))
-              val scored = b
-                .withColumn("_toks", toks)
-                .withColumn("n_tok", size(col("_toks")).cast("long"))
-                .withColumn("q", graft.functions.text
-                  .qualityScoreTokens(col(textCol), col("_toks")))
-                .withColumn("ex_key", md5(col(textCol)))
-              val contam = graft.operators.Dedup
-                .contaminationScoresAgainst(b, evalSh, idCol, textCol,
-                  contamN)
-                .select(col(idCol), col("contamination"))
-              val rows = scored
-                .join(contam, Seq(idCol))
-                .select(col(idCol).cast("long").as(idCol),
-                  col(sourceCol).cast("string").as(sourceCol),
-                  col("ex_key"), col("n_tok"), col("q"),
-                  col("contamination"))
-              graft.sources.StoreLease.withLease(s, flagsRoot,
-                  s"flags-append-$tag") {
-                graft.operators.Dedup.taggedSegmentAppend(s,
-                  flagsRoot, tag,
-                  Seq("flags" -> rows.repartition(1)))
-              }
-            }
-          inParallel(Seq(pairLeg, flagsLeg))
-          // PER-BATCH REPORT DELTAS — sealed LAST, the q214
-          // convention on the text capstone: additive per-source
-          // survival-count deltas plus a per-(source, mix-bucket)
-          // histogram of quality survivors, derived purely from
-          // at-rest pre/post store views (store minus/plus this
-          // batch's seg files), so a crashed-after-stores retry
-          // recomputes identical rows
-          val deltasRoot = s"$storeRoot/deltas"
-          if (!pushLatched)
-            pushLatched = graft.operators.Dedup.storeAtLeastBytes(
-              s, s"$storeRoot/flags/flags", pushMinStoreBytes)
-          if (!graft.operators.Dedup.isBatchCommitted(s, deltasRoot,
-              tag))
-            graft.Phases.time(s"prep_deltas[b$batchId]") {
-              val (cnt, hist) = prepDeltaRows(s, storeRoot, tag,
-                idCol, sourceCol, pushLatched)
-              graft.sources.StoreLease.withLease(s, deltasRoot,
-                  s"deltas-append-$tag") {
-                graft.operators.Dedup.taggedSegmentAppend(s,
-                  deltasRoot, tag,
-                  Seq("counts" -> cnt.repartition(1),
-                    "mixhist" -> hist.repartition(1)))
-              }
-            }
-        } finally s.conf.set(widthKey, oldWidth)
+    microBatches(docs, checkpointDir, "prep_ingest") { (s, batch, batchId) =>
+      val tag = s"b$batchId"
+      val b = batch.localCheckpoint()
+      if (!attachChecked) {
+        // ATTACH GUARD (once per stream, one limit-1 probe): a
+        // signature index holding docs the flags store has never
+        // seen means the corpus predates this prep store and was
+        // not bootstrapped — merging batches against it would
+        // label and report WITHOUT the at-rest corpus, silently.
+        // The batch's own ids are excluded so a crashed first
+        // attempt (pairs appended, flags not yet sealed) still
+        // replays cleanly.
+        val fp = new org.apache.hadoop.fs.Path(
+          s"$storeRoot/flags/flags")
+        val fs = fp.getFileSystem(s.sessionState.newHadoopConf())
+        val flagsEmpty = !fs.exists(fp) ||
+          s.read.parquet(fp.toString).limit(1).isEmpty
+        val foreign = flagsEmpty && {
+          val sh = new org.apache.hadoop.fs.Path(
+            s"$storeRoot/index/shingles")
+          fs.exists(sh) && !s.read.parquet(sh.toString)
+            .select(col("doc"))
+            .join(b.select(col(idCol).cast("long").as("doc")),
+              Seq("doc"), "left_anti")
+            .limit(1).isEmpty
+        }
+        require(!foreign,
+          s"prep store $storeRoot: the signature index holds " +
+            "docs the flags store has never seen — the corpus " +
+            "predates this store; run trainingPrepBootstrap " +
+            "before streaming")
+        attachChecked = true
       }
-      .start()
+      // FUSED BATCH FAN-OUT (the graft.Par scaladoc): the
+      // index/pairs/labels chain and the flags scoring leg are
+      // independent until the delta derivation — the pair mark
+      // reads the signature index, the scoring leg reads only
+      // the batch and the stream-static eval shingles. Running
+      // them concurrently overlaps the scoring leg's
+      // tokenize+shingle wall with the mark's store probes
+      // (ProbeScale prepbatch priced the sequential form at
+      // ~4.4-6.6 s/batch of fixed cost).
+      val pairLeg: () => Unit = () => {
+        // the label merge reads only the CHECKPOINTED fresh
+        // pairs and the labels root — overlapped with the
+        // pair/index write phase (the componentFoldIngest
+        // convention, r19)
+        graft.Phases.time(s"prep_pairs[b$batchId]") {
+          graft.operators.Dedup.appendPairStore(b,
+            idCol, textCol, s"$storeRoot/index",
+            s"$storeRoot/pairs", shingleN, k, bands, threshold,
+            commitTag = Some(tag),
+            overlapWith = Some { fp =>
+              graft.Phases.time(s"prep_label[b$batchId]") {
+                graft.operators.LabelStore.update(s,
+                  s"$storeRoot/labels",
+                  b.select(col(idCol),
+                    lit(null).cast("string").as("_tp_key")),
+                  idCol, "_tp_key",
+                  fp.select(col("doc_a"), col("doc_b")), tag)
+              }
+              ()
+            })
+        }
+        ()
+      }
+      val flagsRoot = s"$storeRoot/flags"
+      val flagsLeg: () => Unit = () =>
+        graft.Phases.time(s"prep_flags[b$batchId]") {
+          Dedup.sealOnce(s, flagsRoot, tag, s"flags-append-$tag") {
+            Seq("flags" -> prepFlagRows(b, evalSh, idCol, textCol,
+              sourceCol, contamN).repartition(1))
+          }
+        }
+      graft.Par.run(Seq(pairLeg, flagsLeg))
+      // PER-BATCH REPORT DELTAS — sealed LAST, the q214
+      // convention on the text capstone: additive per-source
+      // survival-count deltas plus a per-(source, mix-bucket)
+      // histogram of quality survivors, derived purely from
+      // at-rest pre/post store views (store minus/plus this
+      // batch's seg files), so a crashed-after-stores retry
+      // recomputes identical rows
+      val deltasRoot = s"$storeRoot/deltas"
+      if (!pushLatched)
+        pushLatched = graft.operators.Dedup.storeAtLeastBytes(
+          s, s"$storeRoot/flags/flags", pushMinStoreBytes)
+      graft.Phases.time(s"prep_deltas[b$batchId]") {
+        Dedup.sealOnce(s, deltasRoot, tag, s"deltas-append-$tag") {
+          val (cnt, hist) = prepDeltaRows(s, storeRoot, tag,
+            idCol, sourceCol, pushLatched)
+          Seq("counts" -> cnt.repartition(1),
+            "mixhist" -> hist.repartition(1))
+        }
+      }
+    }
+  }
+
+  /** The eval suite's distinct word `n`-gram shingles — the static
+    * reference every contamination score is taken against. */
+  private def evalShingles(evalDocs: DataFrame, textCol: String,
+      n: Int): DataFrame =
+    evalDocs
+      .select(explode(graft.functions.text.wordShinglesFast(
+        col(textCol), n)).as("shingle"))
+      .distinct()
+
+  /** The prep flags table's rows for a set of docs — their STATIC
+    * per-doc attributes: exact key (md5 of the text), token count,
+    * the q25 quality score, and the q135 contamination score against
+    * the eval shingles `evalSh`. */
+  private def prepFlagRows(d: DataFrame, evalSh: DataFrame,
+      idCol: String, textCol: String, sourceCol: String,
+      contamN: Int): DataFrame = {
+    val scored = d
+      .withColumn("_toks", graft.functions.text.tokens(col(textCol)))
+      .withColumn("n_tok", size(col("_toks")).cast("long"))
+      .withColumn("q", graft.functions.text
+        .qualityScoreTokens(col(textCol), col("_toks")))
+      .withColumn("ex_key", md5(col(textCol)))
+    val contam = Dedup
+      .contaminationScoresAgainst(d, evalSh, idCol, textCol, contamN)
+      .select(col(idCol), col("contamination"))
+    scored.join(contam, Seq(idCol))
+      .select(col(idCol).cast("long").as(idCol),
+        col(sourceCol).cast("string").as(sourceCol),
+        col("ex_key"), col("n_tok"), col("q"), col("contamination"))
   }
 
   /** One batch's additive q153-report delta rows, derived from
@@ -2296,42 +2117,18 @@ object Streams {
       graft.operators.Dedup.readPairStore(s, s"$storeRoot/pairs")
         .select(col("doc_a"), col("doc_b")))
     // 4. flags backfill: the ingest leg's scoring, corpus-wide once
-    val flagsRoot = s"$storeRoot/flags"
-    if (!graft.operators.Dedup.isBatchCommitted(s, flagsRoot,
-        "bootstrap")) {
-      val evalSh = evalDocs
-        .select(explode(graft.functions.text.wordShinglesFast(
-          col(textCol), contamN)).as("shingle"))
-        .distinct()
-      val scored = docs
-        .withColumn("_toks", graft.functions.text.tokens(col(textCol)))
-        .withColumn("n_tok", size(col("_toks")).cast("long"))
-        .withColumn("q", graft.functions.text
-          .qualityScoreTokens(col(textCol), col("_toks")))
-        .withColumn("ex_key", md5(col(textCol)))
-      val contam = graft.operators.Dedup
-        .contaminationScoresAgainst(docs, evalSh, idCol, textCol,
-          contamN)
-        .select(col(idCol), col("contamination"))
-      val rows = scored.join(contam, Seq(idCol))
-        .select(col(idCol).cast("long").as(idCol),
-          col(sourceCol).cast("string").as(sourceCol),
-          col("ex_key"), col("n_tok"), col("q"),
-          col("contamination"))
-      graft.sources.StoreLease.withLease(s, flagsRoot,
-          "flags-append-bootstrap") {
-        graft.operators.Dedup.taggedSegmentAppend(s, flagsRoot,
-          "bootstrap", Seq("flags" -> rows))
-      }
+    Dedup.sealOnce(s, s"$storeRoot/flags", "bootstrap",
+        "flags-append-bootstrap") {
+      Seq("flags" -> prepFlagRows(docs, evalShingles(evalDocs, textCol,
+        contamN), idCol, textCol, sourceCol, contamN))
     }
     // 5. ONE bootstrap delta row set = the attach-state report
     // (counts + full mix histogram), so the delta sums reconcile
     // from genesis — derived from the backfilled stores through the
     // same flag-resolution core the report uses
-    val deltasRoot = s"$storeRoot/deltas"
-    if (!graft.operators.Dedup.isBatchCommitted(s, deltasRoot,
-        "bootstrap")) {
-      val flagged = prepFlagsResolved(s, storeRoot, idCol)
+    lazy val flagged = prepFlagsResolved(s, storeRoot, idCol)
+    val sealedNow = Dedup.sealOnce(s, s"$storeRoot/deltas",
+        "bootstrap", "deltas-append-bootstrap") {
       val counts = flagged.groupBy(col(sourceCol))
         .agg(count(lit(1)).as("d_raw"),
           sum(when(col("f_exact"), 1L).otherwise(0L)).as("d_exact"),
@@ -2348,14 +2145,11 @@ object Streams {
         .agg(count(lit(1)).as("d_n"),
           sum(col("n_tok")).as("d_toks"))
         .withColumnRenamed(sourceCol, "source")
-      graft.sources.StoreLease.withLease(s, deltasRoot,
-          "deltas-append-bootstrap") {
-        graft.operators.Dedup.taggedSegmentAppend(s, deltasRoot,
-          "bootstrap", Seq("counts" -> counts.repartition(1),
-            "mixhist" -> hist.repartition(1)))
-      }
-      org.apache.spark.sql.graft.Bridge.freeLocalCheckpoint(flagged)
+      Seq("counts" -> counts.repartition(1),
+        "mixhist" -> hist.repartition(1))
     }
+    if (sealedNow)
+      org.apache.spark.sql.graft.Bridge.freeLocalCheckpoint(flagged)
   }
 
   /** The q153 report as ONE SUM over the sealed per-batch delta
@@ -2534,55 +2328,38 @@ object Streams {
     * into, and compact on dilution — same lifecycle, same verbs. */
   def noveltyIngest(docs: DataFrame, textCol: String,
       storeRoot: String, checkpointDir: String, n: Int): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val s = batch.sparkSession
-        val widthKey = "spark.sql.shuffle.partitions"
-        val oldWidth = s.conf.get(widthKey)
-        s.conf.set(widthKey, s.sparkContext.defaultParallelism)
-        try graft.Phases.time(s"novelty_append[b$batchId]") {
-         graft.sources.StoreLease.withLease(s, storeRoot,
-            s"novelty-b$batchId") {
-          val hconf = s.sparkContext.hadoopConfiguration
-          val seg = new org.apache.hadoop.fs.Path(
-            s"$storeRoot/shingles/batch_id=$batchId")
-          val met = new org.apache.hadoop.fs.Path(
-            s"$storeRoot/metrics/batch_id=$batchId")
-          val fs = seg.getFileSystem(hconf)
-          val marker = new org.apache.hadoop.fs.Path(met, "_SUCCESS")
-          if (!fs.exists(marker)) {
-            if (fs.exists(met)) fs.delete(met, true) // half-landed
-            if (fs.exists(seg)) fs.delete(seg, true)
-            val b = batch.toDF()
-            val nDocs = b.count()
-            val sh = b.select(explode(graft.functions.text
-                .wordShinglesFast(col(textCol), n)).as("sh"))
-              .distinct()
-              .localCheckpoint(eager = true)
-            val shinglesRoot = new org.apache.hadoop.fs.Path(
-              s"$storeRoot/shingles")
-            val seen =
-              if (fs.exists(shinglesRoot) &&
-                fs.listStatus(shinglesRoot).nonEmpty)
-                s.read.parquet(shinglesRoot.toString).select("sh")
-              else s.createDataFrame(
-                java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-                sh.schema)
-            val novel = sh.join(seen, Seq("sh"), "left_anti")
-              .localCheckpoint(eager = true)
-            novel.write.parquet(seg.toString)
-            s.range(1).select(
-                lit(batchId).cast("int").as("batch"),
-                lit(nDocs).as("n_docs"),
-                lit(sh.count()).as("ds"),
-                lit(novel.count()).as("ns"))
-              .write.parquet(met.toString) // seal written last
-          }
-         }
-        } finally s.conf.set(widthKey, oldWidth)
+    microBatches(docs, checkpointDir, "novelty_append") { (s, b, batchId) =>
+      StoreLease.withLease(s, storeRoot, s"novelty-b$batchId") {
+        val seg = new Path(s"$storeRoot/shingles/batch_id=$batchId")
+        val met = new Path(s"$storeRoot/metrics/batch_id=$batchId")
+        val fs = seg.getFileSystem(s.sparkContext.hadoopConfiguration)
+        if (!fs.exists(new Path(met, "_SUCCESS"))) {
+          if (fs.exists(met)) fs.delete(met, true) // half-landed
+          if (fs.exists(seg)) fs.delete(seg, true)
+          val nDocs = b.count()
+          val sh = b.select(explode(graft.functions.text
+              .wordShinglesFast(col(textCol), n)).as("sh"))
+            .distinct()
+            .localCheckpoint(eager = true)
+          val shinglesRoot = new Path(s"$storeRoot/shingles")
+          val seen =
+            if (fs.exists(shinglesRoot) &&
+              fs.listStatus(shinglesRoot).nonEmpty)
+              s.read.parquet(shinglesRoot.toString).select("sh")
+            else s.createDataFrame(
+              java.util.Collections.emptyList[Row](), sh.schema)
+          val novel = sh.join(seen, Seq("sh"), "left_anti")
+            .localCheckpoint(eager = true)
+          novel.write.parquet(seg.toString)
+          s.range(1).select(
+              lit(batchId).cast("int").as("batch"),
+              lit(nDocs).as("n_docs"),
+              lit(sh.count()).as("ds"),
+              lit(novel.count()).as("ns"))
+            .write.parquet(met.toString) // seal written last
+        }
       }
-      .start()
+    }
 
   /** T7: tumbling event-time windows (streaming analog of q19). */
   def tumblingCounts(df: DataFrame, tsCol: String, delay: String,

@@ -167,9 +167,10 @@ class SnapshotSpec extends AnyFunSuite with SparkSpec with Matchers {
   }
 
   test("a truncated snapshot file fails readMessages and Main replay loudly") {
-    // cut mid-message, and a file holding no array at all
+    // cut mid-message, a file holding no array at all, and an empty file
     for (cut <- Seq((b: Array[Byte]) => b.take(b.length - 7),
-        (_: Array[Byte]) => "null".getBytes("UTF-8"))) {
+        (_: Array[Byte]) => "null".getBytes("UTF-8"),
+        (_: Array[Byte]) => Array.emptyByteArray)) {
       val tmp = Files.createTempDirectory("graft_snap_trunc").toString
       Replay.capture(envelopeOf(Seq("persistent://t/ns/a", "persistent://t/ns/b"),
         Seq(3, 2)), tmp)

@@ -392,6 +392,41 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     } finally Scratch.deleteRecursively(new java.io.File(root))
   }
 
+  test("micro-batch sink: the body plans at full width; the session width is restored after a normal and a failing batch") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val key = "spark.sql.shuffle.partitions"
+    val full = spark.sparkContext.defaultParallelism.toString
+    // a session width unlike the context's, so the override shows
+    val narrow = (spark.sparkContext.defaultParallelism + 3).toString
+    val old = spark.conf.get(key)
+    val root = Files.createTempDirectory("graft_mb_width_").toString
+    spark.conf.set(key, narrow)
+    try {
+      val inBody = new java.util.concurrent.ConcurrentLinkedQueue[String]
+      @volatile var session: org.apache.spark.sql.SparkSession = null
+      val input = MemoryStream[Long]
+      val q = Streams.microBatches(input.toDF(), root + "/ckpt",
+          "width_probe") { (s, b, _) =>
+        session = s
+        inBody.add(s.conf.get(key))
+        if (b.as[Long].collect().contains(-1L))
+          throw new IllegalStateException("batch body failed")
+      }
+      try {
+        input.addData(1L); q.processAllAvailable()
+        session.conf.get(key) shouldBe narrow
+        input.addData(-1L)
+        intercept[Exception](q.processAllAvailable())
+        session.conf.get(key) shouldBe narrow
+      } finally q.stop()
+      inBody.toArray.toSeq shouldBe Seq(full, full)
+    } finally {
+      spark.conf.set(key, old)
+      Scratch.deleteRecursively(new java.io.File(root))
+    }
+  }
+
   test("near-dup ingest retry: a re-delivered micro-batch leaves store and output in the single-run state") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
