@@ -19,7 +19,8 @@ import scala.jdk.CollectionConverters._
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -107,6 +108,16 @@ object Bench {
     // calib_mt inflated: nothing to fix). Stage-submitted events are
     // async; Bridge.drainListenerBus flushes them before each reading.
     val tasksMax = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    // Classes Janino compiled during each timed pass (Spark's
+    // JVM-wide CodegenMetrics counter). The warm pass just compiled
+    // the same plans, so a count here is either generated source that
+    // differs from run to run (streaming queries' per-batch plans) or
+    // classes the generated-code cache evicted
+    // (spark.sql.codegen.cache.maxEntries, set in build.sbt).
+    val codegenN = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    def codegenCount(): Long =
+      org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME.getCount
     // Per-query phase walls (Phases.time call sites inside multi-phase
     // lifecycles — q111's index build / per-batch drains / sink
     // writes): drained after each query so a slow composite entry is
@@ -212,7 +223,7 @@ object Bench {
             ()
           }
         }
-        val gc0 = gcMillis(); val cpu0 = cpuNanos()
+        val gc0 = gcMillis(); val cpu0 = cpuNanos(); val cg0 = codegenCount()
         stageWidth.set(0)
         Phases.drain() // discard anything recorded outside a timed query
         val t0 = System.nanoTime()
@@ -242,6 +253,7 @@ object Bench {
         val wall = (System.nanoTime() - t0) / 1e9
         gcSec(name) = (gcMillis() - gc0) / 1e3
         cpuSec(name) = if (cpu0 < 0) -1.0 else (cpuNanos() - cpu0) / 1e9
+        codegenN(name) = (codegenCount() - cg0).toDouble
         try org.apache.spark.sql.graft.Bridge.drainListenerBus(spark)
         catch { case _: Throwable => () } // a late event beats a dead bench
         tasksMax(name) = stageWidth.get().toDouble
@@ -567,6 +579,7 @@ object Bench {
           .map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
           .mkString("{", ",", "}")},""" +
         s""""code_cache":$codeCacheJson,""" +
+        s""""codegen_n":${jsonObjInt(codegenN)},""" +
         s""""queries":$qs,""" +
         s""""sf":"$sfDir"}"""
     println(line)

@@ -40,15 +40,15 @@ object Main {
       case Seq("explain", rest @ _*) => Explain.main(rest.toArray); return
       case _ => ()
     }
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+      .config("spark.sql.shuffle.partitions", cpus)
       // one fully-parallel wave for bounded planning collects — the
       // Bench.scala rationale (executeTake's 1 → 4 → 16 ramp
       // serializes every `limit(cap+1).collect()` guard)
-      .config("spark.sql.limit.initialNumPartitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+      .config("spark.sql.limit.initialNumPartitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.ui.enabled", "false")

@@ -863,24 +863,23 @@ object CorpusStats {
     * (CCNet, GPT-3's WebText filter, FineWeb-Edu) runs after its
     * rule-based cuts.
     *
-    * Dataflow is the broadcast-model shape, deliberately distinct
-    * from dsirWeights' driver-held λ fold: the model is a bounded
-    * `buckets`-row DataFrame, BROADCAST-joined to the exploded
-    * feature stream, then partial-aggregated to doc grain. At 100 TB
-    * the corpus text never shuffles — features reduce map-side to
-    * (doc, n_feats, logit) before the one doc-grain exchange, and the
-    * model ships once per executor regardless of corpus size (a
-    * shuffle join keyed on bucket would instead move EVERY feature
-    * occurrence). Weights are integers, so per-doc logits are exact
-    * order-independent integer sums in both engines (the repo-wide
-    * no-float-surface convention); the fixture model derives each
-    * bucket's weight from the bucket id via md5-60 — deterministic,
-    * seedable, and reproducible in SQL, standing in for trained
-    * parameters without shipping a binary blob.
+    * Dataflow is a per-row fold over an array literal: the
+    * `buckets` weights are collected once on the driver and inlined
+    * into the plan as one array, and each document's logit is an
+    * `aggregate` over its own feature array (tokens + bigrams) that
+    * looks every feature's bucket up in that literal. No join, no
+    * exchange: scoring the corpus is one scan at any size. Weights
+    * are integers, so per-doc logits are exact order-independent
+    * integer sums in both engines (the repo-wide no-float-surface
+    * convention); the fixture model derives each bucket's weight from
+    * the bucket id via md5-60 — deterministic, seedable, and
+    * reproducible in SQL, standing in for trained parameters without
+    * shipping a binary blob.
     *
     * Returns `docs` plus `n_feats` (hashed features scored), `logit`
-    * (integer score; 0 for empty docs, re-attached via left join) and
-    * `accept` (logit >= 0). */
+    * (integer score; 0 for an empty document) and `accept`
+    * (logit >= 0). A NULL `textCol` yields NULL in all three: the
+    * document is unscored, not scored as empty. */
   def linearClassifierScores(docs: DataFrame, idCol: String,
       textCol: String, buckets: Int = 4096): DataFrame = {
     require(buckets >= 2 && buckets <= (1 << 22),

@@ -1090,27 +1090,32 @@ object Dedup {
     * documented single-writer contract. */
   private val phashParamsCache =
     new java.util.concurrent.ConcurrentHashMap[String,
-      (Long, (Int, Int, Int, Int))]()
+      (Seq[(String, Long, Long)], (Int, Int, Int, Int))]()
 
   private def checkPhashParams(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, radius: Int, width: Int, blocks: Option[Int],
       keyBlocks: Int): Unit = {
-    // cache keyed by the params dir's mtime (r19 ADVICE): an index
+    // cache keyed by the params files' (name, length, mtime): an index
     // deleted (versionedStoreDir prune, Scratch cleanup) or rebuilt
     // by an external process at the same path must fail or re-read
-    // here, not pass from a stale entry — a one-stat FS probe per
-    // call, no Spark job; a MISSING params dir throws from the stat,
-    // which is the loud failure the check exists for
+    // here, not pass from a stale entry. Every rebuild writes part
+    // files under fresh job-UUID names, so the key moves even where
+    // the directory's mtime does not (a coarse-mtime filesystem, a
+    // time-preserving copy). One FS listing per call, no Spark job;
+    // a MISSING params dir throws from the listing, which is the
+    // loud failure the check exists for
     val pPath = new org.apache.hadoop.fs.Path(s"$indexDir/params")
     val fs = pPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val mtime = fs.getFileStatus(pPath).getModificationTime
+    val stamp = fs.listStatus(pPath).toSeq
+      .map(f => (f.getPath.getName, f.getLen, f.getModificationTime))
+      .sorted
     val cached = phashParamsCache.get(indexDir)
     val rec =
-      if (cached != null && cached._1 == mtime) cached._2
+      if (cached != null && cached._1 == stamp) cached._2
       else {
         val p = spark.read.parquet(s"$indexDir/params").head()
         val r = (p.getInt(0), p.getInt(1), p.getInt(2), p.getInt(3))
-        phashParamsCache.put(indexDir, (mtime, r))
+        phashParamsCache.put(indexDir, (stamp, r))
         r
       }
     require(rec == (radius, width, blocks.getOrElse(radius + 1),

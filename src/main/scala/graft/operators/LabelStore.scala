@@ -42,24 +42,28 @@ import org.apache.spark.sql.types._
   * scan, whose row volume is the merged components' membership —
   * data-proportional, no rounds). The merge itself runs as a
   * DRIVER-SIDE union-find over the batch's edges up to
-  * [[DefaultUfEdgeCap]] (16-byte tuples — millions fit a driver;
-  * a dup-dominated batch whose cliques exceed even that first
-  * collapses its OWN connectivity to a spanning star, one
-  * batch-grain CC) — zero CC rounds on the common path; only a
-  * pathological batch degrades to the distributed twin
-  * ([[Dedup.connectedComponentsStar]] at label grain).
+  * [[DefaultUfEdgeCap]] (collected as boxed `Row`s, ~100 bytes
+  * each — millions fit a driver; a dup-dominated batch whose
+  * cliques exceed even that first collapses its OWN connectivity
+  * to a spanning star, one batch-grain CC) — zero CC rounds on the
+  * common path; only a pathological batch degrades to the
+  * distributed twin ([[Dedup.connectedComponentsStar]] at label
+  * grain).
   * [[Dedup.DefaultMarkPruneCap]] separately bounds the literal
   * `isin` sets pushed into the store scans (the splitLeakageIndexed
   * convention); above it each scan swaps to its semi-join twin
   * while the merge stays on the driver. */
 object LabelStore {
 
-  /** Edge/row budget of the driver-side union-find: 16-byte tuples,
-    * so this is ~80 MB of driver heap at the default — far above any
-    * sane micro-batch's TOUCHED relation, yet a hard bound so a
-    * pathological batch degrades to the distributed twin instead of
-    * an OOM. Distinct from [[Dedup.DefaultMarkPruneCap]], which
-    * bounds literal isin pushes into store scans. */
+  /** Edge/row budget of the driver-side union-find. Both bounded
+    * collects materialize boxed `Row`s (~100 bytes for an edge's two
+    * boxed longs; a batch row adds its key string), so near the
+    * default the two collects hold on the order of 1 GB of transient
+    * driver heap — far above any sane micro-batch's TOUCHED relation,
+    * yet a hard bound so a pathological batch degrades to the
+    * distributed twin instead of an OOM. Distinct from
+    * [[Dedup.DefaultMarkPruneCap]], which bounds literal isin pushes
+    * into store scans. */
   val DefaultUfEdgeCap: Int = 5000000
 
   val LabelsSchema: StructType = StructType(Seq(
@@ -295,8 +299,8 @@ object LabelStore {
     // eager materialization job
     // TWO separate bounds (they answer different questions):
     //  - `ufCap` bounds what the DRIVER MERGE ingests — edges and
-    //    batch rows are 16-byte tuples, so millions fit a driver
-    //    comfortably and a Scala union-find over them is
+    //    batch rows arrive as boxed `Row`s (~100 bytes each), so
+    //    millions fit a driver and a Scala union-find over them is
     //    sub-second; a dup-dominated batch (near-dup cliques carry
     //    C(n,2) pairs) stays on the fast driver path instead of
     //    falling into distributed label-grain CC rounds;

@@ -532,6 +532,12 @@ class CorpusStatsSpec extends AnyFunSuite with SparkSpec with Matchers {
       .select("doc_id", "logit", "accept")
       .as[(Long, Long, Boolean)].collect()
     acc.foreach { case (_, l, a) => a shouldBe (l >= 0L) }
+    // NULL text is unscored, not scored as empty: NULL in all three
+    val nul = CorpusStats.linearClassifierScores(
+        Seq((5L, null: String)).toDF("doc_id", "text"), "doc_id",
+        "text", buckets = B)
+      .select("n_feats", "logit", "accept").head()
+    (0 until 3).map(nul.isNullAt) shouldBe Seq(true, true, true)
   }
 
   test("importanceSample: keys match an independent md5+Gumbel " +

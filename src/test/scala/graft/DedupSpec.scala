@@ -406,6 +406,35 @@ class DedupSpec extends AnyFunSuite with SparkSpec with Matchers {
     } finally Scratch.deleteRecursively(new java.io.File(root))
   }
 
+  test("phash params check re-reads an index rebuilt at the same path " +
+    "by another writer, even when the params dir keeps its mtime") {
+    import spark.implicits._
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_phashparams_").toString
+    try {
+      val idx = root + "/idx"
+      val fp = Seq((0L, 0L), (1L, 3L)).toDF("doc", "fp")
+      def mark(radius: Int): Long = Dedup.incrementalPhashAgainst(spark,
+          fp, idx, radius = radius, width = 64, blocks = Some(8),
+          keyBlocks = 1).count()
+      Dedup.writePhashIndex(fp, idx, radius = 4, width = 64,
+        blocks = Some(8), keyBlocks = 1)
+      mark(4) shouldBe 2L // caches the recorded params
+      // another process rebuilds the params with radius 2 (so this
+      // process's writePhashIndex invalidation never runs), and the
+      // directory's mtime reads as before — a coarse-mtime
+      // filesystem or a time-preserving copy
+      val paramsDir = new java.io.File(idx + "/params")
+      val mtime = paramsDir.lastModified()
+      Seq((2, 64, 8, 1)).toDF("radius", "width", "blocks", "key_blocks")
+        .write.mode("overwrite").parquet(paramsDir.toString)
+      paramsDir.setLastModified(mtime) shouldBe true
+      mark(2) shouldBe 2L
+      intercept[IllegalArgumentException](mark(4))
+        .getMessage should include("radius=2")
+    } finally Scratch.deleteRecursively(new java.io.File(root))
+  }
+
   test("phash mark pruning: pushed batch-key scan ≡ whole-store scan, " +
     "in-cap and over-cap regimes") {
     import spark.implicits._
