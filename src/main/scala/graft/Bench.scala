@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import scala.jdk.CollectionConverters._
 
 /** Benchmark main: times every SparkEntry query end-to-end on
@@ -19,49 +17,8 @@ import scala.jdk.CollectionConverters._
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Bounded planning collects (`limit(cap+1).collect()` — the
-      // LabelStore/markPrune convention) plan as CollectLimit, whose
-      // executeTake ramp runs 1 → 4 → 16 → … partitions in SEQUENTIAL
-      // waves; a bound that exists only as a guard is never reached,
-      // so every bounded collect pays ~log4(partitions) serialized
-      // waves of its result stage (r20 probe: ls_collect:image 6.6 s
-      // of a 33 s store build — the single largest phase). First
-      // wave = session width turns each such collect into ONE
-      // fully-parallel job; a limit small enough to be satisfied by
-      // one partition still stops after its first (now wider) wave.
-      .config("spark.sql.limit.initialNumPartitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE coalesces shuffle reads by BYTES; several of this
-      // engine's stages are row-expensive at tiny byte volume
-      // (64-float cosine re-ranks, window argmax over strings), and
-      // the 1 MiB default floor collapses them to 1-4 tasks on the
-      // few-MB fixtures (q06 window 1 task / 4.9 cpu-s; q95 re-rank
-      // 4 tasks). A 64 KiB floor restores width for CPU-heavy small
-      // stages and is a no-op at production byte volumes, where
-      // advisoryPartitionSizeInBytes governs long before this floor.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      // MinHashAgg is a TypedImperativeAggregate, so its groupBy plans
-      // ObjectHashAggregate — which silently falls back to SORT-based
-      // aggregation after 128 distinct keys per partition (default
-      // fallbackThreshold), i.e. effectively always on the exploded
-      // (doc, h0) signature frame, adding a per-partition sort on doc
-      // the hash form doesn't need. 1M keys ≈ 0.6-1 GB of 64-lane
-      // buffers per partition — comfortable here; at production
-      // executor sizes, scale the threshold with (heap / ~1 KB per
-      // key) or accept the sort fallback as the spill path.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "1048576")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Logs.quietBenignWarns()
+    val cpus = GraftSession.cpus
+    val spark = GraftSession(cpus)
 
     // one warm-up pass over the inputs so JIT + file-footer caches
     // don't bill the first query for session startup
@@ -165,7 +122,7 @@ object Bench {
     def calibrateMt(): Double = {
       val t0 = System.nanoTime()
       val acc = new java.util.concurrent.atomic.AtomicLong
-      val ts = (0 until cpus.toInt).map(_ =>
+      val ts = (0 until cpus).map(_ =>
         new Thread(() => { acc.addAndGet(spin()); () }))
       ts.foreach(_.start()); ts.foreach(_.join())
       if (acc.get() == 42L) println("") // defeat dead-code elimination
@@ -336,7 +293,7 @@ object Bench {
               java.nio.file.Files.readAllLines(histPath)).asScala
             .map(_.split("\t"))
             .filter(r => r.length >= 3 && r(0) == hostName &&
-              r(1) == cpus.toInt.toString)
+              r(1) == cpus.toString)
             .flatMap(r => scala.util.Try(r(2).toDouble).toOption)
           // min over a RECENT WINDOW, not the lifetime min (r18
           // ADVICE): after a durable host slowdown (governor /
@@ -412,13 +369,13 @@ object Bench {
       } catch { case scala.util.control.NonFatal(_) => Seq.empty }
     // best committed wall per query, same sf + cpus only
     val histWalls: Map[String, Double] = artifactHist
-      .filter(h => h._1 == cpus.toInt && h._2 == sfDir)
+      .filter(h => h._1 == cpus && h._2 == sfDir)
       .flatMap(_._3.toSeq)
       .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).min }
     // band provenance: the tsv is first-class (same host, measured
     // spins); the artifacts seed it only when the host key is absent
     val histSpin: Option[Double] = {
-      val vs = artifactHist.filter(_._1 == cpus.toInt).flatMap(_._4)
+      val vs = artifactHist.filter(_._1 == cpus).flatMap(_._4)
       if (vs.isEmpty) None else Some(vs.min)
     }
     val (bandEff, bandSource) = histBand match {
@@ -529,7 +486,7 @@ object Bench {
     // appends from squeezed runs can only loosen nothing
     locally {
       val cleanestAll = math.min(cleanestSpin, calibMtEnd)
-      val row = s"$hostName\t${cpus.toInt}\t" +
+      val row = s"$hostName\t$cpus\t" +
         String.format(java.util.Locale.ROOT, "%.3f",
           Double.box(cleanestAll)) + "\n"
       try java.nio.file.Files.writeString(histPath, row,

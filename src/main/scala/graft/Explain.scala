@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump explain("formatted") for every registered query to
   * files under the given dir (default /tmp/graft_plans), for plan
   * auditing — pushed filters, broadcast choices, codegen coverage. */
@@ -9,32 +7,13 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val outDir = args.headOption.getOrElse("/tmp/graft_plans")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Logs.quietBenignWarns()
+    val spark = GraftSession(8)
     new java.io.File(outDir).mkdirs()
-    // the streaming queries EXECUTE on construction (they drain into a
-    // memory sink and return the sink table) — "explaining" them would
-    // run minutes of streaming and dump only a memory-relation scan.
-    // Their micro-batch plans are visible in the checkpoint/debug logs
-    // instead; skip them here and say so.
-    val streaming = Set(
-      "q45_streaming_buckets", "q51_streaming_append",
-      "q56_streaming_sessions", "q73_streaming_dedup",
-      "q80_stream_interval_join", "q85_stream_static_join",
-      "q87_tws_sequence", "q111_stream_neardup_ingest",
-      "q117_stream_corpus_report")
+    // "explaining" a streaming query would run minutes of streaming
+    // and dump only a memory-relation scan; skip them and say so
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
-        if (streaming(name)) {
+        if (SparkEntry.streamingQueries(name)) {
           java.nio.file.Files.writeString(
             java.nio.file.Paths.get(outDir, s"$name.txt"),
             "(streaming query: executes on construction; batch explain " +

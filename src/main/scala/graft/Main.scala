@@ -31,8 +31,8 @@ object Main {
 
   def main(args: Array[String]): Unit = {
     // contract passthroughs so the whole surface drives from one CLI;
-    // dispatched BEFORE building a session (each main owns its own
-    // session config — getOrCreate here would silently override theirs)
+    // dispatched BEFORE building a session (each main picks its own
+    // width — getOrCreate here would silently override theirs)
     args.toSeq match {
       case Seq("bench", rest @ _*) => Bench.main(rest.toArray); return
       case Seq("verify", sfDir, outDir) =>
@@ -40,21 +40,8 @@ object Main {
       case Seq("explain", rest @ _*) => Explain.main(rest.toArray); return
       case _ => ()
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      // one fully-parallel wave for bounded planning collects — the
-      // Bench.scala rationale (executeTake's 1 → 4 → 16 ramp
-      // serializes every `limit(cap+1).collect()` guard)
-      .config("spark.sql.limit.initialNumPartitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Logs.quietBenignWarns()
+    val spark = GraftSession(GraftSession.cpus,
+      sys.env.getOrElse("SPARK_MASTER", "local[*]"))
     try run(spark, args.toSeq).foreach(println)
     finally spark.stop()
   }

@@ -1,16 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev measurement tool (r19 optimization round): rebuild the shared
   * streamed stores from scratch and print their internal phase walls
   * — the store_build_sec numbers (mmstream_store 53 s, prep_store
   * 22 s in the r19 baseline window) are the two biggest single items
   * in the bench artifact, and Bench discards their phase tags
   * (Phases.drain() before the timed loop), so this is the tool that
-  * attributes them. Mirrors Bench's session config exactly.
+  * attributes them.
   *
-  * Usage: SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=32
+  * Usage: SPARK_GRAFT_SF_DIR=...
   *   sbt "runMain graft.ProbeStores [storeFilter ...]"
   * Deletes the named stores' versioned dirs first so the build is
   * always fresh (default: mmstream_store prep_store).
@@ -18,7 +16,6 @@ import org.apache.spark.sql.SparkSession
 object ProbeStores {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val stores = if (args.nonEmpty) args.toSet
       else Set("mmstream_store", "prep_store")
     // fail loudly on unknown store names (r19 ADVICE): flatMap over
@@ -28,30 +25,7 @@ object ProbeStores {
     require(unknown.isEmpty,
       s"unknown store name(s) ${unknown.mkString(", ")} — " +
         s"known: ${known.mkString(", ")}")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Bounded planning collects (`limit(cap+1).collect()` — the
-      // LabelStore/markPrune convention) plan as CollectLimit, whose
-      // executeTake ramp runs 1 → 4 → 16 → … partitions in SEQUENTIAL
-      // waves; a bound that exists only as a guard is never reached,
-      // so every bounded collect pays ~log4(partitions) serialized
-      // waves of its result stage (r20 probe: ls_collect:image 6.6 s
-      // of a 33 s store build — the single largest phase). First
-      // wave = session width turns each such collect into ONE
-      // fully-parallel job; a limit small enough to be satisfied by
-      // one partition still stops after its first (now wider) wave.
-      .config("spark.sql.limit.initialNumPartitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "1048576")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Logs.quietBenignWarns()
+    val spark = GraftSession(GraftSession.cpus)
     Tables.names.foreach(n => Tables(spark, sfDir, n).count())
     val tmp = sys.props("java.io.tmpdir")
     val dirOf = Map(

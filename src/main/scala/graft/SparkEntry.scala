@@ -347,6 +347,17 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q50_list_topics")(spark, "/root/testdata/sf0.001")
 
+  /** Streaming queries that EXECUTE on construction: they drain into
+    * a memory sink and return the sink table, so their batch plan is
+    * only a memory-relation scan. Plan dumps and plan audits skip
+    * them; StreamingSpec covers their micro-batch plans. */
+  val streamingQueries: Set[String] = Set(
+    "q45_streaming_buckets", "q51_streaming_append",
+    "q56_streaming_sessions", "q73_streaming_dedup",
+    "q80_stream_interval_join", "q85_stream_static_join",
+    "q87_tws_sequence", "q111_stream_neardup_ingest",
+    "q117_stream_corpus_report")
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // ── A5: partial+final hash aggregation (TPC-H Q1 shape).
@@ -3614,8 +3625,8 @@ object SparkEntry {
         .select("embedding").head.getSeq[Float](0)
       val q = typedLit(qv)
       graft.plans.GraftExtensions.register(s)
-      s.conf.set(graft.plans.AnnTopKToLshPrune.EnabledKey, "true")
-      try {
+      GraftSession.withConf(s,
+          graft.plans.AnnTopKToLshPrune.EnabledKey -> "true") {
         val exactForm = emb.filter(col("vec_id") =!= 0)
           .orderBy(vectors.cosineFast(col("embedding"), q).desc,
             col("vec_id"))
@@ -3629,12 +3640,12 @@ object SparkEntry {
               _.isInstanceOf[org.apache.spark.sql.graft.HyperplaneBuckets])
           case _ => false
         }, "AnnTopKToLshPrune did not fire on the q93 plan")
-        // pin the rewritten plan, then RESTORE the conf in finally:
-        // the opt-in must not leak into queries materialized later;
+        // pin the rewritten plan, then RESTORE the caller's conf: the
+        // opt-in must not leak into queries materialized later;
         // downstream re-optimization (the verify write path builds a
         // fresh QueryExecution) is a no-op on the already-pruned plan
         org.apache.spark.sql.graft.Bridge.ofRows(s, optimized)
-      } finally s.conf.unset(graft.plans.AnnTopKToLshPrune.EnabledKey)
+      }
     }),
 
     // ── J5 options parity: FORWARD as-of with TOLERANCE — "the next

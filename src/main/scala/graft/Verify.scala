@@ -1,37 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Bounded planning collects (`limit(cap+1).collect()` — the
-      // LabelStore/markPrune convention) plan as CollectLimit, whose
-      // executeTake ramp runs 1 → 4 → 16 → … partitions in SEQUENTIAL
-      // waves; a bound that exists only as a guard is never reached,
-      // so every bounded collect pays ~log4(partitions) serialized
-      // waves of its result stage (r20 probe: ls_collect:image 6.6 s
-      // of a 33 s store build — the single largest phase). First
-      // wave = session width turns each such collect into ONE
-      // fully-parallel job; a limit small enough to be satisfied by
-      // one partition still stops after its first (now wider) wave.
-      .config("spark.sql.limit.initialNumPartitions", cpus)
-      // see Bench: keep CPU-heavy small shuffle stages wide
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      // see Bench: keep MinHashAgg's partial aggregation hash-based
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "1048576")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Logs.quietBenignWarns()
+    val spark = GraftSession(GraftSession.cpus)
     // start from an EMPTY outDir: a failed query must leave no output
     // at all, not a previous run's stale parquet that the driver's
     // compare would silently read as a pass (and renamed/removed

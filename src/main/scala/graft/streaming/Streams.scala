@@ -7,7 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, StreamingQuery, StreamingQueryListener, Trigger}
 
-import graft.Phases
+import graft.{GraftSession, Phases}
 import graft.gen.Generator
 import graft.operators.Dedup
 import graft.sources.StoreLease
@@ -94,11 +94,10 @@ object Streams {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val s = batch.sparkSession
-        val widthKey = "spark.sql.shuffle.partitions"
-        val oldWidth = s.conf.get(widthKey)
-        s.conf.set(widthKey, s.sparkContext.defaultParallelism)
-        try Phases.time(s"$phase[b$batchId]")(body(s, batch, batchId))
-        finally s.conf.set(widthKey, oldWidth)
+        GraftSession.withConf(s, "spark.sql.shuffle.partitions" ->
+            s.sparkContext.defaultParallelism.toString) {
+          Phases.time(s"$phase[b$batchId]")(body(s, batch, batchId))
+        }
       }
       .start()
 
@@ -2423,17 +2422,11 @@ object Streams {
     * stream START, so only queries started inside `body` are
     * affected; the previous provider (or its absence) is restored on
     * every exit path. */
-  def withRocksDbStateStore[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming.state" +
-      ".RocksDBStateStoreProvider")
-    try body
-    finally old match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  def withRocksDbStateStore[T](spark: SparkSession)(body: => T): T =
+    GraftSession.withConf(spark,
+      "spark.sql.streaming.stateStore.providerClass" ->
+        ("org.apache.spark.sql.execution.streaming.state" +
+          ".RocksDBStateStoreProvider"))(body)
 
   private class ArrivalSeqProcessor
     extends org.apache.spark.sql.streaming.StatefulProcessor[

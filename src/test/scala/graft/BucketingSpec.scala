@@ -27,7 +27,8 @@ class BucketingSpec extends AnyFunSuite with SparkSpec with Matchers {
         .withColumn("x", col("qty") * col("o_totalprice"))
       // disable auto-broadcast so the assertion is about BUCKETING,
       // not about the small fixture fitting a broadcast threshold
-      withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
+      GraftSession.withConf(spark,
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         val plan = joined.queryExecution.executedPlan.toString
         plan should include("SortMergeJoin")
         plan should not include "Exchange"
@@ -42,16 +43,6 @@ class BucketingSpec extends AnyFunSuite with SparkSpec with Matchers {
     } finally {
       spark.sql("DROP TABLE IF EXISTS bk_li")
       spark.sql("DROP TABLE IF EXISTS bk_o")
-    }
-  }
-
-  private def withConf[T](key: String, value: String)(body: => T): T = {
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 }

@@ -612,12 +612,8 @@ class DedupSpec extends AnyFunSuite with SparkSpec with Matchers {
     import spark.implicits._
     val itemsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumItems"
     val bitsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumBits"
-    val oldItems = spark.conf.getOption(itemsKey)
-    val oldBits = spark.conf.getOption(bitsKey)
     // tiny caps force BOTH clamps (items 10^9 → 64, bits ~613 → 512)
-    spark.conf.set(itemsKey, "64")
-    spark.conf.set(bitsKey, "512")
-    try {
+    GraftSession.withConf(spark, itemsKey -> "64", bitsKey -> "512") {
       val corpusDf = (1L to 300L).map(i => (i, s"clamp doc $i"))
         .toDF("doc_id", "text")
       val batch = (250L to 320L).map(i => (i + 10000L, s"clamp doc $i"))
@@ -633,13 +629,6 @@ class DedupSpec extends AnyFunSuite with SparkSpec with Matchers {
           expectedItems = 1000000000L)
         .select("doc_id").as[Long].collect().toSet
       kept shouldBe expected
-    } finally {
-      def restore(k: String, v: Option[String]): Unit = v match {
-        case Some(s) => spark.conf.set(k, s)
-        case None => spark.conf.unset(k)
-      }
-      restore(itemsKey, oldItems)
-      restore(bitsKey, oldBits)
     }
   }
 

@@ -18,16 +18,6 @@ import org.scalatest.matchers.should.Matchers
   */
 class PlanAuditSpec extends AnyFunSuite with SparkSpec with Matchers {
 
-  // executes on construction (memory-sink drains); micro-batch plans
-  // are covered by StreamingSpec, not explainable here — the same
-  // skip-list Explain.scala documents
-  private val streaming = Set(
-    "q45_streaming_buckets", "q51_streaming_append",
-    "q56_streaming_sessions", "q73_streaming_dedup",
-    "q80_stream_interval_join", "q85_stream_static_join",
-    "q87_tws_sequence", "q111_stream_neardup_ingest",
-      "q117_stream_corpus_report")
-
   /** KNOWN BLIND SPOT, skipped honestly: these queries materialize
     * internally (collect + scratch reclaim / snapshot round-trips),
     * so `fn(...)` returns a LocalRelation and the executedPlan this
@@ -102,7 +92,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkSpec with Matchers {
     * once. */
   private lazy val auditablePlans: Seq[(String, Seq[SparkPlan])] =
     SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      if (streaming(name) || materializedInline(name)) None
+      if (SparkEntry.streamingQueries(name) || materializedInline(name)) None
       else {
         var df: org.apache.spark.sql.DataFrame = null
         try {

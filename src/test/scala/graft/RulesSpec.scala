@@ -89,16 +89,22 @@ class RulesSpec extends AnyFunSuite with SparkSpec with Matchers {
         round(vectors.cosineFast(col("embedding"), typedLit(queryVec)), 6)
           .as("cos"))
 
-  private def withAnnRewrite[A](body: => A): A = {
-    spark.conf.set(AnnTopKToLshPrune.EnabledKey, "true")
-    try body finally spark.conf.unset(AnnTopKToLshPrune.EnabledKey)
-  }
+  private def withAnnRewrite[A](body: => A): A =
+    GraftSession.withConf(spark, AnnTopKToLshPrune.EnabledKey -> "true")(body)
 
   test("ANN rewrite is off by default and opt-in via conf") {
     bucketFilterCount(cosineTopK(10)) shouldBe 0
     withAnnRewrite { bucketFilterCount(cosineTopK(10)) shouldBe 1 }
     // and off again once the conf is cleared (no sticky plan state)
     bucketFilterCount(cosineTopK(10)) shouldBe 0
+  }
+
+  test("q93 restores a caller's ANN-rewrite opt-in instead of unsetting it") {
+    withAnnRewrite {
+      SparkEntry.queries("q93_ann_rewrite")(spark, "/root/testdata/sf0.001")
+        .count() should be > 0L
+      spark.conf.getOption(AnnTopKToLshPrune.EnabledKey) shouldBe Some("true")
+    }
   }
 
   test("ANN rewrite result equals the hand-built bucket-pruned plan") {

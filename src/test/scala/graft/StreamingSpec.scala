@@ -399,10 +399,8 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     val full = spark.sparkContext.defaultParallelism.toString
     // a session width unlike the context's, so the override shows
     val narrow = (spark.sparkContext.defaultParallelism + 3).toString
-    val old = spark.conf.get(key)
     val root = Files.createTempDirectory("graft_mb_width_").toString
-    spark.conf.set(key, narrow)
-    try {
+    try GraftSession.withConf(spark, key -> narrow) {
       val inBody = new java.util.concurrent.ConcurrentLinkedQueue[String]
       @volatile var session: org.apache.spark.sql.SparkSession = null
       val input = MemoryStream[Long]
@@ -421,10 +419,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
         session.conf.get(key) shouldBe narrow
       } finally q.stop()
       inBody.toArray.toSeq shouldBe Seq(full, full)
-    } finally {
-      spark.conf.set(key, old)
-      Scratch.deleteRecursively(new java.io.File(root))
-    }
+    } finally Scratch.deleteRecursively(new java.io.File(root))
   }
 
   test("near-dup ingest retry: a re-delivered micro-batch leaves store and output in the single-run state") {
