@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one place the engine's SparkSession settings live. Every main
-  * (Bench, Verify, Main, ProbeStores, the Probe tools, Explain) and
+  * (Bench, Verify, Main, ProbeStores, ProbeRecall, Explain) and
   * the shared test session build through [[apply]], so a plan pin or
   * a bench number is a statement about one configuration. A
   * `spark-submit` deployment should carry the same settings. */

@@ -1013,9 +1013,10 @@ object Main {
     * (measure dilution → gate → rewrite): read the FINAL component
     * labels from the fold store's persisted label store when one is
     * in sync with its docs table (r17 — the repair's dominant cost,
-    * the corpus CC re-walk, becomes one store aggregate; ProbeScale
-    * folddrift: 56 → 12.5 s at 100× manifest growth), else recompute
-    * them from the docs + pairs tables (no re-tokenization — the
+    * the corpus CC re-walk, becomes one store aggregate; PLANS.md
+    * "Fold-drift lifecycle vs landed-manifest growth": 56 → 12.5 s
+    * at 100× manifest growth), else recompute them from the docs +
+    * pairs tables (no re-tokenization — the
     * pair store IS the at-rest edge set),
     * compare every manifest row's at-ingest split against the final
     * component fold (the q209 arithmetic), and when moved docs

@@ -11,7 +11,8 @@ package graft
   * idle. Spark's scheduler is multi-thread-safe by design (one
   * SparkContext, many job-submitting threads), so legs that touch
   * DISJOINT state overlap instead of queueing and the fixed bill
-  * drops toward the slowest leg (ProbeScale mmbatch/prepbatch).
+  * drops toward the slowest leg (PLANS.md "Per-batch FIXED cost vs
+  * batch grain"; PLANS.md "the prepbatch table").
   *
   * What callers deliberately do NOT fuse: the COMMIT PROTOCOL.
   * Every store still seals under its own tag, marker and lease, so

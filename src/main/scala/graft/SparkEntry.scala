@@ -1187,11 +1187,12 @@ object SparkEntry {
     }),
 
     // ── NS dedup: q46's SimHash pigeonhole with the key width AUTO-
-    // SIZED from the corpus (Dedup.simhashParamsForSize) — ProbeScale
-    // measured fixed keys saturating superlinearly past ~10k docs;
-    // this is the parameterization a 100 TB run would use. Output is
-    // identical to q46's (exactness is parameter-independent), so the
-    // same all-pairs oracle verifies both ──
+    // SIZED from the corpus (Dedup.simhashParamsForSize) — PLANS.md
+    // "Candidate growth MEASURED at 1×–100×" measured fixed keys
+    // saturating superlinearly past ~10k docs; this is the
+    // parameterization a 100 TB run would use. Output is identical to
+    // q46's (exactness is parameter-independent), so the same
+    // all-pairs oracle verifies both ──
     "q61_simhash_auto" -> ((s, dir) =>
       Dedup.simhashNearDupPairsAuto(
         t(s, dir, "documents"), "doc_id", "text", radius = 5)),
@@ -1970,10 +1971,11 @@ object SparkEntry {
     "q151_containment_indexed" -> ((s, dir) => {
       // QUARTER slice: the gate proves the indexed plan's exactness;
       // the full fixture is the dense regime where this plan is
-      // deliberately the wrong execution (ProbeScale containment:
-      // 43.6 s indexed vs 1.65 s dense at sf0.1 full) — running it
-      // full-bore in the bench would contradict the operator's own
-      // regime contract. The oracle mirrors the slice.
+      // deliberately the wrong execution (PLANS.md "Containment
+      // dedup cost drivers": 43.6 s indexed vs 1.65 s dense at sf0.1
+      // full) — running it full-bore in the bench would contradict
+      // the operator's own regime contract. The oracle mirrors the
+      // slice.
       val base = t(s, dir, "documents")
         .filter(col("doc_id") % 4 === 0)
         .select(col("doc_id"), col("text"))
@@ -1998,9 +2000,10 @@ object SparkEntry {
     // so bpeMerges runs the DRIVER-SIDE incremental trainer
     // (operators.Bpe: one distributed word count, in-memory merge
     // loop at ~0.05 ms/merge vs ~250 ms/merge of sequential Spark
-    // jobs — PLANS.md "bpe"). The oracle replays all 80 merges as
-    // chained MATERIALIZED CTEs: identical rules from a wholly
-    // different execution, gated end-to-end ──
+    // jobs — PLANS.md "BPE at production vocabulary sizes"). The
+    // oracle replays all 80 merges as chained MATERIALIZED CTEs:
+    // identical rules from a wholly different execution, gated
+    // end-to-end ──
     "q152_bpe_train_deep" -> ((s, dir) => {
       import s.implicits._
       bpeMerges(s, dir, nMerges = 80).toDF("step", "pair", "merged", "cnt")
@@ -6631,9 +6634,9 @@ object SparkEntry {
     *
     * Production vocabulary sizes (nMerges > [[bpePerStepJobLimit]])
     * run the merge loop DRIVER-SIDE on the collected word table
-    * (graft.operators.Bpe scaladoc for why; PLANS.md "bpe" for the
-    * measured gap) — corpus-grain counting stays distributed in both
-    * regimes. */
+    * (graft.operators.Bpe scaladoc for why; PLANS.md "BPE at
+    * production vocabulary sizes" for the measured gap) — corpus-grain
+    * counting stays distributed in both regimes. */
   private def bpeMerges(s: SparkSession, dir: String,
       nMerges: Int): Seq[(Int, String, String, Long)] = {
     val words = Relational
@@ -6923,8 +6926,8 @@ object SparkEntry {
     * registrations exist to pin. `where` restricts the base corpus
     * (q151: the gate proves the indexed PLAN, and the fixtures are
     * the dense regime where that plan is deliberately the wrong
-    * execution at full scale — ProbeScale containment carries the
-    * full-corpus walls). */
+    * execution at full scale — PLANS.md "Containment dedup cost
+    * drivers" carries the full-corpus walls). */
   private def containmentPairsOracleSql(where: String = ""): String =
     s"""WITH tk AS (SELECT doc_id, $sqlTokens AS toks FROM documents
        |  $where),

@@ -15,8 +15,9 @@ import scala.collection.mutable
   * fixture-faithful for the q146 gate at nMerges=5, but a production
   * tokenizer wants 30k merges: 30k sequential scheduler round-trips
   * over a table that fits in memory is the wrong execution by four
-  * orders of magnitude (measured in PLANS.md "bpe"). This trainer
-  * runs the same merge semantics in memory, INCREMENTALLY: pair
+  * orders of magnitude (measured in PLANS.md "BPE at production
+  * vocabulary sizes"). This trainer runs the same merge semantics
+  * in memory, INCREMENTALLY: pair
   * counts and a pair→words index are maintained across steps, so a
   * merge touches only the words that contain the merged pair — the
   * standard in-memory BPE trainer shape (Sennrich et al. 2016,

@@ -487,8 +487,9 @@ object Dedup {
   private[graft] def signaturesFromBaseHashes(sh: DataFrame, k: Int): DataFrame = {
     // ONE imperative all-lanes aggregate, not k separate min-agg
     // columns: the k-wide HashAggregate generated ~27 cpu-s of
-    // first-use JIT per query plan (ProbeScale build), paid again by
-    // every signature-building query; MinHashAgg is one shared tight
+    // first-use JIT per query plan (PLANS.md "the one-aggregate
+    // minhash"), paid again by every signature-building query;
+    // MinHashAgg is one shared tight
     // loop, bit-identical lanes (DedupSpec's MinHashAgg parity case
     // pins it against the composed form below)
     import org.apache.spark.sql.graft.{Bridge, MinHashAgg}
@@ -509,6 +510,22 @@ object Dedup {
       .select(col("doc"),
         array((0 until k).map(i => col(s"h${i}_")): _*).as("signature"))
 
+  /** The ONE banding definition: (doc, band, band_hash) rows from
+    * minhash signatures — shared by [[minhashCandidatePairs]] and the
+    * at-rest index ([[writeNearDupIndex]]); a second spelling here
+    * would silently miss candidates when it drifted. */
+  private def bandedSignatures(signatures: DataFrame, bands: Int,
+      k: Int): DataFrame = {
+    require(k % bands == 0, s"bands=$bands must divide signature width $k")
+    val r = k / bands
+    signatures.select(
+      col("doc"),
+      posexplode(transform(sequence(lit(0), lit(bands - 1)),
+        b => xxhash64(b, concat_ws(",",
+          slice(col("signature"), b * r + 1, lit(r))))))
+        .as(Seq("band", "band_hash")))
+  }
+
   /** MinHash LSH candidate pairs: split the k-wide signature into
     * `bands` bands of k/bands rows, hash each band, and join docs
     * landing in the same (band, bandHash) bucket. `k` is the signature
@@ -524,22 +541,6 @@ object Dedup {
     * shrinking the exact-re-score input by orders of magnitude.
     * Approximate: recall follows the (bands, rows, minBandMatches)
     * S-curve; callers re-score candidates exactly. */
-  /** The ONE banding definition: (doc, band, band_hash) rows from
-    * minhash signatures — shared by [[minhashCandidatePairs]] and the
-    * at-rest index ([[writeNearDupIndex]]); a second spelling here
-    * would silently miss candidates when it drifted. */
-  private[graft] def bandedSignatures(signatures: DataFrame, bands: Int,
-      k: Int): DataFrame = {
-    require(k % bands == 0, s"bands=$bands must divide signature width $k")
-    val r = k / bands
-    signatures.select(
-      col("doc"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        b => xxhash64(b, concat_ws(",",
-          slice(col("signature"), b * r + 1, lit(r))))))
-        .as(Seq("band", "band_hash")))
-  }
-
   def minhashCandidatePairs(signatures: DataFrame, bands: Int, k: Int,
       minBandMatches: Int = 1): DataFrame = {
     val banded = bandedSignatures(signatures, bands, k)
@@ -917,9 +918,9 @@ object Dedup {
     * (doc, table, packed block-combination key) — the blocking grain
     * [[hammingNearDupPairs]] self-joins and the phash index stores
     * at rest. Parameter contract as documented on the simhash form.
-    * `private[graft]` so measurement tooling (ProbeScale phash)
-    * counts candidates from the ENGINE's key packing instead of a
-    * drift-prone copy. */
+    * `private[graft]` because the modality ingest
+    * (Streams.modalityManifestIngest) writes its phash key segments
+    * from the same key packing. */
   private[graft] def pigeonholeKeys(fp: DataFrame, radius: Int,
       width: Int, blocks: Option[Int], keyBlocks: Int): DataFrame = {
     val nBlocks = blocks.getOrElse(radius + 1)
@@ -1258,9 +1259,10 @@ object Dedup {
     * (blocks, keyBlocks) whose packed key is wide enough to keep
     * expected bucket occupancy ≈ `targetOccupancy`. Occupancy is
     * n / 2^keyBits for ANY table count, so the key width must grow
-    * with log2 n — ProbeScale measured the fixed minimal (6,1)
-    * 10-bit keys going superlinear past ~10k docs, exactly the
-    * saturation this rule moves out of reach. Valid configs: blocks
+    * with log2 n — PLANS.md "Candidate growth MEASURED at 1×–100×"
+    * measured the fixed minimal (6,1) 10-bit keys going superlinear
+    * past ~10k docs, exactly the saturation this rule moves out of
+    * reach. Valid configs: blocks
     * divides width, keyBlocks ≤ blocks − radius (the recall-1
     * pigeonhole constraint), packed key ≤ 63 bits. Among configs wide
     * enough, the fewest tables wins (tables multiply the shuffle
@@ -2854,9 +2856,9 @@ object Dedup {
     * pruning to colliding neighborhoods — collision equality makes
     * the filter semantically free), and the candidates' bounded
     * doc_a set point-fetches the train-side shingles. Guard wall
-    * then tracks the VAL side as the store grows (ProbeScale
-    * `ndguard`); over-cap sets fall back to the sequential forms,
-    * the cheaper plan at that size. */
+    * then tracks the VAL side as the store grows (PLANS.md "Guard
+    * cost vs corpus growth"); over-cap sets fall back to the
+    * sequential forms, the cheaper plan at that size. */
   def splitLeakageIndexed(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, valIds: DataFrame, idCol: String,
       threshold: Double,

@@ -10,10 +10,11 @@ import org.apache.spark.sql.types._
   * re-walk (the [[Dedup.componentGroups]] /
   * [[Dedup.componentGroupsBounded]] regimes both re-derive labels
   * from the edge store every micro-batch; even the bounded form pays
-  * a frontier-fixpoint scheduler floor per batch — ProbeScale
-  * `foldcc`). Labels are [[Dedup.componentGroups]]' exactly: the
-  * component min member id over the union of near-dup pair edges and
-  * same-key edges — the store is a PHYSICAL move, not a semantic one
+  * a frontier-fixpoint scheduler floor per batch — PLANS.md
+  * "Per-batch fold-label cost vs corpus growth"). Labels are
+  * [[Dedup.componentGroups]]' exactly: the component min member id
+  * over the union of near-dup pair edges and same-key edges — the
+  * store is a PHYSICAL move, not a semantic one
   * (LabelStoreSpec pins store ≡ componentGroups on every batch
   * prefix; StreamingSpec pins the store-backed ingest ≡ the CC one).
   *
@@ -290,7 +291,8 @@ object LabelStore {
     val pairs = batchPairs.select(col("doc_a").cast("long"),
       col("doc_b").cast("long"))
     // per-batch job economy (a streaming consumer pays this EVERY
-    // micro-batch, ProbeScale foldlabel): the two bounding collects
+    // micro-batch, PLANS.md "Per-batch label cost: persisted
+    // union-find store vs bounded CC"): the two bounding collects
     // run directly on the lazy frames (no checkpoint jobs), the
     // driver plan's segment stays LAZY through the staged write (the
     // rewrite scan reads the table once, inside that write, before

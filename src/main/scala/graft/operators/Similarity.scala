@@ -524,11 +524,8 @@ object Similarity {
 
   /** The LSH collide candidate pair set of the indexed margin miner
     * — (src_id, tgt_id) distinct over same-(table, bucket)
-    * collisions ([[hardNegatives]]' blocking on a two-sided input).
-    * `private[graft]` so measurement tooling (ProbeScale margin)
-    * counts candidates from the ENGINE's blocking instead of a
-    * drift-prone copy (the pigeonholeKeys convention). */
-  private[graft] def collideCandidates(xs: DataFrame, ys: DataFrame,
+    * collisions ([[hardNegatives]]' blocking on a two-sided input). */
+  private def collideCandidates(xs: DataFrame, ys: DataFrame,
       tables: Seq[Seq[Array[Double]]]): DataFrame = {
     def bucketed(f: DataFrame, id: String) = f.select(
       col("vec_id").as(id),

@@ -530,10 +530,11 @@ object Streams {
     * (appendPairStore: candidates = batch bands × store bands) plus
     * the label-store update — three pushed-predicate store reads and
     * a driver union-find over the batch's label-grain edges (the
-    * LabelStore scaladoc; ProbeScale `foldlabel` tables the per-batch
-    * wall flat and below the CC regimes' frontier floor as the corpus
-    * grows). The corpus text never re-tokenizes and no regime
-    * re-walks untouched components.
+    * LabelStore scaladoc; PLANS.md "Per-batch label cost: persisted
+    * union-find store vs bounded CC" tables the per-batch wall flat
+    * and below the CC regimes' frontier floor as the corpus grows).
+    * The corpus text never re-tokenizes and no regime re-walks
+    * untouched components.
     *
     * `driftDir` (optional) turns on the LIVE DRIFT MONITOR — the
     * q209 measurement at ingest, the alarm that tells a curator WHEN
@@ -737,9 +738,10 @@ object Streams {
           // ONE file per sealed batch partition: the manifest's
           // steady-state readers (the drift leg's prior scan,
           // refold, q209-class reports) pay FILE COUNT, not
-          // rows — ProbeScale folddrift measured the
-          // un-coalesced layout (batch-width files per dir) at
-          // 4–5× the compacted walls. A micro-batch manifest is
+          // rows — PLANS.md "Fold-drift lifecycle vs
+          // landed-manifest growth" measured the un-coalesced
+          // layout (batch-width files per dir) at 4–5× the
+          // compacted walls. A micro-batch manifest is
           // batch-sized; one file is the right grain (a giant
           // batch's write parallelism is bounded by this —
           // production can shard the partition by raising it)
@@ -1031,8 +1033,8 @@ object Streams {
       // store subtree, so the legs (and the text leg) run
       // CONCURRENTLY (graft.Par) — the fused-seal lever: the
       // per-batch fixed bill was ~1.2-1.5 s × modalities of
-      // SEQUENTIAL small jobs (ProbeScale mmbatch), now
-      // overlapped toward the slowest leg.
+      // SEQUENTIAL small jobs (PLANS.md "Per-batch FIXED cost vs
+      // batch grain"), now overlapped toward the slowest leg.
       val mediaLegs = media.map { case (name, fp0, itemOf) =>
         () => graft.Phases.time(s"mm_$name[b$batchId]") {
         val mRoot = s"$storeRoot/$name"
@@ -1124,9 +1126,10 @@ object Streams {
             // repartition(1), not repartitionByRange(1, …): a
             // single-file segment needs no range boundaries, and
             // RangePartitioner's sampling pass is one more job on
-            // the per-(modality, batch) FIXED bill (ProbeScale
-            // mmbatch); the sort inside the one partition gives
-            // the identical bkey-clustered layout
+            // the per-(modality, batch) FIXED bill (PLANS.md
+            // "Per-batch FIXED cost vs batch grain"); the sort
+            // inside the one partition gives the identical
+            // bkey-clustered layout
             val keyRows = Dedup.pigeonholeKeys(fp,
                 radius, width, Some(blocks), keyBlocks)
               .repartition(1)
@@ -1170,11 +1173,11 @@ object Streams {
     * verdict, the storeAtLeastBytes convention) returns None
     * WITHOUT collecting: below the gate the stores are small enough
     * that the semi-join scan is the cheaper plan and the planning
-    * collects would be pure per-batch fixed cost (ProbeScale
-    * mmbatch measured ~0.3 s per (modality, batch) of collect jobs
-    * at fixture scale); past the gate the collects buy
-    * stats/dictionary-pruned scans instead of per-batch full-store
-    * passes. */
+    * collects would be pure per-batch fixed cost (PLANS.md
+    * "Per-batch FIXED cost vs batch grain" measured ~0.3 s per
+    * (modality, batch) of collect jobs at fixture scale); past the
+    * gate the collects buy stats/dictionary-pruned scans instead of
+    * per-batch full-store passes. */
   private def pushedKeys(df: DataFrame, c: String,
       enabled: Boolean = true,
       cap: Int = graft.operators.Dedup.DefaultMarkPruneCap)
@@ -1265,7 +1268,7 @@ object Streams {
     // no checkpoints on the split reads: they are at-rest parquet
     // scans already (re-reading a sealed file is cheaper than the
     // extra materialization job — the delta leg is per-batch FIXED
-    // cost, ProbeScale mmbatch)
+    // cost, PLANS.md "Per-batch FIXED cost vs batch grain")
     val (segDocs, _) =
       splitTable(s, s"$storeRoot/text/docs", tag, textDocsSchema)
     val (segCh, oldCh) =
@@ -1320,8 +1323,9 @@ object Streams {
     // flips/affOwners/affIds ARE checkpointed: each feeds 2–4
     // consumers, and measured walls (gate fixture) show the
     // checkpoint jobs beating the repeated-subtree plan the lazy
-    // form compiles (ProbeScale mmbatch prices the residual fixed
-    // cost; the fused batch fan-out is its lever)
+    // form compiles (PLANS.md "Per-batch FIXED cost vs batch grain"
+    // prices the residual fixed cost; the fused batch fan-out is its
+    // lever)
     val affOwners = graft.Phases.time(s"mmd_own[$tag]") {
       flips.select(col("_d_new").as("_d_doc"))
         .unionByName(flips.filter(col("_d_old").isNotNull)
@@ -1741,8 +1745,8 @@ object Streams {
       // the batch and the stream-static eval shingles. Running
       // them concurrently overlaps the scoring leg's
       // tokenize+shingle wall with the mark's store probes
-      // (ProbeScale prepbatch priced the sequential form at
-      // ~4.4-6.6 s/batch of fixed cost).
+      // (PLANS.md "the prepbatch table" priced the sequential
+      // form at ~4.4-6.6 s/batch of fixed cost).
       val pairLeg: () => Unit = () => {
         // the label merge reads only the CHECKPOINTED fresh
         // pairs and the labels root — overlapped with the

@@ -22,12 +22,13 @@ import org.apache.spark.sql.types._
   * Why one aggregate instead of 64: the 64-wide HashAggregate
   * generates a very large whole-stage method per PLAN — measured
   * ~27 process-cpu-seconds of first-use JIT per query shape on the
-  * index builds (ProbeScale build: bands write 36 cpu-s first use vs
-  * 9 steady) — and every query that builds signatures (q30/q44/q84,
-  * the at-rest index build, every ingest mark) pays it again for its
-  * own plan. This form is one tight primitive loop shared by all of
-  * them, with a flat 8k-byte buffer for partial merge (map-side
-  * combine still applies — ObjectHashAggregate).
+  * index builds (PLANS.md "the one-aggregate minhash": bands write
+  * 36 cpu-s first use vs 9 steady) — and every query that builds
+  * signatures (q30/q44/q84, the at-rest index build, every ingest
+  * mark) pays it again for its own plan. This form is one tight
+  * primitive loop shared by all of them, with a flat 8k-byte buffer
+  * for partial merge (map-side combine still applies —
+  * ObjectHashAggregate).
   *
   * Output: array<bigint> of the k lane minima in lane order —
   * the exact column [[graft.operators.Dedup.signaturesFromBaseHashes]]

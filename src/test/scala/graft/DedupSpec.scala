@@ -512,8 +512,9 @@ class DedupSpec extends AnyFunSuite with SparkSpec with Matchers {
   test("simhashParamsForSize widens the key with the corpus, and auto ≡ fixed") {
     import spark.implicits._
     // occupancy = n / 2^keyBits regardless of table count, so the
-    // key width must track log2 n (ProbeScale measured fixed 10-bit
-    // keys going superlinear past ~10k docs)
+    // key width must track log2 n (PLANS.md "Candidate growth
+    // MEASURED at 1×–100×": fixed 10-bit keys go superlinear past
+    // ~10k docs)
     Dedup.simhashParamsForSize(500) shouldBe (6, 1) // 10-bit keys, 6 tables
     Dedup.simhashParamsForSize(50000) shouldBe (10, 2) // 12-bit, 45 tables
     Dedup.simhashParamsForSize(5000000) shouldBe (10, 3) // 18-bit, 120 tables

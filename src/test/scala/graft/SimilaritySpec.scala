@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
+import graft.functions.vectors
 import graft.operators.Similarity
 
 /** The scale-aware ANN sizing rules and the subset-exactness contract
@@ -54,6 +55,35 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec with Matchers {
     // fixed seed, so this is a stable assertion, not a flaky one
     auto shouldBe exact
     exact.size should be >= 3
+  }
+
+  test("planesForSize holds in-bucket pairs near n·31/2 as n grows 10×") {
+    import spark.implicits._
+    // q54's central scaling claim (PLANS.md "Candidate growth MEASURED
+    // at 1×–100×"): sizing the planes from n keeps bucket occupancy
+    // near the target 32, so the in-bucket pair volume Σ C(c,2) stays
+    // near n·31/2 instead of growing with n²
+    val dim = 64
+    def inBucketPairs(n: Int): Long = {
+      val emb = (0 until n).map { i =>
+        val r = new java.util.Random(5400000L + i)
+        val v = Array.fill(dim)(r.nextGaussian())
+        val norm = math.sqrt(v.map(x => x * x).sum)
+        (i.toLong, v.toSeq.map(_ / norm))
+      }.toDF("vec_id", "embedding")
+      val planes = vectors.planeMatrix(54L, Similarity.planesForSize(n), dim)
+      emb.groupBy(vectors.hyperplaneBucketFast(col("embedding"), planes))
+        .count().agg(sum(col("count") * (col("count") - 1) / 2).cast("long"))
+        .as[Long].head()
+    }
+    // measured: 36,846 pairs at n = 2,000 (6 planes, ratio 1.19) and
+    // 286,426 at n = 20,000 (10 planes, ratio 0.92). The ±30% band
+    // leaves 0.11 of margin above the first and 0.22 below the
+    // second; keeping 6 planes at n = 20,000 reads ratio 12.0
+    for (n <- Seq(2000, 20000)) {
+      val ratio = inBucketPairs(n) / (n * 31.0 / 2)
+      withClue(s"n=$n: ") { ratio should (be >= 0.7 and be <= 1.3) }
+    }
   }
 
   test("probeRadiusForRecall: radius grows with tighter targets, shrinks with stronger floors") {

@@ -1156,7 +1156,8 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
         .collect().map(_.toSeq).toSet
       val out = state()
       // ONE file per sealed batch partition: the manifest's readers
-      // pay file count at scale (ProbeScale folddrift finding 2)
+      // pay file count at scale (PLANS.md "Fold-drift lifecycle vs
+      // landed-manifest growth", finding 2)
       Seq(0, 1).foreach { bid =>
         new java.io.File(s"$root/out/batch_id=$bid").listFiles()
           .count(_.getName.startsWith("part-")) shouldBe 1
