@@ -714,89 +714,6 @@ object Dedup {
       .filter(col("u") =!= col("v"))
       .distinct()
       .localCheckpoint(true)
-    // ── bounded driver fast path (the LabelStore ufCap convention):
-    // a limit(cap+1) collect bounds driver memory BEFORE we commit to
-    // the fast path; at or under the cap the collect IS the whole
-    // canonical edge set and a sorted-array union-find labels every
-    // endpoint with its component minimum — identical output contract
-    // to the star rounds (min-id label per edge endpoint), pinned by
-    // DedupSpec's driver≡star parity case. Integral id types only;
-    // anything exotic falls through to the distributed rounds.
-    locally {
-      import org.apache.spark.sql.types.{IntegerType, LongType}
-      val dt = edges.schema("u").dataType
-      if (driverEdgeCap > 0 && (dt == LongType || dt == IntegerType)) {
-        val head = edges.limit(driverEdgeCap + 1).collect()
-        if (head.length <= driverEdgeCap) {
-          Bridge.freeLocalCheckpoint(edges)
-          val m = head.length
-          val us = new Array[Long](m)
-          val vs = new Array[Long](m)
-          var i = 0
-          while (i < m) {
-            val r = head(i)
-            if (dt == LongType) { us(i) = r.getLong(0); vs(i) = r.getLong(1) }
-            else { us(i) = r.getInt(0).toLong; vs(i) = r.getInt(1).toLong }
-            i += 1
-          }
-          // sorted distinct node universe: index order = id order, so
-          // rooting every union at the smaller INDEX makes each final
-          // root the component MINIMUM by construction
-          val all = new Array[Long](2 * m)
-          System.arraycopy(us, 0, all, 0, m)
-          System.arraycopy(vs, 0, all, m, m)
-          java.util.Arrays.sort(all)
-          var n = 0
-          i = 0
-          while (i < 2 * m) {
-            if (n == 0 || all(n - 1) != all(i)) { all(n) = all(i); n += 1 }
-            i += 1
-          }
-          val parent = new Array[Int](n)
-          i = 0
-          while (i < n) { parent(i) = i; i += 1 }
-          def find(x0: Int): Int = {
-            var x = x0
-            while (parent(x) != x) { // path halving
-              parent(x) = parent(parent(x)); x = parent(x)
-            }
-            x
-          }
-          def idx(v: Long): Int =
-            java.util.Arrays.binarySearch(all, 0, n, v)
-          i = 0
-          while (i < m) {
-            val ra = find(idx(us(i)))
-            val rb = find(idx(vs(i)))
-            if (ra != rb) {
-              if (ra < rb) parent(rb) = ra else parent(ra) = rb
-            }
-            i += 1
-          }
-          val sess = pairs.sparkSession
-          val rows = new Array[org.apache.spark.sql.Row](n)
-          i = 0
-          while (i < n) {
-            val lbl = all(find(i))
-            rows(i) =
-              if (dt == LongType) org.apache.spark.sql.Row(all(i), lbl)
-              else org.apache.spark.sql.Row(all(i).toInt, lbl.toInt)
-            i += 1
-          }
-          val schema = org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("node", dt),
-            org.apache.spark.sql.types.StructField("label", dt)))
-          // parallelize (not a LocalRelation) so a multi-million-row
-          // label set is task data, not a plan-embedded literal
-          val labels = sess.createDataFrame(
-            sess.sparkContext.parallelize(rows.toSeq,
-              math.max(1, n / 500000)), schema)
-          return (labels, 0)
-        }
-        // over the cap: the collected prefix is useless — fall through
-        // to the distributed rounds on the checkpointed edge set
-      }
-    }
     // fixed-point detection on (count, order-independent hash sum) —
     // one tiny aggregate per round instead of a full except() diff.
     // DECIMAL accumulation: a long sum of 64-bit hashes overflows
@@ -808,6 +725,89 @@ object Dedup {
       (r.getLong(0), r.getDecimal(1).toBigInteger.toString)
     }
     var cur = sig(edges)
+    // ── bounded driver fast path (the LabelStore ufCap convention):
+    // the first round's signature COUNTS the checkpointed edge set
+    // before anything is collected — a limit(cap+1) collect would
+    // fetch up to cap+1 rows from every partition of its first wave
+    // (limit.initialNumPartitions = the session's cores) before
+    // falling through. At or under the cap the collect IS the whole
+    // canonical edge set and a sorted-array union-find labels every
+    // endpoint with its component minimum — identical output contract
+    // to the star rounds (min-id label per edge endpoint), pinned by
+    // DedupSpec's driver≡star parity case. Integral id types only;
+    // anything exotic falls through to the distributed rounds.
+    locally {
+      import org.apache.spark.sql.types.{IntegerType, LongType}
+      val dt = edges.schema("u").dataType
+      if (driverEdgeCap > 0 && (dt == LongType || dt == IntegerType) &&
+          cur._1 <= driverEdgeCap) {
+        val head = edges.collect()
+        Bridge.freeLocalCheckpoint(edges)
+        val m = head.length
+        val us = new Array[Long](m)
+        val vs = new Array[Long](m)
+        var i = 0
+        while (i < m) {
+          val r = head(i)
+          if (dt == LongType) { us(i) = r.getLong(0); vs(i) = r.getLong(1) }
+          else { us(i) = r.getInt(0).toLong; vs(i) = r.getInt(1).toLong }
+          i += 1
+        }
+        // sorted distinct node universe: index order = id order, so
+        // rooting every union at the smaller INDEX makes each final
+        // root the component MINIMUM by construction
+        val all = new Array[Long](2 * m)
+        System.arraycopy(us, 0, all, 0, m)
+        System.arraycopy(vs, 0, all, m, m)
+        java.util.Arrays.sort(all)
+        var n = 0
+        i = 0
+        while (i < 2 * m) {
+          if (n == 0 || all(n - 1) != all(i)) { all(n) = all(i); n += 1 }
+          i += 1
+        }
+        val parent = new Array[Int](n)
+        i = 0
+        while (i < n) { parent(i) = i; i += 1 }
+        def find(x0: Int): Int = {
+          var x = x0
+          while (parent(x) != x) { // path halving
+            parent(x) = parent(parent(x)); x = parent(x)
+          }
+          x
+        }
+        def idx(v: Long): Int =
+          java.util.Arrays.binarySearch(all, 0, n, v)
+        i = 0
+        while (i < m) {
+          val ra = find(idx(us(i)))
+          val rb = find(idx(vs(i)))
+          if (ra != rb) {
+            if (ra < rb) parent(rb) = ra else parent(ra) = rb
+          }
+          i += 1
+        }
+        val sess = pairs.sparkSession
+        val rows = new Array[org.apache.spark.sql.Row](n)
+        i = 0
+        while (i < n) {
+          val lbl = all(find(i))
+          rows(i) =
+            if (dt == LongType) org.apache.spark.sql.Row(all(i), lbl)
+            else org.apache.spark.sql.Row(all(i).toInt, lbl.toInt)
+          i += 1
+        }
+        val schema = org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("node", dt),
+          org.apache.spark.sql.types.StructField("label", dt)))
+        // parallelize (not a LocalRelation) so a multi-million-row
+        // label set is task data, not a plan-embedded literal
+        val labels = sess.createDataFrame(
+          sess.sparkContext.parallelize(rows.toSeq,
+            math.max(1, n / 500000)), schema)
+        return (labels, 0)
+      }
+    }
     var iter = 0
     var converged = false
     while (iter < maxIter && !converged) {

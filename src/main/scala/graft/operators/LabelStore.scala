@@ -334,9 +334,13 @@ object LabelStore {
             "doc_a", "doc_b")
           .toDF("doc_a", "doc_b")
           .filter(col("doc_a") =!= col("doc_b"))
-          .localCheckpoint() // read by the collect and (maybe) the
-                             // distributed fallback's joins
-        (star, star.limit(ufCap + 1).collect())
+          .localCheckpoint() // read by the count, the collect and
+                             // (maybe) the distributed fallback's joins
+        // count-gated: a limit(ufCap+1) collect would fetch up to
+        // ufCap+1 rows from every partition of its first wave before
+        // falling through; over the cap the (over-cap) pRows0 keeps
+        // the merge distributed
+        (star, if (star.count() <= ufCap) star.collect() else pRows0)
       }
     val driverSized =
       bRows.length <= ufCap && pRows.length <= ufCap

@@ -1680,25 +1680,33 @@ object Streams {
     *     written — every LATER-KNOWLEDGE flag (keeper status, mix
     *     membership) is derived at read time, which is what lets a
     *     later batch's near-dup flip an earlier doc's keeper verdict
-    *     through store growth alone.
+    *     through store growth alone;
+    *  4. seal the batch's additive report deltas LAST
+    *     ([[prepDeltas]]), derived from the at-rest pre/post store
+    *     views. Two regimes, split at [[Dedup.DefaultMarkPruneCap]]
+    *     (the [[graft.operators.LabelStore.update]] `planDriver` /
+    *     `planDistributed` convention): while every key set and row
+    *     set of the batch's affected state fits under the cap, the
+    *     driver kernel ([[prepDeltaDriver]]) runs six bounded pushed
+    *     store reads and derives the per-doc flags in Scala; past it
+    *     the distributed twin ([[prepDeltaRows]]) runs its chain of
+    *     checkpointed semi-join queries. One shared tail
+    *     ([[prepDeltaTail]]) aggregates either into the sealed rows.
     *
     * Scale shape (100 TB): per batch one batch-sized mark against
     * the grown index, one bounded label-store merge, one batch-grain
     * scoring pass (tokenize + shingle the BATCH only; the eval set
-    * is bounded and pre-shingled), three sealed appends. The corpus
-    * is never re-read, re-tokenized or re-walked. */
+    * is bounded and pre-shingled), three sealed appends, and a delta
+    * derivation whose reads are bounded by the batch's touched state
+    * — a handful of pushed collects under the cap, the twin's
+    * per-step semi-join scans past it (the only form that fits the
+    * driver's memory there). The corpus is never re-read,
+    * re-tokenized or re-walked. */
   def trainingPrepIngest(docs: DataFrame, idCol: String,
       textCol: String, sourceCol: String, evalDocs: DataFrame,
       storeRoot: String, checkpointDir: String,
       shingleN: Int, k: Int, bands: Int, threshold: Double,
-      contamN: Int = 3,
-      pushMinStoreBytes: Long =
-        graft.operators.Dedup.DefaultPointFetchMinStoreBytes)
-      : StreamingQuery = {
-    // once-per-stream size-gate latch for the delta leg's pushed
-    // store reads (the modalityManifestIngest convention; the flags
-    // table is the proxy)
-    var pushLatched = false
+      contamN: Int = 3): StreamingQuery = {
     // static per stream: the eval suite's distinct n-gram shingles
     val evalSh = evalShingles(evalDocs, textCol, contamN)
       .localCheckpoint(eager = true)
@@ -1788,13 +1796,10 @@ object Streams {
       // batch's seg files), so a crashed-after-stores retry
       // recomputes identical rows
       val deltasRoot = s"$storeRoot/deltas"
-      if (!pushLatched)
-        pushLatched = graft.operators.Dedup.storeAtLeastBytes(
-          s, s"$storeRoot/flags/flags", pushMinStoreBytes)
       graft.Phases.time(s"prep_deltas[b$batchId]") {
         Dedup.sealOnce(s, deltasRoot, tag, s"deltas-append-$tag") {
-          val (cnt, hist) = prepDeltaRows(s, storeRoot, tag,
-            idCol, sourceCol, pushLatched)
+          val (cnt, hist) = prepDeltas(s, storeRoot, tag, idCol,
+            sourceCol)
           Seq("counts" -> cnt.repartition(1),
             "mixhist" -> hist.repartition(1))
         }
@@ -1833,10 +1838,10 @@ object Streams {
         col("ex_key"), col("n_tok"), col("q"), col("contamination"))
   }
 
-  /** One batch's additive q153-report delta rows, derived from
-    * at-rest pre/post store views (post = the stores, pre = the
-    * stores minus this batch's seg files). Returns (counts,
-    * mixhist):
+  /** One batch's additive q153-report delta rows (counts, mixhist),
+    * derived from at-rest pre/post store views (post = the stores,
+    * pre = the stores minus this batch's seg files, so a
+    * crashed-after-stores retry recomputes identical rows):
     *
     *  - counts: per source, signed deltas of the five survival
     *    counters (d_raw, d_exact, d_nd, d_ct, d_q) — a dethroned
@@ -1854,25 +1859,189 @@ object Streams {
     * docs, pre/post exact champions of batch keys, and every
     * pre/post member of components containing a touched or
     * key-flipped doc (components merge as units, so the pre-groups
-    * and post-groups of touched docs cover both sides). All reads
-    * are bounded by the batch's touched state. */
-  private def prepDeltaRows(s: SparkSession, storeRoot: String,
+    * and post-groups of touched docs cover both sides). The driver
+    * kernel derives its per-doc flags while the affected state fits
+    * under `cap`; the distributed twin takes over past it. */
+  private[graft] def prepDeltas(s: SparkSession, storeRoot: String,
       tag: String, idCol: String, sourceCol: String,
-      pushReads: Boolean): (DataFrame, DataFrame) = {
+      cap: Int = Dedup.DefaultMarkPruneCap): (DataFrame, DataFrame) =
+    prepDeltaTail(
+      prepDeltaDriver(s, storeRoot, tag, idCol, sourceCol, cap)
+        .getOrElse(prepDeltaRows(s, storeRoot, tag, idCol, sourceCol,
+          cap)),
+      idCol, sourceCol)
+
+  /** The prep flags table's read schema. */
+  private def prepFlagsSchema(idCol: String, sourceCol: String)
+      : org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
-    val flagsSchema = StructType(Seq(
+    StructType(Seq(
       StructField(idCol, LongType),
       StructField(sourceCol, StringType),
       StructField("ex_key", StringType),
       StructField("n_tok", LongType),
       StructField("q", DoubleType),
       StructField("contamination", DoubleType)))
+  }
+
+  /** The per-doc frame both delta paths hand to [[prepDeltaTail]]:
+    * the affected docs' flags rows, `_seg` (the row is this batch's),
+    * exact-champion status pre/post (`_tp_expre` is null where Spark
+    * three-valued logic makes it so) and the pre/post near-dup
+    * champion of the doc's component (null outside one). */
+  private def prepDocSchema(idCol: String, sourceCol: String)
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(
+      StructField(idCol, LongType),
+      StructField(sourceCol, StringType),
+      StructField("n_tok", LongType),
+      StructField("q", DoubleType),
+      StructField("contamination", DoubleType),
+      StructField("_seg", BooleanType),
+      StructField("_tp_expre", BooleanType),
+      StructField("_tp_expost", BooleanType),
+      StructField("_tp_cpre", LongType),
+      StructField("_tp_cpost", LongType)))
+  }
+
+  /** A [[splitTable]] pair as one view tagged `_seg` (true for this
+    * tag's seg files): PRE is the `!_seg` rows, POST all of them. */
+  private def withSeg(seg: DataFrame, rest: DataFrame): DataFrame =
+    seg.withColumn("_seg", lit(true))
+      .unionByName(rest.withColumn("_seg", lit(false)))
+
+  /** The driver kernel of the prep delta leg — the bounded regime
+    * (the [[graft.operators.LabelStore.update]] `planDriver`
+    * convention). Each step is one pushed `isin` read of a tagged
+    * at-rest view, collected as `limit(cap + 1)`:
+    *
+    *  1. this batch's flags rows ∥ this batch's label docs;
+    *  2. pre/post exact champion (min id) of the batch keys — the key
+    *     flips;
+    *  3. pre/post label of the core docs (batch docs ∪ flip docs);
+    *  4. pre/post members of the affected groups;
+    *  5. flags rows of the affected ids;
+    *  6. pre/post champion of their keys (those step 2 did not read).
+    *
+    * The per-doc flags [[prepDeltaRows]] derives are then computed in
+    * Scala, row for row (including its join multiplicities and
+    * nulls), and returned as one local frame. None when any key set
+    * or collected row set passes `cap`: the caller runs the twin. */
+  private[graft] def prepDeltaDriver(s: SparkSession, storeRoot: String,
+      tag: String, idCol: String, sourceCol: String,
+      cap: Int = Dedup.DefaultMarkPruneCap): Option[DataFrame] = {
+    val (segFl, oldFl) = splitTable(s, s"$storeRoot/flags/flags", tag,
+      prepFlagsSchema(idCol, sourceCol))
+    val (segLb, oldLb) = splitTable(s, s"$storeRoot/labels/labels", tag,
+      graft.operators.LabelStore.LabelsSchema)
+    val (fl, lb) = (withSeg(segFl, oldFl), withSeg(segLb, oldLb))
+    def bounded(df: DataFrame): Option[Array[Row]] =
+      Some(df.limit(cap + 1).collect()).filter(_.length <= cap)
+    def fetch(t: DataFrame, c: String, keys: Set[_],
+        cols: String*): Option[Array[Row]] =
+      if (keys.isEmpty) Some(Array.empty[Row])
+      else if (keys.size > cap) None
+      else bounded(t.filter(col(c).isin(keys.toSeq: _*))
+        .select(cols.map(col): _*))
+    // (key, value, _seg) rows → per key, min value over the PRE rows
+    // and over the POST rows (Spark's min: nulls skipped)
+    def mins[K](rows: Array[Row]): (Map[K, Long], Map[K, Long]) = {
+      val live = rows.filterNot(r => r.isNullAt(0) || r.isNullAt(1))
+      def min(rs: Array[Row]): Map[K, Long] = rs.groupBy(_.getAs[K](0))
+        .map { case (k, g) => k -> g.map(_.getLong(1)).min }
+      (min(live.filterNot(_.getBoolean(2))), min(live))
+    }
+    def keyMins(keys: Set[String]) = fetch(fl, "ex_key", keys,
+      "ex_key", idCol, "_seg").map(mins[String])
+    def labelMins(c: String, keys: Set[Long]) = fetch(lb, c, keys,
+      "doc_id", "group", "_seg").map(mins[Long])
+    def longs(rows: Array[Row], i: Int): Set[Long] =
+      rows.iterator.filterNot(_.isNullAt(i)).map(_.getLong(i)).toSet
+    def strings(rows: Array[Row], i: Int): Set[String] =
+      rows.iterator.filterNot(_.isNullAt(i)).map(_.getString(i)).toSet
+    val batch = graft.Par.run(Seq(
+      () => bounded(segFl.select(col(idCol), col("ex_key"))),
+      () => bounded(segLb.select(col("doc_id")))))
+    for {
+      segRows <- batch(0)
+      segLbRows <- batch(1)
+      batchKeys = strings(segRows, 1)
+      (bkPre, bkPost) <- keyMins(batchKeys)
+      flipDocs = batchKeys.flatMap { k =>
+        val (kOld, kNew) = (bkPre.get(k), bkPost.get(k))
+        if (kOld == kNew) Nil else kOld.toList ++ kNew
+      }
+      core = longs(segRows, 0) ++ longs(segLbRows, 0) ++ flipDocs
+      (lPre, lPost) <- labelMins("doc_id", core)
+      (gPre, gPost) <- labelMins("group",
+        lPre.values.toSet ++ lPost.values)
+      att <- fetch(fl, idCol, core ++ gPre.keySet ++ gPost.keySet,
+        idCol, sourceCol, "ex_key", "n_tok", "q", "contamination",
+        "_seg")
+      (akPre, akPost) <- keyMins(strings(att, 2) -- batchKeys)
+    } yield {
+      val (kPre, kPost) = (bkPre ++ akPre, bkPost ++ akPost)
+      // the twin's left join against the PRE flags rows repeats a
+      // doc's rows once per PRE row
+      val nPre = att.filterNot(_.getBoolean(6)).groupBy(_.getLong(0))
+        .map { case (id, rs) => id -> rs.length }
+      // exact-champion status as Spark evaluates
+      // `coalesce(pre, false) && id === kmin` (a null kmin gives null)
+      def ex(id: Long, k: Option[Long]): java.lang.Boolean =
+        k.fold[java.lang.Boolean](null)(m => m == id)
+      val docs = att.map { r =>
+        val (id, key) = (r.getLong(0), Option(r.getString(2)))
+        val exPre: java.lang.Boolean =
+          if (nPre.contains(id)) ex(id, key.flatMap(kPre.get))
+          else false
+        (r, exPre, ex(id, key.flatMap(kPost.get)))
+      }
+      // near-dup champion per component: argmax (n_tok, -id) over its
+      // exact survivors (max(struct) orders a null n_tok first)
+      val rank = Ordering.by((r: Row) =>
+        (Option(r.getAs[java.lang.Long](3)).map(_.longValue),
+          -r.getLong(0)))
+      def champs(group: Map[Long, Long], exact: Array[Row])
+          : Map[Long, Long] =
+        exact.flatMap(r => group.get(r.getLong(0)).map(_ -> r))
+          .groupBy(_._1)
+          .map { case (g, rs) => g -> rs.map(_._2).max(rank).getLong(0) }
+      val cPre = champs(gPre, docs.collect {
+        case (r, e, _) if java.lang.Boolean.TRUE == e => r })
+      val cPost = champs(gPost, docs.collect {
+        case (r, _, e) if java.lang.Boolean.TRUE == e => r })
+      def champ(group: Map[Long, Long], c: Map[Long, Long],
+          id: Long): java.lang.Long =
+        group.get(id).flatMap(c.get).fold[java.lang.Long](null)(
+          Long.box)
+      val rows = docs.toSeq.flatMap { case (r, exPre, exPost) =>
+        val id = r.getLong(0)
+        Seq.fill(nPre.getOrElse(id, 1))(Row(id, r.get(1), r.get(3),
+          r.get(4), r.get(5), r.get(6), exPre, exPost,
+          champ(gPre, cPre, id), champ(gPost, cPost, id)))
+      }
+      s.createDataFrame(java.util.Arrays.asList(rows: _*),
+        prepDocSchema(idCol, sourceCol))
+    }
+  }
+
+  /** The over-cap twin of [[prepDeltaDriver]]: the same per-doc
+    * frame derived by a chain of checkpointed Spark queries, the only
+    * form that fits the driver past `cap` (and the reference the
+    * kernel's specs compare against). Every read is bounded by the
+    * batch's touched state. Kept as separate checkpointed steps on
+    * purpose: one fused lazy plan measured 17.5 s for the delta leg
+    * (PLANS.md "Training-prep delta leg on the driver" — Catalyst
+    * re-analyses the duplicated subtrees). */
+  private[graft] def prepDeltaRows(s: SparkSession, storeRoot: String,
+      tag: String, idCol: String, sourceCol: String,
+      cap: Int = Dedup.DefaultMarkPruneCap): DataFrame = {
     val lbSchema = graft.operators.LabelStore.LabelsSchema
-    val (segFl0, oldFl) =
-      splitTable(s, s"$storeRoot/flags/flags", tag, flagsSchema)
+    val (segFl0, oldFl) = splitTable(s, s"$storeRoot/flags/flags", tag,
+      prepFlagsSchema(idCol, sourceCol))
     val segFl = segFl0.localCheckpoint()
-    val flagsAll = s.read.schema(flagsSchema)
-      .parquet(s"$storeRoot/flags/flags")
+    val flagsAll = withSeg(segFl, oldFl)
     val (segLb, oldLb) =
       splitTable(s, s"$storeRoot/labels/labels", tag, lbSchema)
     val allLb = oldLb.unionByName(segLb)
@@ -1891,9 +2060,11 @@ object Streams {
     // Over the cap the semi-join twin takes over unchanged.
     def restrict(t: DataFrame, c: String, ks: Option[Array[Any]],
         kf: => DataFrame): DataFrame = restrictTo(t, c, ks, kf)
+    def pushed(df: DataFrame, c: String): Option[Array[Any]] =
+      pushedKeys(df, c, cap = cap)
     // exact-champion flips among the batch's keys
     val batchKeys = segFl.select(col("ex_key")).distinct()
-    val batchKeySet = pushedKeys(segFl, "ex_key", pushReads)
+    val batchKeySet = pushed(segFl, "ex_key")
     def keyMin(fl: DataFrame, ks: Option[Array[Any]],
         kf: => DataFrame): DataFrame =
       restrict(fl, "ex_key", ks, kf)
@@ -1909,14 +2080,17 @@ object Streams {
           col("_tp_kold") =!= col("_tp_knew"))
         .localCheckpoint()
     }
+    // core docs: the batch's flags and label docs, plus both sides
+    // of every key flip
     val coreDocs = graft.Phases.time(s"tpd_core[$tag]") {
       segLb.select(col("doc_id"))
+        .unionByName(segFl.select(col(idCol).as("doc_id")))
         .unionByName(keyFlips.select(col("_tp_knew").as("doc_id")))
         .unionByName(keyFlips.filter(col("_tp_kold").isNotNull)
           .select(col("_tp_kold").as("doc_id")))
         .distinct().localCheckpoint()
     }
-    val coreDocSet = pushedKeys(coreDocs, "doc_id", pushReads)
+    val coreDocSet = pushed(coreDocs, "doc_id")
     def curLabels(lb: DataFrame): DataFrame =
       restrict(lb, "doc_id", coreDocSet, coreDocs)
         .groupBy(col("doc_id"))
@@ -1932,7 +2106,7 @@ object Streams {
     // min(group) per doc — exact for every fetched doc because an
     // affected doc's true current label is itself in affGroups
     // (components merge as units, and retired labels never return)
-    val affGroupSet = pushedKeys(affGroups, "group", pushReads)
+    val affGroupSet = pushed(affGroups, "group")
     def membersIn(lb: DataFrame, as: String): DataFrame =
       restrict(lb, "group", affGroupSet, affGroups)
         .groupBy(col("doc_id")).agg(min(col("group")).as(as))
@@ -1944,7 +2118,7 @@ object Streams {
         .unionByName(coreDocs)
         .distinct().localCheckpoint()
     }
-    val affIdSet = pushedKeys(affIds, "doc_id", pushReads)
+    val affIdSet = pushed(affIds, "doc_id")
     def affIdsAs(c: String): DataFrame =
       affIds.withColumnRenamed("doc_id", c)
     val att = graft.Phases.time(s"tpd_att[$tag]") {
@@ -1955,7 +2129,7 @@ object Streams {
       .select(col(idCol), lit(true).as("_tp_pre"))
     // exact-champion status over ALL affected docs' keys
     val affKeys = att.select(col("ex_key")).distinct()
-    val affKeySet = pushedKeys(att, "ex_key", pushReads)
+    val affKeySet = pushed(att, "ex_key")
     val kPre = keyMin(oldFl, affKeySet, affKeys)
       .withColumnRenamed("_tp_kmin", "_tp_kpre")
     val kPost = keyMin(flagsAll, affKeySet, affKeys)
@@ -1964,7 +2138,7 @@ object Streams {
       att
         .join(preSeen, Seq(idCol), "left")
         .join(kPre, Seq("ex_key"), "left")
-        .join(kPost, Seq("ex_key"))
+        .join(kPost, Seq("ex_key"), "left")
         .join(memPre.withColumnRenamed("doc_id", idCol),
           Seq(idCol), "left")
         .join(memPost.withColumnRenamed("doc_id", idCol),
@@ -1985,7 +2159,7 @@ object Streams {
           (-col(idCol)).as("negid"))).as("_tp_best"))
         .select(col(groupCol),
           (-col("_tp_best").getField("negid")).as("_tp_champ"))
-    val scored = graft.Phases.time(s"tpd_scored[$tag]") {
+    graft.Phases.time(s"tpd_scored[$tag]") {
       base
         .join(champs("_tp_gpre", "_tp_expre")
           .withColumnRenamed("_tp_champ", "_tp_cpre"),
@@ -1993,35 +2167,39 @@ object Streams {
         .join(champs("_tp_gpost", "_tp_expost")
           .withColumnRenamed("_tp_champ", "_tp_cpost"),
           Seq("_tp_gpost"), "left")
-        .withColumn("_tp_ndpre",
-          col("_tp_expre") && col(idCol) === col("_tp_cpre"))
-        .withColumn("_tp_ndpost",
-          col("_tp_expost") && col(idCol) === col("_tp_cpost"))
-        .withColumn("_tp_ctpre",
-          col("_tp_ndpre") && col("contamination") < 0.5)
-        .withColumn("_tp_ctpost",
-          col("_tp_ndpost") && col("contamination") < 0.5)
-        .withColumn("_tp_qpre", col("_tp_ctpre") && col("q") >= 0.4)
-        .withColumn("_tp_qpost", col("_tp_ctpost") && col("q") >= 0.4)
+        .select(prepDocSchema(idCol, sourceCol).fieldNames
+          .map(col).toIndexedSeq: _*)
         .localCheckpoint()
     }
-    def d(post: String, pre: String): Column =
-      sum(when(col(post), 1L).otherwise(0L) -
-        when(col(pre), 1L).otherwise(0L))
-    val rawCnt = segFl.groupBy(col(sourceCol))
-      .agg(count(lit(1)).as("d_raw"))
+  }
+
+  /** The shared tail of both delta paths: the per-doc frame's
+    * near-dup / decontamination / quality flags, pre and post,
+    * aggregated into (counts, mixhist). `d_raw` counts the batch's
+    * own rows (`_seg`). */
+  private[graft] def prepDeltaTail(docs: DataFrame, idCol: String,
+      sourceCol: String): (DataFrame, DataFrame) = {
+    val scored = docs
+      .withColumn("_tp_ndpre",
+        col("_tp_expre") && col(idCol) === col("_tp_cpre"))
+      .withColumn("_tp_ndpost",
+        col("_tp_expost") && col(idCol) === col("_tp_cpost"))
+      .withColumn("_tp_ctpre",
+        col("_tp_ndpre") && col("contamination") < 0.5)
+      .withColumn("_tp_ctpost",
+        col("_tp_ndpost") && col("contamination") < 0.5)
+      .withColumn("_tp_qpre", col("_tp_ctpre") && col("q") >= 0.4)
+      .withColumn("_tp_qpost", col("_tp_ctpost") && col("q") >= 0.4)
+    def n(c: String): Column = when(col(c), 1L).otherwise(0L)
+    def d(post: String, pre: String): Column = sum(n(post) - n(pre))
     val counts = scored.groupBy(col(sourceCol))
-      .agg(d("_tp_expost", "_tp_expre").as("d_exact"),
+      .agg(sum(n("_seg")).as("d_raw"),
+        d("_tp_expost", "_tp_expre").as("d_exact"),
         d("_tp_ndpost", "_tp_ndpre").as("d_nd"),
         d("_tp_ctpost", "_tp_ctpre").as("d_ct"),
         d("_tp_qpost", "_tp_qpre").as("d_q"))
-      .join(rawCnt, Seq(sourceCol), "full")
-      .select(col(sourceCol).as("source"),
-        coalesce(col("d_raw"), lit(0L)).as("d_raw"),
-        coalesce(col("d_exact"), lit(0L)).as("d_exact"),
-        coalesce(col("d_nd"), lit(0L)).as("d_nd"),
-        coalesce(col("d_ct"), lit(0L)).as("d_ct"),
-        coalesce(col("d_q"), lit(0L)).as("d_q"))
+      .select(col(sourceCol).as("source"), col("d_raw"),
+        col("d_exact"), col("d_nd"), col("d_ct"), col("d_q"))
       .filter(col("d_raw") =!= 0L || col("d_exact") =!= 0L ||
         col("d_nd") =!= 0L || col("d_ct") =!= 0L ||
         col("d_q") =!= 0L)

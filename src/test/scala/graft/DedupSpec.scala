@@ -335,6 +335,48 @@ class DedupSpec extends AnyFunSuite with SparkSpec with Matchers {
       Map(1 -> 1, 2 -> 1, 3 -> 1, 10 -> 10, 11 -> 10)
   }
 
+  test("starComponents driver probe: an over-cap edge set is counted, " +
+    "not fetched — at width 4 the driver receives ≤ cap+1 edge rows") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.{QueryExecution, RDDScanExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.graft.Bridge
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val cap = 8
+    // 400 disjoint edges, hashed over the session's 4 shuffle
+    // partitions (coalescing off keeps all four): far over the cap
+    val edges = (0L until 400L).map(i => (2 * i + 1, 2 * i))
+      .toDF("doc_a", "doc_b")
+    // edge-set rows the probe's collects pull off the checkpoint
+    val fetched = new java.util.concurrent.atomic.AtomicLong()
+    val l = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit =
+        if (funcName == "collect")
+          fetched.addAndGet(new AdaptiveSparkPlanHelper {}
+            .collect(qe.executedPlan) { case s: RDDScanExec =>
+              s.metrics("numOutputRows").value }.sum)
+      override def onFailure(funcName: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    val (cc, rounds) = GraftSession.withConf(spark,
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+      Bridge.drainListenerBus(spark)
+      spark.listenerManager.register(l)
+      try {
+        val r = Dedup.starComponents(edges, "doc_a", "doc_b", 30,
+          driverEdgeCap = cap)
+        Bridge.drainListenerBus(spark)
+        r
+      } finally spark.listenerManager.unregister(l)
+    }
+    fetched.get should be <= (cap + 1).toLong
+    rounds should be > 0 // over the cap: the distributed rounds ran
+    cc.as[(Long, Long)].collect().toMap shouldBe
+      (0L until 400L).flatMap(i => Seq(2 * i -> 2 * i, (2 * i + 1) -> 2 * i))
+        .toMap
+  }
+
   test("simhashNearDupPairs (pigeonhole blocking) equals the all-pairs answer") {
     import spark.implicits._
     val fp = corpus.select(col("doc_id"),

@@ -1271,33 +1271,87 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     } finally Scratch.deleteRecursively(new java.io.File(root))
   }
 
+  /** The training-prep flip fixture. Batch 0: doc 10 (src x)
+    * keeper-for-now; doc 3 (src z) exact champion-for-now; doc 30
+    * (src c) carries eval 3-grams. Batch 1: doc 20 (src y) near-dups
+    * doc 10 with more tokens — the keeper must flip; doc 2 (src w) is
+    * doc 3's EXACT twin at a smaller id — the exact champion must
+    * flip. */
+  private object PrepFlip {
+    val a10 = (1 to 10).map(i => s"a$i").mkString(" ")
+    val a12 = a10 + " b1 b2" // near-dup of a10, MORE tokens
+    val p8 = (1 to 8).map(i => s"p$i").mkString(" ")
+    val b0 = Seq((10L, "x", a10), (3L, "z", p8),
+      (30L, "c", "e1 e2 e3 e4 q9"))
+    val b1 = Seq((20L, "y", a12), (2L, "w", p8))
+    val eval = Seq((99L, "e1 e2 e3 e4 e5 e6"))
+  }
+
+  /** An empty prep store's signature index and pair store. */
+  private def emptyPrepStore(store: String): Unit = {
+    import spark.implicits._
+    val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    graft.operators.Dedup.writeNearDupIndex(empty, "doc_id", "text",
+      shingleN = 2, k = 64, bands = 32, dir = store + "/index")
+    graft.operators.Dedup.writePairStore(empty, "doc_id", "text",
+      store + "/pairs", shingleN = 2, k = 64, bands = 32,
+      threshold = 0.5)
+  }
+
+  /** A frame's rows as sorted strings: a multiset comparison. */
+  private def prepRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+
+  /** The (counts, mixhist) rows the shared tail makes of `docs`. */
+  private def prepTail(docs: org.apache.spark.sql.DataFrame)
+      : (Seq[String], Seq[String]) = {
+    val (c, h) = Streams.prepDeltaTail(docs, "doc_id", "source")
+    (prepRows(c), prepRows(h))
+  }
+
+  /** The (counts, mixhist) rows sealed under `tag`. */
+  private def sealedPrepDeltas(store: String, tag: String)
+      : (Seq[String], Seq[String]) = {
+    def seg(t: String): Seq[String] = {
+      val files = Option(new java.io.File(s"$store/deltas/$t")
+          .listFiles()).getOrElse(Array.empty[java.io.File])
+        .filter(_.getName.startsWith(s"seg-$tag-part-"))
+        .map(_.getPath).toSeq
+      if (files.isEmpty) Seq.empty
+      else prepRows(spark.read.parquet(files: _*))
+    }
+    (seg("counts"), seg("mixhist"))
+  }
+
+  /** Every source of one batch's prep delta rows agrees: the driver
+    * kernel, the pushed twin, the semi-join twin (cap 0) and the rows
+    * sealed under `tag` — and the two paths' per-doc frames are equal
+    * row for row. */
+  private def prepDeltaPathsAgree(store: String, tag: String): Unit = {
+    val kernel = Streams.prepDeltaDriver(spark, store, tag, "doc_id",
+      "source")
+    kernel should not be empty
+    val pushed = Streams.prepDeltaRows(spark, store, tag, "doc_id",
+      "source")
+    prepRows(kernel.get) shouldBe prepRows(pushed)
+    val seg = sealedPrepDeltas(store, tag)
+    seg._1 should not be empty
+    prepTail(kernel.get) shouldBe seg
+    prepTail(pushed) shouldBe seg
+    prepTail(Streams.prepDeltaRows(spark, store, tag, "doc_id",
+      "source", cap = 0)) shouldBe seg
+  }
+
   test("training-prep ingest: a later batch's near-dup (and exact " +
     "twin) flip earlier keepers only through store growth; " +
     "re-delivered batches converge") {
     import spark.implicits._
-    import graft.operators.Dedup
+    import PrepFlip._
     implicit val sqlCtx = spark.sqlContext
     val root = Files.createTempDirectory("graft_tprep_").toString
     try {
-      val a10 = (1 to 10).map(i => s"a$i").mkString(" ")
-      val a12 = a10 + " b1 b2" // near-dup of a10, MORE tokens
-      val p8 = (1 to 8).map(i => s"p$i").mkString(" ")
-      // batch 0: doc 10 (src x) keeper-for-now; doc 3 (src z) exact
-      // champion-for-now; doc 30 (src c) carries eval 3-grams
-      val b0 = Seq((10L, "x", a10), (3L, "z", p8),
-        (30L, "c", "e1 e2 e3 e4 q9"))
-      // batch 1: doc 20 (src y) near-dups doc 10 with more tokens —
-      // the keeper must flip; doc 2 (src w) is doc 3's EXACT twin at
-      // a smaller id — the exact champion must flip
-      val b1 = Seq((20L, "y", a12), (2L, "w", p8))
-      val evalDocs = Seq((99L, "e1 e2 e3 e4 e5 e6"))
-        .toDF("doc_id", "text")
-      val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
-      Dedup.writeNearDupIndex(empty, "doc_id", "text", shingleN = 2,
-        k = 64, bands = 32, dir = root + "/store/index")
-      Dedup.writePairStore(empty, "doc_id", "text",
-        root + "/store/pairs", shingleN = 2, k = 64, bands = 32,
-        threshold = 0.5)
+      val evalDocs = eval.toDF("doc_id", "text")
+      emptyPrepStore(root + "/store")
       def report(): Map[String, Seq[Long]] =
         Streams.trainingPrepReport(spark, root + "/store", "doc_id",
             "source", budgetTokens = 1000000L)
@@ -1321,8 +1375,10 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
       val (in1, q1) = startStream(root + "/c1")
       val (after0, delta0) = try {
         in1.addData(b0: _*); q1.processAllAvailable()
+        prepDeltaPathsAgree(root + "/store", "b0")
         val r = (report(), deltaReport())
         in1.addData(b1: _*); q1.processAllAvailable()
+        prepDeltaPathsAgree(root + "/store", "b1")
         r
       } finally q1.stop()
       // the sealed per-batch delta partials track the store read at
@@ -1381,6 +1437,57 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     } finally Scratch.deleteRecursively(new java.io.File(root))
   }
 
+  test("training-prep delta leg: the driver kernel runs ≤ 10 jobs, " +
+    "under half the twin's; over its cap it yields to the twin") {
+    import spark.implicits._
+    import PrepFlip._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graft.Bridge
+    implicit val sqlCtx = spark.sqlContext
+    val root = Files.createTempDirectory("graft_tpjobs_").toString
+    val store = root + "/store"
+    try {
+      emptyPrepStore(store)
+      val input = MemoryStream[(Long, String, String)]
+      val q = Streams.trainingPrepIngest(
+        input.toDF().toDF("doc_id", "source", "text"),
+        "doc_id", "text", "source", eval.toDF("doc_id", "text"), store,
+        root + "/ckpt", shingleN = 2, k = 64, bands = 32,
+        threshold = 0.5)
+      try Seq(b0, b1).foreach { b =>
+        input.addData(b: _*); q.processAllAvailable()
+      } finally q.stop()
+      /** Spark jobs started while `body` derives batch 1's per-doc
+        * frame (the seal writes are not part of it). */
+      def jobs(body: => Any): Int = {
+        val n = new java.util.concurrent.atomic.AtomicInteger()
+        val l = new SparkListener {
+          override def onJobStart(e: SparkListenerJobStart): Unit =
+            n.incrementAndGet()
+        }
+        Bridge.drainListenerBus(spark)
+        spark.sparkContext.addSparkListener(l)
+        try { body; Bridge.drainListenerBus(spark) }
+        finally spark.sparkContext.removeSparkListener(l)
+        n.get
+      }
+      val driverJobs = jobs(Streams.prepDeltaDriver(spark, store, "b1",
+        "doc_id", "source").get)
+      val twinJobs = jobs(Streams.prepDeltaRows(spark, store, "b1",
+        "doc_id", "source"))
+      info(s"delta derivation jobs: driver $driverJobs, twin $twinJobs")
+      driverJobs should be <= 10
+      2 * driverJobs should be < twinJobs
+      // over the cap: the kernel declines and the twin's answer is
+      // the sealed one
+      Streams.prepDeltaDriver(spark, store, "b1", "doc_id", "source",
+        cap = 1) shouldBe None
+      val (c, h) = Streams.prepDeltas(spark, store, "b1", "doc_id",
+        "source", cap = 1)
+      (prepRows(c), prepRows(h)) shouldBe sealedPrepDeltas(store, "b1")
+    } finally Scratch.deleteRecursively(new java.io.File(root))
+  }
+
   test("training-prep bootstrap: attaching to a pre-existing " +
     "corpus reads identically to streaming it from genesis") {
     import spark.implicits._
@@ -1401,18 +1508,16 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
       val evalDocs = Seq((99L, "e1 e2 e3 e4 e5 e6"))
         .toDF("doc_id", "text")
       def stream(sub: String,
-          batches: Seq[Seq[(Long, String, String)]],
-          pushBytes: Long =
-            graft.operators.Dedup.DefaultPointFetchMinStoreBytes)
-          : Unit = {
+          batches: Seq[Seq[(Long, String, String)]]): Unit = {
         val input = MemoryStream[(Long, String, String)]
         val q = Streams.trainingPrepIngest(
           input.toDF().toDF("doc_id", "source", "text"),
           "doc_id", "text", "source", evalDocs, s"$root/$sub/store",
           s"$root/$sub/ckpt", shingleN = 2, k = 64, bands = 32,
-          threshold = 0.5, pushMinStoreBytes = pushBytes)
-        try batches.foreach { b =>
+          threshold = 0.5)
+        try batches.zipWithIndex.foreach { case (b, i) =>
           input.addData(b: _*); q.processAllAvailable()
+          prepDeltaPathsAgree(s"$root/$sub/store", s"b$i")
         } finally q.stop()
       }
       def reports(sub: String): (Set[Seq[Any]], Set[Seq[Any]]) = (
@@ -1439,10 +1544,9 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
         k = 64, bands = 32, threshold = 0.5)
       val (repA0, deltaA0) = reports("att")
       deltaA0 shouldBe repA0 // the bootstrap delta IS the report
-      // the attach stream runs with the delta leg's pushed store
-      // reads FORCED (sentinel 0) — repA/deltaA ≡ genesis then also
-      // pins pushed ≡ semi-join on the prep delta layouts
-      stream("att", Seq(batchB), pushBytes = 0L)
+      // the attach stream's delta rows also agree across the driver
+      // kernel and both twins (the stream helper checks every batch)
+      stream("att", Seq(batchB))
       val (repA, deltaA) = reports("att")
       repA shouldBe repG
       deltaA shouldBe deltaG
