@@ -2156,9 +2156,19 @@ object Dedup {
     *
     * `(shingleN, k, bands)` MUST match the index build (the
     * [[incrementalNearDupAgainst]] contract). Returns the appended
-    * pair rows. Scale shape: corpus touched only through the index;
-    * both candidate joins are batch-sized; the corpus never
-    * re-tokenizes. Crash safety: BOTH leases (pair store + index)
+    * pair rows. Scale shape: the corpus is touched only through the
+    * index (read with its declared schemas, no footer inference) and
+    * never re-tokenizes; the batch's sets and bands are computed in
+    * Spark either way. Two regimes for the mark, split at
+    * [[DefaultMarkPruneCap]]: while every key set and collected row
+    * set of the batch fits under it, the driver kernel
+    * ([[pairMarkDriver]]) reads only the stored band rows of the
+    * batch's band hashes (a pushed `band_hash` isin) and the
+    * candidates' stored shingle sets (a pushed `doc` isin), and
+    * returns the fresh pairs as a local relation, so the write leg
+    * and `overlapWith` read them without re-executing a plan; past
+    * it the twin ([[pairMarkTwin]]) scan-joins the whole index
+    * tables. Crash safety: BOTH leases (pair store + index)
     * are acquired before the first byte lands, so a lease conflict
     * from a concurrent writer aborts write-free. With a `commitTag`
     * the append is EXACTLY-ONCE under retry (the
@@ -2177,6 +2187,7 @@ object Dedup {
       commitTag: Option[String] = None,
       overlapWith: Option[DataFrame => Unit] = None): DataFrame = {
     val spark = batch.sparkSession
+    val docType = batch.schema(idCol).dataType
     val pairsCommitted =
       commitTag.exists(t => isBatchCommitted(spark, store, t))
     val indexCommitted =
@@ -2190,85 +2201,54 @@ object Dedup {
         s"$store/pairs/seg-${commitTag.get}-*")
       val fs = seg.getFileSystem(spark.sessionState.newHadoopConf())
       val matches = fs.globStatus(seg)
+      val pairsRead = spark.read.schema(pairTableSchema(docType))
       val sealed0 =
         if (matches == null || matches.isEmpty)
-          spark.read.parquet(s"$store/pairs").limit(0)
-        else spark.read.parquet(seg.toString)
+          pairsRead.parquet(s"$store/pairs").limit(0)
+        else pairsRead.parquet(seg.toString)
       // the overlap continuation must run on the sealed-retry path
       // too (its OWN pieces may be the uncommitted ones) — serially
       // here, there are no writes to overlap with
       overlapWith.foreach(f => f(sealed0))
       return sealed0
     }
-    // retry hygiene BEFORE the store reads: a crashed attempt's
-    // half-moved seg files would otherwise pollute the as-of view
-    // this redo computes from (e.g. batch docs pairing against their
-    // own partially-appended signatures)
-    commitTag.foreach { tag =>
-      if (!pairsCommitted)
-        cleanTaggedSegments(spark, store, tag, Seq("pairs"))
-      if (!indexCommitted)
-        cleanTaggedSegments(spark, indexDir, tag,
-          Seq("bands", "shingles"))
+    val ptag = commitTag.getOrElse("")
+    val (sets, banded, storeBands, storeSets) =
+        graft.Phases.time(s"pairs_prep[$ptag]") {
+      // retry hygiene BEFORE the store reads: a crashed attempt's
+      // half-moved seg files would otherwise pollute the as-of view
+      // this redo computes from (e.g. batch docs pairing against
+      // their own partially-appended signatures)
+      commitTag.foreach { tag =>
+        if (!pairsCommitted)
+          cleanTaggedSegments(spark, store, tag, Seq("pairs"))
+        if (!indexCommitted)
+          cleanTaggedSegments(spark, indexDir, tag,
+            Seq("bands", "shingles"))
+      }
+      val (sets, banded) =
+        pairMarkInputs(batch, idCol, textCol, shingleN, k, bands)
+      val (storeBands, storeSets) =
+        readIndexTables(spark, indexDir, docType)
+      (sets, banded, storeBands, storeSets)
     }
-    val storeBands = spark.read.parquet(s"$indexDir/bands")
-    val storeSets = spark.read.parquet(s"$indexDir/shingles")
-    val sets = shingleSets(batch, idCol, textCol, shingleN)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val banded = bandedSignatures(signaturesFromBaseHashes(
-      sets.select(col("doc"), explode(col("shingles")).as("shingle"))
-        .select(col("doc"), xxhash64(col("shingle")).as("h0")),
-      k), bands, k)
-      .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-    val crossCand = banded.toDF("doc_b", "band", "band_hash")
-      .join(storeBands.toDF("doc_a", "band", "band_hash"),
-        Seq("band", "band_hash"))
-      .filter(col("doc_a") =!= col("doc_b"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("n_bands"))
-      .filter(col("n_bands") >= 2)
-      .select("doc_a", "doc_b")
-    // store ids need not be smaller than batch ids — normalize each
-    // cross pair to the from-scratch doc_a < doc_b convention
-    // (inter/jaccard are symmetric; sizes swap with the ids)
-    val cross = rescoreJaccardAB(crossCand, storeSets, sets, threshold)
-      .select(
-        when(col("doc_a") < col("doc_b"), struct(
-          col("doc_a").as("a"), col("doc_b").as("b"),
-          col("sz_a").as("za"), col("sz_b").as("zb")))
-          .otherwise(struct(
-            col("doc_b").as("a"), col("doc_a").as("b"),
-            col("sz_b").as("za"), col("sz_a").as("zb"))).as("_pp"),
-        col("inter"), col("jaccard"))
-      .select(col("_pp.a").as("doc_a"), col("_pp.b").as("doc_b"),
-        col("inter"), col("_pp.za").as("sz_a"),
-        col("_pp.zb").as("sz_b"), col("jaccard"))
-    val internalCand = banded.toDF("doc_a", "band", "band_hash")
-      .join(banded.toDF("doc_b", "band", "band_hash"),
-        Seq("band", "band_hash"))
-      .filter(col("doc_a") < col("doc_b"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("n_bands"))
-      .filter(col("n_bands") >= 2)
-      .select("doc_a", "doc_b")
-    val freshPlan = cross
-      .unionByName(rescoreJaccardAB(internalCand, sets, sets, threshold))
     // BOTH leases acquired before the first write: a conflict with a
     // concurrent index writer (appendToNearDupIndex, compact-ndindex)
     // must abort the whole append, not strand pairs without the
     // batch's signatures — that tear would silently break the
     // from-scratch-equality contract for every later batch.
-    // The candidate MATERIALIZATION (the eager localCheckpoint, which
-    // scans storeBands/storeSets) also happens under the leases: a
-    // concurrent compaction's write-then-swap between the scan and
-    // our append would hand the scan a torn as-of view (the same
+    // The mark's store reads also happen under the leases: a
+    // concurrent compaction's write-then-swap between the read and
+    // our append would hand the mark a torn as-of view (the same
     // hazard incrementalPhashAgainst closed in r14).
     val fresh = graft.sources.StoreLease.withLease(spark, store,
         commitTag.fold("pair-store-append")(t => s"pair-append-$t")) {
       graft.sources.StoreLease.withLease(spark, indexDir,
           commitTag.fold("index-append")(t => s"index-append-$t")) {
-        val ptag = commitTag.getOrElse("")
         val freshMat = graft.Phases.time(s"pairs_mark[$ptag]") {
-          freshPlan.localCheckpoint(eager = true)
+          pairMark(sets, banded, storeBands, storeSets, docType,
+            threshold, DefaultMarkPruneCap)
         }
         // index growth: ALL batch docs' signatures, the
         // writeIndexTables append layout (one clustered file per
@@ -2322,12 +2302,12 @@ object Dedup {
             // FUSED CONTINUATION (graft.Par, r19): the caller's
             // downstream chain (label-store merge, fold sink — all
             // on OTHER store roots) reads only the already-
-            // checkpointed freshMat, never this store or the index,
+            // materialized freshMat, never this store or the index,
             // so it overlaps the write leg instead of queueing
             // behind it. Crash analysis: any leg subset may land;
             // every piece is exactly-once under its own marker, so
             // a replay redoes only the missing pieces from the same
-            // checkpointed as-of state (StreamingSpec convergence
+            // materialized as-of state (StreamingSpec convergence
             // pins).
             graft.Par.run(Seq(writeLeg, () => f(freshMat)))
             ()
@@ -2340,6 +2320,236 @@ object Dedup {
       banded.unpersist(blocking = false)
       sets.unpersist(blocking = false)
     }
+  }
+
+  /** The batch side of [[appendPairStore]]'s mark, both persisted:
+    * `(sets, banded)` = the batch's (doc, shingles) sets and its
+    * (doc, band, band_hash) MinHash band rows, computed in Spark by
+    * the same definitions the index build uses, so they are
+    * bit-identical to the index rows they are matched against. */
+  private[graft] def pairMarkInputs(batch: DataFrame, idCol: String,
+      textCol: String, shingleN: Int, k: Int, bands: Int)
+      : (DataFrame, DataFrame) = {
+    val sets = shingleSets(batch, idCol, textCol, shingleN)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val banded = bandedSignatures(signaturesFromBaseHashes(
+      sets.select(col("doc"), explode(col("shingles")).as("shingle"))
+        .select(col("doc"), xxhash64(col("shingle")).as("h0")),
+      k), bands, k)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    (sets, banded)
+  }
+
+  /** The schemas [[writeNearDupIndex]] writes for `(bands,
+    * shingles)` over ids of type `docType`, as parquet reads them
+    * back (every field nullable). Declared so a per-batch reader
+    * skips the footer inference. */
+  private[graft] def indexTableSchemas(
+      docType: org.apache.spark.sql.types.DataType)
+      : (org.apache.spark.sql.types.StructType,
+        org.apache.spark.sql.types.StructType) = {
+    import org.apache.spark.sql.types._
+    (StructType(Seq(StructField("doc", docType),
+        StructField("band", IntegerType),
+        StructField("band_hash", LongType))),
+      StructType(Seq(StructField("doc", docType),
+        StructField("shingles", ArrayType(StringType)))))
+  }
+
+  /** The schema [[writePairStore]] writes over ids of type `docType`,
+    * as parquet reads it back. */
+  private[graft] def pairTableSchema(
+      docType: org.apache.spark.sql.types.DataType)
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("doc_a", docType),
+      StructField("doc_b", docType), StructField("inter", LongType),
+      StructField("sz_a", LongType), StructField("sz_b", LongType),
+      StructField("jaccard", DoubleType)))
+  }
+
+  /** The `(bands, shingles)` tables of the index at `indexDir`, read
+    * with their declared schemas ([[indexTableSchemas]]). */
+  private[graft] def readIndexTables(
+      spark: org.apache.spark.sql.SparkSession, indexDir: String,
+      docType: org.apache.spark.sql.types.DataType)
+      : (DataFrame, DataFrame) = {
+    val (bs, ss) = indexTableSchemas(docType)
+    (spark.read.schema(bs).parquet(s"$indexDir/bands"),
+      spark.read.schema(ss).parquet(s"$indexDir/shingles"))
+  }
+
+  /** [[appendPairStore]]'s mark: the batch's fresh pair rows against
+    * the index as of now. The driver kernel ([[pairMarkDriver]])
+    * runs while the batch's bounded state fits under `cap`; past it
+    * the distributed twin ([[pairMarkTwin]]) runs, checkpointed. */
+  private[graft] def pairMark(sets: DataFrame, banded: DataFrame,
+      storeBands: DataFrame, storeSets: DataFrame,
+      docType: org.apache.spark.sql.types.DataType, threshold: Double,
+      cap: Int): DataFrame =
+    pairMarkDriver(sets, banded, storeBands, storeSets, docType,
+        threshold, cap)
+      .getOrElse(pairMarkTwin(sets, banded, storeBands, storeSets,
+        threshold).localCheckpoint(eager = true))
+
+  /** The over-cap twin of [[pairMarkDriver]]: cross pairs (batch
+    * bands × stored bands) and batch-internal pairs, each at the
+    * minBandMatches=2 gate, exact-rescored and normalized to
+    * doc_a < doc_b. A scan-join of the whole index tables — the only
+    * form that fits past the cap, and the reference the kernel's
+    * specs compare against. */
+  private[graft] def pairMarkTwin(sets: DataFrame, banded: DataFrame,
+      storeBands: DataFrame, storeSets: DataFrame,
+      threshold: Double): DataFrame = {
+    val crossCand = banded.toDF("doc_b", "band", "band_hash")
+      .join(storeBands.toDF("doc_a", "band", "band_hash"),
+        Seq("band", "band_hash"))
+      .filter(col("doc_a") =!= col("doc_b"))
+      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("n_bands"))
+      .filter(col("n_bands") >= 2)
+      .select("doc_a", "doc_b")
+    // store ids need not be smaller than batch ids — normalize each
+    // cross pair to the from-scratch doc_a < doc_b convention
+    // (inter/jaccard are symmetric; sizes swap with the ids)
+    val cross = rescoreJaccardAB(crossCand, storeSets, sets, threshold)
+      .select(
+        when(col("doc_a") < col("doc_b"), struct(
+          col("doc_a").as("a"), col("doc_b").as("b"),
+          col("sz_a").as("za"), col("sz_b").as("zb")))
+          .otherwise(struct(
+            col("doc_b").as("a"), col("doc_a").as("b"),
+            col("sz_b").as("za"), col("sz_a").as("zb"))).as("_pp"),
+        col("inter"), col("jaccard"))
+      .select(col("_pp.a").as("doc_a"), col("_pp.b").as("doc_b"),
+        col("inter"), col("_pp.za").as("sz_a"),
+        col("_pp.zb").as("sz_b"), col("jaccard"))
+    val internalCand = banded.toDF("doc_a", "band", "band_hash")
+      .join(banded.toDF("doc_b", "band", "band_hash"),
+        Seq("band", "band_hash"))
+      .filter(col("doc_a") < col("doc_b"))
+      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("n_bands"))
+      .filter(col("n_bands") >= 2)
+      .select("doc_a", "doc_b")
+    cross.unionByName(
+      rescoreJaccardAB(internalCand, sets, sets, threshold))
+  }
+
+  /** The driver kernel of [[appendPairStore]]'s mark — the bounded
+    * regime (the Streams.prepDeltaDriver convention). Each step is a
+    * bounded collect (`limit(cap + 1)`):
+    *
+    *  1. the batch's shingle sets, then its band rows (collecting the
+    *     sets first materializes their cache inside that one job; a
+    *     band-first order adds a cache-stage job, and a later
+    *     candidate-only fetch of the batch sets a further one);
+    *  2. the stored band rows of the batch's band hashes (a pushed
+    *     `band_hash` isin);
+    *  3. the cross candidates' stored shingle sets (a pushed `doc`
+    *     isin).
+    *
+    * Candidates (cross pairs with doc_a ≠ doc_b, internal pairs with
+    * doc_a < doc_b, each sharing ≥ 2 (band, band_hash) rows) and
+    * their exact Jaccard are then computed in Scala, reproducing
+    * [[pairMarkTwin]] row for row: duplicate store rows count in the
+    * band gate and repeat in the re-score as the joins repeat them,
+    * `inter` counts distinct shared elements (`array_intersect`), and
+    * cross pairs are normalized to doc_a < doc_b. Returned as one
+    * local frame. None when any key set or collected row set passes
+    * `cap`, when the ids are not longs, or when a candidate meets a
+    * null or empty shingle set (Spark's size/divide semantics there
+    * are the twin's): the caller runs the twin. Jobs and phase walls
+    * against the twin: PLANS.md "Training-prep pair mark on the
+    * driver". */
+  private[graft] def pairMarkDriver(sets: DataFrame, banded: DataFrame,
+      storeBands: DataFrame, storeSets: DataFrame,
+      docType: org.apache.spark.sql.types.DataType, threshold: Double,
+      cap: Int): Option[DataFrame] = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.expressions.InSet
+    import org.apache.spark.sql.graft.Bridge
+    import org.apache.spark.sql.types.LongType
+    import scala.collection.mutable
+    def bounded(df: DataFrame): Option[Array[Row]] =
+      Some(df.limit(cap + 1).collect()).filter(_.length <= cap)
+    // the pushed isin built as the InSet the optimizer would make of
+    // it: a batch's ~6,400 band hashes as In's literal children cost
+    // every analyzer and optimizer rule a walk over them (PLANS.md
+    // "Training-prep pair mark on the driver")
+    def fetch(t: DataFrame, c: String, keys: Set[Long])
+        : Option[Array[Row]] =
+      if (keys.isEmpty) Some(Array.empty[Row])
+      else if (keys.size > cap) None
+      else bounded(t.filter(Bridge.column(
+        InSet(Bridge.expression(col(c)), keys.toSet[Any]))))
+    // (band, band_hash) → the band rows' docs, one per row (a null id
+    // never passes the twin's id filters)
+    def buckets(rows: Array[Row]): Map[(Int, Long), Array[Long]] =
+      rows.filterNot(_.isNullAt(0))
+        .groupBy(r => (r.getInt(1), r.getLong(2)))
+        .map { case (key, rs) => key -> rs.map(_.getLong(0)) }
+    // per-pair band-match counts, None once they pass `cap` pairs
+    def gated(emit: ((Long, Long) => Unit) => Unit)
+        : Option[Seq[(Long, Long)]] = {
+      val n = mutable.HashMap.empty[(Long, Long), Long]
+      emit((a, b) => n((a, b)) = n.getOrElse((a, b), 0L) + 1L)
+      val pairs = n.iterator.collect { case (p, c) if c >= 2 => p }
+        .toSeq
+      Some(pairs).filter(_.size <= cap)
+    }
+    // (doc, shingles) rows → each doc's sets, one per row
+    def byDoc(rs: Array[Row]): Map[Long, Array[Seq[String]]] =
+      rs.filterNot(_.isNullAt(0)).groupBy(_.getLong(0)).map {
+        case (d, g) =>
+          d -> g.map(r => if (r.isNullAt(1)) null else r.getSeq[String](1))
+      }
+    if (docType != LongType) None
+    else for {
+      batchSh <- bounded(sets.select("doc", "shingles"))
+      batchRows <- bounded(banded.select("doc", "band", "band_hash"))
+      batchBuckets = buckets(batchRows)
+      storeRows <- fetch(storeBands.select("doc", "band", "band_hash"),
+        "band_hash", batchBuckets.keySet.map(_._2))
+      cross <- gated { add =>
+        buckets(storeRows).foreach { case (key, as) =>
+          batchBuckets.get(key).foreach { bs =>
+            for (a <- as; b <- bs if a != b) add(a, b)
+          }
+        }
+      }
+      internal <- gated { add =>
+        batchBuckets.values.foreach { ds =>
+          for (a <- ds; b <- ds if a < b) add(a, b)
+        }
+      }
+      storeSh <- fetch(storeSets.select("doc", "shingles"), "doc",
+        cross.map(_._1).toSet)
+      rows <- {
+        val (storeOf, batchOf) = (byDoc(storeSh), byDoc(batchSh))
+        val out = mutable.ArrayBuffer.empty[Row]
+        var ok = true
+        // every (set of a) × (set of b) the two re-score joins pair up
+        def score(a: Long, b: Long,
+            setsA: Map[Long, Array[Seq[String]]]): Unit =
+          for (sa <- setsA.getOrElse(a, Array.empty);
+               sb <- batchOf.getOrElse(b, Array.empty) if ok) {
+            if (sa == null || sb == null || sa.isEmpty && sb.isEmpty)
+              ok = false
+            else {
+              val inB = sb.toSet
+              val inter = sa.iterator.distinct.count(inB.contains).toLong
+              val (za, zb) = (sa.size.toLong, sb.size.toLong)
+              val j = inter.toDouble / (za + zb - inter).toDouble
+              if (j >= threshold)
+                out += (if (a < b) Row(a, b, inter, za, zb, j)
+                  else Row(b, a, inter, zb, za, j))
+            }
+          }
+        cross.foreach { case (a, b) => score(a, b, storeOf) }
+        internal.foreach { case (a, b) => score(a, b, batchOf) }
+        Some(out.toSeq).filter(_ => ok)
+      }
+    } yield sets.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows: _*), pairTableSchema(docType))
   }
 
   /** NS GOVERNANCE: DUPLICATION-GRAPH CENTRALITY — rank documents by

@@ -313,9 +313,10 @@ object LabelStore {
     //    driver.
     val storeTag = new org.apache.hadoop.fs.Path(root)
       .getParent.getName
-    // the two bounding collects are independent jobs (batch rows vs
-    // the pair feed — for streaming consumers the latter executes
-    // the whole mark); overlap them (graft.Par, r19)
+    // the two bounding collects are independent (batch rows vs the
+    // pair feed — a local relation when Dedup.appendPairStore's
+    // driver kernel made it, which collects without a job); overlap
+    // them (graft.Par, r19)
     val collected = graft.Phases.time(
         s"ls_collect:$storeTag[$tag]") {
       graft.Par.run(Seq(

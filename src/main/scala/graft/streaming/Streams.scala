@@ -489,7 +489,11 @@ object Streams {
     *  1. GROW the shared pair store + signature index
     *     (Dedup.appendPairStore, exactly-once under `b<batchId>`) —
     *     the batch's cross pairs against everything already seen are
-    *     what lets a late near-dup inherit instead of hashing fresh;
+    *     what lets a late near-dup inherit instead of hashing fresh.
+    *     Under [[Dedup.DefaultMarkPruneCap]] the mark runs on the
+    *     driver over pushed `band_hash`/`doc` isin reads of the
+    *     index and hands the fresh pairs on as a local relation;
+    *     past it the scan-join twin runs;
     *  2. derive the batch docs' component labels AS OF this batch —
     *     label = component min id over the grown pair store ∪
     *     same-key edges, so a later arrival inherits its partner's
@@ -527,12 +531,16 @@ object Streams {
     * protocol; the fold sink overwrites only its own partition.
     *
     * Scale shape (100 TB): per-batch cost is the batch-sized mark
-    * (appendPairStore: candidates = batch bands × store bands) plus
-    * the label-store update — three pushed-predicate store reads and
-    * a driver union-find over the batch's label-grain edges (the
-    * LabelStore scaladoc; PLANS.md "Per-batch label cost: persisted
-    * union-find store vs bounded CC" tables the per-batch wall flat
-    * and below the CC regimes' frontier floor as the corpus grows).
+    * (appendPairStore: candidates = batch bands × store bands — under
+    * the cap two pushed isin reads of the index, the stored band
+    * rows of the batch's band hashes and the candidates' stored
+    * shingle sets, scored on the driver; past it a scan-join of
+    * the index tables) plus the label-store update — three
+    * pushed-predicate store reads and a driver union-find over the
+    * batch's label-grain edges (the LabelStore scaladoc; PLANS.md
+    * "Per-batch label cost: persisted union-find store vs bounded
+    * CC" tables the per-batch wall flat and below the CC regimes'
+    * frontier floor as the corpus grows).
     * The corpus text never re-tokenizes and no regime re-walks
     * untouched components.
     *
@@ -1694,9 +1702,15 @@ object Streams {
     *     ([[prepDeltaTail]]) aggregates either into the sealed rows.
     *
     * Scale shape (100 TB): per batch one batch-sized mark against
-    * the grown index, one bounded label-store merge, one batch-grain
-    * scoring pass (tokenize + shingle the BATCH only; the eval set
-    * is bounded and pre-shingled), three sealed appends, and a delta
+    * the grown index — two regimes, split at
+    * [[Dedup.DefaultMarkPruneCap]] ([[Dedup.appendPairStore]]): under
+    * the cap the driver kernel reads only the stored band rows of the
+    * batch's band hashes (a pushed `band_hash` isin) and the cross
+    * candidates' stored shingle sets (a pushed `doc` isin), past it
+    * the twin scan-joins the whole index tables — one bounded
+    * label-store merge, one batch-grain scoring pass (tokenize +
+    * shingle the BATCH only; the eval set is bounded and
+    * pre-shingled), three sealed appends, and a delta
     * derivation whose reads are bounded by the batch's touched state
     * — a handful of pushed collects under the cap, the twin's
     * per-step semi-join scans past it (the only form that fits the

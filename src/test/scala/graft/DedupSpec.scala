@@ -973,6 +973,177 @@ class DedupSpec extends AnyFunSuite with SparkSpec with Matchers {
     } finally Scratch.deleteRecursively(new java.io.File(root))
   }
 
+  /** Index tables at `idx`: `corpus.head` written by
+    * writeNearDupIndex, each later frame appended untagged. */
+  private def pairMarkIndex(idx: String,
+      corpus: org.apache.spark.sql.DataFrame*): Unit = {
+    Dedup.writeNearDupIndex(corpus.head, "doc_id", "text",
+      shingleN = 2, k = 64, bands = 32, dir = idx)
+    corpus.tail.foreach(c => Dedup.appendToNearDupIndex(c, "doc_id",
+      "text", shingleN = 2, k = 64, bands = 32, dir = idx))
+  }
+
+  /** `body` over fresh mark inputs of `batch` against the index at
+    * `idx`: (sets, banded) persisted and released after, and the
+    * index tables read with their declared schemas. */
+  private def withMarkInputs[T](batch: org.apache.spark.sql.DataFrame,
+      idx: String)(body: (org.apache.spark.sql.DataFrame,
+        org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
+        org.apache.spark.sql.DataFrame) => T): T = {
+    val (sets, banded) = Dedup.pairMarkInputs(batch, "doc_id", "text",
+      shingleN = 2, k = 64, bands = 32)
+    val (storeBands, storeSets) = Dedup.readIndexTables(spark, idx,
+      org.apache.spark.sql.types.LongType)
+    try body(sets, banded, storeBands, storeSets)
+    finally {
+      banded.unpersist(blocking = true)
+      sets.unpersist(blocking = true)
+    }
+  }
+
+  /** A frame's rows as sorted strings: a multiset comparison. */
+  private def rowStrings(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+
+  /** The pair-mark fixtures: (name, index corpus, batch, threshold). */
+  private def pairMarkCases: Seq[(String,
+      Seq[org.apache.spark.sql.DataFrame], org.apache.spark.sql.DataFrame,
+      Double)] = {
+    import spark.implicits._
+    def docs(rows: (Long, String)*) = rows.toDF("doc_id", "text")
+    val a11 = (1 to 11).map(i => s"a$i").mkString(" ")
+    val a12 = a11 + " z1"                    // J(a11, a12) = 10/11
+    val a9x = (1 to 9).map(i => s"a$i").mkString(" ") +
+      " x1 x2 x3 x4"                         // J(a9x, a11) = 8/14
+    val p8 = (1 to 8).map(i => s"p$i").mkString(" ")
+    // J(a7y, a11) = 6/21, through exactly ONE shared band
+    val a7y = ((1 to 7).map(i => s"a$i") ++ (1 to 11).map(i => s"y$i"))
+      .mkString(" ")
+    Seq(
+      // batch-internal pairs only, beside a null-text and an
+      // empty-text doc
+      ("empty store", Seq(docs()),
+        docs((1L, a11), (2L, a12), (3L, null), (4L, ""), (5L, p8)), 0.5),
+      // cross pairs normalize to doc_a < doc_b
+      ("store ids above batch ids", Seq(docs((100L, a11), (101L, p8))),
+        docs((1L, a12), (2L, a9x)), 0.5),
+      // doc 10's band and shingle rows are in the store twice, so
+      // its one band shared with doc 24 counts twice at the gate
+      ("double-appended untagged segment",
+        Seq(docs((1L, p8), (2L, null), (3L, "")), docs((10L, a11)),
+          docs((10L, a11))),
+        docs((20L, a12), (21L, null), (22L, ""), (23L, a9x), (24L, a7y)),
+        0.25))
+  }
+
+  test("appendPairStore mark: the driver kernel equals the scan-join " +
+    "twin in all six columns, multiplicities included; under a small " +
+    "cap the twin runs") {
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_pairmark_").toString
+    try pairMarkCases.zipWithIndex.foreach {
+      case ((name, corpus, batch, threshold), i) =>
+        val idx = s"$root/idx$i"
+        pairMarkIndex(idx, corpus: _*)
+        val twin = withMarkInputs(batch, idx) { (s, b, sb, ss) =>
+          rowStrings(Dedup.pairMarkTwin(s, b, sb, ss, threshold))
+        }
+        info(s"$name: ${twin.mkString("; ")}")
+        twin should not be empty
+        withMarkInputs(batch, idx) { (s, b, sb, ss) =>
+          Dedup.pairMarkDriver(s, b, sb, ss,
+              org.apache.spark.sql.types.LongType, threshold,
+              Dedup.DefaultMarkPruneCap)
+            .map(rowStrings) shouldBe Some(twin)
+        }
+        withMarkInputs(batch, idx) { (s, b, sb, ss) =>
+          Dedup.pairMarkDriver(s, b, sb, ss,
+            org.apache.spark.sql.types.LongType, threshold, 1) shouldBe None
+          rowStrings(Dedup.pairMark(s, b, sb, ss,
+            org.apache.spark.sql.types.LongType, threshold, 1)) shouldBe twin
+        }
+        name match {
+          case "store ids above batch ids" =>
+            twin.map(_.split('|').take(2).mkString("|")) shouldBe
+              Seq("1|100", "1|2", "2|100")
+          case "double-appended untagged segment" =>
+            // one re-score row per stored copy of doc 10
+            twin.count(_.startsWith("10|20|")) shouldBe 2
+            twin.count(_.startsWith("10|24|")) shouldBe 2
+          case _ =>
+        }
+    } finally Scratch.deleteRecursively(new java.io.File(root))
+  }
+
+  test("appendPairStore mark: the driver kernel runs at most half the " +
+    "twin's jobs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graft.Bridge
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_pairmarkjobs_").toString
+    try {
+      val (_, corpus, batch, threshold) = pairMarkCases.last
+      val idx = s"$root/idx"
+      pairMarkIndex(idx, corpus: _*)
+      /** Spark jobs started while `body` runs. */
+      def jobs(body: => Any): Int = {
+        val n = new java.util.concurrent.atomic.AtomicInteger()
+        val l = new SparkListener {
+          override def onJobStart(e: SparkListenerJobStart): Unit =
+            n.incrementAndGet()
+        }
+        Bridge.drainListenerBus(spark)
+        spark.sparkContext.addSparkListener(l)
+        try { body; Bridge.drainListenerBus(spark) }
+        finally spark.sparkContext.removeSparkListener(l)
+        n.get
+      }
+      val kernelJobs = withMarkInputs(batch, idx) { (s, b, sb, ss) =>
+        jobs(Dedup.pairMarkDriver(s, b, sb, ss,
+          org.apache.spark.sql.types.LongType, threshold,
+          Dedup.DefaultMarkPruneCap).get)
+      }
+      val twinJobs = withMarkInputs(batch, idx) { (s, b, sb, ss) =>
+        jobs(Dedup.pairMarkTwin(s, b, sb, ss, threshold)
+          .localCheckpoint(eager = true))
+      }
+      info(s"pair mark jobs: kernel $kernelJobs, twin $twinJobs")
+      2 * kernelJobs should be <= twinJobs
+    } finally Scratch.deleteRecursively(new java.io.File(root))
+  }
+
+  test("appendPairStore's declared index and pair schemas are what " +
+    "writeNearDupIndex and writePairStore write, empty store included") {
+    import spark.implicits._
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_pairschema_").toString
+    try {
+      val a11 = (1 to 11).map(i => s"a$i").mkString(" ")
+      Seq(
+        "long ids" -> (Seq((1L, a11), (2L, a11 + " z1"))
+          .toDF("doc_id", "text"), LongType),
+        "int ids" -> (Seq((1, a11), (2, a11 + " z1"))
+          .toDF("doc_id", "text"), IntegerType),
+        "empty bootstrap" -> (Seq.empty[(Long, String)]
+          .toDF("doc_id", "text"), LongType)
+      ).foreach { case (name, (corpus, docType)) =>
+        val (idx, store) = (s"$root/$name/idx", s"$root/$name/store")
+        Dedup.writeNearDupIndex(corpus, "doc_id", "text",
+          shingleN = 2, k = 64, bands = 32, dir = idx)
+        Dedup.writePairStore(corpus, "doc_id", "text", store,
+          shingleN = 2, k = 64, bands = 32, threshold = 0.5)
+        val (bands, shingles) = Dedup.indexTableSchemas(docType)
+        withClue(name) {
+          spark.read.parquet(s"$idx/bands").schema shouldBe bands
+          spark.read.parquet(s"$idx/shingles").schema shouldBe shingles
+          spark.read.parquet(s"$store/pairs").schema shouldBe
+            Dedup.pairTableSchema(docType)
+        }
+      }
+    } finally Scratch.deleteRecursively(new java.io.File(root))
+  }
+
   test("incremental near-dup ingest flags batch docs against the stored index") {
     import spark.implicits._
     val root = java.nio.file.Files
