@@ -2435,95 +2435,113 @@ object Dedup {
   }
 
   /** The driver kernel of [[appendPairStore]]'s mark — the bounded
-    * regime (the Streams.prepDeltaDriver convention). Each step is a
-    * bounded collect (`limit(cap + 1)`):
+    * regime (the Streams.prepDeltaDriver convention). Each read is a
+    * bounded collect ([[boundedRows]], [[boundedIn]]):
     *
-    *  1. the batch's shingle sets, then its band rows (collecting the
-    *     sets first materializes their cache inside that one job; a
-    *     band-first order adds a cache-stage job, and a later
-    *     candidate-only fetch of the batch sets a further one);
+    *  1. the batch's band rows — small fixed-size rows, so the cap
+    *     check runs before any shingle set leaves the executors;
     *  2. the stored band rows of the batch's band hashes (a pushed
     *     `band_hash` isin);
-    *  3. the cross candidates' stored shingle sets (a pushed `doc`
-    *     isin).
+    *  3. the candidates' shingle sets, in one single-job collect of
+    *     two pushed `doc` isin reads: the cross candidates' stored
+    *     sets and the candidate batch docs' persisted sets.
     *
     * Candidates (cross pairs with doc_a ≠ doc_b, internal pairs with
     * doc_a < doc_b, each sharing ≥ 2 (band, band_hash) rows) and
-    * their exact Jaccard are then computed in Scala, reproducing
-    * [[pairMarkTwin]] row for row: duplicate store rows count in the
-    * band gate and repeat in the re-score as the joins repeat them,
-    * `inter` counts distinct shared elements (`array_intersect`), and
-    * cross pairs are normalized to doc_a < doc_b. Returned as one
-    * local frame. None when any key set or collected row set passes
-    * `cap`, when the ids are not longs, or when a candidate meets a
-    * null or empty shingle set (Spark's size/divide semantics there
-    * are the twin's): the caller runs the twin. Jobs and phase walls
-    * against the twin: PLANS.md "Training-prep pair mark on the
-    * driver". */
+    * their exact Jaccard are computed in Scala between steps 2 and
+    * 3 and after 3, reproducing [[pairMarkTwin]] row for row:
+    * duplicate store rows count in the band gate and repeat in the
+    * re-score as the joins repeat them, `inter` counts distinct
+    * shared elements (`array_intersect`), and cross pairs are
+    * normalized to doc_a < doc_b. Returned as one local frame.
+    *
+    * None — the caller runs the twin — when any key set or collected
+    * row set passes `cap`, when either candidate enumeration passes
+    * `8 × cap` band-pair matches (a templated cluster's quadratic
+    * bucket would otherwise fill the driver heap before the gate
+    * thins it), when the ids are not longs, or when a candidate
+    * meets a null or empty shingle set (Spark's size/divide
+    * semantics there are the twin's). At `bands` bands per doc,
+    * step 1 alone sends batches above `cap / bands` docs (~1,560 at
+    * the default 50,000 and 32 bands) to the twin. The kernel wins
+    * at training-prep's ~200-doc batches, but against a 4,000-doc
+    * store the twin was already faster at 1,000 and 1,500 docs: the
+    * step-2 read grows with the key set. Jobs and walls against the
+    * twin, that sweep included: PLANS.md "Training-prep pair mark on
+    * the driver". */
   private[graft] def pairMarkDriver(sets: DataFrame, banded: DataFrame,
       storeBands: DataFrame, storeSets: DataFrame,
       docType: org.apache.spark.sql.types.DataType, threshold: Double,
       cap: Int): Option[DataFrame] = {
     import org.apache.spark.sql.Row
-    import org.apache.spark.sql.catalyst.expressions.InSet
-    import org.apache.spark.sql.graft.Bridge
     import org.apache.spark.sql.types.LongType
     import scala.collection.mutable
-    def bounded(df: DataFrame): Option[Array[Row]] =
-      Some(df.limit(cap + 1).collect()).filter(_.length <= cap)
-    // the pushed isin built as the InSet the optimizer would make of
-    // it: a batch's ~6,400 band hashes as In's literal children cost
-    // every analyzer and optimizer rule a walk over them (PLANS.md
-    // "Training-prep pair mark on the driver")
-    def fetch(t: DataFrame, c: String, keys: Set[Long])
-        : Option[Array[Row]] =
-      if (keys.isEmpty) Some(Array.empty[Row])
-      else if (keys.size > cap) None
-      else bounded(t.filter(Bridge.column(
-        InSet(Bridge.expression(col(c)), keys.toSet[Any]))))
     // (band, band_hash) → the band rows' docs, one per row (a null id
     // never passes the twin's id filters)
     def buckets(rows: Array[Row]): Map[(Int, Long), Array[Long]] =
       rows.filterNot(_.isNullAt(0))
         .groupBy(r => (r.getInt(1), r.getLong(2)))
         .map { case (key, rs) => key -> rs.map(_.getLong(0)) }
-    // per-pair band-match counts, None once they pass `cap` pairs
-    def gated(emit: ((Long, Long) => Unit) => Unit)
+    // the pairs matched ≥ 2 times; None past 8 × cap matches or past
+    // cap gated pairs
+    def gated(matches: Iterator[(Long, Long)])
         : Option[Seq[(Long, Long)]] = {
-      val n = mutable.HashMap.empty[(Long, Long), Long]
-      emit((a, b) => n((a, b)) = n.getOrElse((a, b), 0L) + 1L)
-      val pairs = n.iterator.collect { case (p, c) if c >= 2 => p }
-        .toSeq
-      Some(pairs).filter(_.size <= cap)
+      val (n, budget) = (mutable.HashMap.empty[(Long, Long), Int], 8L * cap)
+      var seen = 0L
+      while (seen <= budget && matches.hasNext) {
+        val p = matches.next()
+        n(p) = n.getOrElse(p, 0) + 1
+        seen += 1
+      }
+      if (seen > budget) None
+      else Some(n.iterator.collect { case (p, c) if c >= 2 => p }.toSeq)
+        .filter(_.size <= cap)
     }
     // (doc, shingles) rows → each doc's sets, one per row
     def byDoc(rs: Array[Row]): Map[Long, Array[Seq[String]]] =
-      rs.filterNot(_.isNullAt(0)).groupBy(_.getLong(0)).map {
-        case (d, g) =>
-          d -> g.map(r => if (r.isNullAt(1)) null else r.getSeq[String](1))
+      rs.groupBy(_.getLong(0)).map { case (d, g) =>
+        d -> g.map(r => if (r.isNullAt(1)) null else r.getSeq[String](1))
       }
+    // the store's sets of `storeDocs` (is_store = true) and the
+    // batch's sets of `batchDocs`, in one bounded collect — coalesced
+    // to the first take round's width, so the union's partitions are
+    // read in one job
+    def candidateSets(storeDocs: Set[Long], batchDocs: Set[Long])
+        : Option[Array[Row]] = {
+      def side(t: DataFrame, isStore: Boolean, keys: Set[Long]) =
+        if (keys.isEmpty) None
+        else Some(t.filter(pushedIn(t, "doc", keys))
+          .select(col("doc"), col("shingles"), lit(isStore).as("is_store")))
+      val width = sets.sparkSession.conf
+        .get("spark.sql.limit.initialNumPartitions", "1").toInt
+      if (storeDocs.size > cap || batchDocs.size > cap) None
+      else Seq(side(storeSets, true, storeDocs),
+          side(sets, false, batchDocs)).flatten
+        .reduceOption(_ unionByName _)
+        .fold(Option(Array.empty[Row]))(
+          u => boundedRows(u.coalesce(width), cap))
+    }
     if (docType != LongType) None
     else for {
-      batchSh <- bounded(sets.select("doc", "shingles"))
-      batchRows <- bounded(banded.select("doc", "band", "band_hash"))
+      batchRows <- boundedRows(banded.select("doc", "band", "band_hash"),
+        cap)
       batchBuckets = buckets(batchRows)
-      storeRows <- fetch(storeBands.select("doc", "band", "band_hash"),
-        "band_hash", batchBuckets.keySet.map(_._2))
-      cross <- gated { add =>
-        buckets(storeRows).foreach { case (key, as) =>
-          batchBuckets.get(key).foreach { bs =>
-            for (a <- as; b <- bs if a != b) add(a, b)
+      storeRows <- boundedIn(storeBands.select("doc", "band", "band_hash"),
+        "band_hash", batchBuckets.keySet.map(_._2), cap)
+      cross <- gated(buckets(storeRows).iterator.flatMap {
+        case (key, as) =>
+          batchBuckets.get(key).iterator.flatMap { bs =>
+            for (a <- as.iterator; b <- bs.iterator if a != b)
+              yield (a, b)
           }
-        }
-      }
-      internal <- gated { add =>
-        batchBuckets.values.foreach { ds =>
-          for (a <- ds; b <- ds if a < b) add(a, b)
-        }
-      }
-      storeSh <- fetch(storeSets.select("doc", "shingles"), "doc",
-        cross.map(_._1).toSet)
+      })
+      internal <- gated(batchBuckets.valuesIterator.flatMap { ds =>
+        for (a <- ds.iterator; b <- ds.iterator if a < b) yield (a, b)
+      })
+      shRows <- candidateSets(cross.map(_._1).toSet,
+        cross.map(_._2).toSet ++ internal.flatMap(p => Seq(p._1, p._2)))
       rows <- {
+        val (storeSh, batchSh) = shRows.partition(_.getBoolean(2))
         val (storeOf, batchOf) = (byDoc(storeSh), byDoc(batchSh))
         val out = mutable.ArrayBuffer.empty[Row]
         var ok = true
@@ -3210,6 +3228,41 @@ object Dedup {
     * over the store reads less than the scattered per-key probes
     * would. */
   val DefaultMarkPruneCap: Int = 50000
+
+  /** The rows of `df` as a bounded collect (`limit(cap + 1)`); None
+    * past `cap` rows. The read step of the driver kernels
+    * ([[pairMarkDriver]], Streams.prepDeltaDriver), whose caller runs
+    * the distributed twin on None. */
+  private[graft] def boundedRows(df: DataFrame, cap: Int)
+      : Option[Array[org.apache.spark.sql.Row]] =
+    Some(df.limit(cap + 1).collect()).filter(_.length <= cap)
+
+  /** `col(c).isin(keys)` built as the Catalyst `InSet` the optimizer
+    * makes of a large isin, which still pushes to parquet as `In`:
+    * written as In's literal children, a batch's ~6,400 band hashes
+    * cost every analyzer and optimizer rule a walk over them
+    * (PLANS.md "Training-prep pair mark on the driver"). Keys whose
+    * literal type differs from the column's keep the plain isin and
+    * its type coercion. */
+  private[graft] def pushedIn(t: DataFrame, c: String, keys: Set[_])
+      : Column = {
+    import org.apache.spark.sql.catalyst.expressions.{InSet, Literal}
+    import org.apache.spark.sql.graft.Bridge
+    val lits = keys.toSeq.map(Literal(_))
+    if (lits.forall(_.dataType == t.schema(c).dataType))
+      Bridge.column(InSet(Bridge.expression(col(c)),
+        lits.map(_.value).toSet))
+    else col(c).isin(keys.toSeq: _*)
+  }
+
+  /** The rows of `t` whose `c` is in `keys`, read with a pushed
+    * [[pushedIn]] as a [[boundedRows]] collect; None past `cap` keys
+    * or rows. */
+  private[graft] def boundedIn(t: DataFrame, c: String, keys: Set[_],
+      cap: Int): Option[Array[org.apache.spark.sql.Row]] =
+    if (keys.isEmpty) Some(Array.empty[org.apache.spark.sql.Row])
+    else if (keys.size > cap) None
+    else boundedRows(t.filter(pushedIn(t, c, keys)), cap)
 
   /** Metadata-only store-size probe with the sentinel contract the
     * streaming drivers rely on (0 = decide big WITHOUT the FS

@@ -1951,13 +1951,10 @@ object Streams {
       graft.operators.LabelStore.LabelsSchema)
     val (fl, lb) = (withSeg(segFl, oldFl), withSeg(segLb, oldLb))
     def bounded(df: DataFrame): Option[Array[Row]] =
-      Some(df.limit(cap + 1).collect()).filter(_.length <= cap)
+      Dedup.boundedRows(df, cap)
     def fetch(t: DataFrame, c: String, keys: Set[_],
         cols: String*): Option[Array[Row]] =
-      if (keys.isEmpty) Some(Array.empty[Row])
-      else if (keys.size > cap) None
-      else bounded(t.filter(col(c).isin(keys.toSeq: _*))
-        .select(cols.map(col): _*))
+      Dedup.boundedIn(t.select(cols.map(col): _*), c, keys, cap)
     // (key, value, _seg) rows → per key, min value over the PRE rows
     // and over the POST rows (Spark's min: nulls skipped)
     def mins[K](rows: Array[Row]): (Map[K, Long], Map[K, Long]) = {

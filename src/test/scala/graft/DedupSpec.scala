@@ -1112,6 +1112,92 @@ class DedupSpec extends AnyFunSuite with SparkSpec with Matchers {
     } finally Scratch.deleteRecursively(new java.io.File(root))
   }
 
+  test("appendPairStore mark: band rows past the cap stop the kernel " +
+    "before any shingle set reaches the driver; under the cap only " +
+    "the candidates' sets do") {
+    import org.apache.spark.sql.catalyst.expressions.InSet
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.apache.spark.sql.graft.Bridge
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_pairmarkcap_").toString
+    try {
+      val (_, corpus, batch, threshold) = pairMarkCases.last
+      val idx = s"$root/idx"
+      pairMarkIndex(idx, corpus: _*)
+      /** Per frame collected while `body` runs: its columns and the
+        * key sets of its pushed isin filters. */
+      def collected(body: => Any): Seq[(Seq[String], Set[Set[Any]])] = {
+        val seen = new java.util.concurrent.ConcurrentLinkedQueue[
+          (Seq[String], Set[Set[Any]])]()
+        val l = new QueryExecutionListener {
+          override def onSuccess(f: String, qe: QueryExecution,
+              ns: Long): Unit =
+            if (f == "collect") seen.add((qe.analyzed.output.map(_.name),
+              qe.analyzed.flatMap(_.expressions.flatMap(_.collect {
+                case i: InSet => i.hset.toSet
+              })).toSet))
+          override def onFailure(f: String, qe: QueryExecution,
+              e: Exception): Unit = ()
+        }
+        Bridge.drainListenerBus(spark)
+        spark.listenerManager.register(l)
+        try { body; Bridge.drainListenerBus(spark) }
+        finally spark.listenerManager.unregister(l)
+        seen.toArray.toSeq.map(_.asInstanceOf[(Seq[String], Set[Set[Any]])])
+      }
+      // 3 texted batch docs × 32 bands = 96 band rows against a cap of 50
+      withMarkInputs(batch, idx) { (s, b, sb, ss) =>
+        var out: Option[_] = Some(())
+        val reads = collected {
+          out = Dedup.pairMarkDriver(s, b, sb, ss,
+            org.apache.spark.sql.types.LongType, threshold, cap = 50)
+        }
+        out shouldBe None
+        reads.map(_._1) shouldBe Seq(Seq("doc", "band", "band_hash"))
+      }
+      // under the default cap the one shingle read asks for the
+      // candidates only: stored doc 10 and batch docs 20, 23, 24 —
+      // not the pairless null- and empty-text docs 21, 22
+      withMarkInputs(batch, idx) { (s, b, sb, ss) =>
+        val reads = collected {
+          Dedup.pairMarkDriver(s, b, sb, ss,
+            org.apache.spark.sql.types.LongType, threshold,
+            Dedup.DefaultMarkPruneCap).get
+        }
+        reads.filter(_._1.contains("shingles")) shouldBe Seq(
+          (Seq("doc", "shingles", "is_store"),
+            Set[Set[Any]](Set(10L), Set(20L, 23L, 24L))))
+      }
+    } finally Scratch.deleteRecursively(new java.io.File(root))
+  }
+
+  test("appendPairStore mark: a templated cluster past the kernel's " +
+    "band-match budget runs the twin") {
+    import spark.implicits._
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_pairmarkbudget_").toString
+    try {
+      val idx = s"$root/idx"
+      pairMarkIndex(idx, Seq.empty[(Long, String)].toDF("doc_id", "text"))
+      // 20 copies of one text: 640 band rows and 32 × C(20, 2) = 6,080
+      // internal band matches gating 190 pairs
+      val text = (1 to 11).map(i => s"t$i").mkString(" ")
+      val batch = (1L to 20L).map(_ -> text).toDF("doc_id", "text")
+      val twin = withMarkInputs(batch, idx) { (s, b, sb, ss) =>
+        rowStrings(Dedup.pairMarkTwin(s, b, sb, ss, 0.5))
+      }
+      twin should have size 190
+      withMarkInputs(batch, idx) { (s, b, sb, ss) =>
+        def kernel(cap: Int) = Dedup.pairMarkDriver(s, b, sb, ss,
+          org.apache.spark.sql.types.LongType, 0.5, cap)
+        // every read fits 640, but 6,080 matches pass 8 × 640
+        kernel(640) shouldBe None
+        kernel(800).map(rowStrings) shouldBe Some(twin)
+      }
+    } finally Scratch.deleteRecursively(new java.io.File(root))
+  }
+
   test("appendPairStore's declared index and pair schemas are what " +
     "writeNearDupIndex and writePairStore write, empty store included") {
     import spark.implicits._
