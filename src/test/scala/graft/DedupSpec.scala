@@ -1148,12 +1148,11 @@ class DedupSpec extends AnyFunSuite with SparkSpec with Matchers {
       }
       // 3 texted batch docs × 32 bands = 96 band rows against a cap of 50
       withMarkInputs(batch, idx) { (s, b, sb, ss) =>
-        var out: Option[_] = Some(())
         val reads = collected {
-          out = Dedup.pairMarkDriver(s, b, sb, ss,
-            org.apache.spark.sql.types.LongType, threshold, cap = 50)
+          Dedup.pairMarkDriver(s, b, sb, ss,
+            org.apache.spark.sql.types.LongType, threshold,
+            cap = 50) shouldBe None
         }
-        out shouldBe None
         reads.map(_._1) shouldBe Seq(Seq("doc", "band", "band_hash"))
       }
       // under the default cap the one shingle read asks for the
