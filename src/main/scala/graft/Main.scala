@@ -1126,17 +1126,12 @@ object Main {
           .select(col(idCol)), Seq(idCol), "left_semi")
         .select(col("batch_id")).distinct()
       ).localCheckpoint()
-    // literal push capped at the store-wide isin convention
-    // (DefaultMarkPruneCap); a drift touching more sealed partitions
-    // than that filters by left-semi join instead of bloating the
-    // driver collect and the filter plan
+    // a pushed key-set read (Dedup.restrictTo): a drift touching
+    // more sealed partitions than the cap filters by left-semi join
+    // instead of bloating the driver collect and the filter plan
     val touchCap = Dedup.DefaultMarkPruneCap
-    val touchedParts: Array[Any] =
-      touchedF.limit(touchCap + 1).collect().map(_.get(0))
-    val touchPushable = touchedParts.length <= touchCap
-    val nTouched =
-      if (touchPushable) touchedParts.length.toLong
-      else touchedF.count()
+    val touchedParts = Dedup.boundedKeys(touchedF, "batch_id", touchCap)
+    val nTouched = touchedParts.fold(touchedF.count())(_.size.toLong)
     free(drift)
     val movedMilli = if (nDocs == 0) 0L else moved * 1000 / nDocs
     val head = Seq(
@@ -1162,12 +1157,9 @@ object Main {
       // column refreshes only in rewritten partitions — reports and
       // guards derive groups from the store, never from manifests.
       // Read fully BEFORE the overwrite touches the source files.
-      val touched0 =
-        if (touchPushable)
-          manifests.filter(
-            col("batch_id").isin(touchedParts.toIndexedSeq: _*))
-        else manifests.join(touchedF, Seq("batch_id"), "left_semi")
-      val refolded = touched0
+      val refolded = Dedup.restrictTo(manifests, "batch_id",
+          touchedParts, touchCap)(
+          _.join(touchedF, Seq("batch_id"), "left_semi"))
         .drop("group", "split")
         .join(grp, Seq(idCol))
         .withColumn("split", foldOf(graft.functions.hashes

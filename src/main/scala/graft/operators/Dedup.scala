@@ -982,15 +982,12 @@ object Dedup {
     * silently lose recall).
     *
     * Once the store crosses `pruneMinStoreBytes` the mark stops
-    * scanning it whole: the batch's bounded distinct bkey set (≤
-    * [[DefaultMarkPruneCap]] values, a planning lookup) is pushed as
-    * an isin into the bkey-clustered key store, so parquet row-group
+    * scanning it whole: the batch's bkey set is pushed into the
+    * bkey-clustered key store ([[restrictTo]]), so parquet row-group
     * stats prune the scan to the batch's own key neighborhoods and
     * per-batch mark cost tracks the BATCH, not the corpus (sentinels:
     * 0 = always prune, Long.MaxValue = always scan — the
-    * Streams-probes-once contract of the minhash point-fetch). Beyond
-    * the cap the sequential scan-join takes over, the cheaper plan at
-    * that batch size.
+    * Streams-probes-once contract of the minhash point-fetch).
     *
     * SINGLE-WRITER assumption (mark-only path): the key-store read
     * here is lease-free, so a concurrent index writer can be
@@ -1024,9 +1021,8 @@ object Dedup {
     * hamming) with doc_a < doc_b, distinct (multi-table collisions
     * deduped, the [[hammingNearDupPairs]] convention). Same as-of
     * semantics as the mark (a replayed batch's own committed keys
-    * are anti-joined out) and the same store-side pruning (the
-    * batch's bounded distinct bkey set pushes as an isin into the
-    * bkey-clustered key store past the size gate). */
+    * are anti-joined out) and the same store-side pruning past the
+    * size gate. */
   def phashPairsAgainst(spark: org.apache.spark.sql.SparkSession,
       batchFp: DataFrame, indexDir: String, radius: Int, width: Int,
       blocks: Option[Int] = None, keyBlocks: Int = 1,
@@ -1045,17 +1041,8 @@ object Dedup {
       if (prune && materialize)
         keys0.persist(StorageLevel.MEMORY_AND_DISK)
       else keys0
-    val batchKeys: Array[Any] =
-      if (!prune) Array.empty[Any]
-      else keys.select(col("bkey")).distinct()
-        .limit(pruneCap + 1).collect().map(_.get(0))
-    val storedAll = spark.read.parquet(s"$indexDir/keys")
-    val storedScan =
-      if (prune && batchKeys.isEmpty) storedAll.limit(0)
-      else if (batchKeys.nonEmpty && batchKeys.length <= pruneCap)
-        storedAll.filter(col("bkey").isin(batchKeys.toIndexedSeq: _*))
-      else storedAll
-    val stored = storedScan
+    val stored = restrictTo(spark.read.parquet(s"$indexDir/keys"), "bkey",
+        boundedKeys(keys, "bkey", pruneCap, prune), pruneCap)(identity)
       .toDF("doc_a", "fp_a", "tbl", "bkey")
       .join(broadcast(batchFp.select(col("doc").as("_pp_batch_id"))),
         col("doc_a") === col("_pp_batch_id"), "left_anti")
@@ -1139,12 +1126,10 @@ object Dedup {
     val keys0 = pigeonholeKeys(batchFp, radius, width, blocks, keyBlocks)
     // STORE-SIDE PRUNING (the r13 scale veto, closed): past the size
     // threshold the whole-store scan-join is the wrong plan — the
-    // batch's bounded distinct bkey set is collected (≤ cap values, a
-    // planning lookup) and pushed into the bkey-clustered key store,
-    // so the scan reads only the batch's key neighborhoods and
-    // per-batch mark IO stops growing with the corpus. Over-cap
-    // batches fall back to the sequential scan, the cheaper plan at
-    // that size (the point-fetch cost argument, one table earlier).
+    // batch's bkey set is pushed into the bkey-clustered key store
+    // ([[restrictTo]]), so the scan reads only the batch's key
+    // neighborhoods and per-batch mark IO stops growing with the
+    // corpus.
     val prune = storeAtLeastBytes(spark, s"$indexDir/keys",
       pruneMinStoreBytes)
     // the ingest path reads keys twice (mark probe + fresh slice) and
@@ -1153,19 +1138,9 @@ object Dedup {
     val keys =
       if (persistKeys || prune) keys0.persist(StorageLevel.MEMORY_AND_DISK)
       else keys0
-    val batchKeys: Array[Any] =
-      if (!prune) Array.empty[Any]
-      else keys.select(col("bkey")).distinct()
-        .limit(pruneCap + 1).collect().map(_.get(0))
-    val storedAll = spark.read.parquet(s"$indexDir/keys")
-    val storedScan =
-      if (prune && batchKeys.isEmpty)
-        // empty batch: nothing can match — an empty relation, not a
-        // full-store scan joined against nothing
-        storedAll.limit(0)
-      else if (batchKeys.nonEmpty && batchKeys.length <= pruneCap)
-        storedAll.filter(col("bkey").isin(batchKeys.toIndexedSeq: _*))
-      else storedAll
+    val storedScan = restrictTo(spark.read.parquet(s"$indexDir/keys"),
+      "bkey", boundedKeys(keys, "bkey", pruneCap, prune), pruneCap)(
+      identity)
     // AS-OF-BATCH-START semantics, exactly, even on replay (the
     // markAgainstIndex rationale): a retried batch whose append
     // already committed finds its own keys in the store — without
@@ -3077,16 +3052,15 @@ object Dedup {
     * Past `pruneMinStoreBytes` (metadata-only probe, the
     * [[markAgainstIndex]] cost gate) the guard stops reading the
     * index tables whole — the steady-state regime where the corpus
-    * dwarfs every eval set: the bounded val-id set pushes as an
-    * `isin` into BOTH index reads' val sides (point-fetch — the
-    * tables are doc-clustered), the val side's bounded distinct
-    * band_hash set pushes into the train-side bands scan (row-group
+    * dwarfs every eval set: three pushed key-set reads
+    * ([[restrictTo]]) — the val-id set into BOTH index reads' val
+    * sides (point-fetch — the tables are doc-clustered), the val
+    * side's band_hash set into the train-side bands scan (row-group
     * pruning to colliding neighborhoods — collision equality makes
-    * the filter semantically free), and the candidates' bounded
-    * doc_a set point-fetches the train-side shingles. Guard wall
-    * then tracks the VAL side as the store grows (PLANS.md "Guard
-    * cost vs corpus growth"); over-cap sets fall back to the
-    * sequential forms, the cheaper plan at that size. */
+    * the filter semantically free), and the candidates' doc_a set
+    * into the train-side shingles. Guard wall then tracks the VAL
+    * side as the store grows (PLANS.md "Guard cost vs corpus
+    * growth"). */
   def splitLeakageIndexed(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, valIds: DataFrame, idCol: String,
       threshold: Double,
@@ -3098,29 +3072,19 @@ object Dedup {
       pruneMinStoreBytes)
     val bands = spark.read.parquet(s"$indexDir/bands")
     val sets = spark.read.parquet(s"$indexDir/shingles")
-    val valIdKeys: Array[Any] =
-      if (!storeIsBig) Array.empty[Any]
-      else ids.limit(pruneCap + 1).collect().map(_.get(0))
-    val pushValIds = valIdKeys.nonEmpty && valIdKeys.length <= pruneCap
+    val valIdKeys = boundedKeys(ids, "doc", pruneCap, storeIsBig)
     def valFetch(t: DataFrame): DataFrame =
-      (if (pushValIds)
-        t.filter(col("doc").isin(valIdKeys.toIndexedSeq: _*))
-      else t).join(ids, Seq("doc"), "semi")
+      restrictTo(t, "doc", valIdKeys, pruneCap)(identity)
+        .join(ids, Seq("doc"), "semi")
     val valB0 = valFetch(bands)
     // read twice under pruning (band-key collect + collision join)
     val valB =
       if (storeIsBig) valB0.persist(StorageLevel.MEMORY_AND_DISK)
       else valB0
-    val valBandKeys: Array[Any] =
-      if (!storeIsBig) Array.empty[Any]
-      else valB.select(col("band_hash")).distinct()
-        .limit(pruneCap + 1).collect().map(_.get(0))
-    val trainB =
-      if (storeIsBig && valBandKeys.isEmpty) bands.limit(0)
-      else if (valBandKeys.nonEmpty && valBandKeys.length <= pruneCap)
-        bands.filter(col("band_hash").isin(valBandKeys.toIndexedSeq: _*))
-          .join(ids, Seq("doc"), "anti")
-      else bands.join(ids, Seq("doc"), "anti")
+    val trainB = restrictTo(bands, "band_hash",
+        boundedKeys(valB, "band_hash", pruneCap, storeIsBig), pruneCap)(
+        identity)
+      .join(ids, Seq("doc"), "anti")
     val candidates0 = valB.toDF("doc_b", "band", "band_hash")
       .join(trainB.toDF("doc_a", "band", "band_hash"),
         Seq("band", "band_hash"))
@@ -3131,15 +3095,9 @@ object Dedup {
     val candidates =
       if (storeIsBig) candidates0.persist(StorageLevel.MEMORY_AND_DISK)
       else candidates0
-    val targetIds: Array[Any] =
-      if (!storeIsBig) Array.empty[Any]
-      else candidates.select(col("doc_a")).distinct()
-        .limit(pruneCap + 1).collect().map(_.get(0))
-    val trainSets =
-      if (storeIsBig && targetIds.isEmpty) sets.limit(0)
-      else if (targetIds.nonEmpty && targetIds.length <= pruneCap)
-        sets.filter(col("doc").isin(targetIds.toIndexedSeq: _*))
-      else sets.join(ids, Seq("doc"), "anti")
+    val trainSets = restrictTo(sets, "doc",
+      boundedKeys(candidates, "doc_a", pruneCap, storeIsBig), pruneCap)(
+      _.join(ids, Seq("doc"), "anti"))
     val leaks = rescoreJaccardAB(candidates, trainSets,
         valFetch(sets), threshold)
       .groupBy(col("doc_b").as(idCol))
@@ -3215,18 +3173,12 @@ object Dedup {
     * once-per-stream probe — retune it in one place. */
   val DefaultPointFetchMinStoreBytes: Long = 256L << 20
 
-  /** Bound on the batch key set pushed into an at-rest mark scan
-    * ([[markAgainstIndex]]'s band filter, markPhashCore's bkey
-    * filter): up to this many distinct values are collected (a
-    * bounded planning lookup, the pointFetchCap convention) and
-    * pushed as an `isin`. Spark translates a large In to parquet's
-    * NATIVE set predicate (`FilterApi.in` — O(1) membership, no
-    * or-of-equalities tree), which the reader evaluates against
-    * row-group stats/dictionaries/blooms, so the scan skips row
-    * groups holding none of the batch's keys. Beyond the cap the
-    * scan-join takes over — at that batch size a sequential pass
-    * over the store reads less than the scattered per-key probes
-    * would. */
+  /** The cap of every pushed key-set read ([[boundedKeys]] +
+    * [[restrictTo]]: the mark scans, the leakage guard, the label
+    * store, the manifest/drift/straddle reads, the refold) and of
+    * both driver kernels' bounded collects ([[boundedRows]],
+    * [[boundedIn]]). See [[restrictTo]] for why the pushed form wins
+    * under it and a scan or join past it. */
   val DefaultMarkPruneCap: Int = 50000
 
   /** The rows of `df` as a bounded collect (`limit(cap + 1)`); None
@@ -3263,6 +3215,40 @@ object Dedup {
     if (keys.isEmpty) Some(Array.empty[org.apache.spark.sql.Row])
     else if (keys.size > cap) None
     else boundedRows(t.filter(pushedIn(t, c, keys)), cap)
+
+  /** The key set of a [[restrictTo]] read: `df`'s distinct `c`
+    * values as a [[boundedRows]] collect. None past `cap` keys, and
+    * None without a job when `gate` is off (the caller's store-size
+    * verdict: below it the scan or join is the cheaper plan and the
+    * collect would be pure per-batch fixed cost). */
+  private[graft] def boundedKeys(df: DataFrame, c: String, cap: Int,
+      gate: Boolean = true): Option[Set[Any]] =
+    if (!gate) None
+    else boundedRows(df.select(col(c)).distinct(), cap)
+      .map(_.iterator.map(_.get(0)).toSet)
+
+  /** `t`'s rows whose `c` is in `keys` (with `exclude`, the other
+    * rows) — THE pushed key-set read of a growing store. Up to `cap`
+    * keys it is one [[pushedIn]] filter, which parquet evaluates as
+    * its native set predicate against row-group stats, dictionaries
+    * and blooms, so the scan skips row groups holding none of the
+    * keys and needs no join (an empty key set reads nothing). For
+    * None or more keys it is the caller's `overCap` form of `t` — a
+    * semi- or anti-join, or the whole scan where a later join
+    * restricts it — since at that size one sequential pass reads
+    * less than scattered per-key probes. A null key matches nothing,
+    * as in a join. */
+  private[graft] def restrictTo(t: DataFrame, c: String,
+      keys: Option[Iterable[Any]], cap: Int, exclude: Boolean = false)(
+      overCap: DataFrame => DataFrame): DataFrame =
+    keys.filter(_.size <= cap).map(_.iterator.filter(_ != null).toSet)
+      match {
+        case None => overCap(t)
+        case Some(ks) if ks.isEmpty => if (exclude) t else t.limit(0)
+        case Some(ks) =>
+          val in = pushedIn(t, c, ks)
+          t.filter(if (exclude) !in else in)
+      }
 
   /** Metadata-only store-size probe with the sentinel contract the
     * streaming drivers rely on (0 = decide big WITHOUT the FS
@@ -3317,22 +3303,11 @@ object Dedup {
       else banded0
     // BAND-SCAN PRUNING (the r13 scale veto, closed): past the size
     // threshold the stored bands table is not read whole per batch —
-    // the batch's bounded distinct band_hash set (≤ cap values, a
-    // planning lookup) is pushed into the band_hash-clustered store
-    // so row-group stats prune the scan to colliding neighborhoods;
-    // an over-cap batch amortizes a sequential scan instead
-    val batchBandKeys: Array[Any] =
-      if (!storeIsBig) Array.empty[Any]
-      else banded.select(col("band_hash")).distinct()
-        .limit(DefaultMarkPruneCap + 1).collect().map(_.get(0))
-    val storeBandsAll = spark.read.parquet(s"$indexDir/bands")
-    val storeBands =
-      if (storeIsBig && batchBandKeys.isEmpty) storeBandsAll.limit(0)
-      else if (batchBandKeys.nonEmpty &&
-          batchBandKeys.length <= DefaultMarkPruneCap)
-        storeBandsAll.filter(
-          col("band_hash").isin(batchBandKeys.toIndexedSeq: _*))
-      else storeBandsAll
+    // the batch's band_hash set is pushed into the band_hash-clustered
+    // store ([[restrictTo]]) so the scan reads colliding neighborhoods
+    val storeBands = restrictTo(spark.read.parquet(s"$indexDir/bands"),
+      "band_hash", boundedKeys(banded, "band_hash", DefaultMarkPruneCap,
+        storeIsBig), DefaultMarkPruneCap)(identity)
     val candidates0 = banded
       .toDF("doc_b", "band", "band_hash")
       .join(storeBands.toDF("doc_a", "band", "band_hash"),
@@ -3359,34 +3334,21 @@ object Dedup {
         col("doc_a") === col("_mk_batch_id"), "left_anti")
       .select("doc_a", "doc_b")
     // POINT-FETCH the candidate targets' stored shingles when it can
-    // win: the distinct doc_a list is collected (bounded by
-    // pointFetchCap — a planning lookup, the q101 convention) and
-    // pushed as an id filter into the id-CLUSTERED shingles store, so
-    // the re-score deserializes only matching files/row-groups
-    // instead of every stored array. Two cost-based fallbacks to the
-    // scan-join, both the CHEAPER plan where they fire, not a
-    // compromise: a large target set (scattered point-fetches beyond
-    // the cap cost more than one sequential scan) and a SMALL store
-    // (measured at sf0.1: filtering a few-MB store costs more than
-    // scanning it — pruning pays when the store dwarfs the batch, the
-    // actual 100 TB regime). The store-size probe is metadata-only.
+    // win: the doc_a set (bounded by pointFetchCap, the q101 planning
+    // lookup) is pushed into the id-CLUSTERED shingles store
+    // ([[restrictTo]]), so the re-score deserializes only matching
+    // row groups. A SMALL store keeps the scan-join (measured at
+    // sf0.1: filtering a few-MB store costs more than scanning it —
+    // pruning pays when the store dwarfs the batch, the actual 100 TB
+    // regime). The store-size probe is metadata-only.
     // cache candidates only when the planning lookup will read them a
     // second time (small-store scan-join path reads them exactly once)
     val candidates =
       if (storeIsBig) candidates0.persist(StorageLevel.MEMORY_AND_DISK)
       else candidates0
-    val targetIds =
-      if (!storeIsBig) Array.empty[Any]
-      else candidates.select(col("doc_a")).distinct()
-        .limit(pointFetchCap + 1).collect().map(_.get(0))
-    val fetchSets =
-      if (storeIsBig && targetIds.isEmpty)
-        // zero candidates: nothing to fetch — an empty relation, not
-        // a full-store scan joined against nothing
-        storeSets.limit(0)
-      else if (targetIds.nonEmpty && targetIds.length <= pointFetchCap)
-        storeSets.filter(col("doc").isin(targetIds.toIndexedSeq: _*))
-      else storeSets
+    val fetchSets = restrictTo(storeSets, "doc",
+      boundedKeys(candidates, "doc_a", pointFetchCap, storeIsBig),
+      pointFetchCap)(identity)
     val dupOf = rescoreJaccardAB(candidates, fetchSets, sets, threshold)
       .groupBy(col("doc_b").as(idCol))
       .agg(min(col("doc_a")).as("dup_of"))

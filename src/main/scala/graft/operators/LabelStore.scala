@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -50,10 +50,9 @@ import org.apache.spark.sql.types._
   * common path; only a pathological batch degrades to the
   * distributed twin ([[Dedup.connectedComponentsStar]] at label
   * grain).
-  * [[Dedup.DefaultMarkPruneCap]] separately bounds the literal
-  * `isin` sets pushed into the store scans (the splitLeakageIndexed
-  * convention); above it each scan swaps to its semi-join twin
-  * while the merge stays on the driver. */
+  * The store scans are pushed key-set reads ([[Dedup.restrictTo]],
+  * capped by [[Dedup.DefaultMarkPruneCap]]); above the cap each scan
+  * swaps to its semi-join twin while the merge stays on the driver. */
 object LabelStore {
 
   /** Edge/row budget of the driver-side union-find. Both bounded
@@ -63,7 +62,7 @@ object LabelStore {
     * driver heap — far above any sane micro-batch's TOUCHED relation,
     * yet a hard bound so a pathological batch degrades to the
     * distributed twin instead of an OOM. Distinct from
-    * [[Dedup.DefaultMarkPruneCap]], which bounds literal isin pushes
+    * [[Dedup.DefaultMarkPruneCap]], which bounds the key sets pushed
     * into store scans. */
   val DefaultUfEdgeCap: Int = 5000000
 
@@ -89,24 +88,19 @@ object LabelStore {
     readTable(spark, s"$root/labels", LabelsSchema)
       .groupBy(col("doc_id")).agg(min(col("group")).as("group"))
 
-  /** Point-fetch the current labels of `ids` (a (doc_id) frame):
-    * bounded id sets push as an `isin` into the labels read
-    * (row-group pruning — the store is the scan's only input); over
-    * the cap the semi-join twin takes over. Docs absent from the
-    * store are absent from the result (callers coalesce to own id:
-    * an unseen doc is its own component). */
+  /** Point-fetch the current labels of `ids` (a (doc_id) frame): a
+    * pushed key-set read of the labels table ([[Dedup.restrictTo]];
+    * the semi-join twin past the cap). Docs absent from the store
+    * are absent from the result (callers coalesce to own id: an
+    * unseen doc is its own component). */
   def lookup(spark: SparkSession, root: String, ids: DataFrame,
       pruneCap: Int = Dedup.DefaultMarkPruneCap): DataFrame = {
     val idF = ids.select(col(ids.columns.head).cast("long")
       .as("doc_id")).distinct()
-    val keys: Array[Any] =
-      idF.limit(pruneCap + 1).collect().map(_.get(0))
-    val t = readTable(spark, s"$root/labels", LabelsSchema)
-    val pre =
-      if (keys.length <= pruneCap)
-        t.filter(col("doc_id").isin(keys.toIndexedSeq: _*))
-      else t.join(idF, Seq("doc_id"), "semi")
-    pre.groupBy(col("doc_id")).agg(min(col("group")).as("group"))
+    Dedup.restrictTo(readTable(spark, s"$root/labels", LabelsSchema),
+        "doc_id", Dedup.boundedKeys(idF, "doc_id", pruneCap), pruneCap)(
+        _.join(idF, Seq("doc_id"), "semi"))
+      .groupBy(col("doc_id")).agg(min(col("group")).as("group"))
   }
 
   /** Full membership of the components labeled by `groups` (a
@@ -119,12 +113,9 @@ object LabelStore {
       pruneCap: Int = Dedup.DefaultMarkPruneCap): DataFrame = {
     val gF = groups.select(col(groups.columns.head).cast("long")
       .as("group")).distinct()
-    val keys: Array[Any] =
-      gF.limit(pruneCap + 1).collect().map(_.get(0))
-    val t = readTable(spark, s"$root/labels", LabelsSchema)
-    if (keys.length <= pruneCap)
-      t.filter(col("group").isin(keys.toIndexedSeq: _*))
-    else t.join(gF, Seq("group"), "semi")
+    Dedup.restrictTo(readTable(spark, s"$root/labels", LabelsSchema),
+      "group", Dedup.boundedKeys(gF, "group", pruneCap), pruneCap)(
+      _.join(gF, Seq("group"), "semi"))
   }
 
   /** Seed the store from at-rest state — the once-per-store form for
@@ -306,11 +297,10 @@ object LabelStore {
     //    sub-second; a dup-dominated batch (near-dup cliques carry
     //    C(n,2) pairs) stays on the fast driver path instead of
     //    falling into distributed label-grain CC rounds;
-    //  - `pruneCap` keeps its store-wide meaning (the
-    //    splitLeakageIndexed convention): the largest literal set
-    //    pushed as an isin into a store scan — above it the scans
-    //    swap to their semi-join twins but the merge STAYS on the
-    //    driver.
+    //  - `pruneCap` keeps its store-wide meaning (Dedup.restrictTo):
+    //    the largest key set pushed into a store scan — above it the
+    //    scans swap to their semi-join twins but the merge STAYS on
+    //    the driver.
     val storeTag = new org.apache.hadoop.fs.Path(root)
       .getParent.getName
     // the two bounding collects are independent (batch rows vs the
@@ -406,18 +396,21 @@ object LabelStore {
     // anchors of the batch's keys (≤ one row per key by the
     // append-if-absent rule below)
     import spark.implicits._
-    // isin when the key set fits the push cap, semi-join twin above
-    // it (the splitLeakageIndexed convention) — the merge itself
-    // stays on the driver either way
-    def fetch(t: DataFrame, c: String, keys: Seq[Any]): DataFrame =
-      if (keys.size <= pruneCap) t.filter(col(c).isin(keys: _*))
-      else t.join(broadcast(keys.map(k => Tuple1(k.toString))
-          .toDF("_ls_k")),
-        col(c).cast("string") === col("_ls_k"), "left_semi")
+    // a pushed key-set read (Dedup.restrictTo); past the cap it
+    // semi-joins (or, with `exclude`, anti-joins) a broadcast key
+    // frame of the column's own type — the merge itself stays on the
+    // driver either way
+    def fetch(t: DataFrame, c: String, keys: Iterable[Any],
+        exclude: Boolean = false): DataFrame =
+      Dedup.restrictTo(t, c, Some(keys), pruneCap, exclude)(
+        _.join(broadcast(spark.createDataFrame(
+            java.util.Arrays.asList(keys.toSeq.map(Row(_)): _*),
+            StructType(Seq(t.schema(c))))),
+          Seq(c), if (exclude) "left_anti" else "left_semi"))
     val anchorMap: Map[String, Long] =
       if (batchKeys.isEmpty) Map.empty
       else fetch(readTable(spark, s"$root/anchors", AnchorsSchema),
-          "ckey", batchKeys.toIndexedSeq)
+          "ckey", batchKeys)
         .groupBy(col("ckey")).agg(min(col("doc_id")).as("doc_id"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     // key edges: within-batch to the batch key-min, plus one edge
@@ -440,7 +433,7 @@ object LabelStore {
     val curMap: Map[Long, Long] =
       if (nodes.isEmpty) Map.empty[Long, Long]
       else fetch(readTable(spark, s"$root/labels", LabelsSchema),
-          "doc_id", nodes.toIndexedSeq)
+          "doc_id", nodes)
         .groupBy(col("doc_id")).agg(min(col("group")).as("group"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val curLabel: Map[Long, Long] = curMap.withDefault(identity)
@@ -491,17 +484,10 @@ object LabelStore {
         val remap = broadcast(
           changed.toSeq.toDF("group", "_ls_new"))
         val retired = readTable(spark, s"$root/labels", LabelsSchema)
-        val pushed = fetch(retired, "group", changed.keys.toIndexedSeq)
-        val exclBatch =
-          if (batchIdSet.size <= pruneCap)
-            (d: DataFrame) => d.filter(
-              !col("doc_id").isin(batchIdSet.toIndexedSeq: _*))
-          else (d: DataFrame) => d.join(
-            broadcast(batchIds.toIndexedSeq.toDF("doc_id")),
-            Seq("doc_id"), "left_anti")
-        val rewrites = exclBatch(pushed
-          .join(remap, Seq("group"))
-          .select(col("doc_id"), col("_ls_new").as("group")))
+        val rewrites = fetch(fetch(retired, "group", changed.keys)
+            .join(remap, Seq("group"))
+            .select(col("doc_id"), col("_ls_new").as("group")),
+          "doc_id", batchIdSet, exclude = true)
         batchRows.toSeq.toDF("doc_id", "group")
           .unionByName(rewrites)
       }
@@ -516,7 +502,7 @@ object LabelStore {
     * semi-join twin and the label-grain merge runs
     * [[Dedup.connectedComponentsStar]] — at that batch size the
     * sequential scans read less than scattered per-key probes would
-    * (the pruneCap convention), and label-grain CC is already
+    * ([[Dedup.restrictTo]]), and label-grain CC is already
     * collapsed (≪ doc-grain rounds). */
   private def planDistributed(spark: SparkSession, root: String,
       b: DataFrame, pairs: DataFrame): (DataFrame, DataFrame) = {

@@ -770,29 +770,18 @@ object Streams {
             // identical drift rows
             val grpTouched = touchedMembers()
               .localCheckpoint() // read twice (id collect + join)
-            // POINT-FETCH (the splitLeakageIndexed convention,
-            // gated on the same latch as the CC regime): past the
-            // store-size gate the touched components' bounded
-            // member-id set pushes as an isin into the
-            // prior-manifest scan, so per-batch drift IO tracks
-            // the batch's neighborhood instead of the
-            // landed-manifest size; over-cap sets (or the
-            // small-store regime, where one full scan is the
-            // cheaper plan) fall back to the manifest scan + join.
-            val memberKeys: Array[Any] =
-              if (!boundedLatched) Array.empty[Any]
-              else grpTouched.select(col(idCol))
-                .limit(graft.operators.Dedup.DefaultMarkPruneCap
-                  + 1).collect().map(_.get(0))
-            val pushMembers = memberKeys.nonEmpty &&
-              memberKeys.length <=
-                graft.operators.Dedup.DefaultMarkPruneCap
-            val priorManAll = s.read.parquet(outDir)
-              .filter(col("batch_id") < batchId)
-            val priorMan = (if (pushMembers)
-                priorManAll.filter(col(idCol)
-                  .isin(memberKeys.toIndexedSeq: _*))
-              else priorManAll)
+            // POINT-FETCH (gated on the same latch as the CC
+            // regime): past the store-size gate the touched
+            // components' member ids are a pushed key-set read of
+            // the prior-manifest scan (Dedup.restrictTo), so
+            // per-batch drift IO tracks the batch's neighborhood
+            // instead of the landed-manifest size; over the cap or
+            // below the gate the manifest scan + join runs.
+            val cap = Dedup.DefaultMarkPruneCap
+            val priorMan = Dedup.restrictTo(s.read.parquet(outDir)
+                .filter(col("batch_id") < batchId), idCol,
+                Dedup.boundedKeys(grpTouched, idCol, cap,
+                  boundedLatched), cap)(identity)
               .select(col(idCol), col("split").as("old_split"))
             // materialized UNDER the lease — the drift frame is
             // complete before the lease releases, whatever a
@@ -1108,22 +1097,15 @@ object Streams {
             // so refuse loudly here: the batch's item ids must be
             // absent from the at-rest items table (this tag's own
             // files excluded — a crashed attempt's half-landed seg
-            // is not a straddle). Bounded: batch ids pushed as a
-            // parquet-native isin up to the prune cap, semi-join
-            // past it (the DefaultMarkPruneCap convention).
+            // is not a straddle). Bounded: a pushed key-set read of
+            // the batch ids (Dedup.restrictTo), semi-join past the cap.
             graft.Phases.time(s"mm_${name}_straddle[b$batchId]") {
               val (_, itemsRest) = splitTable(s, s"$mRoot/items",
                 tag, MmItemsSchema)
-              val bIds = items.select(col("id")).distinct()
-                .limit(graft.operators.Dedup.DefaultMarkPruneCap + 1)
-                .collect().map(_.getLong(0))
-              val straddle =
-                if (bIds.length <=
-                    graft.operators.Dedup.DefaultMarkPruneCap)
-                  itemsRest.filter(col("id")
-                    .isin(bIds.toIndexedSeq: _*))
-                else itemsRest.join(items.select(col("id")),
-                  Seq("id"), "left_semi")
+              val cap = Dedup.DefaultMarkPruneCap
+              val straddle = Dedup.restrictTo(itemsRest, "id",
+                  Dedup.boundedKeys(items, "id", cap), cap)(
+                _.join(items.select(col("id")), Seq("id"), "left_semi"))
               require(straddle.limit(1).isEmpty,
                 s"modality store $mRoot: batch $tag re-presents " +
                   "item ids the items table already holds — an " +
@@ -1169,44 +1151,6 @@ object Streams {
       }
     }
   }
-
-  /** Bounded candidate set for a pushed store read (the
-    * DefaultMarkPruneCap convention, shared by both delta legs):
-    * collect `df`'s distinct `c` values up to the cap — None past
-    * it, meaning the caller's semi-join twin takes over. The frames
-    * passed here are batch-bounded and already checkpointed, so the
-    * collect reads materialized blocks.
-    *
-    * `enabled = false` (the ingest's once-per-stream size-gate
-    * verdict, the storeAtLeastBytes convention) returns None
-    * WITHOUT collecting: below the gate the stores are small enough
-    * that the semi-join scan is the cheaper plan and the planning
-    * collects would be pure per-batch fixed cost (PLANS.md
-    * "Per-batch FIXED cost vs batch grain" measured ~0.3 s per
-    * (modality, batch) of collect jobs at fixture scale); past the
-    * gate the collects buy stats/dictionary-pruned scans instead of
-    * per-batch full-store passes. */
-  private def pushedKeys(df: DataFrame, c: String,
-      enabled: Boolean = true,
-      cap: Int = graft.operators.Dedup.DefaultMarkPruneCap)
-      : Option[Array[Any]] =
-    if (!enabled) None
-    else {
-      val ks = df.select(col(c)).distinct().limit(cap + 1)
-        .collect().map(_.get(0))
-      if (ks.length <= cap) Some(ks) else None
-    }
-
-  /** Restrict table `t` to rows whose `c` is in the bounded set:
-    * a parquet-native isin under the cap (stats/dictionary pruning,
-    * NO join exchange — the store is the scan's only input), the
-    * semi-join twin against `kf` past it. */
-  private def restrictTo(t: DataFrame, c: String,
-      ks: Option[Array[Any]], kf: => DataFrame): DataFrame =
-    ks match {
-      case Some(a) => t.filter(col(c).isin(a.toIndexedSeq: _*))
-      case None => t.join(kf, Seq(c), "left_semi")
-    }
 
   /** The modality items table's read schema — shared by the delta
     * derivation and the ingest's one-batch-per-item guard. */
@@ -1284,19 +1228,24 @@ object Streams {
     val champsAll = oldCh.unionByName(segCh)
     val docsAll = s.read.schema(textDocsSchema)
       .parquet(s"$storeRoot/text/docs")
+    // every store-sided read below is a pushed key-set read
+    // (Dedup.restrictTo) of a set bounded by the batch's touched
+    // state; it semi-joins the key frame past the cap or below the
+    // ingest's once-per-stream size gate (`pushReads`: there the
+    // collects would be pure per-batch fixed cost, PLANS.md
+    // "Per-batch FIXED cost vs batch grain")
+    val cap = Dedup.DefaultMarkPruneCap
     // champion winners of a canon set, pre/post (the report's
-    // argmax). PUSHED where the canon set is cheap to collect (the
-    // prepDeltaRows convention — r18 verdict #3 generalized): the
-    // batch's canons come off this tag's own seg files, so the
-    // champs scans prune to the batch's canon neighborhoods instead
-    // of semi-joining the full canon-grain table per batch. The
-    // ownCanons calls below stay semi-joins: their canon set hangs
-    // off the lazy withOwner chain, and collecting it would re-run
-    // the chain (the measured checkpoint-vs-lazy tradeoff kept that
-    // chain lazy) — a residual, noted, not hidden.
-    def winnersOf(ch: DataFrame, ks: Option[Array[Any]],
+    // argmax). The batch's canons come off this tag's own seg files,
+    // so the champs scans prune to the batch's canon neighborhoods.
+    // The ownCanons calls below stay semi-joins: their canon set
+    // hangs off the lazy withOwner chain, and collecting it would
+    // re-run the chain (the measured checkpoint-vs-lazy tradeoff
+    // kept that chain lazy) — a residual, noted, not hidden.
+    def winnersOf(ch: DataFrame, ks: Option[Set[Any]],
         canons: => DataFrame): DataFrame =
-      restrictTo(ch, canonCol, ks, canons)
+      Dedup.restrictTo(ch, canonCol, ks, cap)(
+          _.join(canons, Seq(canonCol), "left_semi"))
         .groupBy(col(canonCol))
         .agg(max(struct(col("n_chars").cast("long").as("c"),
           (-col(idCol).cast("long")).as("negid"))).as("_d_best"))
@@ -1305,7 +1254,8 @@ object Streams {
     def winners(ch: DataFrame, canons: DataFrame): DataFrame =
       winnersOf(ch, None, canons)
     val batchCanons = segDocs.select(col(canonCol)).distinct()
-    val batchCanonSet = pushedKeys(segDocs, canonCol, pushReads)
+    val batchCanonSet = Dedup.boundedKeys(segDocs, canonCol, cap,
+      pushReads)
     val flips = graft.Phases.time(s"mmd_flips[$tag]") {
       winnersOf(champsAll, batchCanonSet, batchCanons)
         .withColumnRenamed("_d_win", "_d_new")
@@ -1340,12 +1290,14 @@ object Streams {
           .select(col("_d_old").as("_d_doc")))
         .distinct().localCheckpoint()
     }
-    val affOwnerSet = pushedKeys(affOwners, "_d_doc", pushReads)
+    val affOwnerSet = Dedup.boundedKeys(affOwners, "_d_doc",
+      cap, pushReads)
     // the corpus-grain docs table pruned to the flip docs — serves
     // both signed contrib legs (their win sets are subsets of
     // affOwners by construction)
-    val docsFlips = restrictTo(docsAll, idCol, affOwnerSet,
-      affOwners.withColumnRenamed("_d_doc", idCol))
+    val docsFlips = Dedup.restrictTo(docsAll, idCol, affOwnerSet, cap)(
+      _.join(affOwners.withColumnRenamed("_d_doc", idCol), Seq(idCol),
+        "left_semi"))
     val textKept = contrib(flips.select(col(canonCol),
         col("_d_new").as("_d_win")), docsFlips, 1L)
       .unionByName(contrib(flips.filter(col("_d_old").isNotNull)
@@ -1376,32 +1328,35 @@ object Streams {
         .parquet(s"$mr/items")
       val (segLb, oldLb) = splitTable(s, s"$mr/labels/labels", tag,
         graft.operators.LabelStore.LabelsSchema)
-      // every store-sided read below rides the pushed-isin
-      // convention (prepDeltaRows): the items scan prunes to the
-      // flip docs' owner neighborhoods, then items/labels prune to
-      // the affected item ids — full-table semi-joins only past the
-      // cap
+      // the items scan prunes to the flip docs' owner
+      // neighborhoods, then items/labels prune to the affected
+      // item ids
       val affIds = segIt.select(col("id"))
         .unionByName(segLb.select(col("doc_id").as("id")))
-        .unionByName(restrictTo(itemsAll, "owner", affOwnerSet,
-          affOwners.withColumnRenamed("_d_doc", "owner"))
+        .unionByName(Dedup.restrictTo(itemsAll, "owner", affOwnerSet,
+            cap)(_.join(affOwners.withColumnRenamed("_d_doc", "owner"),
+            Seq("owner"), "left_semi"))
           .select(col("id")))
         .distinct().localCheckpoint()
-      val affIdSet = pushedKeys(affIds, "id", pushReads)
-      val itemsAff = restrictTo(itemsAll, "id", affIdSet, affIds)
+      val affIdSet = Dedup.boundedKeys(affIds, "id", cap, pushReads)
+      val itemsAff = Dedup.restrictTo(itemsAll, "id", affIdSet, cap)(
+        _.join(affIds, Seq("id"), "left_semi"))
       def memIn(lb: DataFrame, as: String): DataFrame =
-        restrictTo(lb, "doc_id", affIdSet,
-            affIds.withColumnRenamed("id", "doc_id"))
+        Dedup.restrictTo(lb, "doc_id", affIdSet, cap)(
+            _.join(affIds.withColumnRenamed("id", "doc_id"),
+              Seq("doc_id"), "left_semi"))
           .groupBy(col("doc_id")).agg(min(col("group")).as(as))
           .withColumnRenamed("doc_id", "id")
       val pre = memIn(oldLb, "_d_gpre")
       val post = memIn(oldLb.unionByName(segLb), "_d_gpost")
-      val affItemOwnerSet = pushedKeys(itemsAff, "owner", pushReads)
+      val affItemOwnerSet = Dedup.boundedKeys(itemsAff, "owner", cap,
+        pushReads)
       val withOwner = itemsAff
         .join(pre, Seq("id"), "left")
         .join(post, Seq("id"))
-        .join(restrictTo(docsAll, idCol, affItemOwnerSet,
-            itemsAff.select(col("owner").as(idCol)).distinct())
+        .join(Dedup.restrictTo(docsAll, idCol, affItemOwnerSet, cap)(
+            _.join(itemsAff.select(col("owner").as(idCol)).distinct(),
+              Seq(idCol), "left_semi"))
           .select(col(idCol).as("owner"), col(sourceCol),
             col(canonCol)), Seq("owner"))
       val ownCanons = withOwner.select(col(canonCol)).distinct()
@@ -1424,10 +1379,12 @@ object Streams {
         (col("_d_cpost") - col("_d_cpre")).as("d_kept"),
         ((col("_d_cpost") - col("_d_cpre")) * col("mass"))
           .as("d_kept_mass"))
-      val segItOwnerSet = pushedKeys(segIt, "owner", pushReads)
+      val segItOwnerSet = Dedup.boundedKeys(segIt, "owner", cap,
+        pushReads)
       val itemRows = segIt
-        .join(restrictTo(docsAll, idCol, segItOwnerSet,
-            segIt.select(col("owner").as(idCol)).distinct())
+        .join(Dedup.restrictTo(docsAll, idCol, segItOwnerSet, cap)(
+            _.join(segIt.select(col("owner").as(idCol)).distinct(),
+              Seq(idCol), "left_semi"))
           .select(col(idCol).as("owner"), col(sourceCol),
             col(canonCol)), Seq("owner"))
         .select(lit(m).as("modality"), col(sourceCol).as("source"),
@@ -2056,29 +2013,22 @@ object Streams {
     val (segLb, oldLb) =
       splitTable(s, s"$storeRoot/labels/labels", tag, lbSchema)
     val allLb = oldLb.unionByName(segLb)
-    // PUSHED-ISIN bounded reads (the DefaultMarkPruneCap
-    // convention, r18 verdict #3): every candidate set below
-    // (batch keys, affected groups, affected ids) is bounded by the
-    // batch's touched state and already materialized — collecting
-    // it up to the cap and pushing a parquet-native isin turns the
-    // flags/labels reads from full-table semi-joins (a broadcast +
-    // whole-store scan PER BATCH — invisible at fixture scale,
-    // a per-batch full-store pass at 100 TB) into stats/dictionary-
-    // pruned scans with no join at all. Doc-id sets prune row
-    // groups hard (flags/labels segments are id-clustered per
-    // batch); ex_key (md5) sets cannot use min/max stats but still
-    // drop the join exchange and keep dictionary/bloom pruning.
-    // Over the cap the semi-join twin takes over unchanged.
-    def restrict(t: DataFrame, c: String, ks: Option[Array[Any]],
-        kf: => DataFrame): DataFrame = restrictTo(t, c, ks, kf)
-    def pushed(df: DataFrame, c: String): Option[Array[Any]] =
-      pushedKeys(df, c, cap = cap)
+    // PUSHED key-set reads (Dedup.restrictTo, r18 verdict #3): every
+    // key set below (batch keys, affected groups, affected ids) is
+    // bounded by the batch's touched state and already materialized,
+    // so the flags/labels reads are stats/dictionary-pruned scans
+    // with no join, not a broadcast + whole-store scan PER BATCH.
+    // Doc-id sets prune row groups hard (flags/labels segments are
+    // id-clustered per batch); ex_key (md5) sets cannot use min/max
+    // stats but still drop the join exchange and keep
+    // dictionary/bloom pruning. Past the cap each read semi-joins.
     // exact-champion flips among the batch's keys
     val batchKeys = segFl.select(col("ex_key")).distinct()
-    val batchKeySet = pushed(segFl, "ex_key")
-    def keyMin(fl: DataFrame, ks: Option[Array[Any]],
+    val batchKeySet = Dedup.boundedKeys(segFl, "ex_key", cap)
+    def keyMin(fl: DataFrame, ks: Option[Set[Any]],
         kf: => DataFrame): DataFrame =
-      restrict(fl, "ex_key", ks, kf)
+      Dedup.restrictTo(fl, "ex_key", ks, cap)(
+          _.join(kf, Seq("ex_key"), "left_semi"))
         .groupBy(col("ex_key"))
         .agg(min(col(idCol)).as("_tp_kmin"))
     val keyFlips = graft.Phases.time(s"tpd_flips[$tag]") {
@@ -2101,9 +2051,10 @@ object Streams {
           .select(col("_tp_kold").as("doc_id")))
         .distinct().localCheckpoint()
     }
-    val coreDocSet = pushed(coreDocs, "doc_id")
+    val coreDocSet = Dedup.boundedKeys(coreDocs, "doc_id", cap)
     def curLabels(lb: DataFrame): DataFrame =
-      restrict(lb, "doc_id", coreDocSet, coreDocs)
+      Dedup.restrictTo(lb, "doc_id", coreDocSet, cap)(
+          _.join(coreDocs, Seq("doc_id"), "left_semi"))
         .groupBy(col("doc_id"))
         .agg(min(col("group")).as("group"))
     val affGroups = graft.Phases.time(s"tpd_groups[$tag]") {
@@ -2117,9 +2068,10 @@ object Streams {
     // min(group) per doc — exact for every fetched doc because an
     // affected doc's true current label is itself in affGroups
     // (components merge as units, and retired labels never return)
-    val affGroupSet = pushed(affGroups, "group")
+    val affGroupSet = Dedup.boundedKeys(affGroups, "group", cap)
     def membersIn(lb: DataFrame, as: String): DataFrame =
-      restrict(lb, "group", affGroupSet, affGroups)
+      Dedup.restrictTo(lb, "group", affGroupSet, cap)(
+          _.join(affGroups, Seq("group"), "left_semi"))
         .groupBy(col("doc_id")).agg(min(col("group")).as(as))
     val memPre = membersIn(oldLb, "_tp_gpre")
     val memPost = membersIn(allLb, "_tp_gpost")
@@ -2129,18 +2081,18 @@ object Streams {
         .unionByName(coreDocs)
         .distinct().localCheckpoint()
     }
-    val affIdSet = pushed(affIds, "doc_id")
-    def affIdsAs(c: String): DataFrame =
-      affIds.withColumnRenamed("doc_id", c)
+    val affIdSet = Dedup.boundedKeys(affIds, "doc_id", cap)
+    def affIdsIn(t: DataFrame): DataFrame =
+      Dedup.restrictTo(t, idCol, affIdSet, cap)(_.join(
+        affIds.withColumnRenamed("doc_id", idCol), Seq(idCol), "left_semi"))
     val att = graft.Phases.time(s"tpd_att[$tag]") {
-      restrict(flagsAll, idCol, affIdSet, affIdsAs(idCol))
-        .localCheckpoint()
+      affIdsIn(flagsAll).localCheckpoint()
     }
-    val preSeen = restrict(oldFl, idCol, affIdSet, affIdsAs(idCol))
+    val preSeen = affIdsIn(oldFl)
       .select(col(idCol), lit(true).as("_tp_pre"))
     // exact-champion status over ALL affected docs' keys
     val affKeys = att.select(col("ex_key")).distinct()
-    val affKeySet = pushed(att, "ex_key")
+    val affKeySet = Dedup.boundedKeys(att, "ex_key", cap)
     val kPre = keyMin(oldFl, affKeySet, affKeys)
       .withColumnRenamed("_tp_kmin", "_tp_kpre")
     val kPost = keyMin(flagsAll, affKeySet, affKeys)

@@ -11,7 +11,8 @@ import org.scalatest.matchers.should.Matchers
   * quoted title of the section that tables it, because the code that
   * took the measurement is no longer in the tree. This keeps every
   * such title matching a PLANS.md heading, and keeps the names of the
-  * removed measurement mains out of `src`. */
+  * removed measurement mains out of `src`. It also keeps the bounded
+  * key-set read behind its one helper. */
 class CitationSpec extends AnyFunSuite with Matchers {
 
   private lazy val sources: Seq[(String, String)] = {
@@ -28,6 +29,16 @@ class CitationSpec extends AnyFunSuite with Matchers {
     sources.flatMap { case (path, text) =>
       removed.findAllIn(text).map(m => s"$path: $m")
     } shouldBe empty
+  }
+
+  test("no main source pushes a collected key array as a literal isin") {
+    // a bounded key-set read goes through Dedup.boundedKeys and
+    // Dedup.restrictTo, which push the keys as one InSet
+    val splat = ("\\.isin\\(\\s*\\w+\\.toIndexedSeq" + ": _\\*\\)").r
+    sources.filter(_._1.startsWith(Paths.get("src", "main").toString))
+      .flatMap { case (path, text) =>
+        splat.findAllIn(text).map(m => s"$path: $m")
+      } shouldBe empty
   }
 
   test("every quoted PLANS.md citation in src matches a PLANS.md heading") {

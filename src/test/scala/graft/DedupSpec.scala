@@ -530,6 +530,70 @@ class DedupSpec extends AnyFunSuite with SparkSpec with Matchers {
     } finally Scratch.deleteRecursively(new java.io.File(root))
   }
 
+  test("pushed key-set read: an In in the scan's PushedFilters and no " +
+    "join under the cap, the site's own form past it or with the gate " +
+    "off, nothing for no keys, the semi-join's rows for null and Int keys") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_pushedread_").toString
+    try {
+      // a long key column holding a null, as a one-file parquet store
+      (None +: (0L until 20L).map(Some(_)))
+        .map(k => (k, k.fold("none")(i => s"v$i"))).toDF("k", "v")
+        .repartition(1).write.parquet(s"$root/store")
+      val t = spark.read.parquet(s"$root/store")
+      val kf = Seq(3L, 5L, 7L, 100L).toDF("k")
+      val withNull = Seq(Some(3L), None).toDF("k")
+      val ints = Seq(3, 5).toDF("k")
+      def semi(keys: DataFrame): DataFrame => DataFrame =
+        _.join(keys, Seq("k"), "left_semi")
+      def anti(keys: DataFrame): DataFrame => DataFrame =
+        _.join(keys, Seq("k"), "left_anti")
+      // (case, key set, exclude, over-cap form, expected rows, plan)
+      Seq(
+        ("under the cap", Dedup.boundedKeys(kf, "k", 4), false, semi(kf),
+          semi(kf)(t), "pushed"),
+        ("past the cap", Dedup.boundedKeys(kf, "k", 3), false, semi(kf),
+          semi(kf)(t), "join"),
+        ("gate off", Dedup.boundedKeys(kf, "k", 4, gate = false), false,
+          identity[DataFrame] _, t, "scan"),
+        ("no keys", Dedup.boundedKeys(kf.limit(0), "k", 4), false,
+          semi(kf), t.limit(0), "empty"),
+        ("a null key", Dedup.boundedKeys(withNull, "k", 4), false,
+          semi(withNull), semi(withNull)(t), "pushed"),
+        ("Int keys on a long column", Some(Set[Any](3, 5)), false,
+          semi(ints), semi(ints)(t), "pushed"),
+        // under the cap the exclusion is `NOT IN`, which drops a null
+        // key the anti-join keeps
+        ("excluded keys", Dedup.boundedKeys(kf, "k", 4), true, anti(kf),
+          anti(kf)(t).filter(col("k").isNotNull), "pushed"),
+        ("excluded keys past the cap", Dedup.boundedKeys(kf, "k", 3), true,
+          anti(kf), anti(kf)(t), "join")
+      ).foreach { case (name, keys, exclude, overCap, want, plan) =>
+        withClue(name) {
+          val got = Dedup.restrictTo(t, "k", keys, 4, exclude)(overCap)
+          got.collect().map(_.toString).sorted shouldBe
+            want.collect().map(_.toString).sorted
+          val exec = new AdaptiveSparkPlanHelper {}
+          val p = got.queryExecution.executedPlan
+          val joins = exec.collect(p) { case j: BaseJoinExec => j }
+          val pushedIn = exec.collect(p) { case s: FileSourceScanExec =>
+            s.metadata("PushedFilters") }.exists(_.contains("In(k,"))
+          plan match {
+            case "pushed" => (joins.isEmpty, pushedIn) shouldBe (true, true)
+            case "join" => (joins.nonEmpty, pushedIn) shouldBe (true, false)
+            case "scan" => (joins.isEmpty, pushedIn) shouldBe (true, false)
+            case "empty" => got.collect() shouldBe empty
+          }
+        }
+      }
+    } finally Scratch.deleteRecursively(new java.io.File(root))
+  }
+
   test("simhash pigeonhole: wider-key Manku parameterizations give identical pairs") {
     import spark.implicits._
     val minimal = Dedup.simhashNearDupPairs(corpus, "doc_id", "text", radius = 5)
