@@ -1,9 +1,25 @@
 package graft
 
+import java.lang.management.ManagementFactory
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
+import scala.util.Try
+import scala.util.control.NonFatal
+
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageSubmitted}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.Bridge
+
+import graft.operators.CorpusStats
 
 /** Benchmark main: times every SparkEntry query end-to-end on
-  * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
+  * SPARK_GRAFT_SF_DIR and prints two JSON lines, which it also writes
+  * to SPARK_GRAFT_BENCH_OUT, its one output file.
   *
   * Each query is materialized with a noop-format write so every
   * output column is computed (a bare count() would let Catalyst prune
@@ -13,580 +29,241 @@ import scala.jdk.CollectionConverters._
   * and JIT warmth measured ±4× on byte-identical code across rounds
   * (r13 q122), so the recorded walls are post-warmth and the cold
   * walls ride alongside for attribution.
+  *
+  * Around each timed pass it takes direct readings, one map per query,
+  * so a slow wall explains itself from the artifact:
+  *   - gc_sec, cpu_sec: this JVM's GC time and process CPU time;
+  *   - jit_sec: JIT compilation time (a code-cache flush or a
+  *     deoptimization storm recompiles warm kernels);
+  *   - codegen_n: Janino whole-stage compiles (0 for a warm plan unless
+  *     its generated source varies run to run or the cache evicted it);
+  *   - jobs_n, tasks_max: Spark jobs started and the widest stage's
+  *     task count, the plan's shape (tasks_max ≪ cores is a serial
+  *     plan);
+  *   - other_cpu_sec: CPU time the rest of the machine spent
+  *     (/proc/stat busy ticks minus this process's /proc/self/stat);
+  *   - steal_sec: CPU time the hypervisor gave other guests;
+  *   - phase_sec: the Phases tags inside multi-phase lifecycles.
   */
 object Bench {
+  type Query = (SparkSession, String) => DataFrame
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = GraftSession.cpus
-    val spark = GraftSession(cpus)
-
+    val only = SparkEntry.queryFilter("SPARK_GRAFT_BENCH_ONLY")
+    val spark = GraftSession(GraftSession.cpus)
     // one warm-up pass over the inputs so JIT + file-footer caches
     // don't bill the first query for session startup
     Tables.names.foreach(n => Tables(spark, sfDir, n).count())
-
-    // optional comma-separated filter for iterating on single queries
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").toSet)
-
-    // pre-build the shared version-keyed at-rest stores (pair store,
-    // postings index) OUTSIDE the timed loop: their once-per-corpus-
-    // version build cost is its own metric below, so the steady-state
-    // query walls measure queries — a store that already exists for
-    // this corpus version makes this a metadata-only probe. Respects
-    // the `only` filter (no store build for an iteration run that
-    // reads neither) and isolates build failures (sentinel −1.0) the
-    // same way the timed loop isolates query failures.
+    // the shared at-rest stores are built OUTSIDE the timed loop: their
+    // once-per-corpus-version cost is store_build_sec (−1.0 for a failed
+    // build, which its consumers then repeat lazily)
     val storeBuild = SparkEntry.prepareSharedStores(spark, sfDir, only)
     Phases.drain() // the builds' own phase tags live in store_build_sec
+    val width = new AtomicInteger(0)
+    val jobs = new AtomicInteger(0)
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onStageSubmitted(ev: SparkListenerStageSubmitted): Unit =
+        width.getAndUpdate(m => math.max(m, ev.stageInfo.numTasks))
+      override def onJobStart(ev: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    })
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    val failed = scala.collection.mutable.ListBuffer.empty[String]
-    // Per-query JVM GC time and process CPU time: round 4's driver run
-    // recorded q49 = 48 s where an immediate local re-run gives 1.3 s.
-    // Wall-clock alone can't distinguish "the plan got slow" from "the
-    // box was busy / the heap thrashed"; these two deltas can. A query
-    // whose gc_sec ≈ wall is a heap problem; a query whose cpu_sec ≪
-    // wall × cores on an idle plan is external contention.
-    import java.lang.management.ManagementFactory
-    def gcMillis(): Long = ManagementFactory.getGarbageCollectorMXBeans
-      .asScala.map(_.getCollectionTime.max(0L)).sum
-    def cpuNanos(): Long = ManagementFactory.getOperatingSystemMXBean match {
-      case os: com.sun.management.OperatingSystemMXBean => os.getProcessCpuTime
-      case _ => -1L
-    }
-    val gcSec = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val cpuSec = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    // Widest stage (task count) each query ran: the third attribution
-    // axis. r7's two slow entries took isolated reruns to tell apart —
-    // q69 (structural: 9 cpu-s on a 1-task stage) vs q92 (ambient:
-    // clean plan, oversubscribed host). With this field the artifact
-    // itself distinguishes "few tasks" (tasks_max ≪ cores: a serial
-    // plan — fix the query) from "slow host" (tasks_max ≈ cores and
-    // calib_mt inflated: nothing to fix). Stage-submitted events are
-    // async; Bridge.drainListenerBus flushes them before each reading.
-    val tasksMax = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    // Classes Janino compiled during each timed pass (Spark's
-    // JVM-wide CodegenMetrics counter). The warm pass just compiled
-    // the same plans, so a count here is either generated source that
-    // differs from run to run (streaming queries' per-batch plans) or
-    // classes the generated-code cache evicted
-    // (spark.sql.codegen.cache.maxEntries, set in build.sbt).
-    val codegenN = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    def codegenCount(): Long =
-      org.apache.spark.metrics.source.CodegenMetrics
-        .METRIC_COMPILATION_TIME.getCount
-    // Per-query phase walls (Phases.time call sites inside multi-phase
-    // lifecycles — q111's index build / per-batch drains / sink
-    // writes): drained after each query so a slow composite entry is
-    // attributable from the artifact alone.
-    val phaseSec =
-      scala.collection.mutable.LinkedHashMap.empty[String, Seq[(String, Double)]]
-    val stageWidth = new java.util.concurrent.atomic.AtomicInteger(0)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageSubmitted(
-            ev: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
-          stageWidth.getAndUpdate(m => math.max(m, ev.stageInfo.numTasks))
-      })
-    // Fixed single-thread CPU probe (xorshift64*, 2e8 steps): a pure
-    // machine-speed number, identical work every run. When the box is
-    // healthy it is ~0.2-0.4 s; under the host-contention episodes
-    // that inflated the r4 driver run (and one r5 local run) it
-    // inflates proportionally — so a slow bench JSON carries its own
-    // exculpatory (or damning) evidence. Run before AND after: an
-    // episode that starts mid-run shows up in the delta.
-    def spin(): Long = {
-      var x = 0x9E3779B97F4A7C15L; var i = 0
-      while (i < 200000000) {
-        x ^= x >>> 12; x ^= x << 25; x ^= x >>> 27; i += 1
+    val readings = mutable.Map.empty[String, mutable.LinkedHashMap[String, Double]]
+    val walls = mutable.ListBuffer.empty[(String, Double)]
+    val failed = mutable.ListBuffer.empty[String]
+    val phases = mutable.LinkedHashMap.empty[String, Seq[(String, Double)]]
+    selected.foreach { case (name, fn) =>
+      def record(key: String, v: Double): Unit =
+        readings.getOrElseUpdate(key, mutable.LinkedHashMap.empty)(name) = v
+      // untimed warm pass; a failure is the timed pass's to report
+      pass(spark, sfDir, fn).foreach(record("cold_sec", _))
+      width.set(0); jobs.set(0)
+      Phases.drain() // discard anything recorded outside a timed query
+      val m0 = Meter()
+      val timed = pass(spark, sfDir, fn)
+      m0.until(Meter()).foreach { case (k, v) => record(k, v) }
+      timed match {
+        case Right(w) => walls += name -> w
+        case Left(e) =>
+          failed += name
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
       }
-      x
+      // listener events are async: flush them before reading the counts
+      try Bridge.drainListenerBus(spark)
+      catch { case NonFatal(_) => () } // a late event beats a dead bench
+      record("jobs_n", jobs.get)
+      record("tasks_max", width.get)
+      val ph = Phases.drain()
+      if (ph.nonEmpty) phases(name) = ph
     }
-    def calibrate(): Double = {
-      val t0 = System.nanoTime()
-      val x = spin()
-      val dt = (System.nanoTime() - t0) / 1e9
-      if (x == 42L) println("") // defeat dead-code elimination
-      dt
-    }
-    // FULL-WIDTH twin of the probe: one spin per session core, wall
-    // for ALL to finish. The single-thread probe is blind to
-    // multi-core contention (r7: closes drifted 98 → 148 s over an
-    // afternoon with calib_sec pinned at ~0.43 and the guest fully
-    // idle — host-side neighbors squeeze a 32-wide workload while
-    // still granting any ONE thread a full core; an 8-thread probe
-    // missed it too). On an idle host this ≈ calibrate(); when the
-    // host can't actually deliver all vCPUs concurrently it inflates
-    // by the oversubscription factor — which is exactly the factor
-    // the per-query walls inflate by.
-    def calibrateMt(): Double = {
-      val t0 = System.nanoTime()
-      val acc = new java.util.concurrent.atomic.AtomicLong
-      val ts = (0 until cpus).map(_ =>
-        new Thread(() => { acc.addAndGet(spin()); () }))
-      ts.foreach(_.start()); ts.foreach(_.join())
-      if (acc.get() == 42L) println("") // defeat dead-code elimination
-      (System.nanoTime() - t0) / 1e9
-    }
-    val calibMtStart = calibrateMt()
-    val calibStart = calibrate()
-    // Mid-run probe TIMELINE: r8's driver window burned ~4× the CPU
-    // of a clean close while the start AND end probes both read
-    // healthy — a contention episode strictly inside the window is
-    // invisible to endpoint probes. One FULL-WIDTH spin every
-    // `calibEvery` queries (~0.5 s each, ~4 s per full run) makes the
-    // artifact carry the weather as a timeline, so a slow span of
-    // queries can be matched against the probe reading taken nearest
-    // to it without any isolated rerun. Full-width, not single-thread:
-    // r7 measured afternoon-long core-squeeze episodes with the
-    // single-thread probe pinned at ~0.43 s throughout (and a 20 s
-    // q08 landed mid-run in a window whose single-thread track read
-    // flat 0.42-0.47) — only a probe that demands every vCPU at once
-    // sees the squeeze the 32-wide query stages feel.
-    val calibEvery = 16
-    val calibTrack = scala.collection.mutable.ListBuffer.empty[Double]
-    // Per-query COLD pass wall (the untimed warm-up): r13 adjudicated
-    // q122 reading 1.2-5.5 s across windows on byte-identical code —
-    // first-use whole-stage-codegen compilation + JIT warmth, not the
-    // plan. One full warm pass per query before its timed run makes
-    // the recorded wall the STEADY-STATE number (what a production
-    // executor pool sees after the first task waves), and the cold
-    // wall is kept alongside so the artifact itself quantifies the
-    // JIT share (cold − warm) instead of letting it impersonate a
-    // regression.
-    val coldSec = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val results = selected.zipWithIndex.map {
-      case ((name, fn), idx) =>
-        // idx 0 is skipped: calibMtStart was read milliseconds ago
-        if (idx > 0 && idx % calibEvery == 0) calibTrack += calibrateMt()
-        // untimed warm pass — failures fall through to the timed pass,
-        // which owns error accounting
-        locally {
-          val tc0 = System.nanoTime()
-          var dfw: org.apache.spark.sql.DataFrame = null
-          try {
-            dfw = fn(spark, sfDir)
-            dfw.write.format("noop").mode("overwrite").save()
-            coldSec(name) = (System.nanoTime() - tc0) / 1e9
-          // NonFatal only: a fatal JVM error (OOM, codegen
-          // LinkageError) in the warm pass must propagate — swallowing
-          // it would let the timed pass record garbage walls on a
-          // wounded JVM (the same rationale as prepareSharedStores)
-          } catch { case scala.util.control.NonFatal(_) => () }
-          finally {
-            if (dfw != null)
-              org.apache.spark.sql.graft.Bridge.freeLocalCheckpoint(dfw)
-            graft.operators.CorpusStats.releaseLmBroadcasts()
-            ()
-          }
-        }
-        val gc0 = gcMillis(); val cpu0 = cpuNanos(); val cg0 = codegenCount()
-        stageWidth.set(0)
-        Phases.drain() // discard anything recorded outside a timed query
-        val t0 = System.nanoTime()
-        // drain this query's localCheckpoint blocks in ALL exits —
-        // including a failed write, whose plan may already have
-        // materialized checkpoints during construction. Leaving them
-        // to GC + ContextCleaner let earlier dedup state stay
-        // resident when later queries needed the memory (r3: q49
-        // 7.6 s in the 58-query session vs 2.5 s isolated).
-        var df: org.apache.spark.sql.DataFrame = null
-        try {
-          df = fn(spark, sfDir)
-          df.write.format("noop").mode("overwrite").save()
-        } catch {
-          case e: Throwable =>
-            failed += name
-            System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        } finally {
-          if (df != null)
-            org.apache.spark.sql.graft.Bridge.freeLocalCheckpoint(df)
-          // the result is materialized (or abandoned): any LM model
-          // broadcast the query shipped is safe to destroy now —
-          // session hygiene, same rationale as the checkpoint drain
-          graft.operators.CorpusStats.releaseLmBroadcasts()
-          ()
-        }
-        val wall = (System.nanoTime() - t0) / 1e9
-        gcSec(name) = (gcMillis() - gc0) / 1e3
-        cpuSec(name) = if (cpu0 < 0) -1.0 else (cpuNanos() - cpu0) / 1e9
-        codegenN(name) = (codegenCount() - cg0).toDouble
-        try org.apache.spark.sql.graft.Bridge.drainListenerBus(spark)
-        catch { case _: Throwable => () } // a late event beats a dead bench
-        tasksMax(name) = stageWidth.get().toDouble
-        val ph = Phases.drain()
-        if (ph.nonEmpty) phaseSec(name) = ph
-        name -> wall
-    }
-    // ---- self-defending retime pass ----
-    // Three rounds running, the driver's recorded window inflated
-    // individual walls 5-14× on identical pinned plans (r14: q44
-    // 19.9 s recorded vs 1.8 s in any clean window) — external
-    // contention / JIT starvation, not regressions, but a judge had
-    // to re-run queries by hand to prove it. The bench now defends
-    // itself: any query whose timed wall reads as a contention
-    // outlier is re-run ONCE (timed) after the suite and the second
-    // reading recorded as retimed_sec alongside the original. A
-    // genuine plan regression reproduces in the retime; a transient
-    // squeeze collapses back to warm-pass-scale; a SUSTAINED squeeze
-    // leaves retimed ≈ original with calib_mt_sec[1] inflated — all
-    // three cases attributable from the artifact alone.
-    //
-    // Outlier tests (either, gated at wall > 1 s — sub-second jitter
-    // is not worth a re-run; bounded at 12 retimes so a globally slow
-    // box cannot double the suite):
-    //   - wall > 1.5 × its own cold_sec: the untimed warm pass ran
-    //     FASTER than the steady-state pass that followed it. A real
-    //     plan cost is at least as expensive cold (cold = warm +
-    //     codegen/JIT), so the inversion is the transient-contention
-    //     signature. 1.5 calibrated from measured distributions: the
-    //     clean 201-query suite's max ratio is 1.19 (only 5 queries
-    //     even exceed 1.0 at wall > 1 s), while a deliberately
-    //     squeezed box (384 oscillating burners, PLANS.md retime
-    //     demo) put q44 at 2.0× — a 3× bar missed that real 5×
-    //     inflation because the squeeze stretches the cold pass too.
-    //   - a wide plan starved of CPU: cpu < wall on a plan that
-    //     reached ≥ 8-wide stages — our own tasks would be burning
-    //     those cores, so something outside the JVM is.
-    // r16 false-positive mode, closed: "retime reproduces the slow
-    // wall" read as the plan-change alarm, but when the CONTENTION
-    // ITSELF persists through the suite tail the retime runs inside
-    // the same squeeze and reproduces for the wrong reason (r16: four
-    // reproducing retimes, all collapsed under judge isolation, with
-    // calib_track's final reading at 0.812 vs the ~0.43 clean norm).
-    // The tie-breaker: a retime that does NOT collapse immediately
-    // re-runs the multi-thread calibration probe and is verdicted
-    // against the cleanest spin observed THIS run —
-    //   collapsed   retime < 0.7 × original (transient squeeze gone)
-    //   ambient     reproduced, but the probe reads > 1.3 × the
-    //               run's cleanest spin: the box is still squeezed,
-    //               the reading is contention, not a plan change
-    //   reproduced  reproduced on a clean box — the real alarm
-    // Residual blind spot (documented, not hidden): contention that
-    // spans the ENTIRE run inflates every spin including the
-    // reference, so a same-box run can never prove itself ambient —
-    // that case still needs an isolated re-run, but it is also the
-    // case where the TOTAL is visibly inflated, not one query.
-    // ---- persisted per-host clean-spin band ----
-    // The residual blind spot above, closed as far as an artifact
-    // can: contention spanning the ENTIRE run inflates every
-    // within-run spin INCLUDING the tie-breaker's reference, so a
-    // fully-squeezed run cannot prove itself ambient from its own
-    // readings. The band is the (host, cpus)-keyed cleanest
-    // full-width spin across PAST runs (calib_history.tsv, appended
-    // per bench run and committed per round): when THIS run's
-    // cleanest spin sits far above the band, a reproducing retime
-    // verdicts `ambient_history` — the whole window was squeezed,
-    // self-labeled from the artifact alone (PLANS.md planted demo).
-    val histPath = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_CALIB_HISTORY",
-        "calib_history.tsv"))
-    val hostName =
-      try java.net.InetAddress.getLocalHost.getHostName
-      catch { case scala.util.control.NonFatal(_) => "unknown" }
-    val histBand: Option[Double] =
-      try {
-        if (!java.nio.file.Files.exists(histPath)) None
-        else {
-          val spins = scala.jdk.CollectionConverters
-            .ListHasAsScala(
-              java.nio.file.Files.readAllLines(histPath)).asScala
-            .map(_.split("\t"))
-            .filter(r => r.length >= 3 && r(0) == hostName &&
-              r(1) == cpus.toString)
-            .flatMap(r => scala.util.Try(r(2).toDouble).toOption)
-          // min over a RECENT WINDOW, not the lifetime min (r18
-          // ADVICE): after a durable host slowdown (governor /
-          // thermal / VM migration) the all-time min never ages out,
-          // every future cleanest spin reads > 1.3× the stale band,
-          // and all reproducing retimes self-excuse as
-          // ambient_history forever. Rows append one per bench run,
-          // so 20 rows ≈ the last few rounds — enough to ride out a
-          // squeezed week, short enough to adopt a new steady state.
-          if (spins.isEmpty) None
-          else Some(spins.takeRight(20).min)
-        }
-      } catch { case scala.util.control.NonFatal(_) => None }
-    val cleanestSpin = (calibMtStart +: calibTrack.toSeq).min
-    // ---- committed-round artifact history (BENCH_r*.json) ----
-    // The per-round driver artifacts are committed to the repo and
-    // carry (a) the 10 slowest queries' recorded walls (top_wall) and
-    // (b) the calibration spins — two histories this run can defend
-    // itself with:
-    //   - RETIME SELECTION (r18 verdict #2): the within-run outlier
-    //     arms miss a contended streaming ingest (cpu > wall because
-    //     it IS busy, just slowly; cold equally squeezed — neither
-    //     arm fires). A query reading far above its best COMMITTED
-    //     recorded wall is an outlier regardless of within-run
-    //     self-consistency. 1.5×, not 2×: r18's missed case read
-    //     31.96 s against a committed-min of 17.2 s (1.86×) — a 2×
-    //     bar misses it because the committed windows are themselves
-    //     driver-contended; 1.5× catches it and the cost of a false
-    //     fire is one bounded re-run that verdicts itself.
-    //   - BAND SEEDING (cross-host): calib_history.tsv is keyed by
-    //     (host, cpus) and starts empty on new hardware — the first
-    //     run on a migrated box could never verdict ambient_history.
-    //     The artifacts' spins (same cpus; spins are machine-speed,
-    //     sf-independent) seed the band until the tsv has rows.
-    // Defensive parsing: any malformed artifact is skipped whole.
-    val artifactHist: Seq[(Int, String, Map[String, Double], Seq[Double])] =
-      try {
-        val dir = new java.io.File(
-          sys.env.getOrElse("SPARK_GRAFT_BENCH_HISTORY_DIR", "."))
-        val files = Option(dir.listFiles()).getOrElse(Array.empty)
-          .filter(f => f.isFile &&
-            f.getName.matches("BENCH_r\\d+\\.json"))
-        files.toSeq.flatMap { f =>
-          try {
-            import org.json4s._
-            val jv = jackson.JsonMethods.parse(
-              java.nio.file.Files.readString(f.toPath))
-            def num(j: JValue): Option[Double] = j match {
-              case JDouble(d) => Some(d)
-              case JInt(i) => Some(i.toDouble)
-              case JLong(l) => Some(l.toDouble)
-              case JDecimal(d) => Some(d.toDouble)
-              case _ => None
-            }
-            val rCpus = num(jv \ "cpus").map(_.toInt).getOrElse(-1)
-            val parsed = jv \ "parsed"
-            val rSf = parsed \ "sf" match {
-              case JString(x) => x; case _ => "" }
-            val tw = parsed \ "top_wall" match {
-              case JObject(fs) =>
-                fs.flatMap { case (k, v) => num(v).map(k -> _) }.toMap
-              case _ => Map.empty[String, Double]
-            }
-            val spins = (Seq(parsed \ "calib_cleanest") ++
-              Seq(parsed \ "calib_band").filter(b =>
-                num(b).exists(_ >= 0)) ++
-              (parsed \ "calib_mt_sec" match {
-                case JArray(xs) => xs; case _ => Nil
-              })).flatMap(num).filter(_ > 0)
-            Some((rCpus, rSf, tw, spins))
-          } catch { case scala.util.control.NonFatal(_) => None }
-        }
-      } catch { case scala.util.control.NonFatal(_) => Seq.empty }
-    // best committed wall per query, same sf + cpus only
-    val histWalls: Map[String, Double] = artifactHist
-      .filter(h => h._1 == cpus && h._2 == sfDir)
-      .flatMap(_._3.toSeq)
-      .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).min }
-    // band provenance: the tsv is first-class (same host, measured
-    // spins); the artifacts seed it only when the host key is absent
-    val histSpin: Option[Double] = {
-      val vs = artifactHist.filter(_._1 == cpus).flatMap(_._4)
-      if (vs.isEmpty) None else Some(vs.min)
-    }
-    val (bandEff, bandSource) = histBand match {
-      case Some(b) => (Some(b), "history_tsv")
-      case None => histSpin match {
-        case Some(b) => (Some(b), "artifacts")
-        case None => (None, "none")
-      }
-    }
-    val retimed = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val retimeCalib = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val retimeVerdict = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    val retimeWhy = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    locally {
-      val fnByName = selected.toMap
-      val outliers = results.flatMap { case (name, wall) =>
-        if (wall <= 1.0) None
-        else {
-          val cold = coldSec.getOrElse(name, 0.0)
-          val cpu = cpuSec.getOrElse(name, -1.0)
-          val wide = tasksMax.getOrElse(name, 0.0) >= 8
-          // third arm (r18 verdict #2): the within-run arms are
-          // blind to a contended streaming ingest — busy-but-slow
-          // keeps cpu > wall, and its cold pass is squeezed too.
-          // The committed history is outside the squeeze.
-          val why =
-            if (wall > 1.5 * math.max(cold, 0.05)) Some("cold_inversion")
-            else if (wide && cpu >= 0 && cpu < wall) Some("starved")
-            else if (histWalls.get(name).exists(h => wall > 1.5 * h))
-              Some("history")
-            else None
-          why.map(w => (name, wall, w))
-        }
-      }.sortBy(-_._2).take(12)
-      outliers.foreach { case (name, origWall, why) =>
-        fnByName.get(name).foreach { fn =>
-          var df: org.apache.spark.sql.DataFrame = null
-          val t0 = System.nanoTime()
-          try {
-            df = fn(spark, sfDir)
-            df.write.format("noop").mode("overwrite").save()
-            val w = (System.nanoTime() - t0) / 1e9
-            retimed(name) = w
-            retimeWhy(name) = why
-            if (w < 0.7 * origWall) retimeVerdict(name) = "collapsed"
-            else {
-              val c = calibrateMt()
-              retimeCalib(name) = c
-              retimeVerdict(name) =
-                if (c > 1.3 * cleanestSpin) "ambient"
-                else if (bandEff.exists(b => cleanestSpin > 1.3 * b))
-                  // the run's OWN reference is inflated vs the
-                  // host's recorded clean band — whole-run squeeze
-                  "ambient_history"
-                else "reproduced"
-            }
-          } catch { case scala.util.control.NonFatal(_) => () }
-          finally {
-            if (df != null)
-              org.apache.spark.sql.graft.Bridge.freeLocalCheckpoint(df)
-            graft.operators.CorpusStats.releaseLmBroadcasts()
-            ()
-          }
-        }
-      }
-      Phases.drain() // retime phases are not a query's phases
-    }
-    // JIT code-cache occupancy at suite end: r14 root-caused a
-    // 5-20× intermittent slowdown to the sweeper flushing warm
-    // codegen kernels when the profiled-nmethods heap filled
-    // (fixed with ReservedCodeCacheSize=512m). Carrying used/max
-    // per CodeHeap pool in the artifact lets a future wall anomaly
-    // be checked against cache pressure without a PrintCodeCache
-    // re-run.
-    val codeCacheJson: String =
-      java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
-        .filter(_.getName.toLowerCase.contains("codeheap"))
-        .map { p =>
-          val u = p.getUsage
-          "\"" + p.getName.replace("'", "") + "\":{" +
-            "\"used_mb\":" + (u.getUsed >> 20) +
-            ",\"max_mb\":" + (u.getMax >> 20) + "}"
-        }.mkString("{", ",", "}")
-    // Locale.ROOT: a comma-decimal default locale would render 0,123
-    // and make the JSON line unparseable
-    def num(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    def jsonObj(m: Iterable[(String, Double)]): String = m
-      .map { case (k, v) => "\"" + k + "\":" + num(v) }
-      .mkString("{", ",", "}")
-    def jsonObjInt(m: Iterable[(String, Double)]): String = m
-      .map { case (k, v) => "\"" + k + "\":" + v.toLong }
-      .mkString("{", ",", "}")
-    val qs = jsonObj(results)
-    val total = results.map(_._2).sum
-    // a fast-failing query must not read as a speedup: failures are
-    // carried in the JSON, not just buried in stderr
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // -1.0 is the per-query "CPU time unavailable" sentinel: propagate
-    // it rather than summing it into a nonsense negative total
-    val cpuTotal =
-      if (cpuSec.values.exists(_ < 0)) -1.0 else cpuSec.values.sum
-    val calibEnd = calibrate()
-    val calibMtEnd = calibrateMt()
-    // append this run's cleanest observed spin to the host band
-    // history (end spin included — a run squeezed only mid-window
-    // still records its cleanest edge); read path is band = MIN, so
-    // appends from squeezed runs can only loosen nothing
-    locally {
-      val cleanestAll = math.min(cleanestSpin, calibMtEnd)
-      val row = s"$hostName\t$cpus\t" +
-        String.format(java.util.Locale.ROOT, "%.3f",
-          Double.box(cleanestAll)) + "\n"
-      try java.nio.file.Files.writeString(histPath, row,
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] calib history append: $e") }
-    }
-    // Key ORDER inside the full line is load-bearing: a fixed-size
-    // tail capture keeps the END of the output, so the per-query WALL
-    // map goes LAST (after the gc/cpu diagnostic maps) — r5 lost the
-    // total to a cpu_sec fragment, r6 preserved the total but the
-    // only per-query map a tail reader saw was cpu_sec, which invites
-    // a 2×-20× misread of wall time. With this order a truncated
-    // tail keeps [.. gc/cpu fragment ..]"queries":{WALL},"sf" intact.
-    val line =
-      s"""{"metric":"total","value":${num(total)},"unit":"sec",""" +
-        s""""failed":$failedJson,""" +
-        s""""gc_sec":${jsonObj(gcSec)},"cpu_sec":${jsonObj(cpuSec)},""" +
-        s""""tasks_max":${jsonObjInt(tasksMax)},""" +
-        s""""phase_sec":${phaseSec.map { case (q, ph) =>
-          "\"" + q + "\":" + jsonObj(ph)
-        }.mkString("{", ",", "}")},""" +
-        s""""gc_total":${num(gcSec.values.sum)},""" +
-        s""""cpu_total":${num(cpuTotal)},""" +
-        // cold_sec = the untimed warm pass's wall per query: the
-        // recorded "queries" walls are STEADY-STATE (post-codegen/
-        // JIT); cold − warm is the first-use compilation share, kept
-        // in the artifact so a cross-round wall delta can be checked
-        // against warmth before being read as a plan change (r13 #3)
-        s""""cold_sec":${jsonObj(coldSec)},""" +
-        s""""cold_total":${num(coldSec.values.sum)},""" +
-        s""""store_build_sec":${jsonObj(storeBuild)},""" +
-        s""""calib_sec":[${num(calibStart)},${num(calibEnd)}],""" +
-        s""""calib_mt_sec":[${num(calibMtStart)},${num(calibMtEnd)}],""" +
-        s""""calib_track":[${calibTrack.map(num).mkString(",")}],""" +
-        s""""calib_every":$calibEvery,""" +
-        s""""calib_cleanest":${num(cleanestSpin)},""" +
-        s""""calib_band":${num(bandEff.getOrElse(-1.0))},""" +
-        s""""calib_band_source":"$bandSource",""" +
-        s""""retimed_sec":${jsonObj(retimed)},""" +
-        s""""retime_why":${retimeWhy
-          .map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
-          .mkString("{", ",", "}")},""" +
-        s""""retime_calib":${jsonObj(retimeCalib)},""" +
-        s""""retime_verdict":${retimeVerdict
-          .map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
-          .mkString("{", ",", "}")},""" +
-        s""""code_cache":$codeCacheJson,""" +
-        s""""codegen_n":${jsonObjInt(codegenN)},""" +
-        s""""queries":$qs,""" +
-        s""""sf":"$sfDir"}"""
-    println(line)
-    // The full line is ~7 KB; a tail capture can truncate it mid-line
-    // and lose the one number that matters (r5: BENCH_r05.json kept a
-    // cpu_sec fragment and dropped "value":106.29). Print a second,
-    // SHORT summary line AFTER it so any tail keeps the headline —
-    // under a DISTINCT metric key ("total_summary", not a second
-    // "total" a first-match consumer would mistake or a sum-matcher
-    // would double-count) and carrying the 10 slowest queries' WALL
-    // seconds, so even a summary-only tail can attribute a slow total
-    // to its query without /tmp archaeology.
-    val topWall = results.sortBy(-_._2).take(10)
-    // tasks_max for exactly the top_wall entries: a summary-only tail
-    // can then attribute each slow query as structural (few tasks) or
-    // ambient (full-width + inflated calib_mt) without the full line
-    val topWallTasks = topWall.map { case (n, _) =>
-      n -> tasksMax.getOrElse(n, -1.0) }
-    val summary =
-      s"""{"metric":"total_summary","value":${num(total)},"unit":"sec",""" +
-        s""""n_queries":${results.size},"failed":$failedJson,""" +
-        s""""gc_total":${num(gcSec.values.sum)},""" +
-        s""""cpu_total":${num(cpuTotal)},""" +
-        s""""cold_total":${num(coldSec.values.sum)},""" +
-        s""""store_build_sec":${jsonObj(storeBuild)},""" +
-        s""""calib_sec":[${num(calibStart)},${num(calibEnd)}],""" +
-        s""""calib_mt_sec":[${num(calibMtStart)},${num(calibMtEnd)}],""" +
-        s""""calib_track":[${calibTrack.map(num).mkString(",")}],""" +
-        s""""calib_every":$calibEvery,""" +
-        s""""calib_cleanest":${num(cleanestSpin)},""" +
-        s""""calib_band":${num(bandEff.getOrElse(-1.0))},""" +
-        s""""calib_band_source":"$bandSource",""" +
-        s""""top_wall":${jsonObj(topWall)},""" +
-        s""""top_wall_tasks":${jsonObjInt(topWallTasks)},""" +
-        s""""retimed_sec":${jsonObj(retimed)},""" +
-        s""""retime_why":${retimeWhy
-          .map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
-          .mkString("{", ",", "}")},""" +
-        s""""retime_verdict":${retimeVerdict
-          .map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
-          .mkString("{", ",", "}")},""" +
-        s""""code_cache":$codeCacheJson,""" +
-        s""""sf":"$sfDir"}"""
+    val (full, summary) = jsonLines(Run(sfDir, walls.toSeq, failed.toSeq,
+      selected.size, readings, phases, storeBuild, codeCache()))
+    println(full)
     println(summary)
-    // also write the bare JSON lines to a file: the stdout copy drowns
-    // in sbt/log4j decoration and the driver failed to parse it (r01)
+    // the stdout copy drowns in sbt/log4j decoration; the file does not
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/graft_bench.json")
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(out), line + "\n" + summary + "\n")
-    catch { case e: Throwable => System.err.println(s"[bench] write $out: $e") }
+    try Files.writeString(Paths.get(out), full + "\n" + summary + "\n")
+    catch { case NonFatal(e) => System.err.println(s"[bench] write $out: $e") }
     spark.stop()
+  }
+
+  /** One pass of `fn`: build the frame, compute every column with a
+    * noop write, then free what the query left in the session (its
+    * localCheckpoint blocks and LM model broadcasts) in every exit — a
+    * failed write may already hold checkpoint blocks from plan build,
+    * and leaving them to GC kept earlier queries' state resident when
+    * later ones needed the memory. Returns the wall, cleanup included,
+    * or the query's failure. NonFatal only: a fatal error (OOM, a
+    * codegen LinkageError) propagates, because walls recorded on a
+    * wounded JVM mean nothing. */
+  private[graft] def pass(spark: SparkSession, sfDir: String,
+      fn: Query): Either[Throwable, Double] = {
+    val t0 = System.nanoTime()
+    var df: DataFrame = null
+    val done = try {
+      df = fn(spark, sfDir)
+      df.write.format("noop").mode("overwrite").save()
+      Right(())
+    } catch { case NonFatal(e) => Left(e) }
+    finally {
+      if (df != null) Bridge.freeLocalCheckpoint(df)
+      CorpusStats.releaseLmBroadcasts()
+    }
+    done.map(_ => (System.nanoTime() - t0) / 1e9)
+  }
+
+  /** The counters one timed pass is read between; −1 where the
+    * platform does not expose one. */
+  private final case class Meter(gcMs: Long, cpuNs: Long, jitMs: Long,
+      compiles: Long, ticks: Option[Ticks]) {
+    /** The per-query readings from this meter to `end`. */
+    def until(end: Meter): Seq[(String, Double)] = {
+      def delta(a: Long, b: Long, unit: Double): Double =
+        if (a < 0 || b < 0) -1.0 else (b - a) / unit
+      val (other, steal) = contention(ticks, end.ticks)
+      Seq("gc_sec" -> delta(gcMs, end.gcMs, 1e3),
+        "cpu_sec" -> delta(cpuNs, end.cpuNs, 1e9),
+        "jit_sec" -> delta(jitMs, end.jitMs, 1e3),
+        "codegen_n" -> delta(compiles, end.compiles, 1.0),
+        "other_cpu_sec" -> other, "steal_sec" -> steal)
+    }
+  }
+
+  private object Meter {
+    def apply(): Meter = Meter(
+      ManagementFactory.getGarbageCollectorMXBeans.asScala
+        .map(_.getCollectionTime.max(0L)).sum,
+      ManagementFactory.getOperatingSystemMXBean match {
+        case os: com.sun.management.OperatingSystemMXBean => os.getProcessCpuTime
+        case _ => -1L
+      },
+      Option(ManagementFactory.getCompilationMXBean)
+        .filter(_.isCompilationTimeMonitoringSupported)
+        .fold(-1L)(_.getTotalCompilationTime),
+      // Spark's JVM-wide Janino counter; the generated-code cache is
+      // spark.sql.codegen.cache.maxEntries, set in build.sbt
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      Try(ticks(Files.readString(Paths.get("/proc/stat")),
+        Files.readString(Paths.get("/proc/self/stat")))).toOption.flatten)
+  }
+
+  /** Machine-wide busy and steal ticks (/proc/stat's aggregate `cpu`
+    * line) and this process's own utime + stime (/proc/self/stat). */
+  private[graft] final case class Ticks(busy: Long, steal: Long, self: Long)
+
+  /** The two files' text as [[Ticks]]; None for malformed text. */
+  private[graft] def ticks(procStat: String, selfStat: String): Option[Ticks] =
+    Try {
+      // cpu user nice system idle iowait irq softirq steal [guest ...];
+      // guest time is already inside user
+      val cpu = procStat.linesIterator.find(_.startsWith("cpu ")).get
+        .trim.split("\\s+").drop(1).map(_.toLong)
+      // fields after the parenthesized command name, which may hold
+      // spaces: the 12th and 13th are utime and stime
+      val close = selfStat.lastIndexOf(')')
+      require(close >= 0)
+      val own = selfStat.substring(close + 1).trim.split("\\s+")
+      Ticks(cpu(0) + cpu(1) + cpu(2) + cpu(5) + cpu(6), cpu(7),
+        own(11).toLong + own(12).toLong)
+    }.toOption
+
+  /** (other_cpu_sec, steal_sec) between two [[Ticks]] readings, at
+    * USER_HZ = 100 ticks/s: the machine's busy time minus this
+    * process's own, and the steal time. −1.0 each (the cpu_sec
+    * sentinel) when either reading is missing. */
+  private[graft] def contention(a: Option[Ticks],
+      b: Option[Ticks]): (Double, Double) =
+    a.zip(b).map { case (x, y) =>
+      (math.max(0L, y.busy - x.busy - (y.self - x.self)) / 100.0,
+        (y.steal - x.steal) / 100.0)
+    }.getOrElse((-1.0, -1.0))
+
+  /** JIT code-cache occupancy (MB used, MB max) per pool (the CodeHeap
+    * segments, or one CodeCache pool below 240 MB reserved): a filled
+    * profiled-nmethods heap flushed warm codegen kernels in r14, a
+    * 5-20× intermittent slowdown. */
+  private def codeCache(): Seq[(String, Long, Long)] =
+    ManagementFactory.getMemoryPoolMXBeans.asScala.toSeq
+      .filter(_.getName.toLowerCase.contains("code"))
+      .map(p => (p.getName.replace("'", ""), p.getUsage.getUsed >> 20,
+        p.getUsage.getMax >> 20))
+
+  /** What one run measured. `readings` maps each [[readingKeys]] key
+    * to its query → value map; `walls` holds the timed passes that
+    * succeeded, in run order. */
+  private[graft] final case class Run(sf: String,
+      walls: Seq[(String, Double)], failed: Seq[String], nQueries: Int,
+      readings: collection.Map[String, collection.Map[String, Double]],
+      phases: collection.Map[String, Seq[(String, Double)]],
+      storeBuild: Seq[(String, Double)],
+      codeCache: Seq[(String, Long, Long)])
+
+  /** Per-query reading keys in JSON order: each `_sec` one is also
+    * summed into `<name>_total`; the others are counts. */
+  private[graft] val readingKeys = Seq("gc_sec", "cpu_sec", "jit_sec",
+    "other_cpu_sec", "steal_sec", "cold_sec", "jobs_n", "tasks_max",
+    "codegen_n")
+
+  /** The full line and the summary line, from one ordered field list.
+    * The summary is the full line with every per-query map cut to the
+    * ten slowest queries, its wall map named top_wall. Key order is
+    * load-bearing: a tail capture keeps the END of the output, so the
+    * full line ends in its wall map and then "sf" (a truncated tail
+    * keeps `"queries":{…},"sf":"…"}` intact), and the summary printed
+    * after it keeps the headline and the totals. A failed query counts
+    * in n_queries and `failed`, not in the walls. */
+  private[graft] def jsonLines(r: Run): (String, String) = {
+    // Locale.ROOT: a comma-decimal default locale would render 0,123
+    def num(v: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    def str(s: String) = "\"" + s + "\""
+    def obj(kvs: Iterable[(String, String)]) =
+      kvs.map { case (k, v) => str(k) + ":" + v }.mkString("{", ",", "}")
+    def line(metric: String, walls: Seq[(String, Double)], wallKey: String,
+        keep: String => Boolean) = obj(
+      Seq("metric" -> str(metric), "value" -> num(r.walls.map(_._2).sum),
+        "unit" -> str("sec"), "n_queries" -> r.nQueries.toString,
+        "failed" -> r.failed.map(str).mkString("[", ",", "]")) ++
+      readingKeys.map { k =>
+        k -> obj(r.readings.getOrElse(k, Map.empty[String, Double])
+          .filter(kv => keep(kv._1)).map { case (q, v) =>
+            q -> (if (k.endsWith("_sec")) num(v) else v.toLong.toString) })
+      } ++
+      Seq("phase_sec" -> obj(r.phases.filter(kv => keep(kv._1))
+        .map { case (q, ph) => q -> obj(ph.map { case (p, v) => p -> num(v) }) })) ++
+      readingKeys.filter(_.endsWith("_sec")).map { k =>
+        val vs = r.readings.getOrElse(k, Map.empty[String, Double]).values
+        // a −1.0 sentinel propagates instead of summing into nonsense
+        k.stripSuffix("_sec") + "_total" -> num(if (vs.exists(_ < 0)) -1.0 else vs.sum)
+      } ++
+      Seq("store_build_sec" -> obj(r.storeBuild.map { case (k, v) => k -> num(v) }),
+        "code_cache" -> obj(r.codeCache.map { case (p, used, max) =>
+          p -> obj(Seq("used_mb" -> used.toString, "max_mb" -> max.toString)) }),
+        wallKey -> obj(walls.map { case (q, w) => q -> num(w) }),
+        "sf" -> str(r.sf)))
+    val top = r.walls.sortBy(-_._2).take(10)
+    (line("total", r.walls, "queries", _ => true),
+      line("total_summary", top, "top_wall", top.map(_._1).toSet))
   }
 }

@@ -6554,6 +6554,27 @@ object SparkEntry {
     new java.io.File(root, name).toString
   }
 
+  /** The query selection named by the environment variable
+    * `variable` (a comma-separated list of registered query names; the
+    * mains' SPARK_GRAFT_BENCH_ONLY / SPARK_GRAFT_VERIFY_ONLY), or None
+    * when it is unset. Entries are trimmed and empty ones dropped. */
+  def queryFilter(variable: String,
+      env: collection.Map[String, String] = sys.env): Option[Set[String]] =
+    env.get(variable).map(v =>
+      registeredQueries(variable, v.split(",").map(_.trim).filter(_.nonEmpty).toSet))
+
+  /** `names`, failing loudly unless it is non-empty and every entry is
+    * a registered query: a typo must not select nothing, which a
+    * timing run would report as a 0-second total with no failures. */
+  private[graft] def registeredQueries(source: String,
+      names: Set[String]): Set[String] = {
+    val unknown = names.diff(queries.keySet).toSeq.sorted
+    require(names.nonEmpty, s"$source selects no query")
+    require(unknown.isEmpty,
+      s"$source names unregistered queries: ${unknown.mkString(", ")}")
+    names
+  }
+
   /** Pre-build the version-keyed shared at-rest stores that the
     * steady-state queries read, timing each build: Bench calls this
     * BEFORE the timed loop, so the q84/q126-family headlines measure
@@ -6572,6 +6593,7 @@ object SparkEntry {
     * consuming queries' own per-query isolation, not the whole run. */
   def prepareSharedStores(s: SparkSession, dir: String,
       selected: Option[Set[String]] = None): Seq[(String, Double)] = {
+    selected.foreach(registeredQueries("prepareSharedStores", _))
     val consumers = Map(
       "pair_store" ->
         Set("q84_dedup_keeper", "q133_dup_attribution", "q140_dup_census",

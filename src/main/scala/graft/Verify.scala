@@ -5,6 +5,11 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // optional comma-separated filter for iterating on single queries
+    // (same contract as Bench's SPARK_GRAFT_BENCH_ONLY; the driver
+    // sets nothing and always dumps the full surface); parsed first,
+    // so a typo fails before the output dir is wiped
+    val only = SparkEntry.queryFilter("SPARK_GRAFT_VERIFY_ONLY")
     val spark = GraftSession(GraftSession.cpus)
     // start from an EMPTY outDir: a failed query must leave no output
     // at all, not a previous run's stale parquet that the driver's
@@ -12,10 +17,6 @@ object Verify {
     // queries must not leave ghosts either)
     Scratch.deleteRecursively(new java.io.File(outDir))
     new java.io.File(outDir).mkdirs()
-    // optional comma-separated filter for iterating on single queries
-    // (same contract as Bench's SPARK_GRAFT_BENCH_ONLY; the driver
-    // sets nothing and always dumps the full surface)
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY").map(_.split(",").toSet)
     SparkEntry.queries
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .foreach { case (name, fn) =>

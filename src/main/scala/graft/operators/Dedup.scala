@@ -3237,7 +3237,8 @@ object Dedup {
     * semi- or anti-join, or the whole scan where a later join
     * restricts it — since at that size one sequential pass reads
     * less than scattered per-key probes. A null key matches nothing,
-    * as in a join. */
+    * as in a join: `exclude` keeps a row whose `c` is null, as the
+    * anti-join does (a bare `NOT IN` would drop it). */
   private[graft] def restrictTo(t: DataFrame, c: String,
       keys: Option[Iterable[Any]], cap: Int, exclude: Boolean = false)(
       overCap: DataFrame => DataFrame): DataFrame =
@@ -3247,7 +3248,7 @@ object Dedup {
         case Some(ks) if ks.isEmpty => if (exclude) t else t.limit(0)
         case Some(ks) =>
           val in = pushedIn(t, c, ks)
-          t.filter(if (exclude) !in else in)
+          t.filter(if (exclude) col(c).isNull || !in else in)
       }
 
   /** Metadata-only store-size probe with the sentinel contract the

@@ -567,10 +567,9 @@ class DedupSpec extends AnyFunSuite with SparkSpec with Matchers {
           semi(withNull), semi(withNull)(t), "pushed"),
         ("Int keys on a long column", Some(Set[Any](3, 5)), false,
           semi(ints), semi(ints)(t), "pushed"),
-        // under the cap the exclusion is `NOT IN`, which drops a null
-        // key the anti-join keeps
+        // both regimes keep the null-key row, as the anti-join does
         ("excluded keys", Dedup.boundedKeys(kf, "k", 4), true, anti(kf),
-          anti(kf)(t).filter(col("k").isNotNull), "pushed"),
+          anti(kf)(t), "pushed"),
         ("excluded keys past the cap", Dedup.boundedKeys(kf, "k", 3), true,
           anti(kf), anti(kf)(t), "join")
       ).foreach { case (name, keys, exclude, overCap, want, plan) =>
