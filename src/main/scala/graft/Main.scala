@@ -597,7 +597,8 @@ object Main {
 
   /** The [[compactStore]] cycle for a near-dup signature index
     * (Dedup.writeNearDupIndex layout): dilution is measured on the
-    * shingles table — the point-fetch side, where per-batch appended
+    * shingles table — the side the index mark reads by pushed doc
+    * ids (Dedup.pairMark), where per-batch appended
     * files overlap the id space — and an over-budget index has BOTH
     * tables rewritten (shingles re-clustered by doc, bands
     * consolidated) via Dedup.compactNearDupIndex's write-then-swap. */

@@ -987,7 +987,7 @@ object Dedup {
     * stats prune the scan to the batch's own key neighborhoods and
     * per-batch mark cost tracks the BATCH, not the corpus (sentinels:
     * 0 = always prune, Long.MaxValue = always scan — the
-    * Streams-probes-once contract of the minhash point-fetch).
+    * Streams-probes-once contract of [[storeAtLeastBytes]]).
     *
     * SINGLE-WRITER assumption (mark-only path): the key-store read
     * here is lease-free, so a concurrent index writer can be
@@ -1004,7 +1004,7 @@ object Dedup {
     checkPhashParams(spark, indexDir, radius, width, blocks, keyBlocks)
     // persistKeys = false: the mark-only path reads the key table
     // once, where a persist would be pure materialization overhead
-    // left resident until session end (the markAgainstIndex rationale)
+    // left resident until session end
     markPhashCore(spark, batchFp, indexDir, radius, width, blocks,
       keyBlocks, persistKeys = false, pruneMinStoreBytes, pruneCap)._2
   }
@@ -2143,8 +2143,11 @@ object Dedup {
     * returns the fresh pairs as a local relation, so the write leg
     * and `overlapWith` read them without re-executing a plan; past
     * it the twin ([[pairMarkTwin]]) scan-joins the whole index
-    * tables. Crash safety: BOTH leases (pair store + index)
-    * are acquired before the first byte lands, so a lease conflict
+    * tables. The mark ([[pairMark]]) is the one the ingest mark and
+    * the leakage guard run too; its cross pairs come oriented as
+    * (stored, batch) and are normalized here. Crash safety: BOTH
+    * leases (pair store + index) are acquired before the first byte
+    * lands, so a lease conflict
     * from a concurrent writer aborts write-free. With a `commitTag`
     * the append is EXACTLY-ONCE under retry (the
     * [[taggedSegmentAppend]] stage → move-in → marker protocol, one
@@ -2222,8 +2225,20 @@ object Dedup {
       graft.sources.StoreLease.withLease(spark, indexDir,
           commitTag.fold("index-append")(t => s"index-append-$t")) {
         val freshMat = graft.Phases.time(s"pairs_mark[$ptag]") {
+          // store ids need not be smaller than batch ids — normalize
+          // each cross pair to the from-scratch doc_a < doc_b
+          // convention (inter/jaccard are symmetric; sizes swap with
+          // the ids); over the kernel's local frame the projection
+          // is evaluated locally, so it adds no job
+          val swap = col("doc_a") > col("doc_b")
+          def pick(ifSwap: String, orElse: String) =
+            when(swap, col(ifSwap)).otherwise(col(orElse)).as(orElse)
           pairMark(sets, banded, storeBands, storeSets, docType,
-            threshold, DefaultMarkPruneCap)
+              threshold, DefaultMarkPruneCap, exclude = None,
+              internal = true)
+            .select(pick("doc_b", "doc_a"), pick("doc_a", "doc_b"),
+              col("inter"), pick("sz_b", "sz_a"), pick("sz_a", "sz_b"),
+              col("jaccard"))
         }
         // index growth: ALL batch docs' signatures, the
         // writeIndexTables append layout (one clustered file per
@@ -2354,28 +2369,43 @@ object Dedup {
       spark.read.schema(ss).parquet(s"$indexDir/shingles"))
   }
 
-  /** [[appendPairStore]]'s mark: the batch's fresh pair rows against
-    * the index as of now. The driver kernel ([[pairMarkDriver]])
-    * runs while the batch's bounded state fits under `cap`; past it
-    * the distributed twin ([[pairMarkTwin]]) runs, checkpointed. */
+  /** THE mark of a batch side against the at-rest MinHash index: the
+    * one band join, minBandMatches=2 gate and exact re-score behind
+    * every index consumer — [[appendPairStore]] (cross and
+    * batch-internal pairs), [[markAgainstIndex]] (q109/q111 ingest:
+    * cross pairs, the batch's own ids excluded) and
+    * [[splitLeakageIndexed]] (the val side against train = index
+    * minus the val ids). `(sets, banded)` are the batch side's
+    * (doc, shingles) sets and (doc, band, band_hash) rows. A stored
+    * doc whose id is in `exclude`'s `doc` column never pairs;
+    * `internal` adds the batch-internal pairs. Rows come in the
+    * [[pairTableSchema]] columns: cross pairs oriented as (stored
+    * doc, batch doc) in (doc_a, doc_b), internal pairs with
+    * doc_a < doc_b. The driver kernel ([[pairMarkDriver]]) runs while
+    * the batch's bounded state fits under `cap`; past it the
+    * distributed twin ([[pairMarkTwin]]) runs, checkpointed. Which
+    * caller the kernel serves at which scale: PLANS.md "One MinHash
+    * index mark". */
   private[graft] def pairMark(sets: DataFrame, banded: DataFrame,
       storeBands: DataFrame, storeSets: DataFrame,
       docType: org.apache.spark.sql.types.DataType, threshold: Double,
-      cap: Int): DataFrame =
+      cap: Int, exclude: Option[DataFrame], internal: Boolean)
+      : DataFrame =
     pairMarkDriver(sets, banded, storeBands, storeSets, docType,
-        threshold, cap)
+        threshold, cap, exclude, internal)
       .getOrElse(pairMarkTwin(sets, banded, storeBands, storeSets,
-        threshold).localCheckpoint(eager = true))
+        threshold, exclude, internal).localCheckpoint(eager = true))
 
   /** The over-cap twin of [[pairMarkDriver]]: cross pairs (batch
-    * bands × stored bands) and batch-internal pairs, each at the
-    * minBandMatches=2 gate, exact-rescored and normalized to
-    * doc_a < doc_b. A scan-join of the whole index tables — the only
+    * bands × stored bands, the `exclude` ids dropped from the stored
+    * side) and, with `internal`, batch-internal pairs, each at the
+    * minBandMatches=2 gate and exact-rescored, in [[pairMark]]'s
+    * orientation. A scan-join of the whole index tables — the only
     * form that fits past the cap, and the reference the kernel's
     * specs compare against. */
   private[graft] def pairMarkTwin(sets: DataFrame, banded: DataFrame,
-      storeBands: DataFrame, storeSets: DataFrame,
-      threshold: Double): DataFrame = {
+      storeBands: DataFrame, storeSets: DataFrame, threshold: Double,
+      exclude: Option[DataFrame], internal: Boolean): DataFrame = {
     val crossCand = banded.toDF("doc_b", "band", "band_hash")
       .join(storeBands.toDF("doc_a", "band", "band_hash"),
         Seq("band", "band_hash"))
@@ -2383,52 +2413,47 @@ object Dedup {
       .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("n_bands"))
       .filter(col("n_bands") >= 2)
       .select("doc_a", "doc_b")
-    // store ids need not be smaller than batch ids — normalize each
-    // cross pair to the from-scratch doc_a < doc_b convention
-    // (inter/jaccard are symmetric; sizes swap with the ids)
-    val cross = rescoreJaccardAB(crossCand, storeSets, sets, threshold)
-      .select(
-        when(col("doc_a") < col("doc_b"), struct(
-          col("doc_a").as("a"), col("doc_b").as("b"),
-          col("sz_a").as("za"), col("sz_b").as("zb")))
-          .otherwise(struct(
-            col("doc_b").as("a"), col("doc_a").as("b"),
-            col("sz_b").as("za"), col("sz_a").as("zb"))).as("_pp"),
-        col("inter"), col("jaccard"))
-      .select(col("_pp.a").as("doc_a"), col("_pp.b").as("doc_b"),
-        col("inter"), col("_pp.za").as("sz_a"),
-        col("_pp.zb").as("sz_b"), col("jaccard"))
-    val internalCand = banded.toDF("doc_a", "band", "band_hash")
-      .join(banded.toDF("doc_b", "band", "band_hash"),
-        Seq("band", "band_hash"))
-      .filter(col("doc_a") < col("doc_b"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("n_bands"))
-      .filter(col("n_bands") >= 2)
-      .select("doc_a", "doc_b")
-    cross.unionByName(
-      rescoreJaccardAB(internalCand, sets, sets, threshold))
+    // the excluded stored docs go after the cheap band-count
+    // reduction (a key set: broadcast)
+    val cross = rescoreJaccardAB(exclude.fold(crossCand)(ex =>
+        crossCand.join(broadcast(ex.select(col("doc").as("_mk_ex"))),
+          col("doc_a") === col("_mk_ex"), "left_anti")),
+      storeSets, sets, threshold)
+    if (!internal) cross
+    else {
+      val internalCand = banded.toDF("doc_a", "band", "band_hash")
+        .join(banded.toDF("doc_b", "band", "band_hash"),
+          Seq("band", "band_hash"))
+        .filter(col("doc_a") < col("doc_b"))
+        .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("n_bands"))
+        .filter(col("n_bands") >= 2)
+        .select("doc_a", "doc_b")
+      cross.unionByName(
+        rescoreJaccardAB(internalCand, sets, sets, threshold))
+    }
   }
 
-  /** The driver kernel of [[appendPairStore]]'s mark — the bounded
-    * regime (the Streams.prepDeltaDriver convention). Each read is a
-    * bounded collect ([[boundedRows]], [[boundedIn]]):
+  /** The driver kernel of [[pairMark]] — the bounded regime (the
+    * Streams.prepDeltaDriver convention). Each read is a bounded
+    * collect ([[boundedRows]], [[boundedIn]], [[boundedKeys]]):
     *
     *  1. the batch's band rows — small fixed-size rows, so the cap
     *     check runs before any shingle set leaves the executors;
     *  2. the stored band rows of the batch's band hashes (a pushed
     *     `band_hash` isin);
-    *  3. the candidates' shingle sets, in one single-job collect of
+    *  3. the `exclude` ids, when given;
+    *  4. the candidates' shingle sets, in one single-job collect of
     *     two pushed `doc` isin reads: the cross candidates' stored
-    *     sets and the candidate batch docs' persisted sets.
+    *     sets and the candidate batch docs' sets.
     *
-    * Candidates (cross pairs with doc_a ≠ doc_b, internal pairs with
-    * doc_a < doc_b, each sharing ≥ 2 (band, band_hash) rows) and
-    * their exact Jaccard are computed in Scala between steps 2 and
-    * 3 and after 3, reproducing [[pairMarkTwin]] row for row:
-    * duplicate store rows count in the band gate and repeat in the
-    * re-score as the joins repeat them, `inter` counts distinct
-    * shared elements (`array_intersect`), and cross pairs are
-    * normalized to doc_a < doc_b. Returned as one local frame.
+    * Candidates (cross pairs with doc_a ≠ doc_b and doc_a not
+    * excluded, internal pairs with doc_a < doc_b, each sharing ≥ 2
+    * (band, band_hash) rows) and their exact Jaccard are computed in
+    * Scala between steps 3 and 4 and after 4, reproducing
+    * [[pairMarkTwin]] row for row: duplicate store rows count in the
+    * band gate and repeat in the re-score as the joins repeat them,
+    * and `inter` counts distinct shared elements (`array_intersect`).
+    * Returned as one local frame.
     *
     * None — the caller runs the twin — when any key set or collected
     * row set passes `cap`, when either candidate enumeration passes
@@ -2447,7 +2472,8 @@ object Dedup {
   private[graft] def pairMarkDriver(sets: DataFrame, banded: DataFrame,
       storeBands: DataFrame, storeSets: DataFrame,
       docType: org.apache.spark.sql.types.DataType, threshold: Double,
-      cap: Int): Option[DataFrame] = {
+      cap: Int, exclude: Option[DataFrame], internal: Boolean)
+      : Option[DataFrame] = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.LongType
     import scala.collection.mutable
@@ -2503,18 +2529,21 @@ object Dedup {
       batchBuckets = buckets(batchRows)
       storeRows <- boundedIn(storeBands.select("doc", "band", "band_hash"),
         "band_hash", batchBuckets.keySet.map(_._2), cap)
-      cross <- gated(buckets(storeRows).iterator.flatMap {
-        case (key, as) =>
+      excluded <- exclude.fold(Option(Set.empty[Any]))(
+        boundedKeys(_, "doc", cap))
+      cross <- gated(buckets(storeRows.filterNot(r => excluded(r.get(0))))
+        .iterator.flatMap { case (key, as) =>
           batchBuckets.get(key).iterator.flatMap { bs =>
             for (a <- as.iterator; b <- bs.iterator if a != b)
               yield (a, b)
           }
-      })
-      internal <- gated(batchBuckets.valuesIterator.flatMap { ds =>
-        for (a <- ds.iterator; b <- ds.iterator if a < b) yield (a, b)
-      })
+        })
+      inner <- if (!internal) Some(Seq.empty[(Long, Long)])
+        else gated(batchBuckets.valuesIterator.flatMap { ds =>
+          for (a <- ds.iterator; b <- ds.iterator if a < b) yield (a, b)
+        })
       shRows <- candidateSets(cross.map(_._1).toSet,
-        cross.map(_._2).toSet ++ internal.flatMap(p => Seq(p._1, p._2)))
+        cross.map(_._2).toSet ++ inner.flatMap(p => Seq(p._1, p._2)))
       rows <- {
         val (storeSh, batchSh) = shRows.partition(_.getBoolean(2))
         val (storeOf, batchOf) = (byDoc(storeSh), byDoc(batchSh))
@@ -2532,13 +2561,11 @@ object Dedup {
               val inter = sa.iterator.distinct.count(inB.contains).toLong
               val (za, zb) = (sa.size.toLong, sb.size.toLong)
               val j = inter.toDouble / (za + zb - inter).toDouble
-              if (j >= threshold)
-                out += (if (a < b) Row(a, b, inter, za, zb, j)
-                  else Row(b, a, inter, zb, za, j))
+              if (j >= threshold) out += Row(a, b, inter, za, zb, j)
             }
           }
         cross.foreach { case (a, b) => score(a, b, storeOf) }
-        internal.foreach { case (a, b) => score(a, b, batchOf) }
+        inner.foreach { case (a, b) => score(a, b, batchOf) }
         Some(out.toSeq).filter(_ => ok)
       }
     } yield sets.sparkSession.createDataFrame(
@@ -2635,7 +2662,8 @@ object Dedup {
   /** Compaction for the at-rest signature index: every ingest batch
     * appends one id-sorted shingles file whose span covers roughly
     * the whole id range (fresh ids interleave with re-crawl offsets),
-    * so point-fetch pruning dilutes with batch count exactly as
+    * so the index mark's pushed doc-id reads (the candidates' and
+    * the leakage guard's val ids) prune less with batch count, as
     * Layout.pruningDilution measures for any log-structured store —
     * probe `Layout.pruningDilution(spark, s"$dir/shingles", "doc")`
     * for the trigger. Rewrites the shingles table globally
@@ -2766,18 +2794,18 @@ object Dedup {
     val nFiles =
       if (mode == "append") 1
       else math.max(1, docs.sparkSession.sparkContext.defaultParallelism)
-    // the bands table is the CANDIDATE-PROBE side of the mark
-    // (markAgainstIndex): cluster it by band_hash so the pushed
-    // batch-hash filter prunes files/row-groups instead of reading
+    // the bands table is the CANDIDATE-PROBE side of the index mark
+    // (pairMark): cluster it by band_hash so the kernel's pushed
+    // batch-hash read prunes files/row-groups instead of reading
     // every stored signature per micro-batch (the r13 scale veto)
     bandedSignatures(sigs, bands, k)
       .repartitionByRange(nFiles, col("band_hash"))
       .sortWithinPartitions(col("band_hash"))
       .write.mode(mode).parquet(s"$dir/bands")
-    // the shingles table is the POINT-FETCH side of the re-score
-    // (markAgainstIndex): cluster it by doc id so a pushed id filter
-    // prunes files/row-groups instead of deserializing every stored
-    // array
+    // the shingles table is the RE-SCORE side of the index mark
+    // (pairMark): cluster it by doc id so the kernel's pushed
+    // candidate-id read (and the leakage guard's val-id read) prunes
+    // files/row-groups instead of deserializing every stored array
     sets.repartitionByRange(nFiles, col("doc"))
       .sortWithinPartitions(col("doc"))
       .write.mode(mode).parquet(s"$dir/shingles")
@@ -2790,35 +2818,31 @@ object Dedup {
     * plus (dup_of nullable, is_dup).
     *
     * Scale shape (100 TB): the corpus is touched ONLY through the
-    * index — the candidate join is batch-bands against stored bands
-    * (shuffle sized by the batch plus colliding store rows), and the
-    * exact re-score POINT-FETCHES the candidate targets' stored
-    * shingle sets: up to `pointFetchCap` distinct target ids are
-    * collected (a bounded planning lookup) and pushed as an id filter
-    * into the id-clustered shingles store, pruning files/row-groups;
-    * beyond the cap a sequential scan-join takes over (the cheaper
-    * plan at that cardinality). Nothing re-tokenizes, re-hashes, or
-    * re-shuffles corpus text; ingest cost scales with the batch.
-    * Same S-curve contract
+    * index, by the one index mark ([[pairMark]], cross pairs only):
+    * while each of its bounded reads fits under
+    * [[DefaultMarkPruneCap]] (the batch's band rows, the stored band
+    * rows they collide with, the candidates) the driver kernel reads
+    * the stored band rows of the batch's band hashes and the
+    * candidates' stored shingle sets with pushed key sets into the
+    * clustered tables; past it the twin scan-joins the whole index
+    * tables. Nothing re-tokenizes, re-hashes, or re-shuffles corpus
+    * text. Same S-curve contract
     * as [[minhashNearDupPairs]] (k, bands, minBandMatches=2): subset-
     * exact, complete away from the knee — `(shingleN, k, bands)` MUST
     * match the index build or candidates are silently wrong, so they
     * are parameters of BOTH calls by design.
     *
-    * ID CONTRACT: ids must be unique across store+batch. An id-equal
-    * match is interpreted as the SAME document re-presented (the
-    * at-least-once replay case) and is never reported as a dup pair;
+    * ID CONTRACT: ids must be unique across store+batch. A stored doc
+    * whose id is a batch id is interpreted as the SAME document
+    * re-presented (the at-least-once replay case) and never pairs;
     * re-using a retired store id for different content would make
     * that doc invisible to marking and is caught loudly at the next
     * compaction (same-id-different-shingles check). */
   def incrementalNearDupAgainst(spark: org.apache.spark.sql.SparkSession,
       newDocs: DataFrame, idCol: String, textCol: String, indexDir: String,
-      shingleN: Int, k: Int, bands: Int, threshold: Double,
-      pointFetchCap: Int = 50000,
-      pointFetchMinStoreBytes: Long = DefaultPointFetchMinStoreBytes): DataFrame =
+      shingleN: Int, k: Int, bands: Int, threshold: Double): DataFrame =
     markAgainstIndex(spark, newDocs, idCol, textCol, indexDir,
-      shingleN, k, bands, threshold, appendFresh = false, pointFetchCap,
-      pointFetchMinStoreBytes)
+      shingleN, k, bands, threshold, appendFresh = false)
 
   /** [[incrementalNearDupAgainst]] fused with the store append of the
     * FRESH docs' signatures — the per-micro-batch step of continuous
@@ -2837,17 +2861,15 @@ object Dedup {
     * and cleans+redoes its own files when it does not, so the store
     * converges to exactly the single-run state whatever step the
     * first attempt crashed at. Untagged calls keep the plain
-    * best-effort parquet append. */
+    * best-effort parquet append. The mark is the same one index mark
+    * ([[pairMark]]) at the same cap, whatever the store's size. */
   def ingestBatchAgainst(spark: org.apache.spark.sql.SparkSession,
       newDocs: DataFrame, idCol: String, textCol: String, indexDir: String,
       shingleN: Int, k: Int, bands: Int, threshold: Double,
-      pointFetchCap: Int = 50000,
-      pointFetchMinStoreBytes: Long = DefaultPointFetchMinStoreBytes,
       commitTag: Option[String] = None)
       : DataFrame =
     markAgainstIndex(spark, newDocs, idCol, textCol, indexDir,
-      shingleN, k, bands, threshold, appendFresh = true, pointFetchCap,
-      pointFetchMinStoreBytes, commitTag)
+      shingleN, k, bands, threshold, appendFresh = true, commitTag)
 
   /** NEAR-DUP-AWARE SPLIT LEAKAGE GUARD: flag every EVAL-side
     * document whose exact n-gram Jaccard against some TRAIN-side
@@ -3046,74 +3068,45 @@ object Dedup {
     * at-rest shingle sets by doc id, and the verdicts land at
     * val grain. Same S-curve contract as the dataflow forms
     * ((shingleN, k, bands) fixed at index build; minBandMatches=2);
-    * DedupSpec pins indexed ≡ tagged on a shared corpus, under both
-    * store-size regimes.
+    * DedupSpec pins indexed ≡ dataflow on a shared corpus, under both
+    * regimes of the mark.
     *
-    * Past `pruneMinStoreBytes` (metadata-only probe, the
-    * [[markAgainstIndex]] cost gate) the guard stops reading the
-    * index tables whole — the steady-state regime where the corpus
-    * dwarfs every eval set: three pushed key-set reads
-    * ([[restrictTo]]) — the val-id set into BOTH index reads' val
-    * sides (point-fetch — the tables are doc-clustered), the val
-    * side's band_hash set into the train-side bands scan (row-group
-    * pruning to colliding neighborhoods — collision equality makes
-    * the filter semantically free), and the candidates' doc_a set
-    * into the train-side shingles. Guard wall then tracks the VAL
-    * side as the store grows (PLANS.md "Guard cost vs corpus
-    * growth"). */
+    * The guard is the one index mark ([[pairMark]], cross pairs
+    * only): the val side is the index's own rows of the val ids (a
+    * pushed `doc` key set into the doc-clustered tables, a semi-join
+    * past [[DefaultMarkPruneCap]] ids), marked against train = the
+    * index minus the val ids. Under the cap the kernel's stored-band
+    * read pushes the val side's band hashes, so its work tracks the
+    * VAL side as the store grows; which regime each caller runs at
+    * which scale: PLANS.md "One MinHash index mark". Ids are read at
+    * `valIds`' id type, the index's declared doc type
+    * ([[indexTableSchemas]]). */
   def splitLeakageIndexed(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, valIds: DataFrame, idCol: String,
-      threshold: Double,
-      pruneMinStoreBytes: Long = DefaultPointFetchMinStoreBytes,
-      pruneCap: Int = DefaultMarkPruneCap): DataFrame = {
-    val ids = valIds.select(col(idCol).cast("long").as("doc"))
-      .distinct().localCheckpoint() // read by three joins below
-    val storeIsBig = storeAtLeastBytes(spark, s"$indexDir/shingles",
-      pruneMinStoreBytes)
-    val bands = spark.read.parquet(s"$indexDir/bands")
-    val sets = spark.read.parquet(s"$indexDir/shingles")
-    val valIdKeys = boundedKeys(ids, "doc", pruneCap, storeIsBig)
-    def valFetch(t: DataFrame): DataFrame =
-      restrictTo(t, "doc", valIdKeys, pruneCap)(identity)
-        .join(ids, Seq("doc"), "semi")
-    val valB0 = valFetch(bands)
-    // read twice under pruning (band-key collect + collision join)
-    val valB =
-      if (storeIsBig) valB0.persist(StorageLevel.MEMORY_AND_DISK)
-      else valB0
-    val trainB = restrictTo(bands, "band_hash",
-        boundedKeys(valB, "band_hash", pruneCap, storeIsBig), pruneCap)(
-        identity)
-      .join(ids, Seq("doc"), "anti")
-    val candidates0 = valB.toDF("doc_b", "band", "band_hash")
-      .join(trainB.toDF("doc_a", "band", "band_hash"),
-        Seq("band", "band_hash"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("n_bands"))
-      .filter(col("n_bands") >= 2)
-      .select("doc_a", "doc_b")
-    // read twice under pruning (target-id collect + re-score join)
-    val candidates =
-      if (storeIsBig) candidates0.persist(StorageLevel.MEMORY_AND_DISK)
-      else candidates0
-    val trainSets = restrictTo(sets, "doc",
-      boundedKeys(candidates, "doc_a", pruneCap, storeIsBig), pruneCap)(
-      _.join(ids, Seq("doc"), "anti"))
-    val leaks = rescoreJaccardAB(candidates, trainSets,
-        valFetch(sets), threshold)
+      threshold: Double): DataFrame =
+    leakageAgainstIndex(spark, indexDir, valIds, idCol, threshold,
+      DefaultMarkPruneCap)
+
+  /** [[splitLeakageIndexed]] at a given cap of its bounded reads. */
+  private[graft] def leakageAgainstIndex(
+      spark: org.apache.spark.sql.SparkSession, indexDir: String,
+      valIds: DataFrame, idCol: String, threshold: Double,
+      cap: Int): DataFrame = {
+    val docType = valIds.schema(idCol).dataType
+    val ids = valIds.select(col(idCol).as("doc"))
+      .distinct().localCheckpoint() // the key set, the exclusion, the output
+    val (storeBands, storeSets) = readIndexTables(spark, indexDir, docType)
+    val valKeys = boundedKeys(ids, "doc", cap)
+    def valSide(t: DataFrame): DataFrame =
+      restrictTo(t, "doc", valKeys, cap)(_.join(ids, Seq("doc"), "semi"))
+    val leaks = pairMark(valSide(storeSets), valSide(storeBands),
+        storeBands, storeSets, docType, threshold, cap,
+        exclude = Some(ids), internal = false)
       .groupBy(col("doc_b").as(idCol))
       .agg(min(col("doc_a")).as("leak_from"))
-    val out0 = ids.select(col("doc").as(idCol))
+    ids.select(col("doc").as(idCol))
       .join(leaks, Seq(idCol), "left")
       .withColumn("is_leaked", col("leak_from").isNotNull)
-    if (!storeIsBig) out0 // lazy, nothing cached — the small-store plan
-    else {
-      // materialize before releasing the caches (the
-      // ngramJaccardPairs leak rationale)
-      val out = out0.localCheckpoint(eager = true)
-      candidates.unpersist(blocking = false)
-      valB.unpersist(blocking = false)
-      out
-    }
   }
 
   def splitLeakage(docs: DataFrame, idCol: String, textCol: String,
@@ -3152,8 +3145,9 @@ object Dedup {
 
   /** Has the tagged batch's store append already committed? The
     * marker is written strictly AFTER the segment files land in the
-    * tables (see the tagged branch of [[markAgainstIndex]]), so a
-    * present marker proves the full append is in the store. Markers
+    * tables ([[taggedSegmentAppend]], the seal every tagged store
+    * append runs), so a present marker proves the full append is in
+    * the store. Markers
     * live under `_commits/` — underscore-prefixed, invisible to
     * parquet reads of the sibling tables. */
   def isBatchCommitted(spark: org.apache.spark.sql.SparkSession,
@@ -3165,12 +3159,14 @@ object Dedup {
   private def commitMarkerPath(indexDir: String, tag: String) =
     new org.apache.hadoop.fs.Path(s"$indexDir/_commits/$tag")
 
-  /** The cost-based default for the point-fetch re-score: below this
-    * store size a sequential scan-join measures cheaper than the
-    * planning lookup + id filter at every sandbox-reachable scale
-    * (PLANS.md "Ingest mark cost vs store growth"). ONE constant
-    * shared by the batch defaults above and Streams.nearDupIngest's
-    * once-per-stream probe — retune it in one place. */
+  /** The store-size gate ([[storeAtLeastBytes]]) of the pushed
+    * key-set reads that still keep a scan below some store size: the
+    * phash mark ([[incrementalPhashAgainst]], Streams.phashIngest),
+    * the fold ingest's bounded CC and the manifest's pushed reads.
+    * The MinHash index mark ([[pairMark]]) has no byte gate: it
+    * switches on the batch's bounded state alone (PLANS.md "One
+    * MinHash index mark"). ONE constant shared by those defaults and
+    * the streams' once-per-stream probes — retune it in one place. */
   val DefaultPointFetchMinStoreBytes: Long = 256L << 20
 
   /** The cap of every pushed key-set read ([[boundedKeys]] +
@@ -3268,92 +3264,41 @@ object Dedup {
       fs.exists(p) && fs.getContentSummary(p).getLength >= minBytes
     }
 
-  private def markAgainstIndex(spark: org.apache.spark.sql.SparkSession,
+  /** [[incrementalNearDupAgainst]] / [[ingestBatchAgainst]]: the
+    * batch side ([[pairMarkInputs]]) against the index tables
+    * ([[readIndexTables]]) through the one index mark ([[pairMark]])
+    * at `cap`, reduced to the smallest stored partner per batch doc;
+    * with `appendFresh`, the fresh docs' signatures then append under
+    * the index lease (tagged: exactly once). */
+  private[graft] def markAgainstIndex(
+      spark: org.apache.spark.sql.SparkSession,
       newDocs: DataFrame, idCol: String, textCol: String, indexDir: String,
       shingleN: Int, k: Int, bands: Int, threshold: Double,
-      appendFresh: Boolean, pointFetchCap: Int,
-      pointFetchMinStoreBytes: Long,
-      commitTag: Option[String] = None): DataFrame = {
+      appendFresh: Boolean, commitTag: Option[String] = None,
+      cap: Int = DefaultMarkPruneCap): DataFrame = {
     // a tagged batch whose marker exists already has its signatures
     // in the store (the retry of a crashed-after-commit micro-batch):
     // skip the append entirely — re-appending would duplicate rows
     val alreadyCommitted =
       commitTag.exists(t => isBatchCommitted(spark, indexDir, t))
     val willAppend = appendFresh && !alreadyCommitted
-    // ONE store-size decision (metadata-only, sentinel-aware) drives
-    // BOTH store-sided plans: the band-scan pruning below and the
-    // shingles point-fetch re-score — the two tables grow together,
-    // and Streams probes once per stream for the pair of them
-    val storeIsBig = storeAtLeastBytes(spark, s"$indexDir/shingles",
-      pointFetchMinStoreBytes)
-    val storeSets = spark.read.parquet(s"$indexDir/shingles")
-    val sets = shingleSets(newDocs, idCol, textCol, shingleN)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val banded0 = bandedSignatures(signaturesFromBaseHashes(
-      sets.select(col("doc"), explode(col("shingles")).as("shingle"))
-        .select(col("doc"), xxhash64(col("shingle")).as("h0")),
-      k), bands, k)
-    // the append path reads banded twice (candidate probe + fresh
-    // slice) and the band-pruning path twice (hash collect +
-    // candidate probe) — cache for either; the plain mark-only path
-    // reads it once, where a persist would be pure materialization
-    // overhead
-    val banded =
-      if (willAppend || storeIsBig)
-        banded0.persist(StorageLevel.MEMORY_AND_DISK)
-      else banded0
-    // BAND-SCAN PRUNING (the r13 scale veto, closed): past the size
-    // threshold the stored bands table is not read whole per batch —
-    // the batch's band_hash set is pushed into the band_hash-clustered
-    // store ([[restrictTo]]) so the scan reads colliding neighborhoods
-    val storeBands = restrictTo(spark.read.parquet(s"$indexDir/bands"),
-      "band_hash", boundedKeys(banded, "band_hash", DefaultMarkPruneCap,
-        storeIsBig), DefaultMarkPruneCap)(identity)
-    val candidates0 = banded
-      .toDF("doc_b", "band", "band_hash")
-      .join(storeBands.toDF("doc_a", "band", "band_hash"),
-        Seq("band", "band_hash"))
-      // an id-equal pair is the SAME document re-presented (an
-      // at-least-once replay finding its own appended signatures),
-      // never a dup pair — without this, a replayed batch marks its
-      // own novel docs as duplicates of themselves and downstream
-      // discards them; ids are unique across store+batch by contract
-      .filter(col("doc_a") =!= col("doc_b"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("n_bands"))
-      .filter(col("n_bands") >= 2)
-      // AS-OF-BATCH-START semantics, exactly, even on replay: a
-      // retried batch whose append already committed finds ALL its
-      // fresh docs' signatures in the store, so without this a
-      // replayed batch would mark batch-internal near-dup pairs the
-      // original run (correctly) did not — anti-join the store side
-      // against the batch's own ids (bounded: one row per batch doc,
-      // broadcast). Subsumes nothing in the id-equal filter above —
-      // that one prunes the per-band hash collisions early; this one
-      // removes the cross-id batch self-matches after the cheap
-      // band-count reduction.
-      .join(broadcast(sets.select(col("doc").as("_mk_batch_id"))),
-        col("doc_a") === col("_mk_batch_id"), "left_anti")
-      .select("doc_a", "doc_b")
-    // POINT-FETCH the candidate targets' stored shingles when it can
-    // win: the doc_a set (bounded by pointFetchCap, the q101 planning
-    // lookup) is pushed into the id-CLUSTERED shingles store
-    // ([[restrictTo]]), so the re-score deserializes only matching
-    // row groups. A SMALL store keeps the scan-join (measured at
-    // sf0.1: filtering a few-MB store costs more than scanning it —
-    // pruning pays when the store dwarfs the batch, the actual 100 TB
-    // regime). The store-size probe is metadata-only.
-    // cache candidates only when the planning lookup will read them a
-    // second time (small-store scan-join path reads them exactly once)
-    val candidates =
-      if (storeIsBig) candidates0.persist(StorageLevel.MEMORY_AND_DISK)
-      else candidates0
-    val fetchSets = restrictTo(storeSets, "doc",
-      boundedKeys(candidates, "doc_a", pointFetchCap, storeIsBig),
-      pointFetchCap)(identity)
-    val dupOf = rescoreJaccardAB(candidates, fetchSets, sets, threshold)
+    val docType = newDocs.schema(idCol).dataType
+    val (sets, banded) =
+      pairMarkInputs(newDocs, idCol, textCol, shingleN, k, bands)
+    val (storeBands, storeSets) = readIndexTables(spark, indexDir, docType)
+    // cross pairs only (batch-internal pairs pass by contract), the
+    // batch's own ids excluded from the stored side: AS-OF-BATCH-START
+    // semantics, exactly, even on replay — a retried batch whose
+    // append already committed finds its fresh docs' signatures in
+    // the store, and an at-least-once replay finds its own appended
+    // signatures; neither is a dup pair (ids are unique across
+    // store+batch by contract)
+    val dupOf = pairMark(sets, banded, storeBands, storeSets, docType,
+        threshold, cap, exclude = Some(sets.select(col("doc"))),
+        internal = false)
       .groupBy(col("doc_b").as(idCol))
       .agg(min(col("doc_a")).as("dup_of"))
-    // materialize before releasing the batch shingle cache (the
+    // materialize before releasing the batch caches (the
     // ngramJaccardPairs leak rationale)
     val out = newDocs.join(dupOf, Seq(idCol), "left")
       .withColumn("is_dup", col("dup_of").isNotNull)
@@ -3368,7 +3313,7 @@ object Dedup {
       val dupIds = out.filter(col("is_dup")).select(col(idCol).as("doc"))
       // one clustered file per table per ingest batch (see
       // writeIndexTables): bands by band_hash for the mark probe,
-      // shingles by doc for the point-fetch
+      // shingles by doc for the re-score read
       val freshBands = banded.join(broadcast(dupIds), Seq("doc"), "left_anti")
         .repartitionByRange(1, col("band_hash"))
         .sortWithinPartitions(col("band_hash"))
@@ -3383,7 +3328,6 @@ object Dedup {
             Seq("bands" -> freshBands, "shingles" -> freshSets))
       }
     }
-    candidates.unpersist(blocking = false)
     banded.unpersist(blocking = false)
     sets.unpersist(blocking = false)
     out

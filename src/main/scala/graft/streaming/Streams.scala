@@ -139,40 +139,32 @@ object Streams {
     * skips a committed append and cleans+redoes a half-landed one;
     * the output lands in a `batch_id=<id>` partition with DYNAMIC
     * overwrite, so a retry replaces its own partition and no other.
-    * The mark itself is replay-stable: the candidate store side is
-    * anti-joined against the batch's own ids, so a retried batch
-    * that finds its own committed signatures in the store still
-    * marks AS OF the batch's first start. Whatever step the first
-    * attempt crashed at, the retried batch leaves the store and
-    * outDir in the single-run state. */
+    * The mark itself is replay-stable: it is the one index mark
+    * (Dedup.pairMark) with the batch's own ids excluded from the
+    * stored side, so a retried batch that finds its own committed
+    * signatures in the store still marks AS OF the batch's first
+    * start. Each batch's mark switches between the driver kernel and
+    * the checkpointed twin on the batch's own bounded state, with no
+    * store-size probe. Whatever step the first attempt crashed at,
+    * the retried batch leaves the store and outDir in the single-run
+    * state. */
   def nearDupIngest(docs: DataFrame, idCol: String, textCol: String,
       indexDir: String, outDir: String, checkpointDir: String,
       shingleN: Int, k: Int, bands: Int,
-      threshold: Double): StreamingQuery = {
-    // probe the store size ONCE per stream, not per micro-batch (the
-    // probe is a recursive listing — O(files) per call on an object
-    // store); once a store crosses the point-fetch threshold it never
-    // shrinks below it mid-stream (appends only), so the decision is
-    // re-probed only while still small
-    @volatile var knownBig = false
+      threshold: Double): StreamingQuery =
     microBatches(docs, checkpointDir, "neardup_ingest") { (s, b, batchId) =>
-      if (!knownBig) knownBig = Dedup.storeAtLeastBytes(s,
-        s"$indexDir/shingles", Dedup.DefaultPointFetchMinStoreBytes)
       // mark + append fused: the fresh docs' signatures are sliced
       // from the mark pass's cached tables, not recomputed from
       // text (Dedup.ingestBatchAgainst scaladoc); the marked result
       // is eagerly materialized inside, so the parquet write below
-      // doesn't recompute the candidate join against the store the
-      // append just mutated
+      // doesn't recompute the mark against the store the append
+      // just mutated
       val marked = Phases.time(s"mark_append[b$batchId]") {
         Dedup.ingestBatchAgainst(s, b, idCol, textCol, indexDir,
-          shingleN, k, bands, threshold,
-          pointFetchMinStoreBytes = if (knownBig) 0L else Long.MaxValue,
-          commitTag = Some(s"b$batchId"))
+          shingleN, k, bands, threshold, commitTag = Some(s"b$batchId"))
       }
       Phases.time(s"sink[b$batchId]")(sinkPartition(marked, batchId, outDir))
     }
-  }
 
   /** CONTINUOUS POSTINGS-INDEX INGEST: keep the at-rest BM25 store
     * (Retrieval.writePostingsIndex lifecycle) fresh as the crawl
@@ -322,8 +314,11 @@ object Streams {
   def phashIngest(fps: DataFrame, indexDir: String, outDir: String,
       checkpointDir: String, radius: Int, width: Int,
       blocks: Option[Int] = None, keyBlocks: Int = 1): StreamingQuery = {
-    // probe the key-store size ONCE per stream (the nearDupIngest
-    // store-size latch)
+    // probe the key-store size ONCE per stream, not per micro-batch
+    // (the probe is a recursive listing — O(files) per call on an
+    // object store); once the store crosses the gate it never shrinks
+    // below it mid-stream (appends only), so the decision is
+    // re-probed only while still small
     @volatile var knownBig = false
     microBatches(fps, checkpointDir, "phash_ingest") { (s, b, batchId) =>
       if (!knownBig) knownBig = Dedup.storeAtLeastBytes(s,

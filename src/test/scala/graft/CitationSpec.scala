@@ -12,7 +12,8 @@ import org.scalatest.matchers.should.Matchers
   * took the measurement is no longer in the tree. This keeps every
   * such title matching a PLANS.md heading, and keeps the names of the
   * removed measurement mains out of `src`. It also keeps the bounded
-  * key-set read behind its one helper. */
+  * key-set read behind its one helper and its cap behind a named
+  * constant. */
 class CitationSpec extends AnyFunSuite with Matchers {
 
   private lazy val sources: Seq[(String, String)] = {
@@ -38,6 +39,20 @@ class CitationSpec extends AnyFunSuite with Matchers {
     sources.filter(_._1.startsWith(Paths.get("src", "main").toString))
       .flatMap { case (path, text) =>
         splat.findAllIn(text).map(m => s"$path: $m")
+      } shouldBe empty
+  }
+
+  test("no main-source cap parameter defaults to a bare number") {
+    // a bounded read's cap defaults to a named constant
+    // (Dedup.DefaultMarkPruneCap or a sibling), so retuning it is one
+    // edit; a literal default is a second copy of the cap that drifts
+    // from it. A `val`/`var` is the named constant itself.
+    val literalCap =
+      "(?i)\\b(val\\s+|var\\s+)?\\w*cap\\w*\\s*:\\s*(?:Int|Long)\\s*=\\s*[-(0-9]".r
+    sources.filter(_._1.startsWith(Paths.get("src", "main").toString))
+      .flatMap { case (path, text) =>
+        literalCap.findAllMatchIn(text).filter(_.group(1) == null)
+          .map(m => s"$path: ${m.matched}")
       } shouldBe empty
   }
 

@@ -1048,7 +1048,8 @@ class DedupSpec extends AnyFunSuite with SparkSpec with Matchers {
 
   /** `body` over fresh mark inputs of `batch` against the index at
     * `idx`: (sets, banded) persisted and released after, and the
-    * index tables read with their declared schemas. */
+    * index tables read with their declared schemas at the batch's id
+    * type. */
   private def withMarkInputs[T](batch: org.apache.spark.sql.DataFrame,
       idx: String)(body: (org.apache.spark.sql.DataFrame,
         org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
@@ -1056,7 +1057,7 @@ class DedupSpec extends AnyFunSuite with SparkSpec with Matchers {
     val (sets, banded) = Dedup.pairMarkInputs(batch, "doc_id", "text",
       shingleN = 2, k = 64, bands = 32)
     val (storeBands, storeSets) = Dedup.readIndexTables(spark, idx,
-      org.apache.spark.sql.types.LongType)
+      batch.schema("doc_id").dataType)
     try body(sets, banded, storeBands, storeSets)
     finally {
       banded.unpersist(blocking = true)
@@ -1087,7 +1088,7 @@ class DedupSpec extends AnyFunSuite with SparkSpec with Matchers {
       // empty-text doc
       ("empty store", Seq(docs()),
         docs((1L, a11), (2L, a12), (3L, null), (4L, ""), (5L, p8)), 0.5),
-      // cross pairs normalize to doc_a < doc_b
+      // cross pairs come as (stored doc, batch doc)
       ("store ids above batch ids", Seq(docs((100L, a11), (101L, p8))),
         docs((1L, a12), (2L, a9x)), 0.5),
       // doc 10's band and shingle rows are in the store twice, so
@@ -1102,6 +1103,7 @@ class DedupSpec extends AnyFunSuite with SparkSpec with Matchers {
   test("appendPairStore mark: the driver kernel equals the scan-join " +
     "twin in all six columns, multiplicities included; under a small " +
     "cap the twin runs") {
+    import org.apache.spark.sql.types.LongType
     val root = java.nio.file.Files
       .createTempDirectory("graft_pairmark_").toString
     try pairMarkCases.zipWithIndex.foreach {
@@ -1109,26 +1111,26 @@ class DedupSpec extends AnyFunSuite with SparkSpec with Matchers {
         val idx = s"$root/idx$i"
         pairMarkIndex(idx, corpus: _*)
         val twin = withMarkInputs(batch, idx) { (s, b, sb, ss) =>
-          rowStrings(Dedup.pairMarkTwin(s, b, sb, ss, threshold))
+          rowStrings(Dedup.pairMarkTwin(s, b, sb, ss, threshold,
+            exclude = None, internal = true))
         }
         info(s"$name: ${twin.mkString("; ")}")
         twin should not be empty
         withMarkInputs(batch, idx) { (s, b, sb, ss) =>
-          Dedup.pairMarkDriver(s, b, sb, ss,
-              org.apache.spark.sql.types.LongType, threshold,
-              Dedup.DefaultMarkPruneCap)
+          Dedup.pairMarkDriver(s, b, sb, ss, LongType, threshold,
+              Dedup.DefaultMarkPruneCap, exclude = None, internal = true)
             .map(rowStrings) shouldBe Some(twin)
         }
         withMarkInputs(batch, idx) { (s, b, sb, ss) =>
-          Dedup.pairMarkDriver(s, b, sb, ss,
-            org.apache.spark.sql.types.LongType, threshold, 1) shouldBe None
-          rowStrings(Dedup.pairMark(s, b, sb, ss,
-            org.apache.spark.sql.types.LongType, threshold, 1)) shouldBe twin
+          Dedup.pairMarkDriver(s, b, sb, ss, LongType, threshold, 1,
+            exclude = None, internal = true) shouldBe None
+          rowStrings(Dedup.pairMark(s, b, sb, ss, LongType, threshold, 1,
+            exclude = None, internal = true)) shouldBe twin
         }
         name match {
           case "store ids above batch ids" =>
             twin.map(_.split('|').take(2).mkString("|")) shouldBe
-              Seq("1|100", "1|2", "2|100")
+              Seq("100|1", "100|2", "1|2")
           case "double-appended untagged segment" =>
             // one re-score row per stored copy of doc 10
             twin.count(_.startsWith("10|20|")) shouldBe 2
@@ -1164,10 +1166,11 @@ class DedupSpec extends AnyFunSuite with SparkSpec with Matchers {
       val kernelJobs = withMarkInputs(batch, idx) { (s, b, sb, ss) =>
         jobs(Dedup.pairMarkDriver(s, b, sb, ss,
           org.apache.spark.sql.types.LongType, threshold,
-          Dedup.DefaultMarkPruneCap).get)
+          Dedup.DefaultMarkPruneCap, exclude = None, internal = true).get)
       }
       val twinJobs = withMarkInputs(batch, idx) { (s, b, sb, ss) =>
-        jobs(Dedup.pairMarkTwin(s, b, sb, ss, threshold)
+        jobs(Dedup.pairMarkTwin(s, b, sb, ss, threshold, exclude = None,
+            internal = true)
           .localCheckpoint(eager = true))
       }
       info(s"pair mark jobs: kernel $kernelJobs, twin $twinJobs")
@@ -1214,7 +1217,7 @@ class DedupSpec extends AnyFunSuite with SparkSpec with Matchers {
         val reads = collected {
           Dedup.pairMarkDriver(s, b, sb, ss,
             org.apache.spark.sql.types.LongType, threshold,
-            cap = 50) shouldBe None
+            cap = 50, exclude = None, internal = true) shouldBe None
         }
         reads.map(_._1) shouldBe Seq(Seq("doc", "band", "band_hash"))
       }
@@ -1225,7 +1228,7 @@ class DedupSpec extends AnyFunSuite with SparkSpec with Matchers {
         val reads = collected {
           Dedup.pairMarkDriver(s, b, sb, ss,
             org.apache.spark.sql.types.LongType, threshold,
-            Dedup.DefaultMarkPruneCap).get
+            Dedup.DefaultMarkPruneCap, exclude = None, internal = true).get
         }
         reads.filter(_._1.contains("shingles")) shouldBe Seq(
           (Seq("doc", "shingles", "is_store"),
@@ -1247,16 +1250,81 @@ class DedupSpec extends AnyFunSuite with SparkSpec with Matchers {
       val text = (1 to 11).map(i => s"t$i").mkString(" ")
       val batch = (1L to 20L).map(_ -> text).toDF("doc_id", "text")
       val twin = withMarkInputs(batch, idx) { (s, b, sb, ss) =>
-        rowStrings(Dedup.pairMarkTwin(s, b, sb, ss, 0.5))
+        rowStrings(Dedup.pairMarkTwin(s, b, sb, ss, 0.5, exclude = None,
+          internal = true))
       }
       twin should have size 190
       withMarkInputs(batch, idx) { (s, b, sb, ss) =>
         def kernel(cap: Int) = Dedup.pairMarkDriver(s, b, sb, ss,
-          org.apache.spark.sql.types.LongType, 0.5, cap)
+          org.apache.spark.sql.types.LongType, 0.5, cap, exclude = None,
+          internal = true)
         // every read fits 640, but 6,080 matches pass 8 × 640
         kernel(640) shouldBe None
         kernel(800).map(rowStrings) shouldBe Some(twin)
       }
+    } finally Scratch.deleteRecursively(new java.io.File(root))
+  }
+
+  test("index mark, cross-only: the kernel equals the twin with an " +
+    "excluded stored id, a replay-doubled stored row and a batch-internal " +
+    "pair; string ids run the twin to the same verdicts") {
+    import spark.implicits._
+    import org.apache.spark.sql.types.{LongType, StringType}
+    val fox = "the quick brown fox jumps over the lazy dog tonight"
+    val fresh = "totally new material never indexed before anywhere"
+    val spark0 = "completely different content about spark and catalyst"
+    // stored: 1 and 5 carry fox, 7 carries spark0 twice (an untagged
+    // replay appended it again); the batch re-presents 5, near-copies
+    // fox as 10, copies 7 as 11, and 12/13 near-dup only each other
+    val corpus = Seq(Seq(1L -> fox, 5L -> fox, 7L -> spark0),
+      Seq(7L -> spark0))
+    val batch = Seq(5L -> fox, 10L -> (fox + " again"),
+      11L -> spark0, 12L -> fresh, 13L -> (fresh + " again"))
+    val excluded = batch.map(_._1)
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_indexmark_").toString
+    /** Kernel (None when it declines) and twin rows of the cross-only
+      * mark over the fixture with its ids mapped by `id`. */
+    def marks(name: String,
+        id: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
+        docType: org.apache.spark.sql.types.DataType,
+        exclude: Boolean = true): (Option[Seq[String]], Seq[String]) = {
+      def docs(rows: Seq[(Long, String)]) = rows.toDF("doc_id", "text")
+        .select(id(col("doc_id")).as("doc_id"), col("text"))
+      val idx = s"$root/$name"
+      pairMarkIndex(idx, corpus.map(docs): _*)
+      val b = docs(batch)
+      val ex = Some(excluded.toDF("doc").select(id(col("doc")).as("doc")))
+        .filter(_ => exclude)
+      withMarkInputs(b, idx) { (s, bd, sb, ss) =>
+        (Dedup.pairMarkDriver(s, bd, sb, ss, docType, 0.5,
+            Dedup.DefaultMarkPruneCap, ex, internal = false)
+            .map(rowStrings),
+          rowStrings(Dedup.pairMark(s, bd, sb, ss, docType, 0.5, 1, ex,
+            internal = false)))
+      }
+    }
+    def pairsOf(rows: Seq[String]) =
+      rows.map(_.split('|').take(2).mkString("|"))
+    try {
+      val (kernel, twin) = marks("long", identity, LongType)
+      info(s"cross-only: ${twin.mkString("; ")}")
+      kernel shouldBe Some(twin) // the kernel ran, and agrees
+      // 5 pairs only as a batch doc; 7's two stored rows re-score
+      // twice; 12-13 and 5 against its own stored row never pair
+      pairsOf(twin) shouldBe Seq("1|10", "1|5", "7|11", "7|11")
+      // without the exclusion stored 5 pairs with 10 (and 5 with
+      // itself is still no pair)
+      val (_, unexcluded) = marks("open", identity, LongType,
+        exclude = false)
+      pairsOf(unexcluded) shouldBe
+        Seq("1|10", "1|5", "5|10", "7|11", "7|11")
+      val (strKernel, strTwin) = marks("string",
+        d => concat(lit("d"), d.cast(StringType)), StringType)
+      strKernel shouldBe None // the kernel takes long ids only
+      strTwin shouldBe twin.map(_.split('|')).map { f =>
+        (s"d${f(0)}" +: s"d${f(1)}" +: f.drop(2).toSeq).mkString("|")
+      }.sorted
     } finally Scratch.deleteRecursively(new java.io.File(root))
   }
 
@@ -1292,10 +1360,22 @@ class DedupSpec extends AnyFunSuite with SparkSpec with Matchers {
     } finally Scratch.deleteRecursively(new java.io.File(root))
   }
 
-  test("incremental near-dup ingest flags batch docs against the stored index") {
+  /** The two regimes of the one index mark, as (test-name suffix,
+    * cap): the default cap runs the driver kernel on the small
+    * fixtures, a 1-row cap forces the checkpointed twin. */
+  private val markRegimes =
+    Seq("" -> Dedup.DefaultMarkPruneCap, " (forced twin)" -> 1)
+
+  for ((regime, cap) <- markRegimes)
+  test("incremental near-dup ingest flags batch docs against the " +
+    s"stored index$regime") {
     import spark.implicits._
     val root = java.nio.file.Files
       .createTempDirectory("graft_nd_index_").toString
+    def mark(docs: org.apache.spark.sql.DataFrame) =
+      Dedup.markAgainstIndex(spark, docs, "doc_id", "text", root + "/idx",
+        shingleN = 2, k = 64, bands = 32, threshold = 0.5,
+        appendFresh = false, cap = cap)
     try {
       val corpus = Seq(
         (1L, "the quick brown fox jumps over the lazy dog tonight"),
@@ -1312,9 +1392,7 @@ class DedupSpec extends AnyFunSuite with SparkSpec with Matchers {
         // fresh content → kept
         (12L, "totally new material never indexed before anywhere"))
         .toDF("doc_id", "text")
-      val out = Dedup.incrementalNearDupAgainst(spark, batch, "doc_id",
-          "text", root + "/idx", shingleN = 2, k = 64, bands = 32,
-          threshold = 0.5)
+      val out = mark(batch)
         .select("doc_id", "dup_of", "is_dup")
         .as[(Long, Option[Long], Boolean)].collect()
         .map(r => r._1 -> ((r._2, r._3))).toMap
@@ -1346,22 +1424,11 @@ class DedupSpec extends AnyFunSuite with SparkSpec with Matchers {
       Dedup.appendToNearDupIndex(
         batch.filter(col("doc_id") === 12L), "doc_id", "text", 2, 64, 32,
         root + "/idx")
-      val again = Dedup.incrementalNearDupAgainst(spark,
-          batch.select((col("doc_id") + 100L).as("doc_id"), col("text")),
-          "doc_id", "text", root + "/idx", 2, 64, 32, 0.5)
+      val again = mark(
+          batch.select((col("doc_id") + 100L).as("doc_id"), col("text")))
         .select("doc_id", "dup_of")
         .as[(Long, Option[Long])].collect().toMap
       again(112L) shouldBe Some(12L) // caught by the APPENDED signature
-      // the point-fetch re-score (forced past the small-store
-      // fallback) and the default scan-join are the same operator on
-      // the same store
-      val viaPointFetch = Dedup.incrementalNearDupAgainst(spark,
-          batch.select((col("doc_id") + 100L).as("doc_id"), col("text")),
-          "doc_id", "text", root + "/idx", 2, 64, 32, 0.5,
-          pointFetchMinStoreBytes = 0L)
-        .select("doc_id", "dup_of")
-        .as[(Long, Option[Long])].collect().toMap
-      viaPointFetch shouldBe again
     } finally Scratch.deleteRecursively(new java.io.File(root))
   }
 
@@ -1451,8 +1518,9 @@ class DedupSpec extends AnyFunSuite with SparkSpec with Matchers {
     tagged shouldBe pred
   }
 
+  for ((regime, cap) <- markRegimes)
   test("splitLeakageIndexed ≡ splitLeakage from the at-rest index " +
-    "(the corpus text never re-tokenized)") {
+    s"(the corpus text never re-tokenized)$regime") {
     import spark.implicits._
     val docs = Seq(
       (10L, "the quick brown fox jumps over the lazy dog tonight"),
@@ -1472,30 +1540,14 @@ class DedupSpec extends AnyFunSuite with SparkSpec with Matchers {
       val dataflow = norm(Dedup.splitLeakage(docs, "doc_id", "text",
         id => pmod(id, lit(10)) === 0,
         shingleN = 2, k = 64, bands = 32, threshold = 0.5))
-      val indexed = norm(Dedup.splitLeakageIndexed(spark,
+      // the twin regime's 1-key cap also sends the val-id read to its
+      // semi-join form
+      val indexed = norm(Dedup.leakageAgainstIndex(spark,
         root + "/idx",
         docs.filter(pmod(col("doc_id"), lit(10)) === 0)
           .select("doc_id"),
-        "doc_id", threshold = 0.5))
+        "doc_id", threshold = 0.5, cap = cap))
       indexed shouldBe dataflow
-      // the big-store regime (sentinel 0 forces it): pushed val-id /
-      // val-band-hash / target-id pruning is semantically free —
-      // identical verdicts through the point-fetch plans
-      val pruned = norm(Dedup.splitLeakageIndexed(spark,
-        root + "/idx",
-        docs.filter(pmod(col("doc_id"), lit(10)) === 0)
-          .select("doc_id"),
-        "doc_id", threshold = 0.5, pruneMinStoreBytes = 0L))
-      pruned shouldBe dataflow
-      // over-cap fallback: a 1-key cap exceeds on every pushed set,
-      // so all three sequential fallbacks run — same verdicts
-      val overCap = norm(Dedup.splitLeakageIndexed(spark,
-        root + "/idx",
-        docs.filter(pmod(col("doc_id"), lit(10)) === 0)
-          .select("doc_id"),
-        "doc_id", threshold = 0.5, pruneMinStoreBytes = 0L,
-        pruneCap = 1))
-      overCap shouldBe dataflow
     } finally Scratch.deleteRecursively(new java.io.File(root))
   }
 
@@ -1562,7 +1614,9 @@ class DedupSpec extends AnyFunSuite with SparkSpec with Matchers {
     componentFold.filter(col("is_leaked")).count() shouldBe 0L
   }
 
-  test("tagged ingest (exactly-once): a retried batch leaves store and verdicts in the single-run state") {
+  for ((regime, cap) <- markRegimes)
+  test("tagged ingest (exactly-once): a retried batch leaves store and " +
+    s"verdicts in the single-run state$regime") {
     import spark.implicits._
     val root = java.nio.file.Files
       .createTempDirectory("graft_nd_tag_").toString
@@ -1579,10 +1633,13 @@ class DedupSpec extends AnyFunSuite with SparkSpec with Matchers {
         (11L, "totally new material never indexed before anywhere"),
         (12L, "totally new material never indexed before anywhere again"))
         .toDF("doc_id", "text")
-      def ingest() = Dedup.ingestBatchAgainst(spark, batch, "doc_id",
-          "text", root + "/idx", 2, 64, 32, 0.5, commitTag = Some("b0"))
-        .select("doc_id", "dup_of")
-        .as[(Long, Option[Long])].collect().toMap
+      def ingestAs(b: org.apache.spark.sql.DataFrame, tag: String) =
+        Dedup.markAgainstIndex(spark, b, "doc_id", "text", root + "/idx",
+            2, 64, 32, 0.5, appendFresh = true, commitTag = Some(tag),
+            cap = cap)
+          .select("doc_id", "dup_of")
+          .as[(Long, Option[Long])].collect().toMap
+      def ingest() = ingestAs(batch, "b0")
       def storeState(): (Set[(Long, Seq[String])], Set[(Long, Int, Long)]) = (
         spark.read.parquet(root + "/idx/shingles")
           .as[(Long, Seq[String])].collect()
@@ -1604,18 +1661,10 @@ class DedupSpec extends AnyFunSuite with SparkSpec with Matchers {
       files1.count(_.startsWith("seg-b0-")) shouldBe 1 // tag-named segment
       // retry of a COMMITTED batch (crash after marker): append
       // skipped, verdicts replay-stable — 11/12 still unmarked even
-      // though both now sit in the store (the batch-id anti-join)
+      // though both now sit in the store (the batch-id exclusion)
       ingest() shouldBe first
       storeState() shouldBe ((sh1, bd1))
       shingleFiles() shouldBe files1
-      // the committed-retry contract holds through the FORCED
-      // point-fetch re-score too (the big-store plan)
-      Dedup.ingestBatchAgainst(spark, batch, "doc_id", "text",
-          root + "/idx", 2, 64, 32, 0.5,
-          pointFetchMinStoreBytes = 0L, commitTag = Some("b0"))
-        .select("doc_id", "dup_of")
-        .as[(Long, Option[Long])].collect().toMap shouldBe first
-      storeState() shouldBe ((sh1, bd1))
       // retry of a HALF-LANDED append (crash after the file moves,
       // before the marker): segment files present, no marker — the
       // retry cleans its own tag files, redoes the append, re-seals
@@ -1629,10 +1678,7 @@ class DedupSpec extends AnyFunSuite with SparkSpec with Matchers {
       val b1 = Seq(
         (13L, "totally new material never indexed before anywhere"))
         .toDF("doc_id", "text")
-      val second = Dedup.ingestBatchAgainst(spark, b1, "doc_id",
-          "text", root + "/idx", 2, 64, 32, 0.5, commitTag = Some("b1"))
-        .select("doc_id", "dup_of")
-        .as[(Long, Option[Long])].collect().toMap
+      val second = ingestAs(b1, "b1")
       second(13L) shouldBe Some(11L)
     } finally Scratch.deleteRecursively(new java.io.File(root))
   }
