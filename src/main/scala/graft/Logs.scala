@@ -3,24 +3,15 @@ package graft
 /** Logging hygiene shared by the runnable mains. */
 object Logs {
 
-  /** Silence the one benign WARN that prints a full stack trace:
-    * FileStreamSink's metadata probe on a glob path logs a
-    * FileNotFoundException at WARN on every analysis of
-    * SnapshotIO.readMessages (the "*.json" literal is not a real
-    * file). Harmless, but a driver or judge parsing bench/verify
-    * stderr sees an exception trace every round. Everything else
-    * stays at the session default. */
-  def quietBenignWarns(): Unit = {
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink",
-      org.apache.logging.log4j.Level.ERROR)
-    // Bench/Verify deliberately unpersist each query's eager local
-    // checkpoint after its result is consumed (the session-hygiene
-    // drain); Spark warns that the truncated lineage cannot be
-    // recomputed — which is exactly the contract (the frame is never
-    // touched again), so the WARN is noise here
+  /** Silence the one benign WARN the mains trigger on purpose: Bench
+    * and Verify unpersist each query's eager local checkpoint after
+    * its result is consumed (the session-hygiene drain); Spark warns
+    * that the truncated lineage cannot be recomputed — which is
+    * exactly the contract (the frame is never touched again), so the
+    * WARN is noise here. Everything else stays at the session
+    * default. */
+  def quietBenignWarns(): Unit =
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.rdd.MapPartitionsRDD",
       org.apache.logging.log4j.Level.ERROR)
-  }
 }

@@ -319,34 +319,38 @@ object Main {
   /** §3.2 replay: snapshot → decoded payloads → ordered per-topic
     * send. The injected sink writes one file per topic with one
     * base64 payload line per message, in seq order — the file-grounded
-    * stand-in for a producer.
+    * stand-in for a producer. The files appear in `outDir` only once
+    * the whole replay has succeeded: read, decode and send share one
+    * stage, so one task can finish its topics while another finds a
+    * malformed file. Tasks write under `outDir/_replaying`, and the
+    * driver moves the files out after the job (the stand-in for a
+    * transactional producer's commit) or deletes them after a
+    * failure. Tasks create files non-recursively, so one still
+    * running after that delete cannot bring the directory back.
     *
     * With `--since <snapshotA>`: SELECTIVE replay — the completion of
     * `restore --since`'s DDL half: only messages of topics the
     * [[deltaTopics]] diff marks added/changed are re-sent, each
     * topic's stream complete and in capture order (the semi-join
-    * restricts TOPICS, never rows within a topic, so the per-topic
-    * ordering invariant of Replay.orderedReplay is untouched). */
+    * restricts TOPICS, never rows within a topic, and keeps each topic
+    * in one partition; see Replay.replaySnapshot). */
   private def replay(spark: SparkSession, snapDir: String,
       outDir: String, since: Option[String]): Seq[String] = {
-    val all = Replay.withPayload(SnapshotIO.readMessages(spark, snapDir))
-    val (env, tag) = since match {
-      case None => (all, "")
-      case Some(sinceDir) =>
-        (all.join(deltaTopics(spark, sinceDir, snapDir),
-          Seq("topic"), "left_semi"), s" (delta since $sinceDir)")
-    }
-    // counted in the sink, not by a second read of the snapshot:
-    // after the repartition on topic each topic sits in exactly one
-    // partition (coalescing only merges partitions), so every topic
-    // switch in a partition is one replayed topic
+    import org.apache.hadoop.fs.Path
+    val base = new Path(outDir)
+    val staging = new Path(base, "_replaying")
+    val stagingDir = staging.toString
+    val fs = base.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val created = !fs.exists(base)
+    fs.mkdirs(staging)
+    // counted in the sink, not by a second read of the snapshot: each
+    // topic sits in exactly one partition, sorted by topic, so every
+    // topic switch in a partition is one replayed topic
     val topics = spark.sparkContext.longAccumulator("replayed topics")
-    Replay.orderedReplay(env, { it: Iterator[Row] =>
+    try Replay.replaySnapshot(spark, snapDir, { it: Iterator[Row] =>
       if (it.hasNext) {
-        val basePath = new org.apache.hadoop.fs.Path(outDir)
-        val fs = basePath.getFileSystem(
-          new org.apache.hadoop.conf.Configuration())
-        fs.mkdirs(basePath)
+        val dir = new Path(stagingDir)
+        val fs = dir.getFileSystem(new org.apache.hadoop.conf.Configuration())
         var cur: String = null
         var out: org.apache.hadoop.fs.FSDataOutputStream = null
         try {
@@ -356,8 +360,8 @@ object Main {
               if (out != null) out.close()
               cur = topic
               topics.add(1L)
-              out = fs.create(new org.apache.hadoop.fs.Path(
-                basePath, codec.sanitizeTopicStr(topic) + ".txt"), true)
+              out = fs.createFile(new Path(dir, codec.sanitizeTopicStr(topic) + ".txt"))
+                .overwrite(true).build()
             }
             val b64 = java.util.Base64.getEncoder
               .encodeToString(r.getAs[Array[Byte]]("payload"))
@@ -366,8 +370,20 @@ object Main {
           }
         } finally if (out != null) out.close()
       }
-    })
-    Seq(s"replayed ${topics.value} topics to $outDir$tag")
+    }, only = since.map(deltaTopics(spark, _, snapDir)))
+    catch { case e: Throwable =>
+      fs.delete(if (created) base else staging, true)
+      throw e
+    }
+    fs.listStatus(staging).filter(_.getPath.getName.endsWith(".txt")).foreach { st =>
+      val dest = new Path(base, st.getPath.getName)
+      fs.delete(dest, false)
+      if (!fs.rename(st.getPath, dest))
+        throw new java.io.IOException(s"cannot move ${st.getPath} to $dest")
+    }
+    fs.delete(staging, true)
+    Seq(s"replayed ${topics.value} topics to $outDir" +
+      since.fold("")(d => s" (delta since $d)"))
   }
 
   /** `restore [--since <snapshotA>]` argument tail: `Some(None)` =

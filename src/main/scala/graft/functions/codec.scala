@@ -65,6 +65,10 @@ object codec {
       regexp_replace(regexp_replace(fileName, "_s", "/"), "_c", ":"),
       "_u", "_")
 
+  /** Scala-string twin of [[desanitizeTopic]] for driver-side checks. */
+  def desanitizeTopicStr(fileName: String): String =
+    fileName.replace("_s", "/").replace("_c", ":").replace("_u", "_")
+
   /** The reference's lossy mapping, for interchange compatibility. */
   def sanitizeTopicLossy(topic: Column): Column =
     regexp_replace(topic, "/", "_")

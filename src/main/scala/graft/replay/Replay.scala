@@ -13,11 +13,13 @@ import graft.sources.SnapshotIO
   * order (pulsar_backup_restore.py:102,202); here each verb touches
   * its data once. Capture scans its input in one stage, shuffles it
   * once on the output file name and derives the catalog from the
-  * topics written; replay reads each snapshot file whole, so `seq` is
-  * the message's array position, and makes the per-topic order
-  * contract explicit: a repartition on topic and a
-  * sortWithinPartitions on `seq` — the only ordering that survives a
-  * shuffle on a real cluster.
+  * topics written. Replay states the per-topic order contract in the
+  * plan, as a sortWithinPartitions on (topic, `seq`), and never
+  * trusts physical row order. The sort is local, so it needs each
+  * topic's rows in one partition: a snapshot read already has them
+  * there (one file per topic, read whole), so a snapshot replays in
+  * one stage with no exchange; an arbitrary envelope is first
+  * repartitioned on topic.
   */
 object Replay {
 
@@ -38,21 +40,40 @@ object Replay {
     env.withColumn("payload",
       codec.decodeContent(col("content"), col("binary_encoded")))
 
-  /** L4/T6: ordered replay — one partition per topic, rows sorted by
-    * `seq` within each partition, handed to `sendPartition` in that
-    * order (production: a Pulsar producer per task; tests: a
-    * collector). Within a topic, rows reach the sink in capture
-    * order — the replay correctness invariant. */
+  /** L4/T6: ordered replay of an arbitrary envelope: a repartition
+    * on topic puts each topic in one partition, then [[sendInOrder]].
+    * Within a topic, rows reach the sink in capture order — the
+    * replay correctness invariant. */
   def orderedReplay(env: DataFrame, sendPartition: Iterator[Row] => Unit): Unit =
-    env.repartition(col("topic"))
-      .sortWithinPartitions(col("topic"), col("seq"))
+    sendInOrder(env.repartition(col("topic")), sendPartition)
+
+  /** Rows sorted by (topic, `seq`) within each partition, handed to
+    * `sendPartition` in that order (production: a Pulsar producer per
+    * task; tests: a collector). Requires each topic's rows to sit in
+    * one partition; the sort adds no exchange. */
+  private def sendInOrder(env: DataFrame,
+      sendPartition: Iterator[Row] => Unit): Unit =
+    env.sortWithinPartitions(col("topic"), col("seq"))
       .foreachPartition(sendPartition)
 
-  /** §3.2 end-to-end: snapshot dir → decoded payloads → ordered send. */
+  /** §3.2 end-to-end: snapshot dir → decoded payloads → optional
+    * restriction to the topics of `only` (a left semi-join on topic)
+    * → ordered send. No repartition: readMessages leaves each topic
+    * in one partition, a broadcast semi-join keeps the read's
+    * partitioning and a sort-merge one hash-partitions on topic, so
+    * the local sort suffices either way (adaptive skew handling splits
+    * a join partition by ranges of map tasks, and a topic's rows come
+    * from the one task that read its file). Without `only` the replay is
+    * one stage. Read, decode and send share it: a malformed file
+    * fails its task before that task sends (the sort takes in the
+    * whole partition first), but other tasks may have sent already,
+    * so a sink that must be all-or-nothing publishes its output only
+    * after this returns (Main's replay does). */
   def replaySnapshot(spark: SparkSession, dir: String,
       sendPartition: Iterator[Row] => Unit,
-      compatLossy: Boolean = false): Unit =
-    orderedReplay(
-      withPayload(SnapshotIO.readMessages(spark, dir, compatLossy)),
+      compatLossy: Boolean = false, only: Option[DataFrame] = None): Unit = {
+    val env = withPayload(SnapshotIO.readMessages(spark, dir, compatLossy))
+    sendInOrder(only.fold(env)(env.join(_, Seq("topic"), "left_semi")),
       sendPartition)
+  }
 }

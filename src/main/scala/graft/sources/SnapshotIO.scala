@@ -26,9 +26,10 @@ import graft.model.Schemas
   * executors, with the catalog derived from the topics written; a
   * read takes every file whole and explodes its array, so the
   * per-topic message order of the reference (array position) becomes
-  * an explicit `seq` column without a shuffle. `seq` is what replay
-  * sorts on — relying on physical row order would not survive a
-  * shuffle on a cluster.
+  * an explicit `seq` column without a shuffle, and each topic's rows
+  * stay in the one partition its file was read into. `seq` is what
+  * replay sorts on; relying on physical row order would not survive
+  * a shuffle on a cluster.
   */
 object SnapshotIO {
 
@@ -38,34 +39,58 @@ object SnapshotIO {
     *
     * One pass, no shuffle: each file is read whole as one row
     * (`wholetext`), parsed as the JSON array it is, and exploded with
-    * its positions — `seq` IS the array position, the reference's own
-    * definition of per-topic arrival order, whatever partition the
-    * file lands in and however many files share it. One file must
-    * fit in one row, which the reference's per-topic cap (10k
-    * messages) guarantees. Parsing is FAILFAST: a
+    * its positions. Two postconditions hold whatever partition a
+    * file lands in and however many files share it:
+    *  - `seq` IS the array position, the reference's own definition
+    *    of per-topic arrival order;
+    *  - each topic's rows sit in exactly one partition: a topic is
+    *    one file (checked below) and a `wholetext` file is never
+    *    split. Replay sorts each partition locally on this, with no
+    *    exchange.
+    * One file must fit in one row, which the reference's per-topic
+    * cap (10k messages) guarantees. Parsing is FAILFAST: a
     * truncated or otherwise malformed file fails the read instead of
     * turning into null rows or silently losing its topic.
+    *
+    * The driver lists `<dir>/messages` once and fails before any job
+    * runs on a missing directory, one without `*.json` files, an
+    * empty file (Spark drops zero-byte files before the read, so the
+    * null guard below would never see it), a subdirectory (Spark
+    * would read into it) and two file names that decode to one topic
+    * (only a hand-made snapshot has them; they would interleave two
+    * `seq` runs). The read is then handed that directory as its one
+    * root: Spark lists a single root on the driver, where one root
+    * per file (a `*.json` glob) costs a listing job of a task per
+    * file past 32 files. Sanitized file names containing glob
+    * metacharacters (a topic named "data[1]") are never re-globbed.
     */
   def readMessages(spark: SparkSession, dir: String,
       compatLossy: Boolean = false): DataFrame = {
-    // a zero-byte file holds no JSON array at all, but Spark drops
-    // empty files before the read, so the null guard below never sees
-    // it: reject it here by name instead of reading it as no messages.
-    val glob = new org.apache.hadoop.fs.Path(s"$dir/messages/*.json")
-    Option(glob.getFileSystem(spark.sessionState.newHadoopConf())
-        .globStatus(glob)).toSeq.flatten.find(_.getLen == 0L)
-      .foreach(st => throw new IllegalArgumentException(
-        s"malformed snapshot file: ${st.getPath} is empty"))
-    // the single glob is deliberate: Spark expands it itself, so
-    // sanitized file names containing glob metacharacters (e.g. a
-    // topic named "data[1]") are never re-globbed the way concrete
-    // user-supplied paths would be, and a missing/typo'd snapshot dir
-    // fails loudly instead of reading as an empty success. The benign
-    // FileStreamSink metadata-probe WARN this path triggers is
-    // silenced at the logger level by Logs.quietBenignWarns.
+    val root = new org.apache.hadoop.fs.Path(dir, "messages")
+    // Spark's listing skips hidden names ("_"/"." first: the checksum
+    // sidecars), so the checks below skip them too
+    val listed = root.getFileSystem(spark.sessionState.newHadoopConf())
+      .listStatus(root).filterNot(_.getPath.getName.matches("[_.].*"))
+    listed.find(_.isDirectory).foreach(st => throw new IllegalArgumentException(
+      s"malformed snapshot: ${st.getPath} is a directory"))
+    val jsons = listed.filter(_.getPath.getName.endsWith(".json"))
+    if (jsons.isEmpty) throw new IllegalArgumentException(
+      s"malformed snapshot: no *.json message files in $root")
+    jsons.find(_.getLen == 0L).foreach(st => throw new IllegalArgumentException(
+      s"malformed snapshot file: ${st.getPath} is empty"))
+    // only the reversible escaping maps two names to one topic ("a_b"
+    // and "a_ub"); the lossy "_"→"/" is one-to-one on file names
+    if (!compatLossy)
+      jsons.groupBy(st => codec.desanitizeTopicStr(st.getPath.getName.stripSuffix(".json")))
+        .collectFirst { case (t, sts) if sts.length > 1 =>
+          throw new IllegalArgumentException(
+            s"malformed snapshot: ${sts.map(_.getPath.getName).sorted.mkString(", ")} " +
+              s"all decode to topic $t")
+        }
     val files = spark.read
       .option("wholetext", true)   // reference writes a JSON ARRAY per file
-      .text(s"$dir/messages/*.json")
+      .option("pathGlobFilter", "*.json")
+      .text(root.toString)
       .select(input_file_name().as("_file"),
         from_json(col("value"), ArrayType(Schemas.snapshotMessage),
           Map("mode" -> "FAILFAST")).as("msgs"))

@@ -3,7 +3,9 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import org.apache.spark.scheduler.StageInfo
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
@@ -228,31 +230,177 @@ class SnapshotSpec extends AnyFunSuite with SparkSpec with Matchers {
     } finally conf.set("spark.sql.files.openCostInBytes", saved)
   }
 
-  test("each verb touches its data once: one source stage, no read shuffle, one replay query") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerStageSubmitted, StageInfo}
+  /** A captured snapshot of `perTopic(i)` messages on topic "t/ns/x<i>". */
+  private def snapshotOf(perTopic: Seq[Int]): String = {
+    val tmp = Files.createTempDirectory("graft_snap_stage").toString
+    Replay.capture(envelopeOf(perTopic.indices.map(i => s"persistent://t/ns/x$i"),
+      perTopic), tmp)
+    tmp
+  }
+
+  /** Each replay output file holds its topic's "<topic>#<seq>"
+    * payloads in seq order, for exactly `perTopic`'s topics. */
+  private def checkReplayed(out: String, perTopic: Map[String, Int]): Unit = {
+    new java.io.File(out).list().filter(_.endsWith(".txt")).toSet shouldBe
+      perTopic.keySet.map(t => graft.functions.codec.sanitizeTopicStr(t) + ".txt")
+    perTopic.foreach { case (t, n) =>
+      lines(out, graft.functions.codec.sanitizeTopicStr(t) + ".txt")
+        .map(l => new String(java.util.Base64.getDecoder.decode(l), "UTF-8")) shouldBe
+        (0 until n).map(s => s"$t#$s")
+    }
+  }
+
+  test("a snapshot replays in one stage: no listing job and no exchange, past the 32-file listing threshold") {
+    val perTopic = (0 until 48).map(i => 5 + i % 9)
+    val snap = snapshotOf(perTopic)
+    val out = Files.createTempDirectory("graft_snap_stage_out").toString
+    val r = recorded(Main.run(spark, Seq("replay", snap, out)) shouldBe
+      Seq(s"replayed ${perTopic.size} topics to $out"))
+    r.queries shouldBe 1
+    // a glob of 48 files lists them in a job of a task per file; the
+    // repartition on topic adds a map stage and its own job
+    r.jobTasks should have size 1
+    r.stages should have size 1
+    r.stages.head.numTasks should be < perTopic.size
+    r.plans should have size 1
+    shuffles(r.plans.head) shouldBe empty
+    checkReplayed(out, perTopic.indices.map(i => s"persistent://t/ns/x$i" -> perTopic(i)).toMap)
+  }
+
+  test("replaySnapshot: each topic in one partition, in seq order, with many files or one file per partition") {
+    val perTopic = (0 until 36).map(i => 1 + (i * 37) % 300)
+    val snap = snapshotOf(perTopic)
+    // 1 KB of open cost packs many files into a partition; one
+    // maxPartitionBytes of open cost gives each file its own
+    for ((openCost, onePerFile) <- Seq(("1024", false), ("134217728", true)))
+      GraftSession.withConf(spark, "spark.sql.files.openCostInBytes" -> openCost) {
+        SnapshotSpec.placed.clear()
+        Replay.replaySnapshot(spark, snap, { it: Iterator[Row] =>
+          val p = org.apache.spark.TaskContext.getPartitionId()
+          it.foreach(r => SnapshotSpec.placed.add(
+            (p, r.getAs[String]("topic"), r.getAs[Long]("seq"))))
+        })
+        val rows = SnapshotSpec.placed.toArray(Array.empty[(Int, String, Long)]).toSeq
+        val parts = rows.map(_._1).distinct
+        if (onePerFile) parts should have size perTopic.size
+        else parts.size should be < perTopic.size
+        val byTopic = rows.groupBy(_._2)
+        byTopic.keySet shouldBe perTopic.indices.map(i => s"persistent://t/ns/x$i").toSet
+        byTopic.foreach { case (t, rs) =>
+          rs.map(_._1).distinct should have size 1
+          // the queue keeps each task's arrival order
+          rs.map(_._3) shouldBe (0L until perTopic(t.stripPrefix("persistent://t/ns/x").toInt))
+        }
+      }
+  }
+
+  test("replay --since keeps per-topic seq order under a broadcast and a sort-merge semi-join") {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+    val before = (0 until 20).map(i => 50 + 11 * i)
+    // x3 and x7 grow, x20..x24 are new
+    val after = before.zipWithIndex.map { case (n, i) => if (i == 3 || i == 7) n + 40 else n } ++
+      (20 until 25).map(i => 30 + 13 * i)
+    val (a, b) = (snapshotOf(before), snapshotOf(after))
+    val delta = (Seq(3, 7) ++ (20 until 25)).map(i => s"persistent://t/ns/x$i" -> after(i)).toMap
+    for ((threshold, merge) <- Seq(("10MB", false), ("-1", true)))
+      GraftSession.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> threshold) {
+        val out = Files.createTempDirectory("graft_snap_since_out").toString
+        val r = recorded(Main.run(spark, Seq("replay", b, out, "--since", a)) shouldBe
+          Seq(s"replayed ${delta.size} topics to $out (delta since $a)"))
+        val joins = new AdaptiveSparkPlanHelper {}.collect(r.plans.last) {
+          case j: SortMergeJoinExec if j.joinType == LeftSemi => "merge"
+          case j: BroadcastHashJoinExec if j.joinType == LeftSemi => "broadcast"
+        }
+        joins shouldBe Seq(if (merge) "merge" else "broadcast")
+        checkReplayed(out, delta)
+      }
+  }
+
+  test("replay fails before the send on a missing snapshot, no *.json file, two files of one topic, or a subdirectory") {
+    def emptyAfterFailedReplay(snap: String, expect: String): Unit = {
+      val out = Files.createTempDirectory("graft_snap_bad_out").toString
+      val err = intercept[Exception](Main.run(spark, Seq("replay", snap, out)))
+      err.getMessage should include(expect)
+      new java.io.File(out).list() shouldBe empty
+    }
+    val missing = Files.createTempDirectory("graft_snap_missing").resolve("nope").toString
+    emptyAfterFailedReplay(missing, "does not exist")
+
+    val noJson = Files.createTempDirectory("graft_snap_nojson")
+    Files.createDirectories(noJson.resolve("messages"))
+    Files.writeString(noJson.resolve("messages").resolve("notes.txt"), "[]")
+    emptyAfterFailedReplay(noJson.toString, "no *.json message files")
+
+    // "a_ub" and "a_b" both decode to topic "a_b"
+    val twins = Files.createTempDirectory("graft_snap_twins")
+    Files.createDirectories(twins.resolve("messages"))
+    for (f <- Seq("a_ub", "a_b", "c"))
+      Files.writeString(twins.resolve("messages").resolve(s"$f.json"),
+        """[{"content":"m","binary_encoded":false}]""")
+    emptyAfterFailedReplay(twins.toString, "a_b.json, a_ub.json all decode to topic a_b")
+
+    // the directory read would descend into it
+    Files.delete(twins.resolve("messages").resolve("a_ub.json"))
+    Files.createDirectories(twins.resolve("messages").resolve("old"))
+    emptyAfterFailedReplay(twins.toString, "is a directory")
+  }
+
+  /** What ran while a body ran: SQL queries started, jobs with the
+    * task count of each of their stages, stages submitted, and the
+    * executed plan of every query that finished. */
+  private case class Recorded(queries: Int, jobTasks: Seq[Seq[Int]],
+      stages: Seq[StageInfo], plans: Seq[SparkPlan])
+
+  private def recorded(body: => Unit): Recorded = {
+    import org.apache.spark.scheduler._
+    import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
     import org.apache.spark.sql.graft.Bridge
-    import graft.sources.connector.BrokerRegistry
-    /** Query executions and stages started while `body` runs. */
-    def recorded(body: => Unit): (Int, Seq[StageInfo]) = {
-      val queries = new java.util.concurrent.atomic.AtomicInteger()
-      val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]()
-      val l = new SparkListener {
-        override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-          case _: SparkListenerSQLExecutionStart => queries.incrementAndGet()
-          case _ => ()
-        }
-        override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-          stages.add(e.stageInfo)
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val queries = new java.util.concurrent.atomic.AtomicInteger()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Int]]()
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]()
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val l = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => queries.incrementAndGet()
+        case _ => ()
       }
-      Bridge.drainListenerBus(spark)
-      spark.sparkContext.addSparkListener(l)
-      try { body; Bridge.drainListenerBus(spark) }
-      finally spark.sparkContext.removeSparkListener(l)
-      (queries.get, stages.toArray(Array.empty[StageInfo]).toSeq)
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(e.stageInfos.map(_.numTasks))
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        stages.add(e.stageInfo)
     }
+    val q = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    Bridge.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(l)
+    spark.listenerManager.register(q)
+    try { body; Bridge.drainListenerBus(spark) }
+    finally {
+      spark.sparkContext.removeSparkListener(l)
+      spark.listenerManager.unregister(q)
+    }
+    Recorded(queries.get, jobs.toArray(Array.empty[Seq[Int]]).toSeq,
+      stages.toArray(Array.empty[StageInfo]).toSeq,
+      plans.toArray(Array.empty[SparkPlan]).toSeq)
+  }
+
+  /** The shuffle exchanges of `plan`, looking inside adaptive plans,
+    * which a plain collect would treat as a leaf. */
+  private def shuffles(plan: SparkPlan) =
+    new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(plan) {
+        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e
+      }
+
+  test("each verb touches its data once: one source stage, no read shuffle, one replay query") {
+    import graft.sources.connector.BrokerRegistry
     def scanning(stages: Seq[StageInfo], rdd: String) =
       stages.filter(_.rddInfos.exists(_.name == rdd))
     val n = 12
@@ -272,25 +420,21 @@ class SnapshotSpec extends AnyFunSuite with SparkSpec with Matchers {
       val tmp = Files.createTempDirectory("graft_snap_passes").toString
       // capture: one query, scanning the source in one stage of a
       // task per topic
-      val (captures, capture) = recorded(Replay.capture(env, tmp))
-      captures shouldBe 1
-      scanning(capture, "DataSourceRDD").map(_.numTasks) shouldBe Seq(n)
+      val capture = recorded(Replay.capture(env, tmp))
+      capture.queries shouldBe 1
+      scanning(capture.stages, "DataSourceRDD").map(_.numTasks) shouldBe Seq(n)
 
-      // the helper looks inside adaptive plans, which a plain
-      // collect would treat as a leaf
       val read = SnapshotIO.readMessages(spark, tmp)
-      new AdaptiveSparkPlanHelper {}.collect(read.queryExecution.executedPlan) {
-        case e: ShuffleExchangeLike => e
-      } shouldBe empty
+      shuffles(read.queryExecution.executedPlan) shouldBe empty
       read.count() shouldBe (1 to n).sum
 
       val out = Files.createTempDirectory("graft_snap_passes_out").toString
-      // replay: one query (its jobs are the repartition's map stage
-      // and the send), reading the snapshot in one stage
-      val (replays, replay) = recorded(
+      // replay: one query, reading the snapshot in one stage (which
+      // is also its only stage: see "a snapshot replays in one stage")
+      val replay = recorded(
         Main.run(spark, Seq("replay", tmp, out)) shouldBe Seq(s"replayed $n topics to $out"))
-      replays shouldBe 1
-      scanning(replay, "FileScanRDD") should have size 1
+      replay.queries shouldBe 1
+      scanning(replay.stages, "FileScanRDD") should have size 1
     } finally BrokerRegistry.clear()
   }
 }
@@ -299,4 +443,6 @@ object SnapshotSpec {
   // executor-side collectors (local mode: same JVM)
   val collected = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long)]()
   val payloads = new java.util.concurrent.ConcurrentLinkedQueue[List[Byte]]()
+  /** (partition, topic, seq) in arrival order */
+  val placed = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, Long)]()
 }
